@@ -415,9 +415,8 @@ def _clear_session_caches(spark) -> None:
     from streams_spark.operators import dedup, similarity
     from streams_spark.sources import tables
 
-    dedup._SHINGLE_CACHE.clear()
-    dedup._EDGE_CACHE.clear()
-    similarity._PQ_ELEMENT_CACHE.clear()
+    dedup.clear_shingle_cache()
+    similarity.clear_vector_caches()
     text_funcs._IDENTITY_CACHE.clear()
     tables._READ_MEMO.clear()
 

@@ -1152,7 +1152,12 @@ def residual_4x4_batch(
     scatter + ~20 whole-batch numpy ops replace n Python-loop
     transforms (residual_4x4 was the top cost of whole-GOP decode in
     the r11 opt profile); bit-exactness vs residual_4x4 is pinned in
-    tests/test_h264.py (numpy int64 >> is the same arithmetic shift)."""
+    tests/test_h264.py (numpy int64 >> is the same arithmetic shift).
+
+    Aliasing: when every AC level is zero the result is a READ-ONLY
+    broadcast view of one value per block (no (n, 4, 4) buffer is
+    built). Callers only read it or add it into their own buffers; one
+    that must write into the result has to copy it first."""
     n = levels.shape[0]
     # DC-only closed form: with every AC level zero, both butterfly
     # passes propagate only the (0,0) coefficient uniformly — row pass
@@ -3230,7 +3235,12 @@ def _chroma_resid_add_pair(
     predictions in ONE residual_4x4_batch call (8 blocks) — halving
     the per-MB batch-call count vs the old per-plane helper. The 2x2
     inverse Hadamard + rescale stays in plain ints (h2 @ f @ h2
-    spelled out)."""
+    spelled out).
+
+    Aliasing: with an all-zero residual the two results ARE the
+    caller's pred_cb and pred_cr arrays, not copies; a caller that
+    writes into a result writes into its prediction too. Otherwise the
+    results are fresh arrays."""
     # zero-residual fast path (P_Skip and cbp-chroma-0 macroblocks):
     # all-zero DC + no AC means the batched transform is identically
     # zero and the prediction IS the reconstruction (MC output is

@@ -1,17 +1,28 @@
-"""Multimodal columns: opaque binary payloads + typed metadata, processed
-with Arrow-batched mapInPandas (SURVEY.md §7 M4).
+"""Media operators over opaque binary payloads (SURVEY.md §7 M4).
 
 The reference's payloads are opaque bytes the consumer decodes
-(/root/reference/server/messages.go:65) — the same contract as image/
-audio/video blobs in a training-data pipeline. The Spark-side plumbing
-(schema, batch iteration, partitioning, projection pushdown around the
-UDF) is real everywhere; the codec is pluggable via
-`decode_media(decode_fn=...)`: m_decode_media pins the deterministic
-fake (its payloads are text bytes), m_decode_real runs the REAL
-stdlib-only PNG/WAV codecs from functions/codecs.py on genuinely
-encoded payloads, m_jpeg_real runs the baseline JPEG decoder from
-functions/jpeg.py, and `pil_decode` is the Pillow swap-in for formats
-beyond those (WebP etc.) where that library exists.
+(reference server/messages.go:61-69) — the same contract as image/
+audio/video blobs in a training-data pipeline. Every media operator
+here is two plain-Python rules handed to two helpers, and that is the
+one way to add one:
+
+- a synthesis rule `make_blob(doc_id) -> (non-key columns, ...)` that
+  builds the fixture corpus. `_synth_feed` selects the distinct
+  non-null doc_ids, runs the rule in one Arrow stage and stages the
+  blobs to parquet once per codec vintage (`_staged_blob_feed`), so a
+  benchmark times the decode, not the encode. At 100 TB the blobs come
+  from storage (read_media_dir) instead.
+- a decode rule `per_blob(doc_id, payload) -> rows` that is the
+  operator. `decode_blobs` runs it over Arrow batches and names the
+  output columns from the schema string. A rule may yield zero, one or
+  many rows per blob (census, frame fan-out, quarantine by skipping).
+
+Neither helper's caller writes a mapInPandas loop. The codec is
+pluggable via `decode_media(decode_fn=...)`: m_decode_media pins the
+deterministic fake (its payloads are text bytes), m_decode_real runs
+the stdlib-only PNG/WAV codecs from functions/codecs.py, m_jpeg_real
+the baseline JPEG decoder from functions/jpeg.py, and `pil_decode` is
+the Pillow swap-in for formats beyond those where that library exists.
 
 Scale notes: mapInPandas streams Arrow batches — constant memory per
 task regardless of partition size; the binary column is only read where
@@ -21,6 +32,7 @@ the UDF runs (column pruning feeds the scan), and fan-out operators
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -39,6 +51,139 @@ DECODED_SCHEMA = (
     "doc_id long, media_type string, width int, height int, "
     "n_channels int, checksum bigint"
 )
+
+
+def _schema_columns(schema: str) -> list[str]:
+    """Column names of a DDL schema string (commas inside <...> or
+    (...) type parameters do not split fields)."""
+    return [f.split()[0] for f in re.split(r",(?![^<(]*[>)])", schema)]
+
+
+def decode_blobs(df: DataFrame, per_blob, schema: str) -> DataFrame:
+    """Run the decode rule `per_blob` over every row of `df` in one
+    Arrow-batched map stage. `per_blob` receives the row's values in
+    `df`'s column order — (doc_id, payload) for a blob feed — and
+    yields output tuples in `schema`'s column order; zero, one or many
+    per blob. Column names come from `schema` once, on the driver.
+
+    The batch loop stays a closure here: cloudpickle ships it by value,
+    so Python workers import only the codec modules the rule uses."""
+    cols = _schema_columns(schema)
+
+    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for row in pdf.itertuples(index=False, name=None):
+                rows.extend(per_blob(*row))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.mapInPandas(batch, schema=schema)
+
+
+def _staged_blob_feed(
+    spark: SparkSession, sf_dir: str, op: str, modules, blobs: DataFrame
+) -> DataFrame:
+    """Stage a synthesized blob table to parquet once per (sf_dir,
+    codec-module vintage): the per-blob pure-Python ENCODE/MUX is
+    fixture synthesis, not the operator under test, so benchmarks must
+    measure the demux/decode stage over a materialized blob table (in
+    production the blobs come from storage via read_media_dir). Keyed
+    on `op` plus each codec module's and this module's mtime+size, so
+    an edit to a codec or to a synthesis rule rebuilds the fixtures; a
+    missing documents table (in-memory test fixtures) skips staging
+    silently, any other OSError warns loudly (ADVICE r8). The one
+    caller is `_synth_feed`."""
+    import os as _os
+
+    from streams_spark.sources.feed_cache import cached_feed
+
+    if not _os.path.exists(_os.path.join(sf_dir, "documents.parquet")):
+        return blobs
+    # THIS module holds the synthesis rules (geometry/frame-count/spec
+    # formulas), so it joins every cache key: editing them without
+    # touching the codec modules must rebuild the fixtures rather than
+    # serve stale blobs that no longer match the oracle (ADVICE r9)
+    import sys as _sys
+
+    modules = [*modules, _sys.modules[__name__]]
+    key = "|".join(
+        f"{_os.stat(m.__file__).st_mtime_ns}:{_os.stat(m.__file__).st_size}"
+        for m in modules
+    )
+    try:
+        feed = cached_feed(
+            sf_dir,
+            op,
+            f"v1|{key}",
+            lambda d: blobs.write.mode("overwrite").parquet(d),
+        )
+    except OSError as exc:
+        import warnings
+
+        warnings.warn(
+            f"{op} staged-feed unavailable ({exc!r}); benchmarks will "
+            "measure synthesis+decode, not decode-only",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return blobs
+    # fan the CPU-bound decode across all cores: the staged blobs are a
+    # few MB, so the scan would otherwise pack them into one partition
+    # and the decode stage would run single-task (measured on m_jpeg:
+    # 5.4 s serial vs ~1.1 ms/blob x 5000) — the harness-scale stand-in
+    # for the many-file parallelism a real blob store gives the scan
+    from streams_spark.sources.tables import read_parquet_memo
+
+    return read_parquet_memo(spark, feed).repartition(
+        spark.sparkContext.defaultParallelism
+    )
+
+
+def _synth_feed(
+    spark: SparkSession,
+    sf_dir: str,
+    op: str | None,
+    modules,
+    doc_filter,
+    make_blob,
+    schema: str = "doc_id long, payload binary",
+) -> DataFrame:
+    """The fixture blob table for synthesis rule `make_blob`, staged
+    under feed name `op` and keyed on the codec `modules` it calls.
+
+    `make_blob(d)` returns the tuple of non-key columns for doc_id `d`
+    (a list of such tuples when one doc is packaged several ways). The
+    docs are the DISTINCT non-null doc_ids matching `doc_filter` (a
+    Column, or None for all): the synthetic media tables are keyed by
+    doc identity, so duplicate corpus rows yield ONE blob per doc (fuzz
+    finding r6), and a NULL id has no identity to derive bytes from
+    (null-key fuzz class r7) — the oracles filter identically.
+    `op=None` returns the table unstaged."""
+    cols = _schema_columns(schema)
+    keep = F.col("doc_id").isNotNull()
+    if doc_filter is not None:
+        keep = keep & doc_filter
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id").where(keep).distinct()
+    )
+
+    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                blob = make_blob(d)
+                if isinstance(blob, list):
+                    rows.extend((d, *b) for b in blob)
+                else:
+                    rows.append((d, *blob))
+            yield pd.DataFrame(rows, columns=cols)
+
+    blobs = docs.mapInPandas(synth, schema=schema)
+    if op is None:
+        return blobs
+    return _staged_blob_feed(spark, sf_dir, op, modules, blobs)
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,31 +261,22 @@ def decode_media(media: DataFrame, decode_fn=None) -> DataFrame:
     the Arrow batch iteration, schema, and column pruning are identical
     for fake and real decoders."""
     fn = decode_fn if decode_fn is not None else _fake_decode
+    none4 = (None, None, None, None)
 
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Arrow batch in, Arrow batch out: no per-row Python call
-        # overhead beyond the codec itself. NULL payloads null-propagate
-        # (SQL semantics — a null blob has null metadata, same as every
-        # oracle's arithmetic over a NULL column); undecodable NON-null
-        # bytes still raise, the explicit-quarantine contract.
-        none4 = (None, None, None, None)
-        for pdf in it:
-            decoded = [
-                none4 if payload is None else fn(payload)
-                for payload in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_channels": [d[2] for d in decoded],
-                    "checksum": [d[3] for d in decoded],
-                }
-            )
+    def per_blob(doc_id, media_type, payload):
+        # NULL payloads null-propagate (SQL semantics — a null blob has
+        # null metadata, same as every oracle's arithmetic over a NULL
+        # column); undecodable NON-null bytes still raise, the
+        # explicit-quarantine contract.
+        yield (
+            doc_id, media_type,
+            *(none4 if payload is None else fn(payload)),
+        )
 
-    return media.mapInPandas(batch, schema=DECODED_SCHEMA)
+    return decode_blobs(
+        media.select("doc_id", "media_type", "payload"),
+        per_blob, DECODED_SCHEMA,
+    )
 
 
 _DECODE_ORACLE = """
@@ -204,21 +340,16 @@ def m_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fan-out mapInPandas — rows out > rows in, no shuffle)."""
     media = media_table(spark, sf_dir).where(F.col("media_type") == "video")
 
-    def sample(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue  # NULL blob -> zero sampled frames
-                n = len(payload)
-                for frame in range(min(4, 1 + n // 256)):
-                    rows.append((doc_id, frame, n))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_no", "payload_len"]
-            )
+    def sample(doc_id, payload):
+        if payload is None:
+            return  # NULL blob -> zero sampled frames
+        n = len(payload)
+        for frame in range(min(4, 1 + n // 256)):
+            yield (doc_id, frame, n)
 
-    return media.mapInPandas(
-        sample, schema="doc_id long, frame_no int, payload_len long"
+    return decode_blobs(
+        media.select("doc_id", "payload"), sample,
+        "doc_id long, frame_no int, payload_len long",
     )
 
 
@@ -247,27 +378,17 @@ def m_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (decode -> resize -> re-encode) with only the codec call faked."""
     media = media_table(spark, sf_dir).where(F.col("media_type") == "image")
 
-    def resize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((doc_id, None, None, None, None))
-                    continue
-                w, h, _, _ = _fake_decode(payload)
-                scale = min(224.0 / w, 224.0 / h)
-                rows.append((doc_id, w, h, int(w * scale), int(h * scale)))
-            out = pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "out_width", "out_height"],
-            )
-            for c in ("width", "height", "out_width", "out_height"):
-                out[c] = out[c].astype("Int32")
-            yield out
+    def resize(doc_id, payload):
+        if payload is None:
+            yield (doc_id, None, None, None, None)
+            return
+        w, h, _, _ = _fake_decode(payload)
+        scale = min(224.0 / w, 224.0 / h)
+        yield (doc_id, w, h, int(w * scale), int(h * scale))
 
-    return media.mapInPandas(
-        resize,
-        schema="doc_id long, width int, height int, out_width int, out_height int",
+    return decode_blobs(
+        media.select("doc_id", "payload"), resize,
+        "doc_id long, width int, height int, out_width int, out_height int",
     )
 
 
@@ -307,28 +428,17 @@ def m_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-in are what this verifies)."""
     media = media_table(spark, sf_dir)
 
-    def feats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((doc_id, None, None, None))
-                    continue
-                n = len(payload)
-                s = sum(payload)
-                rows.append((doc_id, n, (s / n) if n else 0.0, s % 256))
-            out = pd.DataFrame(
-                rows, columns=["doc_id", "n_bytes", "mean_byte", "hash_bucket"]
-            )
-            # nullable dtypes: Arrow must see NULL (not NaN-coerced
-            # floats) for the null-payload rows
-            out["n_bytes"] = out["n_bytes"].astype("Int64")
-            out["hash_bucket"] = out["hash_bucket"].astype("Int32")
-            yield out
+    def feats(doc_id, payload):
+        if payload is None:
+            yield (doc_id, None, None, None)
+            return
+        n = len(payload)
+        s = sum(payload)
+        yield (doc_id, n, (s / n) if n else 0.0, s % 256)
 
-    out = media.mapInPandas(
-        feats,
-        schema="doc_id long, n_bytes long, mean_byte double, hash_bucket int",
+    out = decode_blobs(
+        media.select("doc_id", "payload"), feats,
+        "doc_id long, n_bytes long, mean_byte double, hash_bucket int",
     )
     # round JVM-side: python round() is banker's (half-even) and diverges
     # from SQL half-away-from-zero on exact .00005 boundaries
@@ -446,58 +556,26 @@ def media_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependency-free codecs in functions/codecs.py."""
     import numpy as np
 
-    from streams_spark.functions.codecs import png_encode, wav_encode
-
-    # DISTINCT doc_id: the synthetic media tables are keyed by doc
-    # identity, so duplicate corpus rows yield ONE blob per doc (fuzz
-    # finding r6); a NULL id has no identity to derive bytes from, so
-    # it has no media row (null-key fuzz class r7) — oracles agree
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull())
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    w, h = 16 + d % 24, 12 + (d * 7) % 20
-                    ch = 3 if d % 4 == 0 else 1
-                    y, x, c = np.meshgrid(
-                        np.arange(h), np.arange(w), np.arange(ch),
-                        indexing="ij",
-                    )
-                    arr = ((x + 3 * y + 5 * c + d) % 256).astype(np.uint8)
-                    if ch == 1:
-                        arr = arr[:, :, 0]
-                    payload = png_encode(arr, filter_type=(d // 2) % 5)
-                    rows.append((d, "image", payload))
-                else:
-                    n = 200 + (d * 13) % 300
-                    s = ((np.arange(n) * 37 + d) % 2048 - 1024).astype(
-                        np.int16
-                    )
-                    rows.append((d, "audio", wav_encode(s)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_type", "payload"]
-            )
-
     from streams_spark.functions import codecs as _c
 
-    # staged to parquet once per (sf_dir, codec vintage) like every
-    # other *_table_real: the per-blob pure-Python PNG/WAV ENCODE is
-    # fixture synthesis, not the operator under test — benchmarks must
-    # measure the decode stage over a materialized blob table
-    return _staged_blob_feed(
-        spark, sf_dir, "docmedia",
-        (_c,),
-        docs.mapInPandas(
-            synth, schema="doc_id long, media_type string, payload binary"
-        ),
+    def make_blob(d):
+        if d % 2 == 0:
+            w, h = 16 + d % 24, 12 + (d * 7) % 20
+            ch = 3 if d % 4 == 0 else 1
+            y, x, c = np.meshgrid(
+                np.arange(h), np.arange(w), np.arange(ch), indexing="ij",
+            )
+            arr = ((x + 3 * y + 5 * c + d) % 256).astype(np.uint8)
+            if ch == 1:
+                arr = arr[:, :, 0]
+            return "image", _c.png_encode(arr, filter_type=(d // 2) % 5)
+        n = 200 + (d * 13) % 300
+        s = ((np.arange(n) * 37 + d) % 2048 - 1024).astype(np.int16)
+        return "audio", _c.wav_encode(s)
+
+    return _synth_feed(
+        spark, sf_dir, "docmedia", (_c,), None, make_blob,
+        "doc_id long, media_type string, payload binary",
     )
 
 
@@ -575,38 +653,24 @@ def m_thumbnail_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("media_type") == "image"
     )
 
-    def thumb(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = png_decode(bytes(payload))
-                h, w = arr.shape[0], arr.shape[1]
-                scale = min(16.0 / w, 16.0 / h)
-                ow, oh = max(int(w * scale), 1), max(int(h * scale), 1)
-                ys = (np.arange(oh) * h) // oh
-                xs = (np.arange(ow) * w) // ow
-                small = arr[np.ix_(ys, xs)]
-                redecoded = png_decode(png_encode(small, filter_type=2))
-                rows.append(
-                    (
-                        int(doc_id), w, h, ow, oh,
-                        int(redecoded.astype(np.int64).sum()) % 1_000_000_007,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height",
-                    "out_width", "out_height", "checksum",
-                ],
-            )
+    def thumb(doc_id, payload):
+        arr = png_decode(bytes(payload))
+        h, w = arr.shape[0], arr.shape[1]
+        scale = min(16.0 / w, 16.0 / h)
+        ow, oh = max(int(w * scale), 1), max(int(h * scale), 1)
+        ys = (np.arange(oh) * h) // oh
+        xs = (np.arange(ow) * w) // ow
+        small = arr[np.ix_(ys, xs)]
+        redecoded = png_decode(png_encode(small, filter_type=2))
+        yield (
+            int(doc_id), w, h, ow, oh,
+            int(redecoded.astype(np.int64).sum()) % 1_000_000_007,
+        )
 
-    return media.mapInPandas(
-        thumb,
-        schema=(
-            "doc_id long, width int, height int, "
-            "out_width int, out_height int, checksum bigint"
-        ),
+    return decode_blobs(
+        media.select("doc_id", "payload"), thumb,
+        "doc_id long, width int, height int, "
+        "out_width int, out_height int, checksum bigint",
     )
 
 
@@ -649,32 +713,21 @@ def m_audio_features_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("media_type") == "audio"
     )
 
-    def feats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                s, _rate, _ch = wav_decode(bytes(payload))
-                v = s[:, 0].astype(np.int64)
-                neg = v < 0
-                rows.append(
-                    (
-                        int(doc_id),
-                        int(v.shape[0]),
-                        int((v * v).sum()) % 1_000_000_007,
-                        int((neg[1:] != neg[:-1]).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "energy_mod", "zero_crossings"],
-            )
+    def feats(doc_id, payload):
+        s, _rate, _ch = wav_decode(bytes(payload))
+        v = s[:, 0].astype(np.int64)
+        neg = v < 0
+        yield (
+            int(doc_id),
+            int(v.shape[0]),
+            int((v * v).sum()) % 1_000_000_007,
+            int((neg[1:] != neg[:-1]).sum()),
+        )
 
-    return media.mapInPandas(
-        feats,
-        schema=(
-            "doc_id long, n_samples long, energy_mod bigint, "
-            "zero_crossings bigint"
-        ),
+    return decode_blobs(
+        media.select("doc_id", "payload"), feats,
+        "doc_id long, n_samples long, energy_mod bigint, "
+        "zero_crossings bigint",
     )
 
 
@@ -707,38 +760,20 @@ def video_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame so decode exercises every un-filter path."""
     import numpy as np
 
-    from streams_spark.functions.codecs import frames_encode
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 3 == 2)
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 9, 6 + (d * 5) % 11
-                y, x = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-                frames = [
-                    ((x + 3 * y + 7 * f + d) % 256).astype(np.uint8)
-                    for f in range(2 + d % 5)
-                ]
-                rows.append((d, frames_encode(frames)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
     from streams_spark.functions import codecs as _c
 
-    # staged like every other *_table_real (the jpeg_table_real rule):
-    # the PSMF synthesis+PNG-encode is fixture building, not the
-    # decode operator under test
-    return _staged_blob_feed(
-        spark, sf_dir, "docvideo",
-        (_c,),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        w, h = 8 + d % 9, 6 + (d * 5) % 11
+        y, x = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+        frames = [
+            ((x + 3 * y + 7 * f + d) % 256).astype(np.uint8)
+            for f in range(2 + d % 5)
+        ]
+        return (_c.frames_encode(frames),)
+
+    return _synth_feed(
+        spark, sf_dir, "docvideo", (_c,), F.col("doc_id") % 3 == 2,
+        make_blob,
     )
 
 
@@ -769,35 +804,21 @@ def m_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from streams_spark.functions.codecs import frames_decode
 
-    def sample(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames = frames_decode(bytes(payload))
-                nf = len(frames)
-                for f in range(0, nf, 2):
-                    arr = frames[f]
-                    rows.append(
-                        (
-                            int(doc_id), f, nf,
-                            int(arr.shape[1]), int(arr.shape[0]),
-                            int(arr.astype(np.int64).sum()) % 1_000_000_007,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames",
-                    "width", "height", "checksum",
-                ],
+    def sample(doc_id, payload):
+        frames = frames_decode(bytes(payload))
+        nf = len(frames)
+        for f in range(0, nf, 2):
+            arr = frames[f]
+            yield (
+                int(doc_id), f, nf,
+                int(arr.shape[1]), int(arr.shape[0]),
+                int(arr.astype(np.int64).sum()) % 1_000_000_007,
             )
 
-    return video_table_real(spark, sf_dir).mapInPandas(
-        sample,
-        schema=(
-            "doc_id long, frame_no int, n_frames int, "
-            "width int, height int, checksum bigint"
-        ),
+    return decode_blobs(
+        video_table_real(spark, sf_dir), sample,
+        "doc_id long, frame_no int, n_frames int, "
+        "width int, height int, checksum bigint",
     )
 
 
@@ -844,44 +865,26 @@ def m_motion_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from streams_spark.functions.codecs import frames_decode
 
-    def motion(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames = [
-                    a.astype(np.int64) for a in frames_decode(bytes(payload))
-                ]
-                nf = len(frames)
-                if nf < 2:
-                    # motion needs a consecutive pair; single-frame and
-                    # empty containers are quarantined (skipped) rather
-                    # than dividing by zero — unreachable from
-                    # video_table_real (2..6 frames) but real blobs via
-                    # read_media_dir can be degenerate
-                    continue
-                h, w = frames[0].shape[0], frames[0].shape[1]
-                dsum = sum(
-                    int(np.abs(b - a).sum())
-                    for a, b in zip(frames[:-1], frames[1:])
-                )
-                mean = dsum / (nf - 1) / (w * h)
-                rows.append(
-                    (
-                        int(doc_id), nf, dsum,
-                        int(mean * 10000 + 0.5) / 10000,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "motion_sum", "mean_abs_diff"],
-            )
+    def motion(doc_id, payload):
+        frames = [a.astype(np.int64) for a in frames_decode(bytes(payload))]
+        nf = len(frames)
+        if nf < 2:
+            # motion needs a consecutive pair; single-frame and empty
+            # containers are quarantined (skipped) rather than dividing
+            # by zero — unreachable from video_table_real (2..6 frames)
+            # but real blobs via read_media_dir can be degenerate
+            return
+        h, w = frames[0].shape[0], frames[0].shape[1]
+        dsum = sum(
+            int(np.abs(b - a).sum()) for a, b in zip(frames[:-1], frames[1:])
+        )
+        mean = dsum / (nf - 1) / (w * h)
+        yield (int(doc_id), nf, dsum, int(mean * 10000 + 0.5) / 10000)
 
-    return video_table_real(spark, sf_dir).mapInPandas(
-        motion,
-        schema=(
-            "doc_id long, n_frames int, motion_sum bigint, "
-            "mean_abs_diff double"
-        ),
+    return decode_blobs(
+        video_table_real(spark, sf_dir), motion,
+        "doc_id long, n_frames int, motion_sum bigint, "
+        "mean_abs_diff double",
     )
 
 
@@ -924,116 +927,45 @@ def jpeg_table_real(
     what lets a DuckDB oracle predict the decoded pixels of a lossy
     format in closed form. The wire bytes are still a genuine
     entropy-coded scan — Huffman tables, DPCM DC, byte stuffing and
-    all — so a green row proves the full parse+decode, not headers."""
+    all — so a green row proves the full parse+decode, not headers.
+
+    Staged like every *_table_real (measured: m_jpeg_progressive
+    12.6 s -> decode-only once the 5000-blob encode is staged, sf0.1),
+    under a feed name carrying the encoder's module+name: a test-local
+    encoder that happens to be called "jpeg_encode" must not be served
+    the stdlib codec's blobs (ADVICE r8). An encoder outside the three
+    JPEG codec modules is never staged — its source is not in the key,
+    so staleness could not be detected."""
     import numpy as np
-
-    from streams_spark.functions.jpeg import jpeg_encode
-
-    if encode_fn is None:
-        encode_fn = jpeg_encode
-
-    # DISTINCT doc_id: the synthetic media tables are keyed by doc
-    # identity, so duplicate corpus rows yield ONE blob per doc (fuzz
-    # finding r6); a NULL id has no identity to derive bytes from, so
-    # it has no media row (null-key fuzz class r7) — oracles agree
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull())
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mode = d % 3
-                w, h = 17 + d % 23, 14 + (d * 3) % 19
-                b = 16 if mode == 2 else 8
-                y, x = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-                grey = (2 * ((x // b + 3 * (y // b) + d) % 128)).astype(
-                    np.uint8
-                )
-                if mode == 0:
-                    payload = encode_fn(grey, quality=50)
-                    mt = "grey"
-                else:
-                    rgb = np.repeat(grey[:, :, None], 3, axis=2)
-                    sub = "4:4:4" if mode == 1 else "4:2:0"
-                    payload = encode_fn(rgb, quality=50, subsampling=sub)
-                    mt = "rgb444" if mode == 1 else "rgb420"
-                rows.append((d, mt, payload))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_type", "payload"]
-            )
-
-    blobs = docs.mapInPandas(
-        synth, schema="doc_id long, media_type string, payload binary"
-    )
-    # Staged-feed the encoded blobs (r8): the per-blob pure-Python
-    # ENCODE is fixture synthesis, not the operator under test — in
-    # production the blobs are read from storage (read_media_dir), so
-    # benchmarks should measure the decode stage over a materialized
-    # blob table, same rule as shingle_table's signature feed. Keyed on
-    # the encoder modules' mtime+size so any codec edit rebuilds the
-    # fixtures (measured: m_jpeg_progressive 12.6 s -> decode-only once
-    # the 5000-blob encode is staged, sf0.1).
-    import os as _os
 
     from streams_spark.functions import jpeg as _j
     from streams_spark.functions import jpeg_arith as _ja
     from streams_spark.functions import jpeg_progressive as _jp
-    from streams_spark.sources.feed_cache import cached_feed
 
-    # Key on module+name, not name alone: a test-local encoder that
-    # happens to be called "jpeg_encode" must not be served the stdlib
-    # codec's staged blobs (ADVICE r8). Encoders outside the three
-    # keyed codec modules skip the cache entirely — their source isn't
-    # in enc_key, so staleness couldn't be detected.
-    keyed_modules = {_j.__name__, _jp.__name__, _ja.__name__}
-    variant = (
-        f"{getattr(encode_fn, '__module__', '?')}."
-        f"{getattr(encode_fn, '__name__', 'custom')}"
-    )
-    enc_key = "|".join(
-        f"{_os.stat(m.__file__).st_mtime_ns}:{_os.stat(m.__file__).st_size}"
-        for m in (_j, _jp, _ja)
-    )
-    # Narrow fallback (ADVICE r8): only a MISSING source file (the
-    # in-memory test-fixture case) may silently skip staging. Any other
-    # OSError (disk full, cache-root permissions) would switch the
-    # benchmark's workload from decode-only to encode+decode with no
-    # signal — warn loudly instead of hiding it.
-    if getattr(encode_fn, "__module__", None) not in keyed_modules:
-        return blobs
-    if not _os.path.exists(_os.path.join(sf_dir, "documents.parquet")):
-        return blobs
-    try:
-        feed = cached_feed(
-            sf_dir,
-            "docjpeg",
-            f"v1|{variant}|{enc_key}",
-            lambda d: blobs.write.mode("overwrite").parquet(d),
-        )
-    except OSError as exc:
-        import warnings
+    if encode_fn is None:
+        encode_fn = _j.jpeg_encode
 
-        warnings.warn(
-            f"jpeg staged-feed unavailable ({exc!r}); benchmarks will "
-            "measure encode+decode, not decode-only",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return blobs
-    # repartition: the staged blobs are a few MB, so the scan packs
-    # them into ONE input partition and the decode stage would run
-    # single-task (measured: 5.4 s serial vs ~1.1 ms/blob x 5000).
-    # The tiny shuffle fans the CPU-bound decode across all cores —
-    # the harness-scale stand-in for the many-file natural
-    # parallelism a real 100 TB blob store gives the scan.
-    return spark.read.parquet(feed).repartition(
-        spark.sparkContext.defaultParallelism
+    def make_blob(d):
+        mode = d % 3
+        w, h = 17 + d % 23, 14 + (d * 3) % 19
+        b = 16 if mode == 2 else 8
+        y, x = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+        grey = (2 * ((x // b + 3 * (y // b) + d) % 128)).astype(np.uint8)
+        if mode == 0:
+            return "grey", encode_fn(grey, quality=50)
+        rgb = np.repeat(grey[:, :, None], 3, axis=2)
+        sub = "4:4:4" if mode == 1 else "4:2:0"
+        payload = encode_fn(rgb, quality=50, subsampling=sub)
+        return ("rgb444" if mode == 1 else "rgb420"), payload
+
+    modules = (_j, _jp, _ja)
+    module = getattr(encode_fn, "__module__", None)
+    op = None
+    if module in {m.__name__ for m in modules}:
+        op = f"docjpeg-{module}.{encode_fn.__name__}"
+    return _synth_feed(
+        spark, sf_dir, op, modules, None, make_blob,
+        "doc_id long, media_type string, payload binary",
     )
 
 
@@ -1164,62 +1096,6 @@ FROM f
 """
 
 
-def _staged_blob_feed(
-    spark: SparkSession, sf_dir: str, op: str, modules, blobs: DataFrame
-) -> DataFrame:
-    """Stage a synthesized blob table to parquet once per (sf_dir,
-    codec-module vintage) — the jpeg_table_real rule generalized: the
-    per-blob pure-Python ENCODE/MUX is fixture synthesis, not the
-    operator under test, so benchmarks must measure the demux/decode
-    stage over a materialized blob table (in production the blobs come
-    from storage via read_media_dir). Keyed on each codec module's
-    mtime+size so any codec edit rebuilds the fixtures; a missing
-    source file (in-memory test fixtures) skips staging silently, any
-    other OSError warns loudly (ADVICE r8)."""
-    import os as _os
-
-    from streams_spark.sources.feed_cache import cached_feed
-
-    if not _os.path.exists(_os.path.join(sf_dir, "documents.parquet")):
-        return blobs
-    # THIS module holds the synthesis rules (geometry/frame-count/spec
-    # formulas), so it joins every cache key: editing them without
-    # touching the codec modules must rebuild the fixtures rather than
-    # serve stale blobs that no longer match the oracle (ADVICE r9)
-    import sys as _sys
-
-    modules = [*modules, _sys.modules[__name__]]
-    key = "|".join(
-        f"{_os.stat(m.__file__).st_mtime_ns}:{_os.stat(m.__file__).st_size}"
-        for m in modules
-    )
-    try:
-        feed = cached_feed(
-            sf_dir,
-            op,
-            f"v1|{key}",
-            lambda d: blobs.write.mode("overwrite").parquet(d),
-        )
-    except OSError as exc:
-        import warnings
-
-        warnings.warn(
-            f"{op} staged-feed unavailable ({exc!r}); benchmarks will "
-            "measure synthesis+decode, not decode-only",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return blobs
-    # fan the CPU-bound decode across all cores: the staged blobs are a
-    # few MB, so the scan would otherwise pack them into one partition
-    # and the demux stage would run single-task (the m_jpeg lesson)
-    from streams_spark.sources.tables import read_parquet_memo
-
-    return read_parquet_memo(spark, feed).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-
 def mp4_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One REAL Motion-JPEG MP4 per video doc (doc_id % 3 = 1): 2..5
     baseline-JPEG frames (the bit-exact block-constant class,
@@ -1230,41 +1106,25 @@ def mp4_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     the line for every blob."""
     import numpy as np
 
-    from streams_spark.functions.jpeg import jpeg_encode
-    from streams_spark.functions.mp4 import mp4_mux
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 1))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + d % 17, 12 + (d * 3) % 13
-                y, x = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-                frames = [
-                    jpeg_encode(
-                        (2 * ((x // 8 + 3 * (y // 8) + d + 5 * f) % 128))
-                        .astype(np.uint8),
-                        quality=50,
-                    )
-                    for f in range(2 + d % 4)
-                ]
-                rows.append((d, mp4_mux(frames, w, h)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
     from streams_spark.functions import jpeg as _j
     from streams_spark.functions import mp4 as _m
 
-    return _staged_blob_feed(
-        spark, sf_dir, "docmp4",
-        (_m, _j),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        w, h = 16 + d % 17, 12 + (d * 3) % 13
+        y, x = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+        frames = [
+            _j.jpeg_encode(
+                (2 * ((x // 8 + 3 * (y // 8) + d + 5 * f) % 128))
+                .astype(np.uint8),
+                quality=50,
+            )
+            for f in range(2 + d % 4)
+        ]
+        return (_m.mp4_mux(frames, w, h),)
+
+    return _synth_feed(
+        spark, sf_dir, "docmp4", (_m, _j), F.col("doc_id") % 3 == 1,
+        make_blob,
     )
 
 
@@ -1303,35 +1163,21 @@ def m_mp4_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions.jpeg import jpeg_decode
     from streams_spark.functions.mp4 import mp4_demux
 
-    def demux(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                track, frames = mp4_demux(bytes(payload))
-                for s, frame in zip(track.samples, frames):
-                    arr = np.squeeze(jpeg_decode(frame))
-                    rows.append(
-                        (
-                            int(doc_id), s.index, len(frames),
-                            int(track.width), int(track.height),
-                            int(s.dts), int(s.duration),
-                            int(arr.astype(np.int64).sum()) % 1_000_000_007,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "width", "height",
-                    "pts_ticks", "dur_ticks", "checksum",
-                ],
+    def demux(doc_id, payload):
+        track, frames = mp4_demux(bytes(payload))
+        for s, frame in zip(track.samples, frames):
+            arr = np.squeeze(jpeg_decode(frame))
+            yield (
+                int(doc_id), s.index, len(frames),
+                int(track.width), int(track.height),
+                int(s.dts), int(s.duration),
+                int(arr.astype(np.int64).sum()) % 1_000_000_007,
             )
 
-    return mp4_table_real(spark, sf_dir).mapInPandas(
-        demux,
-        schema=(
-            "doc_id long, frame_no int, n_frames int, width int, "
-            "height int, pts_ticks long, dur_ticks int, checksum bigint"
-        ),
+    return decode_blobs(
+        mp4_table_real(spark, sf_dir), demux,
+        "doc_id long, frame_no int, n_frames int, width int, "
+        "height int, pts_ticks long, dur_ticks int, checksum bigint",
     )
 
 
@@ -1384,46 +1230,25 @@ def mp3_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload past the side info) on every 6th, and an ID3v1 'TAG'
     trailer on every 7th, so the scanner's skip, resync, Xing-probe
     and trailer paths all run routinely."""
-    from streams_spark.functions.mp3 import mp3_build
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 0))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = 8 + d % 9
-                sr_idx = (d // 3) % 3
-                vbr = d % 2 == 1
-                specs = [
-                    (1 + (d + (f if vbr else 0)) % 14, sr_idx, (d + f) % 2)
-                    for f in range(nf)
-                ]
-                blob = mp3_build(
-                    specs,
-                    fill_seed=d,
-                    id3_payload=(b"T" * (d % 50) if d % 4 == 0 else None),
-                    leading_junk=(
-                        b"\xff" * (1 + d % 7) if d % 5 == 0 else b""
-                    ),
-                    xing=(d % 6 == 0),
-                    id3v1=(d % 7 == 0),
-                )
-                rows.append((d, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
     from streams_spark.functions import mp3 as _m3
 
-    return _staged_blob_feed(
-        spark, sf_dir, "docmp3",
-        (_m3,),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        vbr = d % 2 == 1
+        specs = [
+            (1 + (d + (f if vbr else 0)) % 14, (d // 3) % 3, (d + f) % 2)
+            for f in range(8 + d % 9)
+        ]
+        return (_m3.mp3_build(
+            specs,
+            fill_seed=d,
+            id3_payload=(b"T" * (d % 50) if d % 4 == 0 else None),
+            leading_junk=(b"\xff" * (1 + d % 7) if d % 5 == 0 else b""),
+            xing=(d % 6 == 0),
+            id3v1=(d % 7 == 0),
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "docmp3", (_m3,), F.col("doc_id") % 3 == 0, make_blob,
     )
 
 
@@ -1452,44 +1277,29 @@ def m_mp3_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     via decode_fn= without touching the census."""
     from streams_spark.functions.mp3 import mp3_scan
 
-    def census(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                scan = mp3_scan(bytes(payload))
-                frames = scan.frames
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(frames),
-                        frames[0].sample_rate if frames else 0,
-                        len(frames) * 1152,
-                        sum(f.size for f in frames),
-                        sum(f.bitrate_kbps for f in frames),
-                        len({f.bitrate_kbps for f in frames}) > 1,
-                        scan.junk_bytes,
-                        scan.id3_bytes,
-                        scan.id3v1_bytes,
-                        scan.xing_frames,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "samplerate", "total_samples",
-                    "frame_bytes", "sum_kbps", "is_vbr", "junk_bytes",
-                    "id3_bytes", "id3v1_bytes", "xing_frames",
-                ],
-            )
+    def census(doc_id, payload):
+        scan = mp3_scan(bytes(payload))
+        frames = scan.frames
+        yield (
+            int(doc_id),
+            len(frames),
+            frames[0].sample_rate if frames else 0,
+            len(frames) * 1152,
+            sum(f.size for f in frames),
+            sum(f.bitrate_kbps for f in frames),
+            len({f.bitrate_kbps for f in frames}) > 1,
+            scan.junk_bytes,
+            scan.id3_bytes,
+            scan.id3v1_bytes,
+            scan.xing_frames,
+        )
 
-    return mp3_table_real(spark, sf_dir).mapInPandas(
-        census,
-        schema=(
-            "doc_id long, n_frames int, samplerate int, "
-            "total_samples long, frame_bytes long, sum_kbps long, "
-            "is_vbr boolean, junk_bytes int, id3_bytes int, "
-            "id3v1_bytes int, xing_frames int"
-        ),
+    return decode_blobs(
+        mp3_table_real(spark, sf_dir), census,
+        "doc_id long, n_frames int, samplerate int, "
+        "total_samples long, frame_bytes long, sum_kbps long, "
+        "is_vbr boolean, junk_bytes int, id3_bytes int, "
+        "id3v1_bytes int, xing_frames int",
     )
 
 
@@ -1540,50 +1350,28 @@ def h264_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant per MB row via an I_PCM anchor + V/H/DC-predicted
     Intra_16x16 MBs carrying single CAVLC DC coefficients, so the
     decoded pixels have the closed form _H264_ORACLE predicts."""
-    from streams_spark.functions.h264 import h264_encode_rows
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 2))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from streams_spark.functions.mp4 import mp4_mux
-
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-                nf = 2 + (d // 27) % 3
-                crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-                frames = [
-                    h264_encode_rows(
-                        mw, mh,
-                        40 + (7 * d + 11 * f) % 160,
-                        [(d + f + r) % 3 for r in range(1, mh)],
-                        crop_right=crop_r, crop_bottom=crop_b,
-                    )
-                    for f in range(nf)
-                ]
-                rows_out.append(
-                    (d, mp4_mux(
-                        frames, 16 * mw - crop_r, 16 * mh - crop_b,
-                        sync_every=2,
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
     from streams_spark.functions import mp4 as _m
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264",
-        (_h, _m),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
+        crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
+        frames = [
+            _h.h264_encode_rows(
+                mw, mh,
+                40 + (7 * d + 11 * f) % 160,
+                [(d + f + r) % 3 for r in range(1, mh)],
+                crop_right=crop_r, crop_bottom=crop_b,
+            )
+            for f in range(2 + (d // 27) % 3)
+        ]
+        return (_m.mp4_mux(
+            frames, 16 * mw - crop_r, 16 * mh - crop_b, sync_every=2,
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264", (_h, _m), F.col("doc_id") % 3 == 2,
+        make_blob,
     )
 
 
@@ -1624,43 +1412,29 @@ def m_h264_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions.h264 import h264_decode
     from streams_spark.functions.mp4 import extract_samples
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                # ONE table parse, byte slices for sync samples only —
-                # the 'non-key bytes are never decoded' claim holds at
-                # the copy level too (a keyframes_only mp4_demux would
-                # still slice every sample before filtering)
-                buf = bytes(payload)
-                track = extract_samples(buf)
-                n_total = len(track.samples)
-                for s in track.samples:
-                    if not s.sync:
-                        continue
-                    fr = h264_decode(buf[s.offset : s.offset + s.size])
-                    h, w = fr.y.shape
-                    rows.append(
-                        (
-                            int(doc_id), s.index, n_total,
-                            int(w), int(h), int(s.dts), int(s.duration),
-                            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "width", "height",
-                    "pts_ticks", "dur_ticks", "checksum",
-                ],
+    def decode(doc_id, payload):
+        # ONE table parse, byte slices for sync samples only — the
+        # 'non-key bytes are never decoded' claim holds at the copy
+        # level too (a keyframes_only mp4_demux would still slice every
+        # sample before filtering)
+        buf = bytes(payload)
+        track = extract_samples(buf)
+        n_total = len(track.samples)
+        for s in track.samples:
+            if not s.sync:
+                continue
+            fr = h264_decode(buf[s.offset : s.offset + s.size])
+            h, w = fr.y.shape
+            yield (
+                int(doc_id), s.index, n_total,
+                int(w), int(h), int(s.dts), int(s.duration),
+                int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
             )
 
-    return h264_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no int, n_frames int, width int, "
-            "height int, pts_ticks long, dur_ticks int, checksum bigint"
-        ),
+    return decode_blobs(
+        h264_table_real(spark, sf_dir), decode,
+        "doc_id long, frame_no int, n_frames int, width int, "
+        "height int, pts_ticks long, dur_ticks int, checksum bigint",
     )
 
 
@@ -1829,62 +1603,45 @@ def h264_gop_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     8.4.1.1 derivation allows, so skip runs, explicit mvd, and the MV
     median predictor all appear in every stream. Only the IDR is
     stss-marked sync."""
+    from streams_spark.functions import h264 as _h
+    from streams_spark.functions import mp4 as _m
+
+    def make_blob(d):
+        aus, w, h = _h264_gop_aus(d)
+        # only the IDR is sync
+        return (_m.mp4_mux(aus, w, h, sync_every=len(aus)),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264gop", (_h, _m), F.col("doc_id") % 3 == 2,
+        make_blob,
+    )
+
+
+def _h264_gop_aus(d: int) -> tuple[list[bytes], int, int]:
+    """(access units, cropped width, cropped height) of doc d's GOP —
+    the IDR plus 2..4 P pictures shared by the mp4v and avc1 fixtures,
+    so their decoded pixels are identical by construction."""
     from streams_spark.functions.h264 import (
         h264_encode_p_rows, h264_encode_rows,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 2))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from streams_spark.functions.mp4 import mp4_mux
-
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-                nf = 3 + (d // 27) % 3
-                crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-                aus = [
-                    h264_encode_rows(
-                        mw, mh, 40 + (7 * d) % 160,
-                        [(d + r) % 3 for r in range(1, mh)],
-                        crop_right=crop_r, crop_bottom=crop_b,
-                    )
-                ]
-                for f in range(1, nf):
-                    mvx = ((5 * d + 3 * f) % 13) - 6
-                    mvy = ((3 * d + 7 * f) % 23) - 11
-                    levels = [
-                        [0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)
-                    ]
-                    aus.append(
-                        h264_encode_p_rows(
-                            mw, mh, (mvx, mvy), levels, frame_num=f,
-                        )
-                    )
-                rows_out.append(
-                    (d, mp4_mux(
-                        aus, 16 * mw - crop_r, 16 * mh - crop_b,
-                        sync_every=len(aus),  # only the IDR is sync
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
-    from streams_spark.functions import h264 as _h
-    from streams_spark.functions import mp4 as _m
-
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264gop",
-        (_h, _m),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
-    )
+    mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
+    crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
+    aus = [
+        h264_encode_rows(
+            mw, mh, 40 + (7 * d) % 160,
+            [(d + r) % 3 for r in range(1, mh)],
+            crop_right=crop_r, crop_bottom=crop_b,
+        )
+    ]
+    for f in range(1, 3 + (d // 27) % 3):
+        mvx = ((5 * d + 3 * f) % 13) - 6
+        mvy = ((3 * d + 7 * f) % 23) - 11
+        levels = [[0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)]
+        aus.append(
+            h264_encode_p_rows(mw, mh, (mvx, mvy), levels, frame_num=f)
+        )
+    return aus, 16 * mw - crop_r, 16 * mh - crop_b
 
 
 @register("m_h264_gop", oracle=_H264_GOP_ORACLE)
@@ -1915,45 +1672,41 @@ def m_h264_gop(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel across videos, partitions track cores.
 
     Reference contract: consumer-side decode of opaque payloads
-    (/root/reference/server/messages.go:65)."""
+    (reference server/messages.go:65)."""
+    return _decode_gops(h264_gop_table_real(spark, sf_dir))
+
+
+_GOP_SCHEMA = (
+    "doc_id long, frame_no int, n_frames int, width int, "
+    "height int, dts_ticks long, is_idr boolean, checksum bigint"
+)
+
+
+def _decode_gops(table: DataFrame) -> DataFrame:
+    """Decode every sample of each GOP-in-MP4 blob in `table` through
+    one H264Decoder per video (its DPB carries the references), one
+    row per picture — the decode rule of m_h264_gop, m_h264_multiref,
+    m_h264_rplm and m_h264_partitions."""
     import numpy as np
 
     from streams_spark.functions.h264 import H264Decoder
     from streams_spark.functions.mp4 import extract_samples
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                track = extract_samples(buf)
-                dec = H264Decoder()
-                n_total = len(track.samples)
-                for s in track.samples:
-                    fr = dec.decode(buf[s.offset : s.offset + s.size])
-                    h, w = fr.y.shape
-                    rows.append(
-                        (
-                            int(doc_id), s.index, n_total,
-                            int(w), int(h), int(s.dts), bool(s.sync),
-                            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "width", "height",
-                    "dts_ticks", "is_idr", "checksum",
-                ],
+    def decode(doc_id, payload):
+        buf = bytes(payload)
+        track = extract_samples(buf)
+        dec = H264Decoder()
+        n_total = len(track.samples)
+        for s in track.samples:
+            fr = dec.decode(buf[s.offset : s.offset + s.size])
+            h, w = fr.y.shape
+            yield (
+                int(doc_id), s.index, n_total,
+                int(w), int(h), int(s.dts), bool(s.sync),
+                int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
             )
 
-    return h264_gop_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no int, n_frames int, width int, "
-            "height int, dts_ticks long, is_idr boolean, checksum bigint"
-        ),
-    )
+    return decode_blobs(table, decode, _GOP_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1971,62 +1724,20 @@ def h264_avc1_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decoded pixels, which is exactly what the shared closed-form
     oracle checks. nal_length_size varies 2/4 per doc so both prefix
     widths are driver-exercised."""
-    from streams_spark.functions.h264 import (
-        h264_encode_p_rows, h264_encode_rows,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 6 == 2))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from streams_spark.functions.mp4 import mp4_mux_avc
-
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-                nf = 3 + (d // 27) % 3
-                crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-                aus = [
-                    h264_encode_rows(
-                        mw, mh, 40 + (7 * d) % 160,
-                        [(d + r) % 3 for r in range(1, mh)],
-                        crop_right=crop_r, crop_bottom=crop_b,
-                    )
-                ]
-                for f in range(1, nf):
-                    mvx = ((5 * d + 3 * f) % 13) - 6
-                    mvy = ((3 * d + 7 * f) % 23) - 11
-                    levels = [
-                        [0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)
-                    ]
-                    aus.append(
-                        h264_encode_p_rows(
-                            mw, mh, (mvx, mvy), levels, frame_num=f,
-                        )
-                    )
-                rows_out.append(
-                    (d, mp4_mux_avc(
-                        aus, 16 * mw - crop_r, 16 * mh - crop_b,
-                        nal_length_size=2 if d % 2 else 4,
-                        sync_every=len(aus),
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
     from streams_spark.functions import mp4 as _m
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264avc1",
-        (_h, _m),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        aus, w, h = _h264_gop_aus(d)
+        return (_m.mp4_mux_avc(
+            aus, w, h,
+            nal_length_size=2 if d % 2 else 4,
+            sync_every=len(aus),
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264avc1", (_h, _m), F.col("doc_id") % 6 == 2,
+        make_blob,
     )
 
 
@@ -2053,50 +1764,33 @@ def m_h264_avc1(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_samples,
     )
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                track = extract_samples(buf)
-                if track.avcc is None:
-                    raise Mp4Error(
-                        f"doc {doc_id}: expected an avc1/avc3 track"
-                    )
-                dec = H264Decoder()
-                n_total = len(track.samples)
-                for s in track.samples:
-                    au = avc_sample_to_annexb(
-                        buf[s.offset : s.offset + s.size],
-                        track.avcc.nal_length_size,
-                    )
-                    if s.index == 0:
-                        au = avc_track_param_sets(track.avcc) + au
-                    fr = dec.decode(au)
-                    h, w = fr.y.shape
-                    rows.append(
-                        (
-                            int(doc_id), s.index, n_total,
-                            int(w), int(h), int(s.dts), bool(s.sync),
-                            track.codec,
-                            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "width", "height",
-                    "dts_ticks", "is_idr", "codec", "checksum",
-                ],
+    def decode(doc_id, payload):
+        buf = bytes(payload)
+        track = extract_samples(buf)
+        if track.avcc is None:
+            raise Mp4Error(f"doc {doc_id}: expected an avc1/avc3 track")
+        dec = H264Decoder()
+        n_total = len(track.samples)
+        for s in track.samples:
+            au = avc_sample_to_annexb(
+                buf[s.offset : s.offset + s.size],
+                track.avcc.nal_length_size,
+            )
+            if s.index == 0:
+                au = avc_track_param_sets(track.avcc) + au
+            fr = dec.decode(au)
+            h, w = fr.y.shape
+            yield (
+                int(doc_id), s.index, n_total,
+                int(w), int(h), int(s.dts), bool(s.sync), track.codec,
+                int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
             )
 
-    return h264_avc1_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no int, n_frames int, width int, "
-            "height int, dts_ticks long, is_idr boolean, codec string, "
-            "checksum bigint"
-        ),
+    return decode_blobs(
+        h264_avc1_table_real(spark, sf_dir), decode,
+        "doc_id long, frame_no int, n_frames int, width int, "
+        "height int, dts_ticks long, is_idr boolean, codec string, "
+        "checksum bigint",
     )
 
 
@@ -2197,73 +1891,39 @@ def h264_multiref_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     appear in every stream. Rows with a nonzero ref never collapse to
     P_Skip (8.4.1.1 pins skip to refIdx 0), so multi-ref MBs are
     always explicitly coded. Only the IDR is stss-marked sync."""
-    from streams_spark.functions.h264 import (
-        h264_encode_p_rows, h264_encode_rows,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 6 == 1))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from streams_spark.functions.mp4 import mp4_mux
-
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-                nf = 4 + (d // 27) % 2
-                crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-                aus = [
-                    h264_encode_rows(
-                        mw, mh, 40 + (7 * d) % 160,
-                        [(d + r) % 3 for r in range(1, mh)],
-                        crop_right=crop_r, crop_bottom=crop_b,
-                        max_ref=2,
-                    )
-                ]
-                for f in range(1, nf):
-                    mvx = ((5 * d + 3 * f) % 13) - 6
-                    mvy = ((3 * d + 7 * f) % 23) - 11
-                    levels = [
-                        [0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)
-                    ]
-                    if f == 1:
-                        aus.append(
-                            h264_encode_p_rows(
-                                mw, mh, (mvx, mvy), levels, frame_num=f,
-                            )
-                        )
-                    else:
-                        aus.append(
-                            h264_encode_p_rows(
-                                mw, mh, (mvx, mvy), levels, frame_num=f,
-                                row_refs=[
-                                    (d + f + r) % 2 for r in range(mh)
-                                ],
-                                num_ref_active=2,
-                            )
-                        )
-                rows_out.append(
-                    (d, mp4_mux(
-                        aus, 16 * mw - crop_r, 16 * mh - crop_b,
-                        sync_every=len(aus),  # only the IDR is sync
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
     from streams_spark.functions import mp4 as _m
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264mref",
-        (_h, _m),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
+        crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
+        aus = [
+            _h.h264_encode_rows(
+                mw, mh, 40 + (7 * d) % 160,
+                [(d + r) % 3 for r in range(1, mh)],
+                crop_right=crop_r, crop_bottom=crop_b,
+                max_ref=2,
+            )
+        ]
+        for f in range(1, 4 + (d // 27) % 2):
+            mvx = ((5 * d + 3 * f) % 13) - 6
+            mvy = ((3 * d + 7 * f) % 23) - 11
+            levels = [[0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)]
+            multi = {} if f == 1 else {
+                "row_refs": [(d + f + r) % 2 for r in range(mh)],
+                "num_ref_active": 2,
+            }
+            aus.append(_h.h264_encode_p_rows(
+                mw, mh, (mvx, mvy), levels, frame_num=f, **multi,
+            ))
+        return (_m.mp4_mux(
+            aus, 16 * mw - crop_r, 16 * mh - crop_b,
+            sync_every=len(aus),  # only the IDR is sync
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264mref", (_h, _m), F.col("doc_id") % 6 == 1,
+        make_blob,
     )
 
 
@@ -2295,44 +1955,7 @@ def m_h264_multiref(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import H264Decoder
-    from streams_spark.functions.mp4 import extract_samples
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                track = extract_samples(buf)
-                dec = H264Decoder()
-                n_total = len(track.samples)
-                for s in track.samples:
-                    fr = dec.decode(buf[s.offset : s.offset + s.size])
-                    h, w = fr.y.shape
-                    rows.append(
-                        (
-                            int(doc_id), s.index, n_total,
-                            int(w), int(h), int(s.dts), bool(s.sync),
-                            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "width", "height",
-                    "dts_ticks", "is_idr", "checksum",
-                ],
-            )
-
-    return h264_multiref_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no int, n_frames int, width int, "
-            "height int, dts_ticks long, is_idr boolean, checksum bigint"
-        ),
-    )
+    return _decode_gops(h264_multiref_table_real(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2400,43 +2023,30 @@ def m_cross_container_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window as W
 
-    def decode_idr(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                track, frames = mp4_demux(bytes(payload), keyframes_only=True)
-                au = frames[0]
-                container = track.codec
-                if track.avcc is not None:
-                    au = avc_track_param_sets(track.avcc) + (
-                        avc_sample_to_annexb(au, track.avcc.nal_length_size)
-                    )
-                fr = h264_decode(au)
-                h, w = fr.y.shape
-                rows.append(
-                    (
-                        int(doc_id), container, int(w), int(h),
-                        int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "container", "width", "height",
-                         "checksum"],
+    def decode_idr(doc_id, payload):
+        track, frames = mp4_demux(bytes(payload), keyframes_only=True)
+        au = frames[0]
+        if track.avcc is not None:
+            au = avc_track_param_sets(track.avcc) + (
+                avc_sample_to_annexb(au, track.avcc.nal_length_size)
             )
+        fr = h264_decode(au)
+        h, w = fr.y.shape
+        yield (
+            int(doc_id), track.codec, int(w), int(h),
+            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
+        )
 
-    schema = (
-        "doc_id long, container string, width int, height int, "
-        "checksum bigint"
-    )
     # union the two staged corpora BEFORE the decode stage: decode_idr
     # already distinguishes packaging per blob (track.avcc), so one
     # Arrow stage over the unioned feed replaces two — same rows, one
     # python stage in the plan instead of two (r11 opt round)
-    frames = (
+    frames = decode_blobs(
         h264_gop_table_real(spark, sf_dir)
-        .unionByName(h264_avc1_table_real(spark, sf_dir))
-        .mapInPandas(decode_idr, schema=schema)
+        .unionByName(h264_avc1_table_real(spark, sf_dir)),
+        decode_idr,
+        "doc_id long, container string, width int, height int, "
+        "checksum bigint",
     )
     k = W.partitionBy("width", "height", "checksum")
     ko = k.orderBy(
@@ -2501,42 +2111,24 @@ def h264_i4x4_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictor with non-Intra_4x4 neighbors counting as DC, and the
     first interior MB of each row carries per-4x4 DC-only CAVLC levels
     under the intra Table 9-4 cbp 5 (luma quadrants 0+2)."""
-    from streams_spark.functions.h264 import h264_encode_i4x4_rows
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 2))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-                payload = h264_encode_i4x4_rows(
-                    mw, mh, 40 + (7 * d) % 160,
-                    [(d + r) % 3 for r in range(1, mh)],
-                    [
-                        [[0, 1, -1][(d + 2 * r + 3 * q) % 3]
-                         for q in range(4)]
-                        for r in range(1, mh)
-                    ],
-                    crop_right=2 * (d % 4),
-                    crop_bottom=2 * ((d // 5) % 3),
-                )
-                rows_out.append((d, payload))
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264i4",
-        (_h,),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
+        return (_h.h264_encode_i4x4_rows(
+            mw, mh, 40 + (7 * d) % 160,
+            [(d + r) % 3 for r in range(1, mh)],
+            [
+                [[0, 1, -1][(d + 2 * r + 3 * q) % 3] for q in range(4)]
+                for r in range(1, mh)
+            ],
+            crop_right=2 * (d % 4),
+            crop_bottom=2 * ((d // 5) % 3),
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264i4", (_h,), F.col("doc_id") % 3 == 2,
+        make_blob,
     )
 
 
@@ -2561,29 +2153,27 @@ def m_h264_intra4x4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
+    return _decode_pictures(h264_i4x4_table_real(spark, sf_dir))
+
+
+def _decode_pictures(table: DataFrame) -> DataFrame:
+    """Decode each raw Annex-B picture blob in `table` to one
+    (doc_id, width, height, luma checksum) row — the decode rule of
+    m_h264_intra4x4 and m_h264_deblock."""
     import numpy as np
 
     from streams_spark.functions.h264 import h264_decode
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fr = h264_decode(bytes(payload))
-                h, w = fr.y.shape
-                rows.append(
-                    (
-                        int(doc_id), int(w), int(h),
-                        int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "checksum"]
-            )
+    def decode(doc_id, payload):
+        fr = h264_decode(bytes(payload))
+        h, w = fr.y.shape
+        yield (
+            int(doc_id), int(w), int(h),
+            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
+        )
 
-    return h264_i4x4_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema="doc_id long, width int, height int, checksum bigint",
+    return decode_blobs(
+        table, decode, "doc_id long, width int, height int, checksum bigint"
     )
 
 
@@ -2684,44 +2274,27 @@ def h264_deblock_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback), 50/65 (past alpha, untouched) — with the in-loop filter
     ENABLED (idc 0, zero offsets) and a DC-anchored first MB so every
     macroblock deblocks at the slice QP."""
-    from streams_spark.functions.h264 import dc_offset, h264_encode_rows
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 2))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows_out = []
-        mags = [0, 1, 2, 5, 9, 20, 26]
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mh = 2 + (d // 9) % 4
-                la = (d % 7) - 3
-                levels = [
-                    mags[(d + 2 * r) % 7]
-                    * (1 if (d + r) % 2 == 0 else -1)
-                    for r in range(1, mh)
-                ]
-                payload = h264_encode_rows(
-                    1, mh, 128 + dc_offset(la), levels,
-                    crop_right=2 * (d % 4),
-                    crop_bottom=2 * ((d // 5) % 3),
-                    deblock=True, anchor_level=la,
-                )
-                rows_out.append((d, payload))
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264db",
-        (_h,),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    mags = [0, 1, 2, 5, 9, 20, 26]
+
+    def make_blob(d):
+        mh = 2 + (d // 9) % 4
+        la = (d % 7) - 3
+        levels = [
+            mags[(d + 2 * r) % 7] * (1 if (d + r) % 2 == 0 else -1)
+            for r in range(1, mh)
+        ]
+        return (_h.h264_encode_rows(
+            1, mh, 128 + _h.dc_offset(la), levels,
+            crop_right=2 * (d % 4),
+            crop_bottom=2 * ((d // 5) % 3),
+            deblock=True, anchor_level=la,
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264db", (_h,), F.col("doc_id") % 3 == 2,
+        make_blob,
     )
 
 
@@ -2747,30 +2320,7 @@ def m_h264_deblock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import h264_decode
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fr = h264_decode(bytes(payload))
-                h, w = fr.y.shape
-                rows.append(
-                    (
-                        int(doc_id), int(w), int(h),
-                        int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "checksum"]
-            )
-
-    return h264_deblock_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema="doc_id long, width int, height int, checksum bigint",
-    )
+    return _decode_pictures(h264_deblock_table_real(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2859,67 +2409,41 @@ def h264_part_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual — so mvd parse order (including the 7.3.5.2 sub_mb_pred
     nesting), the MVP rules at every grain, per-partition MC, and the
     per-4x4 motion bookkeeping all land in oracle-checked pixels."""
-    from streams_spark.functions.h264 import (
-        h264_encode_p_partitions, h264_encode_rows,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 2))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from streams_spark.functions.mp4 import mp4_mux
-
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-                nf = 3 + (d // 27) % 2
-                crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-                aus = [
-                    h264_encode_rows(
-                        mw, mh, 40 + (7 * d) % 160,
-                        [(d + r) % 3 for r in range(1, mh)],
-                        crop_right=crop_r, crop_bottom=crop_b,
-                    )
-                ]
-                for f in range(1, nf):
-                    row_modes = []
-                    for R in range(mh):
-                        m = 1 + (d + f + R) % 5
-                        dy_t = ((3 * d + 5 * f + 7 * R) % 9) - 4
-                        dy_b = ((d + 7 * f + 3 * R) % 9) - 4
-                        mvx_t = ((5 * d + 3 * f + 11 * R) % 13) - 6
-                        mvx_b = ((5 * d + 3 * f + 11 * R + 4) % 13) - 6
-                        mv_t = (mvx_t, 4 * dy_t)
-                        mv_b = mv_t if m == 2 else (mvx_b, 4 * dy_b)
-                        level = [0, 1, -1][(d + 2 * f + R) % 3]
-                        row_modes.append((m, mv_t, mv_b, level))
-                    aus.append(
-                        h264_encode_p_partitions(
-                            mw, mh, row_modes, frame_num=f,
-                        )
-                    )
-                rows_out.append(
-                    (d, mp4_mux(
-                        aus, 16 * mw - crop_r, 16 * mh - crop_b,
-                        sync_every=len(aus),
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
     from streams_spark.functions import mp4 as _m
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264part",
-        (_h, _m),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
+        crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
+        aus = [
+            _h.h264_encode_rows(
+                mw, mh, 40 + (7 * d) % 160,
+                [(d + r) % 3 for r in range(1, mh)],
+                crop_right=crop_r, crop_bottom=crop_b,
+            )
+        ]
+        for f in range(1, 3 + (d // 27) % 2):
+            row_modes = []
+            for R in range(mh):
+                m = 1 + (d + f + R) % 5
+                dy_t = ((3 * d + 5 * f + 7 * R) % 9) - 4
+                dy_b = ((d + 7 * f + 3 * R) % 9) - 4
+                mvx_t = ((5 * d + 3 * f + 11 * R) % 13) - 6
+                mvx_b = ((5 * d + 3 * f + 11 * R + 4) % 13) - 6
+                mv_t = (mvx_t, 4 * dy_t)
+                mv_b = mv_t if m == 2 else (mvx_b, 4 * dy_b)
+                level = [0, 1, -1][(d + 2 * f + R) % 3]
+                row_modes.append((m, mv_t, mv_b, level))
+            aus.append(
+                _h.h264_encode_p_partitions(mw, mh, row_modes, frame_num=f)
+            )
+        return (_m.mp4_mux(
+            aus, 16 * mw - crop_r, 16 * mh - crop_b, sync_every=len(aus),
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264part", (_h, _m), F.col("doc_id") % 3 == 2,
+        make_blob,
     )
 
 
@@ -2945,44 +2469,9 @@ def m_h264_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import H264Decoder
-    from streams_spark.functions.mp4 import extract_samples
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                track = extract_samples(buf)
-                dec = H264Decoder()
-                n_total = len(track.samples)
-                for s in track.samples:
-                    fr = dec.decode(buf[s.offset : s.offset + s.size])
-                    h, w = fr.y.shape
-                    rows.append(
-                        (
-                            int(doc_id), s.index, n_total,
-                            int(w), int(h), int(s.dts),
-                            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "width", "height",
-                    "dts_ticks", "checksum",
-                ],
-            )
-
-    return h264_part_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no int, n_frames int, width int, "
-            "height int, dts_ticks long, checksum bigint"
-        ),
-    )
+    # every partitions-GOP picture but the first is a P picture, so
+    # the shared rule's is_idr column carries nothing the oracle checks
+    return _decode_gops(h264_part_table_real(spark, sf_dir)).drop("is_idr")
 
 
 # ---------------------------------------------------------------------------
@@ -3071,44 +2560,26 @@ def h264_slices_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice per macroblock (h264_encode_sliced_rows): per-slice anchors
     sweep the deblock threshold regimes and docs cycle all three
     disable_deblocking_filter_idc values."""
-    from streams_spark.functions.h264 import h264_encode_sliced_rows
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 2))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows_out = []
-        mags = [0, 1, 2, 5, 9, 20, 26]
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mh = 2 + (d // 9) % 4
-                levels = [
-                    mags[(d + 2 * r) % 7]
-                    * (1 if (d + r) % 2 == 0 else -1)
-                    for r in range(mh)
-                ]
-                rows_out.append(
-                    (d, h264_encode_sliced_rows(
-                        mh, levels,
-                        deblock_idc=(d // 7) % 3,
-                        crop_right=2 * (d % 4),
-                        crop_bottom=2 * ((d // 5) % 3),
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264sl",
-        (_h,),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    mags = [0, 1, 2, 5, 9, 20, 26]
+
+    def make_blob(d):
+        mh = 2 + (d // 9) % 4
+        levels = [
+            mags[(d + 2 * r) % 7] * (1 if (d + r) % 2 == 0 else -1)
+            for r in range(mh)
+        ]
+        return (_h.h264_encode_sliced_rows(
+            mh, levels,
+            deblock_idc=(d // 7) % 3,
+            crop_right=2 * (d % 4),
+            crop_bottom=2 * ((d // 5) % 3),
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264sl", (_h,), F.col("doc_id") % 3 == 2,
+        make_blob,
     )
 
 
@@ -3134,36 +2605,23 @@ def m_h264_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions.h264 import h264_decode
     from streams_spark.functions.h264 import annexb_split
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                n_slices = sum(
-                    1 for nal in annexb_split(buf)
-                    if nal and (nal[0] & 0x1F) in (1, 5)
-                )
-                fr = h264_decode(buf)
-                h, w = fr.y.shape
-                rows.append(
-                    (
-                        int(doc_id), int(w), int(h), n_slices,
-                        int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_slices", "checksum",
-                ],
-            )
+    def decode(doc_id, payload):
+        buf = bytes(payload)
+        n_slices = sum(
+            1 for nal in annexb_split(buf)
+            if nal and (nal[0] & 0x1F) in (1, 5)
+        )
+        fr = h264_decode(buf)
+        h, w = fr.y.shape
+        yield (
+            int(doc_id), int(w), int(h), n_slices,
+            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
+        )
 
-    return h264_slices_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, width int, height int, n_slices int, "
-            "checksum bigint"
-        ),
+    return decode_blobs(
+        h264_slices_table_real(spark, sf_dir), decode,
+        "doc_id long, width int, height int, n_slices int, "
+        "checksum bigint",
     )
 
 
@@ -3308,50 +2766,32 @@ def h264_fmo_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned instead), one slice per group with per-MB
     mb_qp_delta, odd docs emitting their slices in reversed order
     (ASO)."""
-    from streams_spark.functions.h264 import h264_encode_fmo
-    from streams_spark.functions.h264 import _fmo_fixture_map
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 1))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mags = [0, 1, 2, 5, 9, 20, 26]
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mh, _, fmo, cycle = _fmo_doc_config(d)
-                m = _fmo_fixture_map(mh, fmo, cycle)
-                levels = [
-                    mags[(d + 3 * r) % 7] * (1 if (d + r) % 2 == 0 else -1)
-                    for r in range(mh)
-                ]
-                deltas = [
-                    [
-                        ((d // (p + 1) + g) % 3) - 1
-                        for p in range(sum(1 for v in m if v == g))
-                    ]
-                    for g in range(2)
-                ]
-                rows_out.append(
-                    (d, h264_encode_fmo(
-                        mh, levels, deltas, fmo, cycle,
-                        slice_order=[1, 0] if d % 2 else None,
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264fmo",
-        (_h,),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    mags = [0, 1, 2, 5, 9, 20, 26]
+
+    def make_blob(d):
+        mh, _, fmo, cycle = _fmo_doc_config(d)
+        m = _h._fmo_fixture_map(mh, fmo, cycle)
+        levels = [
+            mags[(d + 3 * r) % 7] * (1 if (d + r) % 2 == 0 else -1)
+            for r in range(mh)
+        ]
+        deltas = [
+            [
+                ((d // (p + 1) + g) % 3) - 1
+                for p in range(sum(1 for v in m if v == g))
+            ]
+            for g in range(2)
+        ]
+        return (_h.h264_encode_fmo(
+            mh, levels, deltas, fmo, cycle,
+            slice_order=[1, 0] if d % 2 else None,
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264fmo", (_h,), F.col("doc_id") % 3 == 1,
+        make_blob,
     )
 
 
@@ -3378,41 +2818,26 @@ def m_h264_fmo(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions.h264 import h264_decode
     from streams_spark.functions.h264 import h264_slice_group_sizes
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                n_slices = sum(
-                    1 for nal in annexb_split(buf)
-                    if nal and (nal[0] & 0x1F) in (1, 5)
-                )
-                fr = h264_decode(buf)
-                d = int(doc_id)
-                _, map_type, _, _ = _fmo_doc_config(d)
-                sizes = h264_slice_group_sizes(buf)
-                h, w = fr.y.shape
-                rows.append(
-                    (
-                        d, int(w), int(h), int(map_type), n_slices,
-                        int(sizes[0]),
-                        int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "map_type",
-                    "n_slices", "group0_size", "checksum",
-                ],
-            )
+    def decode(doc_id, payload):
+        buf = bytes(payload)
+        n_slices = sum(
+            1 for nal in annexb_split(buf)
+            if nal and (nal[0] & 0x1F) in (1, 5)
+        )
+        fr = h264_decode(buf)
+        d = int(doc_id)
+        _, map_type, _, _ = _fmo_doc_config(d)
+        sizes = h264_slice_group_sizes(buf)
+        h, w = fr.y.shape
+        yield (
+            d, int(w), int(h), int(map_type), n_slices, int(sizes[0]),
+            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
+        )
 
-    return h264_fmo_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, width int, height int, map_type int, "
-            "n_slices int, group0_size int, checksum bigint"
-        ),
+    return decode_blobs(
+        h264_fmo_table_real(spark, sf_dir), decode,
+        "doc_id long, width int, height int, map_type int, "
+        "n_slices int, group0_size int, checksum bigint",
     )
 
 
@@ -3466,47 +2891,25 @@ def aac_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     3..7 frames sweeping all 13 sampling-frequency indices, mono and
     stereo, CRC and multi-raw-data-block frames, leading junk, and an
     ID3v2 tag on every fourth doc."""
-    from streams_spark.functions.aac import adts_build
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == 0))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = 3 + (d // 3) % 5
-                frames = []
-                for i in range(nf):
-                    crc = (d + i) % 3 == 0
-                    blocks = 1 if crc else 1 + (d + i) % 2
-                    frames.append(
-                        (20 + (7 * d + 13 * i) % 50, blocks, crc)
-                    )
-                rows_out.append(
-                    (d, adts_build(
-                        frames,
-                        sfi=(d // 7) % 13,
-                        channels=1 + (d // 11) % 2,
-                        lead_junk=d % 5,
-                        id3_size=(10 + (d % 23)) if d % 4 == 0 else 0,
-                        seed=d,
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import aac as _a
 
-    return _staged_blob_feed(
-        spark, sf_dir, "docaac",
-        (_a,),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        frames = []
+        for i in range(3 + (d // 3) % 5):
+            crc = (d + i) % 3 == 0
+            blocks = 1 if crc else 1 + (d + i) % 2
+            frames.append((20 + (7 * d + 13 * i) % 50, blocks, crc))
+        return (_a.adts_build(
+            frames,
+            sfi=(d // 7) % 13,
+            channels=1 + (d // 11) % 2,
+            lead_junk=d % 5,
+            id3_size=(10 + (d % 23)) if d % 4 == 0 else 0,
+            seed=d,
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "docaac", (_a,), F.col("doc_id") % 3 == 0, make_blob,
     )
 
 
@@ -3534,42 +2937,27 @@ def m_aac_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/server/messages.go:65)."""
     from streams_spark.functions.aac import adts_scan
 
-    def census(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                scan = adts_scan(bytes(payload))
-                fr = scan.frames
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(fr),
-                        fr[0].sample_rate if fr else 0,
-                        fr[0].channels if fr else 0,
-                        1024 * sum(f.blocks for f in fr),
-                        sum(f.size for f in fr),
-                        sum(1 for f in fr if f.crc),
-                        sum(1 for f in fr if f.blocks > 1),
-                        scan.junk_bytes,
-                        scan.id3_bytes,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "samplerate", "channels",
-                    "total_samples", "frame_bytes", "crc_frames",
-                    "multi_block_frames", "junk_bytes", "id3_bytes",
-                ],
-            )
+    def census(doc_id, payload):
+        scan = adts_scan(bytes(payload))
+        fr = scan.frames
+        yield (
+            int(doc_id),
+            len(fr),
+            fr[0].sample_rate if fr else 0,
+            fr[0].channels if fr else 0,
+            1024 * sum(f.blocks for f in fr),
+            sum(f.size for f in fr),
+            sum(1 for f in fr if f.crc),
+            sum(1 for f in fr if f.blocks > 1),
+            scan.junk_bytes,
+            scan.id3_bytes,
+        )
 
-    return aac_table_real(spark, sf_dir).mapInPandas(
-        census,
-        schema=(
-            "doc_id long, n_frames int, samplerate int, channels int, "
-            "total_samples bigint, frame_bytes bigint, crc_frames int, "
-            "multi_block_frames int, junk_bytes int, id3_bytes int"
-        ),
+    return decode_blobs(
+        aac_table_real(spark, sf_dir), census,
+        "doc_id long, n_frames int, samplerate int, channels int, "
+        "total_samples bigint, frame_bytes bigint, crc_frames int, "
+        "multi_block_frames int, junk_bytes int, id3_bytes int",
     )
 
 
@@ -3851,60 +3239,33 @@ def gif_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a closed-form doc_id rule the oracle reproduces."""
     import numpy as np
 
-    from streams_spark.functions.gif import GifFrameSpec, gif_encode
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 4 == 1))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nc, w, h, nf = _gif_doc_config(d)
-                gpal = _gif_palette(d, nc, local=False)
-                yy, xx = np.meshgrid(
-                    np.arange(h), np.arange(w), indexing="ij"
-                )
-                base = ((xx + 2 * yy + d) % (nc - 1)).astype(np.uint8)
-                frames = [
-                    GifFrameSpec(base, interlaced=(d % 2 == 1))
-                ]
-                for k in range(1, nf):
-                    x0 = (5 * k + d) % (w - 8)
-                    y0 = (3 * k + d) % (h - 8)
-                    fw = 5 + (d + k) % 4
-                    fh = 4 + (d + 2 * k) % 5
-                    fy, fx = np.meshgrid(
-                        np.arange(fh), np.arange(fw), indexing="ij"
-                    )
-                    patch = ((3 * fx + fy + d + k) % nc).astype(np.uint8)
-                    frames.append(
-                        GifFrameSpec(
-                            patch, x=x0, y=y0,
-                            palette=(
-                                _gif_palette(d, nc, local=True)
-                                if k == 1 and d % 3 == 0 else None
-                            ),
-                            transparent=(nc - 1) if k % 2 == 1 else None,
-                            disposal=1, delay_cs=k,
-                        )
-                    )
-                rows.append(
-                    (d, gif_encode(w, h, frames, gpal, loop_count=0))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
     from streams_spark.functions import gif as _g
 
-    return _staged_blob_feed(
-        spark, sf_dir, "docgif",
-        (_g,),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        nc, w, h, nf = _gif_doc_config(d)
+        yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+        base = ((xx + 2 * yy + d) % (nc - 1)).astype(np.uint8)
+        frames = [_g.GifFrameSpec(base, interlaced=(d % 2 == 1))]
+        for k in range(1, nf):
+            fy, fx = np.meshgrid(
+                np.arange(4 + (d + 2 * k) % 5), np.arange(5 + (d + k) % 4),
+                indexing="ij",
+            )
+            frames.append(_g.GifFrameSpec(
+                ((3 * fx + fy + d + k) % nc).astype(np.uint8),
+                x=(5 * k + d) % (w - 8), y=(3 * k + d) % (h - 8),
+                palette=(
+                    _gif_palette(d, nc, local=True)
+                    if k == 1 and d % 3 == 0 else None
+                ),
+                transparent=(nc - 1) if k % 2 == 1 else None,
+                disposal=1, delay_cs=k,
+            ))
+        gpal = _gif_palette(d, nc, local=False)
+        return (_g.gif_encode(w, h, frames, gpal, loop_count=0),)
+
+    return _synth_feed(
+        spark, sf_dir, "docgif", (_g,), F.col("doc_id") % 4 == 1, make_blob,
     )
 
 
@@ -3934,50 +3295,32 @@ def m_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from streams_spark.functions.gif import gif_decode
 
-    def census(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                g = gif_decode(bytes(payload))
-                for k, fr in enumerate(g.frames):
-                    idx = fr.indices.astype(np.int64)
-                    if fr.transparent is None:
-                        opaque = np.ones(idx.shape, dtype=bool)
-                        n_transp = 0
-                    else:
-                        opaque = idx != fr.transparent
-                        n_transp = int((~opaque).sum())
-                    pal = fr.palette.astype(np.int64)
-                    rgb_sum = int(pal[idx[opaque]].sum())
-                    rows.append(
-                        (
-                            d, k, len(g.frames), fr.x, fr.y,
-                            idx.shape[1], idx.shape[0],
-                            len(fr.palette), int(fr.interlaced),
-                            int(fr.transparent is not None),
-                            int(fr.local_palette), n_transp,
-                            int(idx.sum()), rgb_sum,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "n_frames", "x", "y",
-                    "width", "height", "palette_size", "interlaced",
-                    "has_transparency", "local_palette",
-                    "n_transparent", "idx_sum", "rgb_sum",
-                ],
+    def census(doc_id, payload):
+        g = gif_decode(bytes(payload))
+        for k, fr in enumerate(g.frames):
+            idx = fr.indices.astype(np.int64)
+            if fr.transparent is None:
+                opaque = np.ones(idx.shape, dtype=bool)
+                n_transp = 0
+            else:
+                opaque = idx != fr.transparent
+                n_transp = int((~opaque).sum())
+            pal = fr.palette.astype(np.int64)
+            yield (
+                int(doc_id), k, len(g.frames), fr.x, fr.y,
+                idx.shape[1], idx.shape[0],
+                len(fr.palette), int(fr.interlaced),
+                int(fr.transparent is not None),
+                int(fr.local_palette), n_transp,
+                int(idx.sum()), int(pal[idx[opaque]].sum()),
             )
 
-    return gif_table_real(spark, sf_dir).mapInPandas(
-        census,
-        schema=(
-            "doc_id long, frame_idx int, n_frames int, x int, y int, "
-            "width int, height int, palette_size int, interlaced int, "
-            "has_transparency int, local_palette int, n_transparent int, "
-            "idx_sum bigint, rgb_sum bigint"
-        ),
+    return decode_blobs(
+        gif_table_real(spark, sf_dir), census,
+        "doc_id long, frame_idx int, n_frames int, x int, y int, "
+        "width int, height int, palette_size int, interlaced int, "
+        "has_transparency int, local_palette int, n_transparent int, "
+        "idx_sum bigint, rgb_sum bigint",
     )
 
 
@@ -4007,59 +3350,33 @@ def image_format_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuine near-miss negatives, not just positives."""
     import numpy as np
 
-    from streams_spark.functions.codecs import png_encode
-    from streams_spark.functions.gif import GifFrameSpec, gif_encode
-    from streams_spark.functions.rasters import (
-        bmp_encode, pnm_encode, tiff_encode,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 5 == 2))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nc = 16
-                w = 12 + d % 9
-                h = 10 + (2 * d) % 7
-                pal = _gif_palette(d, nc, local=False)
-                yy, xx = np.meshgrid(
-                    np.arange(h), np.arange(w), indexing="ij"
-                )
-                idx = ((2 * xx + 3 * yy + d) % nc).astype(np.uint8)
-                rgb = pal[idx]
-                rows.append((d, "png", png_encode(rgb)))
-                rows.append((d, "gif", gif_encode(
-                    w, h, [GifFrameSpec(idx, interlaced=(d % 2 == 1))], pal
-                )))
-                rows.append((d, "ppm", pnm_encode(rgb)))
-                rows.append((d, "tiff", tiff_encode(rgb)))
-                if d % 10 == 7:
-                    flipped = rgb.copy()
-                    flipped[0, 0] = pal[(int(idx[0, 0]) + 1) % nc]
-                    rows.append((d, "bmp", bmp_encode(flipped)))
-                else:
-                    rows.append((d, "bmp", bmp_encode(rgb)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "format", "payload"]
-            )
-
     from streams_spark.functions import codecs as _c
     from streams_spark.functions import gif as _g
     from streams_spark.functions import rasters as _r
 
-    return _staged_blob_feed(
-        spark, sf_dir, "docimgfmt",
-        (_c, _g, _r),
-        docs.mapInPandas(
-            synth, schema="doc_id long, format string, payload binary"
-        ),
+    def make_blob(d):
+        nc = 16
+        w, h = 12 + d % 9, 10 + (2 * d) % 7
+        pal = _gif_palette(d, nc, local=False)
+        yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+        idx = ((2 * xx + 3 * yy + d) % nc).astype(np.uint8)
+        rgb = pal[idx]
+        bmp = rgb
+        if d % 10 == 7:
+            bmp = rgb.copy()
+            bmp[0, 0] = pal[(int(idx[0, 0]) + 1) % nc]
+        gif = _g.GifFrameSpec(idx, interlaced=(d % 2 == 1))
+        return [
+            ("png", _c.png_encode(rgb)),
+            ("gif", _g.gif_encode(w, h, [gif], pal)),
+            ("ppm", _r.pnm_encode(rgb)),
+            ("tiff", _r.tiff_encode(rgb)),
+            ("bmp", _r.bmp_encode(bmp)),
+        ]
+
+    return _synth_feed(
+        spark, sf_dir, "docimgfmt", (_c, _g, _r), F.col("doc_id") % 5 == 2,
+        make_blob, "doc_id long, format string, payload binary",
     )
 
 
@@ -4115,22 +3432,15 @@ def m_image_format_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/server/messages.go:65)."""
     import numpy as np
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, fmt, payload in zip(
-                pdf["doc_id"], pdf["format"], pdf["payload"]
-            ):
-                arr = _sniff_rgb(bytes(payload)).astype(np.int64).ravel()
-                weights = np.arange(1, arr.size + 1, dtype=np.int64)
-                checksum = int((arr * weights).sum() % 1_000_000_007)
-                rows.append((int(doc_id), str(fmt), checksum))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "format", "checksum"]
-            )
+    def decode(doc_id, fmt, payload):
+        arr = _sniff_rgb(bytes(payload)).astype(np.int64).ravel()
+        weights = np.arange(1, arr.size + 1, dtype=np.int64)
+        checksum = int((arr * weights).sum() % 1_000_000_007)
+        yield (int(doc_id), str(fmt), checksum)
 
-    decoded = image_format_table_real(spark, sf_dir).mapInPandas(
-        decode, schema="doc_id long, format string, checksum bigint"
+    decoded = decode_blobs(
+        image_format_table_real(spark, sf_dir), decode,
+        "doc_id long, format string, checksum bigint",
     )
     clusters = decoded.groupBy("doc_id", "checksum").agg(
         F.count(F.lit(1)).alias("sz"),
@@ -4193,45 +3503,26 @@ def audio_container_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     giving the operator genuine negatives in the lossless tier too."""
     import numpy as np
 
-    from streams_spark.functions.au_aiff import aiff_encode, au_encode
-    from streams_spark.functions.codecs import wav_encode
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 6 == 4))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 8000 * (1 + d % 3)
-                s = _audio_doc_samples(d)
-                rows.append((d, "wav", wav_encode(s.astype(np.int16), rate)))
-                rows.append((d, "au", au_encode(s, rate, 1, encoding=3)))
-                if d % 12 == 10:
-                    remaster = s.copy()
-                    remaster[1] += 2
-                    rows.append((d, "aiff", aiff_encode(remaster, rate)))
-                else:
-                    rows.append((d, "aiff", aiff_encode(s, rate)))
-                rows.append((d, "ulaw", au_encode(s, rate, 1, encoding=1)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "format", "payload"]
-            )
-
     from streams_spark.functions import au_aiff as _aa
     from streams_spark.functions import codecs as _c
 
-    return _staged_blob_feed(
-        spark, sf_dir, "docaudiofmt",
-        (_aa, _c),
-        docs.mapInPandas(
-            synth, schema="doc_id long, format string, payload binary"
-        ),
+    def make_blob(d):
+        rate = 8000 * (1 + d % 3)
+        s = _audio_doc_samples(d)
+        aiff = s
+        if d % 12 == 10:
+            aiff = s.copy()
+            aiff[1] += 2
+        return [
+            ("wav", _c.wav_encode(s.astype(np.int16), rate)),
+            ("au", _aa.au_encode(s, rate, 1, encoding=3)),
+            ("aiff", _aa.aiff_encode(aiff, rate)),
+            ("ulaw", _aa.au_encode(s, rate, 1, encoding=1)),
+        ]
+
+    return _synth_feed(
+        spark, sf_dir, "docaudiofmt", (_aa, _c), F.col("doc_id") % 6 == 4,
+        make_blob, "doc_id long, format string, payload binary",
     )
 
 
@@ -4262,41 +3553,27 @@ def m_audio_container_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions.au_aiff import aiff_decode, au_decode
     from streams_spark.functions.codecs import wav_decode
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, fmt, payload in zip(
-                pdf["doc_id"], pdf["format"], pdf["payload"]
-            ):
-                buf = bytes(payload)
-                if buf[:4] == b"RIFF":
-                    s, rate, _ch = wav_decode(buf)
-                elif buf[:4] == b".snd":
-                    s, rate, _ch = au_decode(buf)
-                elif buf[:4] == b"FORM":
-                    s, rate, _ch, _bits = aiff_decode(buf)
-                else:
-                    raise ValueError("unrecognized audio magic")
-                s = np.asarray(s, dtype=np.int64).ravel()
-                weights = np.arange(1, s.size + 1, dtype=np.int64)
-                checksum = int(
-                    ((s * weights).sum() % 1_000_000_007 + 1_000_000_007)
-                    % 1_000_000_007
-                )
-                rows.append(
-                    (int(doc_id), str(fmt), checksum, int(rate), s.size)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "format", "checksum", "rate", "n"],
-            )
+    def decode(doc_id, fmt, payload):
+        buf = bytes(payload)
+        if buf[:4] == b"RIFF":
+            s, rate, _ch = wav_decode(buf)
+        elif buf[:4] == b".snd":
+            s, rate, _ch = au_decode(buf)
+        elif buf[:4] == b"FORM":
+            s, rate, _ch, _bits = aiff_decode(buf)
+        else:
+            raise ValueError("unrecognized audio magic")
+        s = np.asarray(s, dtype=np.int64).ravel()
+        weights = np.arange(1, s.size + 1, dtype=np.int64)
+        checksum = int(
+            ((s * weights).sum() % 1_000_000_007 + 1_000_000_007)
+            % 1_000_000_007
+        )
+        yield (int(doc_id), str(fmt), checksum, int(rate), s.size)
 
-    decoded = audio_container_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, format string, checksum bigint, "
-            "rate int, n int"
-        ),
+    decoded = decode_blobs(
+        audio_container_table_real(spark, sf_dir), decode,
+        "doc_id long, format string, checksum bigint, rate int, n int",
     )
     clusters = decoded.groupBy("doc_id", "checksum").agg(
         F.count(F.lit(1)).alias("sz"),
@@ -4429,69 +3706,40 @@ def h264_rplm_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     {F3, F1}; F5 (every other doc) returns to plain sliding-window
     order. Per-MB-row ref_idx (doc_id + frame + row) % 2 as in the
     multiref family."""
-    from streams_spark.functions.h264 import (
-        h264_encode_p_rows, h264_encode_rows,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id").isNotNull() & (F.col("doc_id") % 6 == 5))
-        .distinct()
-    )
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from streams_spark.functions.mp4 import mp4_mux
-
-        rows_out = []
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-                nf = 5 + (d // 27) % 2
-                crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-                aus = [
-                    h264_encode_rows(
-                        mw, mh, 40 + (7 * d) % 160,
-                        [(d + r) % 3 for r in range(1, mh)],
-                        crop_right=crop_r, crop_bottom=crop_b,
-                        max_ref=2,
-                    )
-                ]
-                for f in range(1, nf):
-                    mvx = ((5 * d + 3 * f) % 13) - 6
-                    mvy = ((3 * d + 7 * f) % 23) - 11
-                    levels = [
-                        [0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)
-                    ]
-                    if f == 1:
-                        aus.append(h264_encode_p_rows(
-                            mw, mh, (mvx, mvy), levels, frame_num=f,
-                        ))
-                        continue
-                    aus.append(h264_encode_p_rows(
-                        mw, mh, (mvx, mvy), levels, frame_num=f,
-                        row_refs=[(d + f + r) % 2 for r in range(mh)],
-                        num_ref_active=2,
-                        rplm=[(0, 1)] if f == 3 else None,
-                        mmco_forget=[0] if f == 3 else None,
-                    ))
-                rows_out.append(
-                    (d, mp4_mux(
-                        aus, 16 * mw - crop_r, 16 * mh - crop_b,
-                        sync_every=len(aus),
-                    ))
-                )
-            yield pd.DataFrame(rows_out, columns=["doc_id", "payload"])
-            rows_out = []
-
     from streams_spark.functions import h264 as _h
     from streams_spark.functions import mp4 as _m
 
-    return _staged_blob_feed(
-        spark, sf_dir, "doch264rplm",
-        (_h, _m),
-        docs.mapInPandas(synth, schema="doc_id long, payload binary"),
+    def make_blob(d):
+        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
+        crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
+        aus = [
+            _h.h264_encode_rows(
+                mw, mh, 40 + (7 * d) % 160,
+                [(d + r) % 3 for r in range(1, mh)],
+                crop_right=crop_r, crop_bottom=crop_b,
+                max_ref=2,
+            )
+        ]
+        for f in range(1, 5 + (d // 27) % 2):
+            mvx = ((5 * d + 3 * f) % 13) - 6
+            mvy = ((3 * d + 7 * f) % 23) - 11
+            levels = [[0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)]
+            multi = {} if f == 1 else {
+                "row_refs": [(d + f + r) % 2 for r in range(mh)],
+                "num_ref_active": 2,
+                "rplm": [(0, 1)] if f == 3 else None,
+                "mmco_forget": [0] if f == 3 else None,
+            }
+            aus.append(_h.h264_encode_p_rows(
+                mw, mh, (mvx, mvy), levels, frame_num=f, **multi,
+            ))
+        return (_m.mp4_mux(
+            aus, 16 * mw - crop_r, 16 * mh - crop_b, sync_every=len(aus),
+        ),)
+
+    return _synth_feed(
+        spark, sf_dir, "doch264rplm", (_h, _m), F.col("doc_id") % 6 == 5,
+        make_blob,
     )
 
 
@@ -4518,41 +3766,4 @@ def m_h264_rplm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import H264Decoder
-    from streams_spark.functions.mp4 import extract_samples
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                track = extract_samples(buf)
-                dec = H264Decoder()
-                n_total = len(track.samples)
-                for s in track.samples:
-                    fr = dec.decode(buf[s.offset : s.offset + s.size])
-                    h, w = fr.y.shape
-                    rows.append(
-                        (
-                            int(doc_id), s.index, n_total,
-                            int(w), int(h), int(s.dts), bool(s.sync),
-                            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "width", "height",
-                    "dts_ticks", "is_idr", "checksum",
-                ],
-            )
-
-    return h264_rplm_table_real(spark, sf_dir).mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no int, n_frames int, width int, "
-            "height int, dts_ticks long, is_idr boolean, checksum bigint"
-        ),
-    )
+    return _decode_gops(h264_rplm_table_real(spark, sf_dir))

@@ -235,6 +235,99 @@ def test_default_decoder_selects_by_environment():
         assert M.default_decoder() is M._fake_decode
 
 
+_BLOBS = "doc_id long, payload binary"
+
+
+def test_decode_blobs_zero_one_or_many_rows_in_schema_order(spark):
+    """A decode rule may yield zero, one or many rows per blob, and the
+    output columns follow the schema string's order."""
+    from streams_spark.operators.multimodal import decode_blobs
+
+    blobs = spark.createDataFrame(
+        [(1, b""), (2, b"a"), (3, b"abc")], _BLOBS
+    ).coalesce(1)
+
+    def explode(doc_id, payload):
+        for i, b in enumerate(payload):
+            yield (len(payload), i, doc_id, b)
+
+    out = decode_blobs(blobs, explode, "n int, i int, doc_id long, byte int")
+    assert out.columns == ["n", "i", "doc_id", "byte"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 0, 2, 97), (3, 0, 3, 97), (3, 1, 3, 98), (3, 2, 3, 99),
+    ]
+
+
+def test_decode_blobs_empty_batch_keeps_schema_types(spark):
+    """A batch whose blobs all yield nothing leaves the worker as an
+    empty frame, which must still convert to the schema's types — the
+    same for an input with no rows at all."""
+    from streams_spark.operators.multimodal import decode_blobs
+
+    schema = "doc_id long, width int, ok boolean, name string, v double"
+    types = [
+        ("doc_id", "bigint"), ("width", "int"), ("ok", "boolean"),
+        ("name", "string"), ("v", "double"),
+    ]
+    blobs = spark.createDataFrame([(1, b"x"), (2, b"y")], _BLOBS)
+    for df in (blobs, blobs.coalesce(1), blobs.where("doc_id < 0")):
+        out = decode_blobs(df, lambda doc_id, payload: iter(()), schema)
+        assert out.dtypes == types
+        assert out.collect() == []
+
+
+def test_decode_media_null_payload_gives_null_metadata(spark):
+    """decode_media propagates a NULL payload to NULL metadata, both in
+    a batch mixing NULL and real blobs and in an all-NULL batch."""
+    from streams_spark.operators.multimodal import _fake_decode, decode_media
+
+    media = spark.createDataFrame(
+        [(1, "image", None), (2, "audio", b"abcd")],
+        "doc_id long, media_type string, payload binary",
+    )
+    for df in (media.coalesce(1), media.where("doc_id = 1")):
+        rows = {r.doc_id: r for r in decode_media(df).collect()}
+        assert tuple(rows[1]) == (1, "image", None, None, None, None)
+        if 2 in rows:
+            assert tuple(rows[2]) == (2, "audio", *_fake_decode(b"abcd"))
+
+
+def test_read_parquet_memo_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """Rewriting a part file in place leaves its directory's mtime
+    alone; the memo must still re-resolve the directory (the old
+    resolution carries the old file listing and footer schema), and
+    keep one entry per path."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streams_spark.sources import tables
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    part = feed / "part-0.parquet"
+    pq.write_table(pa.table({"x": [1, 2]}), part)
+    first = tables.read_parquet_memo(spark, str(feed))
+    assert sorted(r.x for r in first.collect()) == [1, 2]
+    assert tables.read_parquet_memo(spark, str(feed)) is first
+
+    dir_st = os.stat(feed)
+    pq.write_table(pa.table({"y": [7, 8, 9]}), part)
+    st = os.stat(part)
+    # a distinct mtime even on a coarse-grained filesystem clock, and
+    # the directory's own identity pinned to what the memo saw
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    os.utime(feed, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+
+    second = tables.read_parquet_memo(spark, str(feed))
+    assert second.columns == ["y"]
+    assert sorted(r.y for r in second.collect()) == [7, 8, 9]
+    assert [k for k in tables._READ_MEMO if k[1] == str(feed)] == [
+        (spark.sparkContext.applicationId, str(feed))
+    ]
+
+
 def _rowgroups_overlapping(path, col, lo, hi):
     """Count parquet row groups whose [min,max] stats overlap [lo,hi],
     and the total row-group count — straight from the footers."""

@@ -543,3 +543,44 @@ def test_residual_4x4_matches_unfused_primitives():
             d[0, 0] = dc
             want = (inverse_transform_4x4(d) + 32) >> 6
             assert (residual_4x4(None, qp, dc=dc) == want).all(), qp
+
+
+def test_residual_4x4_batch_dc_only_result_is_read_only_view():
+    # the DC-only closed form returns a broadcast view (no (n, 4, 4)
+    # buffer); writing into it must fail loudly rather than scribble
+    # over every block at once
+    from streams_spark.functions.h264 import residual_4x4, residual_4x4_batch
+
+    levels = np.zeros((3, 16), dtype=np.int64)
+    levels[:, 0] = [4, -7, 0]
+    out = residual_4x4_batch(levels, 28)
+    assert not out.flags.writeable
+    for k in range(3):
+        assert (out[k] == residual_4x4(levels[k].tolist(), 28)).all()
+    with pytest.raises(ValueError):
+        out[0, 0, 0] = 1
+    # an AC level takes the general path, whose result is writable
+    levels[1, 3] = 2
+    assert residual_4x4_batch(levels, 28).flags.writeable
+
+
+def test_chroma_resid_add_pair_zero_residual_aliases_predictions():
+    # zero-residual fast path (P_Skip / cbp-chroma 0): the results are
+    # the prediction buffers themselves, not copies
+    from streams_spark.functions.h264 import _chroma_resid_add_pair
+
+    pred_cb = np.full((8, 8), 100, dtype=np.int64)
+    pred_cr = np.full((8, 8), 50, dtype=np.int64)
+    zero_dc = [[0, 0, 0, 0], [0, 0, 0, 0]]
+    no_ac = [[None] * 4, [None] * 4]
+    cb, cr = _chroma_resid_add_pair(pred_cb, pred_cr, 30, zero_dc, no_ac)
+    assert cb is pred_cb and cr is pred_cr
+    # a nonzero DC builds fresh reconstructions and leaves the
+    # predictions untouched
+    cb, cr = _chroma_resid_add_pair(
+        pred_cb, pred_cr, 30, [[8, 0, 0, 0], [0, 0, 0, 0]], no_ac
+    )
+    assert not np.shares_memory(cb, pred_cb)
+    assert not np.shares_memory(cr, pred_cr)
+    assert (pred_cb == 100).all() and (pred_cr == 50).all()
+    assert (cb != 100).any() and (cr == 50).all()

@@ -784,11 +784,16 @@ def test_compact_files_per_space_controls_file_count(spark, tmp_path):
     assert seqs == list(range(1, 6))
 
 
-def test_staged_blob_key_tracks_synthesis_module(monkeypatch):
+@pytest.mark.parametrize("builder", ["staged_blob_feed", "jpeg_table_real"])
+def test_staged_blob_key_tracks_synthesis_module(
+    monkeypatch, spark, sf_dir, builder
+):
     """The staged-blob cache key must include multimodal.py itself (the
     synthesis rules live there): editing geometry/spec formulas without
     touching the codec modules must rebuild fixtures, not serve stale
-    blobs that no longer match the oracle (ADVICE r9)."""
+    blobs that no longer match the oracle (ADVICE r9). jpeg_table_real
+    once staged through a private copy that left the module out, so it
+    is checked through its own entry point too."""
     import os
 
     import streams_spark.operators.multimodal as mm
@@ -798,15 +803,22 @@ def test_staged_blob_key_tracks_synthesis_module(monkeypatch):
     captured = {}
 
     def fake_cached_feed(sf_dir, op, extra_key, build):
-        captured["key"] = extra_key
+        captured.update(op=op, key=extra_key)
         raise OSError("capture only")
 
     monkeypatch.setattr(fc, "cached_feed", fake_cached_feed)
-    sentinel = object()
     with pytest.warns(RuntimeWarning):
-        out = mm._staged_blob_feed(
-            None, "/root/testdata/sf0.001", "blobtest", [mp3_mod], sentinel
-        )
-    assert out is sentinel
+        if builder == "jpeg_table_real":
+            mm.jpeg_table_real(spark, sf_dir)
+            # the encoder variant is part of the feed name
+            assert captured["op"] == (
+                "docjpeg-streams_spark.functions.jpeg.jpeg_encode"
+            )
+        else:
+            sentinel = object()
+            out = mm._staged_blob_feed(
+                None, sf_dir, "blobtest", [mp3_mod], sentinel
+            )
+            assert out is sentinel
     st = os.stat(mm.__file__)
     assert f"{st.st_mtime_ns}:{st.st_size}" in captured["key"]

@@ -72,8 +72,7 @@ def main() -> None:
 
     def clear() -> None:
         spark.catalog.clearCache()
-        dedup._SHINGLE_CACHE.clear()
-        dedup._EDGE_CACHE.clear()
+        dedup.clear_shingle_cache()
 
     def run(fn, d: str) -> float:
         t0 = time.time()
