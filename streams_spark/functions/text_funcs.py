@@ -184,9 +184,6 @@ def identity_docs(docs):
     return uniq.unionByName(deduped)
 
 
-_IDENTITY_CACHE: dict = {}
-
-
 def identity_documents(spark, sf_dir: str):
     """Session-cached identity_docs over the documents table. The split
     subtree (three pruned scans + two narrow aggregates) re-expands at
@@ -197,11 +194,11 @@ def identity_documents(spark, sf_dir: str):
     (and the same 100 TB analog: a materialized staged view next to the
     corpus) as shingle_table. Callers holding an arbitrary frame rather
     than a (spark, sf_dir) table keep calling identity_docs directly."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _IDENTITY_CACHE.get(key)
-    if df is None:
-        from streams_spark.sources.tables import load_table
+    from streams_spark import cache
+    from streams_spark.sources.tables import load_table
 
-        df = identity_docs(load_table(spark, sf_dir, "documents")).cache()
-        _IDENTITY_CACHE[key] = df
-    return df
+    return cache.memo(
+        spark,
+        ("identity_documents", sf_dir),
+        lambda: identity_docs(load_table(spark, sf_dir, "documents")).cache(),
+    )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from streams_spark import cache
 from streams_spark.functions.text_funcs import gram_rows, tokens
 from streams_spark.operators import vector_hygiene
 from streams_spark.registry import register
@@ -118,39 +119,16 @@ WHERE CAST(p.n_common AS DOUBLE)
 
 JACCARD_T = 0.5
 
-# One cached signature table per (session, sf_dir) feeds every dedup stage
-# (Jaccard join, MinHash sigs, LSH verify, cluster formation): the
-# in-memory analog of the materialized signature table a 100 TB pipeline
-# maintains next to the corpus — computed once, reused by every consumer.
-_SHINGLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
-# Bidirected near-dup edge list per (session, sf_dir), shared by the
-# graph operators (min-label CC, PageRank, dup-graph stats): computed
-# once from the Jaccard pairs, reused and warm across repeated calls,
-# released via clear_shingle_cache.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_shingle_cache() -> None:
-    for cache in (_SHINGLE_CACHE, _EDGE_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-
 
 def dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached bidirected (src, dst) edge list of the near-dup pair graph
-    (both directions of every d_ngram_jaccard pair). Materialized at the
-    SESSION shuffle width on first use."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EDGE_CACHE.get(key)
-    if df is None:
+    (both directions of every d_ngram_jaccard pair), shared by the graph
+    operators (min-label CC, PageRank, dup-graph stats). Materialized at
+    the SESSION shuffle width on first use."""
+
+    def build() -> DataFrame:
         pairs = d_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-        df = (
+        return (
             pairs.select(
                 F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
             )
@@ -161,8 +139,8 @@ def dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cache()
         )
-        _EDGE_CACHE[key] = df
-    return df
+
+    return cache.memo(spark, ("dup_edges", sf_dir), build)
 
 
 def shingle_table(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
@@ -175,9 +153,8 @@ def shingle_table(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     sf0.01). This is the materialized signature table a 100 TB dedup
     pipeline maintains next to the corpus, with the same invalidation
     rule (source stats change -> rebuild)."""
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         from streams_spark.sources.feed_cache import cached_feed
 
         try:
@@ -191,16 +168,16 @@ def shingle_table(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
                 .write.mode("overwrite")
                 .parquet(d),
             )
-            df = spark.read.parquet(feed).cache()
+            return spark.read.parquet(feed).cache()
         except OSError:
             # no stat-able documents.parquet under sf_dir (in-memory
             # test fixtures, exotic layouts): keep the artifact as an
             # optimization only and build in-session
-            df = hashed_shingle_sets(
+            return hashed_shingle_sets(
                 load_table(spark, sf_dir, "documents"), n
             ).cache()
-        _SHINGLE_CACHE[key] = df
-    return df
+
+    return cache.memo(spark, ("shingle_table", sf_dir, n), build)
 
 
 def hashed_shingle_sets(

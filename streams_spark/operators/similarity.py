@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from streams_spark import cache
 from streams_spark.functions.vector import as_double_array, cosine, dot, norm
 from streams_spark.operators import vector_hygiene
 from streams_spark.registry import register
@@ -812,29 +813,12 @@ def _pq_update_sql(assign_cte: str, src: str = "subt") -> str:
 """
 
 
-# One cached element stream per (session, sf_dir), shared by PQ train /
-# assign / search — the dedup module's _SHINGLE_CACHE pattern, with the
-# same explicit release hook (Spark's CacheManager would dedupe repeated
-# .cache() calls on the identical plan anyway, but the keyed dict makes
-# the lifetime visible and clearable instead of pinned forever).
-_PQ_ELEMENT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_vector_caches() -> None:
-    for df in _PQ_ELEMENT_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _PQ_ELEMENT_CACHE.clear()
-
-
 def _pq_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding element stream keyed by (vec, subspace, in-subspace
-    dim) — the shared input of PQ training, assignment, and search."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PQ_ELEMENT_CACHE.get(key)
-    if df is None:
+    dim) — the shared input of PQ training, assignment, and search,
+    cached once per session."""
+
+    def build() -> DataFrame:
         # vec_id IS NOT NULL (r8 NULL-key fuzz): every PQ oracle assigns
         # codes in a PARTITION BY vec_id window, where all id-less
         # vectors collapse to one row — they are excluded from the PQ
@@ -843,7 +827,7 @@ def _pq_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings").where(
             F.col("vec_id").isNotNull() & vector_hygiene()
         )
-        df = (
+        return (
             emb.select(
                 "vec_id",
                 F.posexplode(as_double_array("embedding")).alias("dim", "x"),
@@ -856,8 +840,8 @@ def _pq_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cache()
         )
-        _PQ_ELEMENT_CACHE[key] = df
-    return df
+
+    return cache.memo(spark, ("pq_elements", sf_dir), build)
 
 
 def _pq_query_lut(ex: DataFrame, codebook: DataFrame) -> DataFrame:

@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from streams_spark import cache
 from streams_spark.schema import TABLE_NAMES
 
 
@@ -46,24 +47,6 @@ def _normalize_event_ts(dtype):
     return F.col("ts")
 
 
-# Analyzed-plan memo for parquet sources: one driver-side schema
-# inference + source resolution per (session, path, file identity).
-# Nothing row-side is cached — the memoized DataFrame is a plain lazy
-# scan recomputed from the parquet file on every action; the memo only
-# removes the repeated DRIVER-side footer read + DataSource resolution
-# (measured ~0.11 s per spark.read.parquet call on this harness, paid
-# 6x per query per bench run before this) — the same planning-time
-# cost class as Spark's own file-listing cache (guide: repeated
-# multi-minute listings at scale). One entry per (session, path),
-# holding the source identity it was resolved against (see
-# _source_identity): a changed identity replaces the entry, so an
-# in-place rewrite invalidates and the memo stays bounded by the number
-# of distinct paths. Cleared by bench.py's _clear_session_caches
-# alongside the other module-level memos so the cold pass stays
-# attributable.
-_READ_MEMO: dict = {}
-
-
 def _source_identity(path: str) -> tuple:
     """(mtime, size) of a parquet file; for a directory also the
     (name, mtime, size) of its newest file. A directory's own mtime
@@ -85,17 +68,16 @@ def _source_identity(path: str) -> tuple:
 
 
 def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, resolved once per session and source
+    identity. The frame is an uncached lazy scan: every action still
+    reads the files."""
     try:
         ident = _source_identity(path)
     except OSError:
         return spark.read.parquet(path)
-    key = (spark.sparkContext.applicationId, path)
-    hit = _READ_MEMO.get(key)
-    if hit is not None and hit[0] == ident:
-        return hit[1]
-    df = spark.read.parquet(path)
-    _READ_MEMO[key] = (ident, df)
-    return df
+    return cache.memo(
+        spark, ("parquet", path), lambda: spark.read.parquet(path), ident
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -100,15 +100,5 @@ class ConsumerContext:
         )
 
 
-def write_event_log(df: DataFrame, log_dir: str) -> None:
-    """Append a batch of entries to the event-log directory in the
-    canonical layout (partitioned by space, files sorted by
-    segment/sequence) — delegates to store.write_event_log so the sort
-    contract lives in exactly one place."""
-    from streams_spark.store import write_event_log as _write
-
-    _write(df, log_dir)
-
-
 def read_event_log(spark: SparkSession, log_dir: str) -> DataFrame:
     return spark.read.schema(EVENT_LOG_SCHEMA).parquet(log_dir)

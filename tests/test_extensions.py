@@ -114,6 +114,8 @@ def test_dup_cluster_label_propagation_on_chain(spark, tmp_path):
     import streams_spark.operators.dedup as D
     from pyspark.sql import functions as F
 
+    from streams_spark import cache
+
     # build texts so consecutive docs share >50% 3-gram overlap but
     # non-neighbors don't: sliding windows over a long word sequence
     # stride-2 windows of width 12: neighbors share 10 tokens (J≈0.67),
@@ -128,7 +130,7 @@ def test_dup_cluster_label_propagation_on_chain(spark, tmp_path):
 
     import streams_spark.sources.tables as T
     orig = T.load_table
-    D.clear_shingle_cache()  # don't reuse real-corpus signatures
+    cache.clear()  # don't reuse real-corpus signatures
     try:
         T.load_table = lambda _s, _d, name: docs  # only documents is read
         D.load_table = T.load_table
@@ -139,7 +141,7 @@ def test_dup_cluster_label_propagation_on_chain(spark, tmp_path):
     finally:
         T.load_table = orig
         D.load_table = orig
-        D.clear_shingle_cache()  # drop the fake-corpus signatures
+        cache.clear()  # drop the fake-corpus signatures
     chain = {d: c for d, c in out.items() if d < 5}
     assert set(chain.values()) == {0}, out  # whole chain collapses to min id
     assert out.get(10) == 10 and out.get(11) == 10, out
@@ -257,11 +259,8 @@ def test_dup_spans_finds_planted_passage(spark):
 def test_containment_finds_excerpt_jaccard_misses(spark):
     """A 15-token excerpt inside a 120-token page: containment ~1.0 but
     Jaccard far below its 0.5 threshold — only d_containment reports it."""
-    from streams_spark.operators.dedup import (
-        clear_shingle_cache,
-        d_containment,
-        d_ngram_jaccard,
-    )
+    from streams_spark import cache
+    from streams_spark.operators.dedup import d_containment, d_ngram_jaccard
 
     excerpt = " ".join(f"quote{i}" for i in range(15))
     page = (
@@ -275,12 +274,12 @@ def test_containment_finds_excerpt_jaccard_misses(spark):
         spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
             os.path.join(td, "documents.parquet")
         )
-        clear_shingle_cache()
+        cache.clear()
         try:
             cont = d_containment(spark, td).collect()
             jac = d_ngram_jaccard(spark, td).collect()
         finally:
-            clear_shingle_cache()
+            cache.clear()
     assert [(r.doc_a, r.doc_b) for r in cont] == [(1, 2)]
     assert cont[0].containment == 1.0
     assert jac == []
@@ -2146,9 +2145,9 @@ def test_jaccard_regime_dispatch(spark, sf_dir):
     import os
     import tempfile
 
+    from streams_spark import cache
     from streams_spark.operators.dedup import (
         PPJOIN_HOT_DF_RATIO,
-        clear_shingle_cache,
         d_ngram_jaccard,
         d_ngram_jaccard_auto,
         jaccard_regime,
@@ -2172,7 +2171,7 @@ def test_jaccard_regime_dispatch(spark, sf_dir):
             spark.createDataFrame(
                 rows, "doc_id long, text string"
             ).write.parquet(os.path.join(td, "documents.parquet"))
-            clear_shingle_cache()
+            cache.clear()
             try:
                 regime, ratio = jaccard_regime(shingle_table(spark, td))
                 assert regime == expected, (regime, ratio)
@@ -2190,4 +2189,4 @@ def test_jaccard_regime_dispatch(spark, sf_dir):
                 }
                 assert auto == exact
             finally:
-                clear_shingle_cache()
+                cache.clear()

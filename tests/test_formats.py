@@ -296,7 +296,7 @@ def test_read_parquet_memo_sees_part_file_rewritten_in_place(spark, tmp_path):
     """Rewriting a part file in place leaves its directory's mtime
     alone; the memo must still re-resolve the directory (the old
     resolution carries the old file listing and footer schema), and
-    keep one entry per path."""
+    memoize the new resolution in its place."""
     import os
 
     import pyarrow as pa
@@ -323,9 +323,7 @@ def test_read_parquet_memo_sees_part_file_rewritten_in_place(spark, tmp_path):
     second = tables.read_parquet_memo(spark, str(feed))
     assert second.columns == ["y"]
     assert sorted(r.y for r in second.collect()) == [7, 8, 9]
-    assert [k for k in tables._READ_MEMO if k[1] == str(feed)] == [
-        (spark.sparkContext.applicationId, str(feed))
-    ]
+    assert tables.read_parquet_memo(spark, str(feed)) is second
 
 
 def _rowgroups_overlapping(path, col, lo, hi):

@@ -11,11 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from streams_spark.streaming.consumer import (
-    ConsumerContext,
-    read_event_log,
-    write_event_log,
-)
+from streams_spark.store import write_event_log
+from streams_spark.streaming.consumer import ConsumerContext, read_event_log
 from streams_spark.streaming.produce import (
     IdempotentLogSink,
     SequenceError,

@@ -64,6 +64,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from streams_spark import cache
     from streams_spark.operators import dedup
     from streams_spark.session import get_spark
 
@@ -72,7 +73,7 @@ def main() -> None:
 
     def clear() -> None:
         spark.catalog.clearCache()
-        dedup.clear_shingle_cache()
+        cache.clear()
 
     def run(fn, d: str) -> float:
         t0 = time.time()

@@ -252,6 +252,7 @@ def time_query(registry, spark, name: str, sf_dir: str, n: int = 2) -> float:
 def main() -> None:
     import math
 
+    from streams_spark import cache
     from streams_spark.registry import load_all
     from streams_spark.session import get_spark
 
@@ -269,17 +270,12 @@ def main() -> None:
 
     rows = []
     for name in names:
-        # clear dedup's session-wide signature cache between scales so
-        # the 10x run doesn't reuse 1x shingles (keyed by sf_dir anyway,
-        # but the cache holds executor memory)
-        from streams_spark.operators.dedup import clear_shingle_cache
-        from streams_spark.operators.similarity import clear_vector_caches
-
-        clear_shingle_cache()
-        clear_vector_caches()
+        # clear the session cache between scales so the 10x run doesn't
+        # reuse 1x frames (keyed by sf_dir anyway, but cached frames
+        # hold executor memory)
+        cache.clear()
         t1 = time_query(registry, spark, name, BASE_SF)
-        clear_shingle_cache()
-        clear_vector_caches()
+        cache.clear()
         t10 = time_query(registry, spark, name, stress_dir)
         alpha = math.log(t10 / t1) / math.log(N_COPIES)
         rows.append((name, round(t1, 2), round(t10, 2), round(alpha, 2)))

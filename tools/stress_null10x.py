@@ -219,16 +219,13 @@ def main() -> None:
         )
         x10 = build_10x(spark, "/root/testdata/sf0.1")
         x10n = inject_nulls(x10, os.path.join(STRESS_DIR, "null3-sf0.1x10"))
-        from streams_spark.operators.dedup import clear_shingle_cache
-        from streams_spark.operators.similarity import clear_vector_caches
+        from streams_spark import cache
 
         rows = {}
         for name in names:
-            clear_shingle_cache()
-            clear_vector_caches()
+            cache.clear()
             t1 = time_query(registry, spark, name, x1n)
-            clear_shingle_cache()
-            clear_vector_caches()
+            cache.clear()
             t10 = time_query(registry, spark, name, x10n)
             alpha = math.log(t10 / t1) / math.log(10)
             rows[name] = {
