@@ -1,30 +1,39 @@
-"""Dependency-free baseline JPEG codec (ITU-T T.81 sequential DCT,
-8-bit): Huffman + DCT in numpy, standard library only.
+"""Dependency-free JPEG codec (ITU-T T.81 DCT, 8-bit), standard library
+plus numpy, and the one JPEG container layer of the package.
 
-Closes the last realistic-format gap in the media path: PNG/WAV/PSMF
-(functions/codecs.py) covered lossless image, audio, and video, but the
-single most common real image format was missing. The reference's
-payload contract is opaque bytes the consumer decodes
-(/root/reference/server/messages.go:65); a consumer switching from the
-reference to this engine brings JPEGs.
+The reference's payload contract is opaque bytes the consumer decodes
+(server/messages.go:65 in the reference); a consumer's image blobs are
+overwhelmingly JPEGs, and this package is that consumer-side decode.
 
-Scope (and honest limits):
-- Encoder: greyscale (1 component) and RGB via JFIF YCbCr, 4:4:4 or
+Layers:
+- This module owns the container and the pixels: the one marker reader
+  (DQT/DHT/DAC/DRI/SOFn/SOS/EOI, fill bytes, segment bounds), the frame
+  model (per-component geometry and coefficient arrays, allocated at
+  SOF), the one reconstruction (dequantize, IDCT, upsample, YCbCr->RGB,
+  crop; run at EOI) and, for the encoders, the one front end (YCbCr,
+  chroma downsampling, padding, FDCT + quantization) and the header
+  writers. It also holds the sequential Huffman entropy coder (SOF0/1).
+- The other entropy coders live in their own modules and only move
+  coefficients: functions/jpeg_progressive.py (SOF2: spectral selection,
+  successive approximation, EOB runs) and functions/jpeg_arith.py (the
+  QM arithmetic coder, SOF10). Each scan decoder fills the scan's
+  coefficients and returns the position of the next marker.
+
+Scope:
+- Encoders: greyscale (1 component) and RGB via JFIF YCbCr, 4:4:4 or
   4:2:0 subsampling, Annex K quantization tables scaled by the libjpeg
-  quality formula, Annex K standard Huffman tables, byte stuffing.
-  Edge padding replicates border pixels (the conventional choice that
-  minimizes ringing on partial MCUs).
-- Decoder: any BASELINE JPEG within 8-bit precision, 1 or 3
-  components — it parses DQT/SOF0/DHT/DRI/SOS, entropy-decodes
-  MCU-interleaved scans with restart-marker support, dequantizes,
-  IDCTs, upsamples chroma by pixel replication, converts YCbCr->RGB,
-  and crops the MCU padding. PROGRESSIVE (SOF2) streams dispatch to
-  functions/jpeg_progressive.py (spectral selection + successive
-  approximation + EOB runs — most real web JPEGs) and ARITHMETIC
-  (SOF10) streams to functions/jpeg_arith.py (the QM coder); only
-  >8-bit precision stays out of scope. It decodes real-world
-  files, not just this encoder's output (tests include hand-assembled
-  scans built from the spec, bit by bit, independent of the encoder).
+  quality formula. Edge padding replicates border pixels (the
+  conventional choice that minimizes ringing on partial MCUs). The
+  baseline encoder writes Annex K Huffman tables and one interleaved
+  scan.
+- Decoder: 8-bit frames of 1 or 3 components, sampling factors 1..4
+  that divide the largest, any number of scans (a sequential frame may
+  split its components over several scans), restart intervals, table
+  redefinition between scans. Corrupt input raises ValueError. It
+  decodes real-world files, not just this encoder's output (tests
+  include hand-assembled scans built from the spec, bit by bit,
+  independent of the encoder). 12-bit, lossless and hierarchical
+  frames are out of scope.
 
 Exactness contract used by the m_jpeg_real oracle: JPEG is lossy, but
 a block-constant image (each 8x8 block — 16x16 macroblock under 4:2:0
@@ -39,6 +48,8 @@ pixels while the bytes on the wire are a genuine entropy-coded JPEG.
 from __future__ import annotations
 
 import struct
+from functools import lru_cache
+from typing import NamedTuple
 
 import numpy as np
 
@@ -173,9 +184,6 @@ def _decode_table(bits: list[int], values: list[int]) -> "_HuffTable":
     return _decode_table_cached(tuple(bits), tuple(values))
 
 
-from functools import lru_cache  # noqa: E402
-
-
 @lru_cache(maxsize=64)
 def _decode_table_cached(
     bits: tuple[int, ...], values: tuple[int, ...]
@@ -284,12 +292,13 @@ def _magnitude(v: int) -> tuple[int, int]:
 
 def _encode_block(
     writer: _BitWriter,
-    coeffs: np.ndarray,
+    zz: np.ndarray,
     pred: int,
     dc_codes: dict[int, tuple[int, int]],
     ac_codes: dict[int, tuple[int, int]],
 ) -> int:
-    zz = coeffs.flatten()[ZIGZAG]
+    """Huffman-code one block's 64 zigzag coefficients; returns the new
+    DC predictor."""
     diff = int(zz[0]) - pred
     size, bits = _magnitude(diff)
     code, length = dc_codes[size]
@@ -331,23 +340,79 @@ def _fdct_quant(plane: np.ndarray, qt: np.ndarray) -> np.ndarray:
     return np.round(f / qt).astype(np.int32)
 
 
-def jpeg_encode(
-    arr: np.ndarray, quality: int = 50, subsampling: str = "4:2:0"
-) -> bytes:
-    """Encode uint8 (h, w) greyscale or (h, w, 3) RGB as a baseline
-    JFIF JPEG. `subsampling` applies to RGB only: '4:4:4' or '4:2:0'."""
+class _Component:
+    """One frame component: id, sampling factors, quantization table
+    selector and table (set by the encoder front end; latched at the
+    component's first scan when decoding), zigzag coefficients
+    (nbv_mcu, nbh_mcu, 64) covering the MCU-padded raster, and the true
+    block raster (nbv, nbh) a single-component scan walks (A.2.2)."""
+
+    __slots__ = ("cid", "hi", "vi", "tq", "qt", "coef", "nbv", "nbh")
+
+    def __init__(self, frame: "_Frame", cid: int, hi: int, vi: int, tq: int):
+        self.cid, self.hi, self.vi, self.tq = cid, hi, vi, tq
+        self.qt = None
+        self.coef = np.zeros((frame.mby * vi, frame.mbx * hi, 64), np.int32)
+        cw = (frame.w * hi + frame.hmax - 1) // frame.hmax
+        ch = (frame.h * vi + frame.vmax - 1) // frame.vmax
+        self.nbv, self.nbh = (ch + 7) // 8, (cw + 7) // 8
+
+
+class _Frame:
+    """Image size, MCU grid and components of one frame."""
+
+    __slots__ = ("h", "w", "hmax", "vmax", "mbx", "mby", "comps")
+
+    def __init__(self, h: int, w: int, comps: list[tuple[int, int, int, int]]):
+        self.h, self.w = h, w
+        self.hmax = max(c[1] for c in comps)
+        self.vmax = max(c[2] for c in comps)
+        self.mbx = (w + 8 * self.hmax - 1) // (8 * self.hmax)
+        self.mby = (h + 8 * self.vmax - 1) // (8 * self.vmax)
+        self.comps = [_Component(self, *c) for c in comps]
+
+
+def _mcus(frame: _Frame, comps: list[_Component]):
+    """A scan's blocks in coding order, one list of (index in `comps`,
+    zigzag block view) per MCU. A single-component scan walks the
+    component's true block raster, one block per MCU (A.2.2); an
+    interleaved scan walks the frame's MCU grid, hi x vi blocks per
+    component (A.2.3)."""
+    if len(comps) == 1:
+        coef = comps[0].coef
+        for by in range(comps[0].nbv):
+            for bx in range(comps[0].nbh):
+                yield [(0, coef[by, bx])]
+        return
+    units = [(si, c.coef, c.vi, c.hi) for si, c in enumerate(comps)]
+    for my in range(frame.mby):
+        for mx in range(frame.mbx):
+            yield [
+                (si, coef[my * vi + dy, mx * hi + dx])
+                for si, coef, vi, hi in units
+                for dy in range(vi)
+                for dx in range(hi)
+            ]
+
+
+def _encode_front(arr: np.ndarray, quality: int, subsampling: str) -> _Frame:
+    """The encoders' front end: validate uint8 (h, w) grey or (h, w, 3)
+    RGB, convert to YCbCr, average 2x2 chroma for 4:2:0, pad each plane
+    to whole MCUs, FDCT and quantize. Returns the frame (component 1
+    luma on table 0, components 2-3 chroma on table 1) holding the
+    quantization tables and the zigzag coefficients."""
     if arr.dtype != np.uint8:
-        raise ValueError("jpeg_encode wants uint8")
+        raise ValueError("JPEG encoders want uint8")
     grey = arr.ndim == 2
     if not grey and (arr.ndim != 3 or arr.shape[2] != 3):
-        raise ValueError("jpeg_encode wants (h,w) or (h,w,3)")
+        raise ValueError("JPEG encoders want (h,w) or (h,w,3)")
     if subsampling not in ("4:4:4", "4:2:0"):
         raise ValueError("subsampling must be '4:4:4' or '4:2:0'")
     h, w = arr.shape[0], arr.shape[1]
     if h == 0 or w == 0 or h > 65535 or w > 65535:
         raise ValueError("bad dimensions")
-    qt_l = _quality_scale(QUANT_LUMA, quality)
-    qt_c = _quality_scale(QUANT_CHROMA, quality)
+    qts = (_quality_scale(QUANT_LUMA, quality),
+           _quality_scale(QUANT_CHROMA, quality))
 
     sub = not grey and subsampling == "4:2:0"
     if grey:
@@ -363,64 +428,73 @@ def jpeg_encode(
             cb, cr = np.round(cb), np.round(cr)
         planes = [ycc[:, :, 0], cb, cr]
 
-    mcu = 16 if sub else 8
-    coeffs = []
-    for i, p in enumerate(planes):
-        pad = _pad_replicate(p, mcu if i == 0 else 8, mcu if i == 0 else 8)
-        coeffs.append(_fdct_quant(pad, qt_l if i == 0 else qt_c))
+    s = 2 if sub else 1
+    comps = [(1, s, s, 0), (2, 1, 1, 1), (3, 1, 1, 1)]
+    frame = _Frame(h, w, comps[: len(planes)])
+    for c, plane in zip(frame.comps, planes):
+        c.qt = qts[c.tq]
+        q = _fdct_quant(_pad_replicate(plane, 8 * c.vi, 8 * c.hi), c.qt)
+        c.coef = q.reshape(q.shape[0], q.shape[1], 64)[:, :, ZIGZAG]
+    return frame
 
-    # --- headers ---
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
-        + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    for tq, qt in ((0, qt_l),) if grey else ((0, qt_l), (1, qt_c)):
+
+_JFIF_APP0 = (
+    b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
+    + struct.pack(">HH", 1, 1) + b"\x00\x00"
+)
+
+
+def _frame_header(frame: _Frame, sof: int) -> bytearray:
+    """SOI, JFIF APP0, one DQT per quantization table, then SOFn."""
+    out = bytearray(b"\xff\xd8") + _JFIF_APP0
+    for tq, qt in {c.tq: c.qt for c in frame.comps}.items():
         out += b"\xff\xdb" + struct.pack(">HB", 67, tq)
         out += bytes(int(v) for v in qt.flatten()[ZIGZAG])
-    ncomp = 1 if grey else 3
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
-    samp_y = 0x22 if sub else 0x11
-    comps = [(1, samp_y, 0)] if grey else [
-        (1, samp_y, 0), (2, 0x11, 1), (3, 0x11, 1)
-    ]
-    for cid, samp, tq in comps:
-        out += struct.pack("BBB", cid, samp, tq)
-    tables = [(0x00, _DC_LUMA), (0x10, _AC_LUMA)]
-    if not grey:
-        tables += [(0x01, _DC_CHROMA), (0x11, _AC_CHROMA)]
+    n = len(frame.comps)
+    out += bytes((0xFF, sof))
+    out += struct.pack(">HBHHB", 8 + 3 * n, 8, frame.h, frame.w, n)
+    for c in frame.comps:
+        out += struct.pack("BBB", c.cid, (c.hi << 4) | c.vi, c.tq)
+    return out
+
+
+def _dht(tables: list[tuple[int, tuple[list[int], list[int]]]]) -> bytes:
+    """DHT segments for [(Tc << 4 | Th, (BITS, HUFFVAL)), ...]."""
+    out = bytearray()
     for tc_th, (bits, values) in tables:
         out += b"\xff\xc4" + struct.pack(">HB", 19 + len(values), tc_th)
         out += bytes(bits) + bytes(values)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for cid, _samp, tq in comps:
-        out += struct.pack("BB", cid, 0x00 if tq == 0 else 0x11)
-    out += b"\x00\x3f\x00"  # Ss=0, Se=63, Ah/Al=0
+    return bytes(out)
 
-    # --- entropy-coded scan, MCU-interleaved ---
-    dc_l = _canonical_codes(*_DC_LUMA)
-    ac_l = _canonical_codes(*_AC_LUMA)
-    dc_c = _canonical_codes(*_DC_CHROMA)
-    ac_c = _canonical_codes(*_AC_CHROMA)
+
+def _sos(comps: list[_Component], ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS header; each component codes with the entropy tables of its
+    quantization table's number (0 luma, 1 chroma)."""
+    out = b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comps), len(comps))
+    for c in comps:
+        out += struct.pack("BB", c.cid, 0x11 * c.tq)
+    return out + struct.pack("BBB", ss, se, (ah << 4) | al)
+
+
+def jpeg_encode(
+    arr: np.ndarray, quality: int = 50, subsampling: str = "4:2:0"
+) -> bytes:
+    """Encode uint8 (h, w) greyscale or (h, w, 3) RGB as a baseline
+    JFIF JPEG. `subsampling` applies to RGB only: '4:4:4' or '4:2:0'."""
+    frame = _encode_front(arr, quality, subsampling)
+    tables = [(0x00, _DC_LUMA), (0x10, _AC_LUMA)]
+    if len(frame.comps) > 1:
+        tables += [(0x01, _DC_CHROMA), (0x11, _AC_CHROMA)]
+    out = _frame_header(frame, 0xC0) + _dht(tables)
+    out += _sos(frame.comps, 0, 63, 0, 0)
+    luma = (_canonical_codes(*_DC_LUMA), _canonical_codes(*_AC_LUMA))
+    chroma = (_canonical_codes(*_DC_CHROMA), _canonical_codes(*_AC_CHROMA))
+    codes = [chroma if c.tq else luma for c in frame.comps]
     writer = _BitWriter()
-    preds = [0] * ncomp
-    mby = coeffs[0].shape[0] // (2 if sub else 1)
-    mbx = coeffs[0].shape[1] // (2 if sub else 1)
-    for my in range(mby):
-        for mx in range(mbx):
-            if sub:
-                for dy in range(2):
-                    for dx in range(2):
-                        preds[0] = _encode_block(
-                            writer, coeffs[0][2 * my + dy, 2 * mx + dx],
-                            preds[0], dc_l, ac_l,
-                        )
-            else:
-                preds[0] = _encode_block(
-                    writer, coeffs[0][my, mx], preds[0], dc_l, ac_l
-                )
-            for c in range(1, ncomp):
-                preds[c] = _encode_block(
-                    writer, coeffs[c][my, mx], preds[c], dc_c, ac_c
-                )
+    preds = [0] * len(codes)
+    for mcu in _mcus(frame, frame.comps):
+        for si, zz in mcu:
+            preds[si] = _encode_block(writer, zz, preds[si], *codes[si])
     out += writer.flush()
     out += b"\xff\xd9"  # EOI
     return bytes(out)
@@ -437,15 +511,18 @@ class _BitReader:
         self.nbits = 0
 
     def _fill(self) -> None:
-        b = self.data[self.pos]
-        if b == 0xFF:
-            nxt = self.data[self.pos + 1]
-            if nxt == 0x00:
-                self.pos += 2
+        try:
+            b = self.data[self.pos]
+            if b == 0xFF:
+                nxt = self.data[self.pos + 1]
+                if nxt == 0x00:
+                    self.pos += 2
+                else:
+                    raise _MarkerHit(0xFF00 | nxt)
             else:
-                raise _MarkerHit(0xFF00 | nxt)
-        else:
-            self.pos += 1
+                self.pos += 1
+        except IndexError:
+            raise ValueError("truncated scan") from None
         # mask to the live window: nbits never exceeds 32, and an
         # unmasked acc grows 8 bits per fill FOREVER — on a megapixel
         # scan the accumulator becomes a multi-kilobyte bigint and
@@ -473,19 +550,31 @@ class _BitReader:
         self.nbits -= n
         return (self.acc >> self.nbits) & ((1 << n) - 1)
 
-    def align_to_marker(self) -> int:
-        """Discard pad bits, expect a marker next; return its code."""
+    def restart(self) -> None:
+        """Discard the pad bits and consume the RSTn marker that must
+        come next."""
         self.acc, self.nbits = 0, 0
-        while self.data[self.pos] != 0xFF or self.data[self.pos + 1] == 0x00:
-            self.pos += 1  # tolerate stray pad bytes before the marker
-        marker = 0xFF00 | self.data[self.pos + 1]
-        self.pos += 2
-        return marker
+        pos = _next_marker(self.data, self.pos)
+        if not 0xD0 <= self.data[pos + 1] <= 0xD7:
+            raise ValueError("expected restart marker")
+        self.pos = pos + 2
 
 
 class _MarkerHit(Exception):
     def __init__(self, marker: int) -> None:
         self.marker = marker
+
+
+def _next_marker(data: bytes, pos: int) -> int:
+    """Position of the next marker at or after `pos`, past leftover
+    entropy-coded bytes, stuffed FF00 pairs and FF fill bytes."""
+    while True:
+        pos = data.find(b"\xff", pos)
+        if pos < 0 or pos + 1 >= len(data):
+            raise ValueError("truncated stream inside scan")
+        if data[pos + 1] not in (0x00, 0xFF):
+            return pos
+        pos += 1
 
 
 def _read_symbol(reader: _BitReader, table: dict[tuple[int, int], int]) -> int:
@@ -537,8 +626,7 @@ def _decode_block(
     zz: np.ndarray,
 ) -> int:
     """Entropy-decode one block's zigzag coefficients into zz (already
-    zeroed); returns the new DC predictor. The IDCT happens once for
-    the whole scan, vectorized — not per block."""
+    zeroed); returns the new DC predictor."""
     size = _read_symbol(reader, dc_tab)
     dc = pred + _extend(reader.bits(size), size)
     zz[0] = dc
@@ -559,151 +647,243 @@ def _decode_block(
     return dc
 
 
-def jpeg_decode(data: bytes) -> np.ndarray:
-    """Decode a baseline JPEG to uint8 (h, w) grey or (h, w, 3) RGB.
-    Supports 8-bit sequential DCT, 1 or 3 components, any sampling
-    factors up to 2x2, standard or custom Huffman tables, restart
-    intervals. Progressive (SOF2) and arithmetic (SOF10) streams
-    dispatch to their own modules; raises on 12-bit/lossless."""
+class _Scan(NamedTuple):
+    """A parsed SOS header: components with their DC/AC table
+    selectors, spectral band and successive-approximation bits."""
+
+    comps: list[_Component]
+    td: list[int]
+    ta: list[int]
+    ss: int
+    se: int
+    ah: int
+    al: int
+
+
+class _Tables:
+    """The DQT/DHT/DAC/DRI definitions in force; a later segment
+    replaces the table with the same selector."""
+
+    def __init__(self) -> None:
+        self.quant: dict[int, np.ndarray] = {}
+        self.huff: dict[tuple[int, int], _HuffTable] = {}
+        self.dc_cond = dict.fromkeys(range(4), (0, 1))  # DAC (L, U)
+        self.ac_cond = dict.fromkeys(range(4), 5)  # DAC Kx
+        self.dri = 0
+
+    def quantization(self, tq: int) -> np.ndarray:
+        if tq not in self.quant:
+            raise ValueError(f"scan uses undefined quantization table {tq}")
+        return self.quant[tq]
+
+    def huffman(self, tc: int, th: int) -> _HuffTable:
+        tab = self.huff.get((tc, th))
+        if tab is None:
+            raise ValueError(f"scan uses undefined Huffman table {tc}/{th}")
+        return tab
+
+    def define(self, marker: int, body: bytes) -> None:
+        n = len(body)
+        pos = 0
+        if marker == 0xDB:  # DQT
+            while pos < n:
+                if body[pos] >> 4:
+                    raise ValueError("16-bit quant tables unsupported")
+                if body[pos] > 3 or pos + 65 > n:
+                    raise ValueError("bad DQT segment")
+                tbl = np.frombuffer(body, np.uint8, 64, pos + 1)
+                self.quant[body[pos]] = (
+                    tbl.astype(np.int32)[UNZIGZAG].reshape(8, 8)
+                )
+                pos += 65
+        elif marker == 0xC4:  # DHT
+            while pos < n:
+                tc, th = body[pos] >> 4, body[pos] & 0x0F
+                bits = list(body[pos + 1 : pos + 17])
+                end = pos + 17 + sum(bits)
+                if tc > 1 or th > 3 or end > n:
+                    raise ValueError("bad DHT segment")
+                values = list(body[pos + 17 : end])
+                self.huff[(tc, th)] = _decode_table(bits, values)
+                pos = end
+        elif marker == 0xCC:  # DAC
+            for pos in range(0, n - 1, 2):
+                tc, tb, cs = body[pos] >> 4, body[pos] & 0x0F, body[pos + 1]
+                if tc > 1 or tb > 3:
+                    raise ValueError("bad DAC segment")
+                if tc == 0:
+                    if cs & 0x0F > cs >> 4:
+                        raise ValueError("invalid DC conditioning bounds")
+                    self.dc_cond[tb] = (cs & 0x0F, cs >> 4)
+                elif not 1 <= cs <= 63:
+                    raise ValueError("invalid AC conditioning Kx")
+                else:
+                    self.ac_cond[tb] = cs
+        elif marker == 0xDD:  # DRI
+            if n < 2:
+                raise ValueError("bad DRI segment")
+            (self.dri,) = struct.unpack(">H", body[:2])
+
+
+def _parse_sof(body: bytes) -> _Frame:
+    if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+        raise ValueError("truncated SOF segment")
+    if body[0] != 8:
+        raise ValueError("only 8-bit precision supported")
+    fh, fw = struct.unpack(">HH", body[1:5])
+    if fh == 0 or fw == 0:
+        raise ValueError("bad frame dimensions")
+    if body[5] not in (1, 3):
+        raise ValueError("only 1 or 3 components supported")
+    comps = []
+    for i in range(6, 6 + 3 * body[5], 3):
+        cid, samp, tq = body[i : i + 3]
+        hi, vi = samp >> 4, samp & 0x0F
+        if not (1 <= hi <= 4 and 1 <= vi <= 4) or tq > 3:
+            raise ValueError("bad SOF component")
+        comps.append((cid, hi, vi, tq))
+    frame = _Frame(fh, fw, comps)
+    for c in frame.comps:
+        if frame.hmax % c.hi or frame.vmax % c.vi:
+            raise ValueError("unsupported sampling factors")
+    return frame
+
+
+def _parse_sos(body: bytes, frame: _Frame) -> _Scan:
+    ns = body[0] if body else 0
+    if not 1 <= ns <= 4 or len(body) < 4 + 2 * ns:
+        raise ValueError("bad SOS segment")
+    comps, td, ta = [], [], []
+    for i in range(1, 1 + 2 * ns, 2):
+        for c in frame.comps:
+            if c.cid == body[i]:
+                break
+        else:
+            raise ValueError(f"SOS names component {body[i]}, not in SOF")
+        if body[i + 1] & 0xCC:  # a table selector above 3
+            raise ValueError("bad SOS table selector")
+        comps.append(c)
+        td.append(body[i + 1] >> 4)
+        ta.append(body[i + 1] & 0x0F)
+    ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
+    return _Scan(comps, td, ta, ss, se, ahal >> 4, ahal & 0x0F)
+
+
+def _scan_decoder(sof: int):
+    """The frame type's entropy decoder: (data, pos, frame, scan,
+    tables) -> position of the marker after the scan."""
+    if sof == 0xC2:
+        from streams_spark.functions.jpeg_progressive import _decode_prog_scan
+
+        return _decode_prog_scan
+    if sof == 0xCA:
+        from streams_spark.functions.jpeg_arith import _decode_scan_arith
+
+        return _decode_scan_arith
+    return _decode_scan
+
+
+def _decode_frame(data: bytes, sofs: tuple[int, ...]) -> np.ndarray:
+    """The one marker-segment reader: table segments update the tables
+    in force, SOFn (one of `sofs`) builds the frame, each SOS goes to
+    the frame's entropy decoder, EOI reconstructs. Bytes after EOI are
+    ignored."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
-    pos = 2
-    qts: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    frame = None
-    restart_interval = 0
-    while pos < len(data):
+    tables = _Tables()
+    frame = decode_scan = None
+    pos, n = 2, len(data)
+    while pos + 1 < n:
         if data[pos] != 0xFF:
             raise ValueError("marker expected")
         marker = data[pos + 1]
+        if marker == 0xFF:  # fill byte (B.1.1.2)
+            pos += 1
+            continue
         pos += 2
         if marker == 0xD9:  # EOI
-            raise ValueError("EOI before SOS")
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
+            if frame is None:
+                raise ValueError("EOI before SOF")
+            return _reconstruct(frame)
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
             continue  # parameterless
-        (seg_len,) = struct.unpack(">H", data[pos : pos + 2])
+        seg_len = int.from_bytes(data[pos : pos + 2], "big")
+        if seg_len < 2 or pos + seg_len > n:
+            raise ValueError("truncated marker segment")
         body = data[pos + 2 : pos + seg_len]
-        if marker == 0xDB:  # DQT
-            bpos = 0
-            while bpos < len(body):
-                pq, tq = body[bpos] >> 4, body[bpos] & 0x0F
-                bpos += 1
-                if pq:
-                    raise ValueError("16-bit quant tables unsupported")
-                tbl = np.frombuffer(
-                    body[bpos : bpos + 64], dtype=np.uint8
-                ).astype(np.int32)
-                qts[tq] = tbl[UNZIGZAG].reshape(8, 8)
-                bpos += 64
-        elif marker in (0xC0, 0xC1):  # SOF0/1 baseline
-            precision = body[0]
-            if precision != 8:
-                raise ValueError("only 8-bit precision supported")
-            fh, fw = struct.unpack(">HH", body[1:5])
-            ncomp = body[5]
-            comps = []
-            for i in range(ncomp):
-                cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            frame = (fh, fw, comps)
-        elif marker == 0xC2:  # SOF2: hand the stream to the progressive path
-            from streams_spark.functions.jpeg_progressive import (
-                jpeg_decode_progressive,
-            )
-
-            return jpeg_decode_progressive(data)
-        elif marker == 0xCA:  # SOF10: hand the stream to the QM-coder path
-            from streams_spark.functions.jpeg_arith import jpeg_decode_arith
-
-            return jpeg_decode_arith(data)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                "only baseline, progressive, or arithmetic JPEG supported"
-            )
-        elif marker == 0xC4:  # DHT
-            bpos = 0
-            while bpos < len(body):
-                tc, th = body[bpos] >> 4, body[bpos] & 0x0F
-                bits = list(body[bpos + 1 : bpos + 17])
-                n = sum(bits)
-                values = list(body[bpos + 17 : bpos + 17 + n])
-                huff[(tc, th)] = _decode_table(bits, values)
-                bpos += 17 + n
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:  # SOS
+        pos += seg_len
+        if marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
-            ns = body[0]
-            scan = []
-            for i in range(ns):
-                cs, tabs = body[1 + 2 * i], body[2 + 2 * i]
-                scan.append((cs, tabs >> 4, tabs & 0x0F))
-            return _decode_scan(
-                data, pos + seg_len, frame, scan, qts, huff, restart_interval
-            )
-        pos += seg_len
-    raise ValueError("no SOS marker")
-
-
-def _decode_scan(data, pos, frame, scan, qts, huff, restart_interval):
-    fh, fw, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mbx = (fw + mcu_w - 1) // mcu_w
-    mby = (fh + mcu_h - 1) // mcu_h
-    by_id = {c[0]: c for c in comps}
-    order = []  # (comp index, coeff array, hi, vi, dc_tab, ac_tab, qt)
-    for ci, (cs, td, ta) in enumerate(scan):
-        cid, hi, vi, tq = by_id[cs]
-        coeff = np.zeros((mby * vi, mbx * hi, 64), dtype=np.int32)
-        order.append(
-            (ci, coeff, hi, vi, huff[(0, td)], huff[(1, ta)], qts[tq])
-        )
-    reader = _BitReader(data, pos)
-    preds = [0] * len(scan)
-    n_mcu = 0
-    for my in range(mby):
-        for mx in range(mbx):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                marker = reader.align_to_marker()
-                if not 0xFFD0 <= marker <= 0xFFD7:
-                    raise ValueError("expected restart marker")
-                preds = [0] * len(scan)
-            try:
-                for ci, coeff, hi, vi, dc_tab, ac_tab, _qt in order:
-                    for dy in range(vi):
-                        for dx in range(hi):
-                            preds[ci] = _decode_block(
-                                reader, preds[ci], dc_tab, ac_tab,
-                                coeff[my * vi + dy, mx * hi + dx],
-                            )
-            except _MarkerHit as hit:
+            scan = _parse_sos(body, frame)
+            for c in scan.comps:
+                if c.qt is None:
+                    c.qt = tables.quantization(c.tq)
+            pos = decode_scan(data, pos, frame, scan, tables)
+        elif marker in (0xDB, 0xC4, 0xCC, 0xDD):
+            tables.define(marker, body)
+        elif 0xC0 <= marker <= 0xCF and marker != 0xC8:  # SOFn
+            if marker not in sofs:
                 raise ValueError(
-                    f"marker {hit.marker:#x} interrupted scan"
-                ) from None
-            n_mcu += 1
-    # dequantize + IDCT the whole scan at once: one einsum over every
-    # block beats a per-block matmul inside the entropy loop (the same
-    # vectorized reconstruction the progressive path uses)
+                    f"SOF{marker - 0xC0} frame; supported: "
+                    + ", ".join(f"SOF{s - 0xC0}" for s in sofs)
+                )
+            if frame is not None:
+                raise ValueError("second SOF marker")
+            frame = _parse_sof(body)
+            decode_scan = _scan_decoder(marker)
+    raise ValueError("truncated stream: no EOI")
+
+
+def jpeg_decode(data: bytes) -> np.ndarray:
+    """Decode a JPEG to uint8 (h, w) grey or (h, w, 3) RGB: sequential
+    Huffman (SOF0/1), progressive Huffman (SOF2) or arithmetic (SOF10)
+    frames; raises ValueError on other frame types and corrupt input."""
+    return _decode_frame(data, (0xC0, 0xC1, 0xC2, 0xCA))
+
+
+def _decode_scan(data, pos, frame, scan, tables):
+    """Sequential Huffman scan (SOF0/1): decode the scan components'
+    blocks; return the position of the next marker."""
+    dc = [tables.huffman(0, t) for t in scan.td]
+    ac = [tables.huffman(1, t) for t in scan.ta]
+    reader = _BitReader(data, pos)
+    preds = [0] * len(dc)
+    try:
+        for n_mcu, mcu in enumerate(_mcus(frame, scan.comps)):
+            if n_mcu and tables.dri and n_mcu % tables.dri == 0:
+                reader.restart()
+                preds = [0] * len(dc)
+            for si, zz in mcu:
+                preds[si] = _decode_block(
+                    reader, preds[si], dc[si], ac[si], zz
+                )
+    except _MarkerHit as hit:
+        raise ValueError(f"marker {hit.marker:#x} interrupted scan") from None
+    return _next_marker(data, reader.pos)
+
+
+def _reconstruct(frame: _Frame) -> np.ndarray:
+    """Coefficients -> uint8 (h, w) grey or (h, w, 3) RGB, in SOF
+    component order: dequantize and IDCT every block of a component in
+    one einsum, upsample by pixel replication, crop the MCU padding,
+    convert YCbCr to RGB."""
     planes = []
-    for _ci, coeff, hi, vi, _dc, _ac, qt in order:
-        nat = coeff[:, :, UNZIGZAG].reshape(
-            coeff.shape[0], coeff.shape[1], 8, 8
-        ) * qt
+    for c in frame.comps:
+        if c.qt is None:
+            raise ValueError(f"component {c.cid} has no scan")
+        nbv, nbh = c.coef.shape[0], c.coef.shape[1]
+        nat = c.coef[:, :, UNZIGZAG].reshape(nbv, nbh, 8, 8) * c.qt
         pix = np.einsum("ux,bcuv,vy->bcxy", _M, nat.astype(np.float64), _M)
         pix += 128.0
         plane = np.clip(np.round(pix), 0, 255).astype(np.uint8)
-        plane = plane.transpose(0, 2, 1, 3).reshape(
-            coeff.shape[0] * 8, coeff.shape[1] * 8
-        )
-        planes.append((plane, hi, vi))
-    if len(scan) == 1:
-        return planes[0][0][:fh, :fw].copy()
-    full = []
-    for plane, hi, vi in planes:
-        up = np.repeat(np.repeat(plane, vmax // vi, axis=0), hmax // hi, axis=1)
-        full.append(up[:fh, :fw])
-    return _ycbcr_to_rgb(full[0], full[1], full[2])
+        plane = plane.transpose(0, 2, 1, 3).reshape(nbv * 8, nbh * 8)
+        if (c.vi, c.hi) != (frame.vmax, frame.hmax):
+            plane = np.repeat(
+                np.repeat(plane, frame.vmax // c.vi, axis=0),
+                frame.hmax // c.hi, axis=1,
+            )
+        planes.append(plane[: frame.h, : frame.w])
+    if len(planes) == 1:
+        return planes[0].copy()
+    return _ycbcr_to_rgb(*planes)

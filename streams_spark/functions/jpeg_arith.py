@@ -3,23 +3,23 @@
 the DC/AC statistical conditioning models of Annex F, in pure Python +
 numpy, standard library only.
 
-This closes the last format gap the round-9 verdict listed: baseline
-(SOF0) and progressive (SOF2) JPEG already decode for real
-(functions/jpeg.py, functions/jpeg_progressive.py); SOF10 swaps the
-Huffman entropy layer for the adaptive QM coder while keeping the
-identical DCT/quantization pipeline. The reference's payload contract
-is opaque bytes the consumer decodes
-(/root/reference/server/messages.go:65), and this module is that
-consumer-side decode for the one JPEG flavor previously declined.
+SOF10 swaps the Huffman entropy layer of baseline and progressive JPEG
+for the adaptive QM coder while keeping the identical DCT/quantization
+pipeline. This module holds only that entropy layer, for decoding and
+encoding: functions/jpeg.py's marker reader parses the tables
+(including DAC) and the frame, hands each SOF10 scan to
+_decode_scan_arith, which only fills coefficients, and reconstructs
+the frame at EOI; the encoder uses jpeg.py's front end and header
+writers. jpeg_decode_arith is jpeg_decode restricted to SOF10 frames.
 
 Scope and honesty:
-- The encoder and decoder share _fdct_quant / the Annex K tables with
-  functions/jpeg.py, so the block-constant bit-exactness argument (see
-  jpeg.py docstring) holds verbatim for SOF10 wire bytes — that is
-  what lets the m_jpeg_arith DuckDB oracle predict decoded pixels of a
-  lossy format in closed form while the bytes are genuinely
-  arithmetic-coded (adaptive contexts, carry propagation, 0xFF byte
-  stuffing and all).
+- The encoder shares its front end (and the Annex K quantization
+  tables) with the Huffman encoders, so the block-constant
+  bit-exactness argument (see jpeg.py docstring) holds verbatim for
+  SOF10 wire bytes — that is what lets the m_jpeg_arith DuckDB oracle
+  predict decoded pixels of a lossy format in closed form while the
+  bytes are genuinely arithmetic-coded (adaptive contexts, carry
+  propagation, 0xFF byte stuffing and all).
 - Entropy coding is lossless, so for ANY image
   decode_arith(encode_arith(img)) must equal decode(encode(img))
   bit-for-bit; tests enforce that equivalence on random images, which
@@ -58,16 +58,12 @@ import struct
 import numpy as np
 
 from streams_spark.functions.jpeg import (
-    QUANT_CHROMA,
-    QUANT_LUMA,
-    UNZIGZAG,
-    ZIGZAG,
-    _fdct_quant,
-    _M,
-    _pad_replicate,
-    _quality_scale,
-    _rgb_to_ycbcr,
-    _ycbcr_to_rgb,
+    _decode_frame,
+    _encode_front,
+    _frame_header,
+    _mcus,
+    _next_marker,
+    _sos,
 )
 
 # ---------------------------------------------------------------------------
@@ -540,77 +536,29 @@ def jpeg_encode_arith(
     kx: int = 5,
 ) -> bytes:
     """Encode uint8 (h, w) greyscale or (h, w, 3) RGB as an
-    arithmetic-coded (SOF10) JFIF JPEG. Shares the DCT/quant pipeline
-    with jpeg_encode, so the coefficients — and therefore the decoded
+    arithmetic-coded (SOF10) JFIF JPEG. Shares the front end with
+    jpeg_encode, so the coefficients — and therefore the decoded
     pixels — are identical to the Huffman pipeline's at equal quality;
     only the entropy layer differs. `kx` is the AC conditioning bound
     written to DAC (T.81 default 5)."""
-    if arr.dtype != np.uint8:
-        raise ValueError("jpeg_encode_arith wants uint8")
-    grey = arr.ndim == 2
-    if not grey and (arr.ndim != 3 or arr.shape[2] != 3):
-        raise ValueError("jpeg_encode_arith wants (h,w) or (h,w,3)")
-    if subsampling not in ("4:4:4", "4:2:0"):
-        raise ValueError("subsampling must be '4:4:4' or '4:2:0'")
     if not 1 <= kx <= 63:
         raise ValueError("kx must be 1..63")
-    h, w = arr.shape[0], arr.shape[1]
-    if h == 0 or w == 0 or h > 65535 or w > 65535:
-        raise ValueError("bad dimensions")
-    qt_l = _quality_scale(QUANT_LUMA, quality)
-    qt_c = _quality_scale(QUANT_CHROMA, quality)
-
-    sub = not grey and subsampling == "4:2:0"
-    if grey:
-        planes = [arr.astype(np.float64)]
-    else:
-        ycc = _rgb_to_ycbcr(arr)
-        cb, cr = ycc[:, :, 1], ycc[:, :, 2]
-        if sub:
-            pcb = _pad_replicate(cb, 2, 2)
-            pcr = _pad_replicate(cr, 2, 2)
-            cb = pcb.reshape(pcb.shape[0] // 2, 2, -1, 2).mean(axis=(1, 3))
-            cr = pcr.reshape(pcr.shape[0] // 2, 2, -1, 2).mean(axis=(1, 3))
-            cb, cr = np.round(cb), np.round(cr)
-        planes = [ycc[:, :, 0], cb, cr]
-
-    mcu = 16 if sub else 8
-    coeffs = []
-    for i, p in enumerate(planes):
-        pad = _pad_replicate(p, mcu if i == 0 else 8, mcu if i == 0 else 8)
-        coeffs.append(_fdct_quant(pad, qt_l if i == 0 else qt_c))
-
-    # --- headers (SOF10 frame, DAC conditioning) ---
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
-        + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    for tq, qt in ((0, qt_l),) if grey else ((0, qt_l), (1, qt_c)):
-        out += b"\xff\xdb" + struct.pack(">HB", 67, tq)
-        out += bytes(int(v) for v in qt.flatten()[ZIGZAG])
-    ncomp = 1 if grey else 3
-    out += b"\xff\xca" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
-    samp_y = 0x22 if sub else 0x11
-    comps = [(1, samp_y, 0)] if grey else [
-        (1, samp_y, 0), (2, 0x11, 1), (3, 0x11, 1)
-    ]
-    for cid, samp, tq in comps:
-        out += struct.pack("BBB", cid, samp, tq)
+    frame = _encode_front(arr, quality, subsampling)
+    ncomp = len(frame.comps)
+    ntab = 1 if ncomp == 1 else 2
+    out = _frame_header(frame, 0xCA)
     # DAC: DC conditioning (U<<4)|L per table, AC conditioning Kx
     dac = [(0x00, (1 << 4) | 0), (0x10, kx)]
-    if not grey:
+    if ncomp > 1:
         dac += [(0x01, (1 << 4) | 0), (0x11, kx)]
     out += b"\xff\xcc" + struct.pack(">H", 2 + 2 * len(dac))
     for tc_tb, cs in dac:
         out += struct.pack("BB", tc_tb, cs)
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for cid, _samp, tq in comps:
-        out += struct.pack("BB", cid, 0x00 if tq == 0 else 0x11)
-    out += b"\x00\x3f\x00"
+    out += _sos(frame.comps, 0, 63, 0, 0)
 
     # --- arithmetic-coded scan ---
-    ntab = 1 if grey else 2
     dc_stats = [_Stats(64) for _ in range(ntab)]
     ac_stats = [_Stats(256) for _ in range(ntab)]
     fixed = _Stats(1)
@@ -624,34 +572,19 @@ def jpeg_encode_arith(
     enc = fresh()
     last = [0] * ncomp
     ctx = [0] * ncomp
-    mby = coeffs[0].shape[0] // (2 if sub else 1)
-    mbx = coeffs[0].shape[1] // (2 if sub else 1)
-    n_mcu = 0
     rst = 0
-
-    def put_block(block: np.ndarray, ci: int, tbl: int) -> None:
-        zz = block.flatten()[ZIGZAG]
-        _encode_dc(enc, dc_stats[tbl], last, ctx, ci, int(zz[0]), 0, 1)
-        _encode_ac(enc, ac_stats[tbl], fixed, zz, kx)
-
-    for my in range(mby):
-        for mx in range(mbx):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                out += enc.flush()
-                out += bytes((0xFF, 0xD0 + rst))
-                rst = (rst + 1) & 7
-                enc = fresh()
-                last = [0] * ncomp
-                ctx = [0] * ncomp
-            if sub:
-                for dy in range(2):
-                    for dx in range(2):
-                        put_block(coeffs[0][2 * my + dy, 2 * mx + dx], 0, 0)
-            else:
-                put_block(coeffs[0][my, mx], 0, 0)
-            for c in range(1, ncomp):
-                put_block(coeffs[c][my, mx], c, 1)
-            n_mcu += 1
+    for n_mcu, mcu in enumerate(_mcus(frame, frame.comps)):
+        if restart_interval and n_mcu and n_mcu % restart_interval == 0:
+            out += enc.flush()
+            out += bytes((0xFF, 0xD0 + rst))
+            rst = (rst + 1) & 7
+            enc = fresh()
+            last = [0] * ncomp
+            ctx = [0] * ncomp
+        for si, zz in mcu:
+            tbl = frame.comps[si].tq
+            _encode_dc(enc, dc_stats[tbl], last, ctx, si, int(zz[0]), 0, 1)
+            _encode_ac(enc, ac_stats[tbl], fixed, zz, kx)
     out += enc.flush()
     out += b"\xff\xd9"
     return bytes(out)
@@ -663,176 +596,43 @@ def jpeg_encode_arith(
 
 
 def jpeg_decode_arith(data: bytes) -> np.ndarray:
-    """Decode an arithmetic-coded (SOF10) JPEG to uint8 (h, w) grey or
-    (h, w, 3) RGB: 8-bit sequential DCT, 1 or 3 components, sampling
-    factors up to 2x2, DAC conditioning honored, restart intervals.
-    Raises ValueError on anything else (clean errors, never garbage)."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qts: dict[int, np.ndarray] = {}
-    dc_cond = {0: (0, 1), 1: (0, 1), 2: (0, 1), 3: (0, 1)}
-    ac_cond = {0: 5, 1: 5, 2: 5, 3: 5}
-    frame = None
-    restart_interval = 0
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("marker expected")
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            raise ValueError("EOI before SOS")
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        (seg_len,) = struct.unpack(">H", data[pos : pos + 2])
-        body = data[pos + 2 : pos + seg_len]
-        if marker == 0xDB:
-            bpos = 0
-            while bpos < len(body):
-                pq, tq = body[bpos] >> 4, body[bpos] & 0x0F
-                bpos += 1
-                if pq:
-                    raise ValueError("16-bit quant tables unsupported")
-                tbl = np.frombuffer(
-                    body[bpos : bpos + 64], dtype=np.uint8
-                ).astype(np.int32)
-                qts[tq] = tbl[UNZIGZAG].reshape(8, 8)
-                bpos += 64
-        elif marker == 0xCA:  # SOF10
-            precision = body[0]
-            if precision != 8:
-                raise ValueError("only 8-bit precision supported")
-            fh, fw = struct.unpack(">HH", body[1:5])
-            ncomp = body[5]
-            comps = []
-            for i in range(ncomp):
-                cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            frame = (fh, fw, comps)
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("jpeg_decode_arith wants an SOF10 stream")
-        elif marker == 0xCC:  # DAC
-            bpos = 0
-            while bpos + 1 < len(body):
-                tc, tb = body[bpos] >> 4, body[bpos] & 0x0F
-                cs = body[bpos + 1]
-                bpos += 2
-                if tc == 0:
-                    lo, up = cs & 0x0F, cs >> 4
-                    if lo > up or up > 15:
-                        raise ValueError("invalid DC conditioning bounds")
-                    dc_cond[tb] = (lo, up)
-                else:
-                    if not 1 <= cs <= 63:
-                        raise ValueError("invalid AC conditioning Kx")
-                    ac_cond[tb] = cs
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            ns = body[0]
-            scan = []
-            for i in range(ns):
-                cs, tabs = body[1 + 2 * i], body[2 + 2 * i]
-                scan.append((cs, tabs >> 4, tabs & 0x0F))
-            return _decode_scan_arith(
-                data, pos + seg_len, frame, scan, qts,
-                dc_cond, ac_cond, restart_interval,
-            )
-        pos += seg_len
-    raise ValueError("no SOS marker")
+    """jpeg_decode restricted to arithmetic-coded (SOF10) frames."""
+    return _decode_frame(data, (0xCA,))
 
 
-def _next_marker(data: bytes, pos: int) -> tuple[int, int]:
-    """Skip leftover entropy bytes (incl. stuffed FF00 pairs and FF
-    fill runs) to the next true marker; returns (marker, pos_after)."""
-    n = len(data)
-    while pos < n:
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        j = pos + 1
-        while j < n and data[j] == 0xFF:
-            j += 1
-        if j >= n:
-            break
-        if data[j] == 0x00:
-            pos = j + 1  # stuffed data byte, keep scanning
-            continue
-        return 0xFF00 | data[j], j + 1
-    raise ValueError("truncated arithmetic scan: marker expected")
+def _marker_at(dec: _ArithDecoder) -> int:
+    """Position of the marker ending the decoder's segment: the one it
+    hit (zero-filling since), else the next one past its position."""
+    if dec.marker is not None:
+        return dec.pos - 2
+    return _next_marker(dec.data, dec.pos)
 
 
-def _decode_scan_arith(
-    data, pos, frame, scan, qts, dc_cond, ac_cond, restart_interval
-):
-    fh, fw, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mbx = (fw + mcu_w - 1) // mcu_w
-    mby = (fh + mcu_h - 1) // mcu_h
-    by_id = {c[0]: c for c in comps}
-    ntab_dc = max(td for _cs, td, _ta in scan) + 1
-    ntab_ac = max(ta for _cs, _td, ta in scan) + 1
-    dc_stats = [_Stats(64) for _ in range(ntab_dc)]
-    ac_stats = [_Stats(256) for _ in range(ntab_ac)]
+def _decode_scan_arith(data, pos, frame, scan, tables):
+    """Decode one sequential arithmetic-coded scan into the coefficient
+    arrays; return the stream position of the next marker. Statistics
+    start fresh at the scan and at every restart interval."""
+    dc_stats = {t: _Stats(64) for t in scan.td}
+    ac_stats = {t: _Stats(256) for t in scan.ta}
     fixed = _Stats(1)
     fixed.idx[0] = FIXED_BIN
-    order = []  # (ci, coeff, hi, vi, td, ta, qt)
-    for ci, (cs, td, ta) in enumerate(scan):
-        cid, hi, vi, tq = by_id[cs]
-        coeff = np.zeros((mby * vi, mbx * hi, 64), dtype=np.int32)
-        order.append((ci, coeff, hi, vi, td, ta, qts[tq]))
-
+    ns = len(scan.comps)
     dec = _ArithDecoder(data, pos)
-    last = [0] * len(scan)
-    ctx = [0] * len(scan)
-    n_mcu = 0
-    for my in range(mby):
-        for mx in range(mbx):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                if dec.marker is not None:
-                    marker, npos = dec.marker, dec.pos
-                else:
-                    marker, npos = _next_marker(data, dec.pos)
-                if not 0xFFD0 <= marker <= 0xFFD7:
-                    raise ValueError("expected restart marker")
-                for s in dc_stats + ac_stats:
-                    s.reset()
-                dec = _ArithDecoder(data, npos)
-                last = [0] * len(scan)
-                ctx = [0] * len(scan)
-            for ci, coeff, hi, vi, td, ta, _qt in order:
-                lo, up = dc_cond[td]
-                kx = ac_cond[ta]
-                for dy in range(vi):
-                    for dx in range(hi):
-                        zz = coeff[my * vi + dy, mx * hi + dx]
-                        zz[0] = _decode_dc(
-                            dec, dc_stats[td], last, ctx, ci, lo, up
-                        )
-                        _decode_ac(dec, ac_stats[ta], fixed, zz, kx)
-            n_mcu += 1
-    # vectorized dequant + IDCT, same reconstruction as the Huffman path
-    planes = []
-    for _ci, coeff, hi, vi, _td, _ta, qt in order:
-        nat = coeff[:, :, UNZIGZAG].reshape(
-            coeff.shape[0], coeff.shape[1], 8, 8
-        ) * qt
-        pix = np.einsum("ux,bcuv,vy->bcxy", _M, nat.astype(np.float64), _M)
-        pix += 128.0
-        plane = np.clip(np.round(pix), 0, 255).astype(np.uint8)
-        plane = plane.transpose(0, 2, 1, 3).reshape(
-            coeff.shape[0] * 8, coeff.shape[1] * 8
-        )
-        planes.append((plane, hi, vi))
-    if len(scan) == 1:
-        return planes[0][0][:fh, :fw].copy()
-    full = []
-    for plane, hi, vi in planes:
-        up = np.repeat(np.repeat(plane, vmax // vi, axis=0), hmax // hi, axis=1)
-        full.append(up[:fh, :fw])
-    return _ycbcr_to_rgb(full[0], full[1], full[2])
+    last = [0] * ns
+    ctx = [0] * ns
+    for n_mcu, mcu in enumerate(_mcus(frame, scan.comps)):
+        if n_mcu and tables.dri and n_mcu % tables.dri == 0:
+            mpos = _marker_at(dec)
+            if not 0xD0 <= data[mpos + 1] <= 0xD7:
+                raise ValueError("expected restart marker")
+            for s in (*dc_stats.values(), *ac_stats.values()):
+                s.reset()
+            dec = _ArithDecoder(data, mpos + 2)
+            last = [0] * ns
+            ctx = [0] * ns
+        for si, zz in mcu:
+            td, ta = scan.td[si], scan.ta[si]
+            lo, up = tables.dc_cond[td]
+            zz[0] = _decode_dc(dec, dc_stats[td], last, ctx, si, lo, up)
+            _decode_ac(dec, ac_stats[ta], fixed, zz, tables.ac_cond[ta])
+    return _marker_at(dec)

@@ -1,5 +1,9 @@
-"""Progressive JPEG (ITU-T T.81 SOF2, 8-bit Huffman): decoder and a
-scan-scripted encoder, extending functions/jpeg.py's baseline codec.
+"""Progressive JPEG (ITU-T T.81 SOF2, 8-bit Huffman): the entropy
+coder for spectral selection and successive approximation, decoding
+and encoding. functions/jpeg.py owns everything around it: the marker
+reader hands each SOF2 scan to _decode_prog_scan, which only fills
+coefficients, and the frame is reconstructed at EOI; the encoder uses
+jpeg.py's front end and header writers.
 
 Progressive streams carry the SAME quantized DCT coefficients as
 baseline, split across multiple scans: spectral selection (a scan
@@ -7,15 +11,12 @@ covers one zigzag band [Ss..Se] of one component; DC scans may
 interleave components) and successive approximation (a first scan
 delivers each coefficient divided by 2^Al, later scans refine one bit
 at a time, Ah = the previous scan's Al). Most JPEGs on the public web
-are SOF2, so a consumer bringing real files needs this path — the
-reference's contract is consumer-side decode of opaque payload bytes
-(/root/reference/server/messages.go:65).
+are SOF2, so a consumer bringing real files needs this path.
 
-Decoder scope: any 8-bit SOF2 stream with Huffman coding — interleaved
-DC scans, per-component AC scans, successive-approximation refinement
-(including EOB-run correction bits), restart intervals, DHT/DQT/DRI
-redefinition between scans. Arithmetic coding (SOF10) stays out of
-scope, as in the baseline codec.
+Decoder scope: interleaved DC scans, per-component AC scans,
+successive-approximation refinement (including EOB-run correction
+bits), restart intervals; table redefinition between scans is the
+marker reader's.
 
 Encoder scope: greyscale and RGB (4:4:4 / 4:2:0) with libjpeg's
 default progressive scan script (DC first at Al=1, banded AC firsts,
@@ -25,9 +26,9 @@ including the EOBn run-length codes at code length 8 — Kraft-valid,
 deliberately simple: the encoder exists to produce spec-correct
 streams for the decoder and tests, not to win a size contest; note
 Annex K's AC tables cannot express EOBn for n>0 at all). Decoded
-pixels are BIT-IDENTICAL to the baseline path's: both share
-_fdct_quant, so the coefficient arrays agree exactly and only the
-scan packaging differs (pinned by tests/test_jpeg.py round-trips).
+pixels are BIT-IDENTICAL to the baseline path's: both encoders share
+jpeg.py's front end, so the coefficient arrays agree exactly and only
+the scan packaging differs (pinned by tests/test_jpeg.py round-trips).
 
 Algorithm structure for the refinement scans follows T.81 G.1.2.3
 (decoding: G.2; the same logic libjpeg implements in jdphuff.c, which
@@ -36,33 +37,24 @@ is the de-facto conformance reference for successive approximation).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from streams_spark.functions.jpeg import (
-    _AC_CHROMA,
-    _AC_LUMA,
     _BitReader,
     _BitWriter,
     _DC_CHROMA,
     _DC_LUMA,
-    _M,
     _MarkerHit,
     _canonical_codes,
-    _decode_table,
+    _dht,
+    _encode_front,
     _extend,
+    _frame_header,
     _magnitude,
-    _pad_replicate,
-    _quality_scale,
+    _mcus,
+    _next_marker,
     _read_symbol,
-    _rgb_to_ycbcr,
-    _fdct_quant,
-    _ycbcr_to_rgb,
-    QUANT_CHROMA,
-    QUANT_LUMA,
-    UNZIGZAG,
-    ZIGZAG,
+    _sos,
 )
 
 # ---------------------------------------------------------------------------
@@ -70,211 +62,45 @@ from streams_spark.functions.jpeg import (
 # ---------------------------------------------------------------------------
 
 
-def jpeg_decode_progressive(data: bytes) -> np.ndarray:
-    """Decode a progressive (SOF2) JPEG to uint8 (h, w) grey or
-    (h, w, 3) RGB. Coefficients accumulate across scans in zigzag
-    order; dequantization + one vectorized IDCT happen at EOI."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qts: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    frame = None
-    coefs: list[np.ndarray] = []  # per component: (nbv, nbh, 64) zigzag
-    geom: list[tuple] = []  # per component: (hi, vi, tq, nbh_true, nbv_true)
-    restart_interval = 0
-    mbx = mby = 0
-    while pos + 1 < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("marker expected")
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xFF:  # fill byte
-            pos -= 1
-            continue
-        if marker == 0xD9:  # EOI
-            if frame is None:
-                raise ValueError("EOI before SOF2")
-            return _reconstruct(frame, geom, coefs, qts, mbx, mby)
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            continue  # parameterless
-        (seg_len,) = struct.unpack(">H", data[pos : pos + 2])
-        body = data[pos + 2 : pos + seg_len]
-        if marker == 0xDB:  # DQT
-            bpos = 0
-            while bpos < len(body):
-                pq, tq = body[bpos] >> 4, body[bpos] & 0x0F
-                bpos += 1
-                if pq:
-                    raise ValueError("16-bit quant tables unsupported")
-                tbl = np.frombuffer(
-                    body[bpos : bpos + 64], dtype=np.uint8
-                ).astype(np.int32)
-                qts[tq] = tbl[UNZIGZAG].reshape(8, 8)
-                bpos += 64
-        elif marker == 0xC4:  # DHT (may redefine between scans)
-            bpos = 0
-            while bpos < len(body):
-                tc, th = body[bpos] >> 4, body[bpos] & 0x0F
-                bits = list(body[bpos + 1 : bpos + 17])
-                n = sum(bits)
-                values = list(body[bpos + 17 : bpos + 17 + n])
-                huff[(tc, th)] = _decode_table(bits, values)
-                bpos += 17 + n
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xC2:  # SOF2
-            if body[0] != 8:
-                raise ValueError("only 8-bit precision supported")
-            fh, fw = struct.unpack(">HH", body[1:5])
-            ncomp = body[5]
-            comps = []
-            for i in range(ncomp):
-                cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            frame = (fh, fw, comps)
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mbx = (fw + 8 * hmax - 1) // (8 * hmax)
-            mby = (fh + 8 * vmax - 1) // (8 * vmax)
-            for _cid, hi, vi, tq in comps:
-                cw = (fw * hi + hmax - 1) // hmax
-                ch = (fh * vi + vmax - 1) // vmax
-                geom.append(
-                    (hi, vi, tq, (cw + 7) // 8, (ch + 7) // 8)
-                )
-                coefs.append(
-                    np.zeros((mby * vi, mbx * hi, 64), dtype=np.int32)
-                )
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("not a progressive (SOF2) stream")
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            scan = []
-            for i in range(ns):
-                cs, tabs = body[1 + 2 * i], body[2 + 2 * i]
-                scan.append((cs, tabs >> 4, tabs & 0x0F))
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ahal = body[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            pos = _decode_prog_scan(
-                data, pos + seg_len, frame, scan, ss, se, ah, al,
-                huff, restart_interval, coefs, geom, mbx, mby,
-            )
-            continue
-        pos += seg_len
-    raise ValueError("truncated stream: no EOI")
-
-
-def _next_marker(data: bytes, pos: int) -> int:
-    """Position of the next real marker (skips stuffed FF00, stray pad
-    bytes, and FF fill runs)."""
-    while pos + 1 < len(data):
-        if data[pos] == 0xFF and data[pos + 1] not in (0x00, 0xFF):
-            return pos
-        pos += 1
-    raise ValueError("truncated stream inside scan")
-
-
-def _decode_prog_scan(
-    data, pos, frame, scan, ss, se, ah, al, huff, dri, coefs, geom,
-    mbx, mby,
-):
+def _decode_prog_scan(data, pos, frame, scan, tables):
     """Decode one progressive scan into the coefficient arrays; return
     the stream position of the next marker."""
-    fh, fw, comps = frame
-    by_id = {c[0]: i for i, c in enumerate(comps)}
-    idxs = [by_id[cs] for cs, _td, _ta in scan]
+    ss, se, ah, al = scan.ss, scan.se, scan.ah, scan.al
     if ss == 0:
         if se != 0:
             raise ValueError("progressive DC scan must have Se=0")
+        dc = [tables.huffman(0, t) for t in scan.td] if ah == 0 else None
     else:
-        if len(scan) != 1:
+        if len(scan.comps) != 1:
             raise ValueError("progressive AC scan must be single-component")
         if not ss <= se <= 63:
             raise ValueError("bad spectral band")
+        ac_tab = tables.huffman(1, scan.ta[0])
+        decode_ac = _decode_ac_first if ah == 0 else _decode_ac_refine
     reader = _BitReader(data, pos)
-    state = {"eobrun": 0, "preds": [0] * len(scan)}
-
-    def restart_check(n_units: int) -> None:
-        if dri and n_units and n_units % dri == 0:
-            marker = reader.align_to_marker()
-            if not 0xFFD0 <= marker <= 0xFFD7:
-                raise ValueError("expected restart marker")
-            state["eobrun"] = 0
-            state["preds"] = [0] * len(scan)
-
+    state = {"eobrun": 0}
+    preds = [0] * len(scan.comps)
+    dri = tables.dri
     try:
-        if ss == 0 and len(scan) > 1:
-            # interleaved DC scan: MCU grid, hi x vi blocks per component
-            n_mcu = 0
-            for my in range(mby):
-                for mx in range(mbx):
-                    restart_check(n_mcu)
-                    for si, ci in enumerate(idxs):
-                        hi, vi = geom[ci][0], geom[ci][1]
-                        for dy in range(vi):
-                            for dx in range(hi):
-                                by, bx = my * vi + dy, mx * hi + dx
-                                _decode_dc(
-                                    reader, coefs[ci], by, bx, ah, al,
-                                    huff, scan[si], state, si,
-                                )
-                    n_mcu += 1
-        elif ss == 0:
-            # non-interleaved DC scan: the component's TRUE block raster
-            # (T.81 A.2.2 — no MCU padding for single-component scans)
-            ci = idxs[0]
-            nbh_true, nbv_true = geom[ci][3], geom[ci][4]
-            n_blk = 0
-            for by in range(nbv_true):
-                for bx in range(nbh_true):
-                    restart_check(n_blk)
-                    _decode_dc(
-                        reader, coefs[ci], by, bx, ah, al,
-                        huff, scan[0], state, 0,
-                    )
-                    n_blk += 1
-        else:
-            # AC scan: raster over the component's TRUE block dims
-            ci = idxs[0]
-            _cs, _td, ta = scan[0]
-            nbh_true, nbv_true = geom[ci][3], geom[ci][4]
-            ac_tab = huff.get((1, ta))
-            n_blk = 0
-            for by in range(nbv_true):
-                for bx in range(nbh_true):
-                    restart_check(n_blk)
-                    blk = coefs[ci][by, bx]
-                    if ah == 0:
-                        _decode_ac_first(
-                            reader, blk, ss, se, al, ac_tab, state
-                        )
-                    else:
-                        _decode_ac_refine(
-                            reader, blk, ss, se, al, ac_tab, state
-                        )
-                    n_blk += 1
+        for n, mcu in enumerate(_mcus(frame, scan.comps)):
+            if n and dri and n % dri == 0:
+                reader.restart()
+                state["eobrun"] = 0
+                preds = [0] * len(preds)
+            for si, blk in mcu:
+                if ss:
+                    decode_ac(reader, blk, ss, se, al, ac_tab, state)
+                elif ah == 0:  # first DC scan: Huffman-coded diffs
+                    size = _read_symbol(reader, dc[si])
+                    preds[si] += _extend(reader.bits(size), size)
+                    blk[0] = preds[si] << al
+                elif reader.bit():  # DC refinement: one raw bit per block
+                    blk[0] |= 1 << al
     except _MarkerHit as hit:
         raise ValueError(
             f"marker {hit.marker:#x} interrupted progressive scan"
         ) from None
     return _next_marker(data, reader.pos)
-
-
-def _decode_dc(reader, coef, by, bx, ah, al, huff, scomp, state, si):
-    if ah == 0:  # first DC scan: Huffman-coded diffs in the Al domain
-        _cs, td, _ta = scomp
-        size = _read_symbol(reader, huff[(0, td)])
-        diff = _extend(reader.bits(size), size) if size else 0
-        state["preds"][si] += diff
-        coef[by, bx, 0] = state["preds"][si] << al
-    else:  # DC refinement: one raw bit per block
-        if reader.bit():
-            coef[by, bx, 0] |= 1 << al
 
 
 def _decode_ac_first(reader, blk, ss, se, al, ac_tab, state):
@@ -346,34 +172,6 @@ def _decode_ac_refine(reader, blk, ss, se, al, ac_tab, state):
         state["eobrun"] -= 1
 
 
-def _reconstruct(frame, geom, coefs, qts, mbx, mby):
-    fh, fw, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    planes = []
-    for ci, (hi, vi, tq, _nbh, _nbv) in enumerate(geom):
-        if tq not in qts:
-            raise ValueError("missing quantization table")
-        nat = coefs[ci][:, :, UNZIGZAG].reshape(
-            coefs[ci].shape[0], coefs[ci].shape[1], 8, 8
-        ) * qts[tq]
-        pix = np.einsum("ux,bcuv,vy->bcxy", _M, nat.astype(np.float64), _M)
-        pix += 128.0
-        nbv, nbh = nat.shape[0], nat.shape[1]
-        plane = np.clip(np.round(pix), 0, 255).astype(np.uint8)
-        plane = plane.transpose(0, 2, 1, 3).reshape(nbv * 8, nbh * 8)
-        planes.append((plane, hi, vi))
-    if len(planes) == 1:
-        return planes[0][0][:fh, :fw].copy()
-    full = []
-    for plane, hi, vi in planes:
-        up = np.repeat(
-            np.repeat(plane, vmax // vi, axis=0), hmax // hi, axis=1
-        )
-        full.append(up[:fh, :fw])
-    return _ycbcr_to_rgb(full[0], full[1], full[2])
-
-
 # ---------------------------------------------------------------------------
 # Encoder
 # ---------------------------------------------------------------------------
@@ -425,14 +223,14 @@ class _ScanWriter:
         return self.w.flush()
 
 
-def _encode_dc_first(sw, blocks_iter, al, dc_codes_of):
-    preds: dict[int, int] = {}
-    for ci, blk in blocks_iter:
+def _encode_dc_first(sw, blocks_iter, al, dc_codes):
+    preds = [0] * len(dc_codes)
+    for si, blk in blocks_iter:
         v = int(blk[0]) >> al
-        diff = v - preds.get(ci, 0)
-        preds[ci] = v
+        diff = v - preds[si]
+        preds[si] = v
         size, bits = _magnitude(diff)
-        code, length = dc_codes_of(ci)[size]
+        code, length = dc_codes[si][size]
         sw.w.write(code, length)
         if size:
             sw.w.write(bits, size)
@@ -558,126 +356,31 @@ def jpeg_encode_progressive(
 ) -> bytes:
     """Encode uint8 (h, w) greyscale or (h, w, 3) RGB as a progressive
     (SOF2) JFIF JPEG using the default scan script. The quantized
-    coefficients are exactly jpeg_encode's (shared _fdct_quant), so the
+    coefficients are exactly jpeg_encode's (shared front end), so the
     decoded image is bit-identical to the baseline round-trip."""
-    if arr.dtype != np.uint8:
-        raise ValueError("jpeg_encode_progressive wants uint8")
-    grey = arr.ndim == 2
-    if not grey and (arr.ndim != 3 or arr.shape[2] != 3):
-        raise ValueError("jpeg_encode_progressive wants (h,w) or (h,w,3)")
-    if subsampling not in ("4:4:4", "4:2:0"):
-        raise ValueError("subsampling must be '4:4:4' or '4:2:0'")
-    h, w = arr.shape[0], arr.shape[1]
-    if h == 0 or w == 0 or h > 65535 or w > 65535:
-        raise ValueError("bad dimensions")
-    qt_l = _quality_scale(QUANT_LUMA, quality)
-    qt_c = _quality_scale(QUANT_CHROMA, quality)
-
-    sub = not grey and subsampling == "4:2:0"
-    if grey:
-        planes = [arr.astype(np.float64)]
-    else:
-        ycc = _rgb_to_ycbcr(arr)
-        cb, cr = ycc[:, :, 1], ycc[:, :, 2]
-        if sub:
-            pcb = _pad_replicate(cb, 2, 2)
-            pcr = _pad_replicate(cr, 2, 2)
-            cb = pcb.reshape(pcb.shape[0] // 2, 2, -1, 2).mean(axis=(1, 3))
-            cr = pcr.reshape(pcr.shape[0] // 2, 2, -1, 2).mean(axis=(1, 3))
-            cb, cr = np.round(cb), np.round(cr)
-        planes = [ycc[:, :, 0], cb, cr]
-
-    mcu = 16 if sub else 8
-    zz: list[np.ndarray] = []  # per comp: (nbv, nbh, 64) zigzag coeffs
-    for i, p in enumerate(planes):
-        pad = _pad_replicate(p, mcu if i == 0 else 8, mcu if i == 0 else 8)
-        c = _fdct_quant(pad, qt_l if i == 0 else qt_c)
-        zz.append(c.reshape(c.shape[0], c.shape[1], 64)[:, :, ZIGZAG])
-
-    ncomp = len(planes)
-    mby = zz[0].shape[0] // (2 if sub else 1)
-    mbx = zz[0].shape[1] // (2 if sub else 1)
-    samp = [(2, 2) if sub else (1, 1)] + [(1, 1)] * (ncomp - 1)
-    # true (unpadded-to-MCU) block dims per component for AC scans
-    true_dims = []
-    for i in range(ncomp):
-        if i == 0:
-            cw, ch = w, h
-        else:
-            cw = (w + 1) // 2 if sub else w
-            ch = (h + 1) // 2 if sub else h
-        true_dims.append(((ch + 7) // 8, (cw + 7) // 8))
-
-    # --- headers ---
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
-        + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    for tq, qt in ((0, qt_l),) if grey else ((0, qt_l), (1, qt_c)):
-        out += b"\xff\xdb" + struct.pack(">HB", 67, tq)
-        out += bytes(int(v) for v in qt.flatten()[ZIGZAG])
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
-    comp_hdr = [(1, (samp[0][0] << 4) | samp[0][1], 0)] + [
-        (i + 1, 0x11, 1) for i in range(1, ncomp)
-    ]
-    for cid, sm, tq in comp_hdr:
-        out += struct.pack("BBB", cid, sm, tq)
+    frame = _encode_front(arr, quality, subsampling)
     tables = [(0x00, _DC_LUMA), (0x10, _AC_PROG)]
-    if not grey:
+    if len(frame.comps) > 1:
         tables += [(0x01, _DC_CHROMA), (0x11, _AC_PROG)]
-    for tc_th, (bits, values) in tables:
-        out += b"\xff\xc4" + struct.pack(">HB", 19 + len(values), tc_th)
-        out += bytes(bits) + bytes(values)
-
+    out = _frame_header(frame, 0xC2) + _dht(tables)
     dc_l = _canonical_codes(*_DC_LUMA)
     dc_c = _canonical_codes(*_DC_CHROMA)
     ac_prog = _canonical_codes(*_AC_PROG)
-
-    def dc_codes_of(ci: int):
-        return dc_l if ci == 0 else dc_c
-
-    def mcu_blocks(comp_list):
-        """Yield (ci, zigzag block) in MCU-interleaved order, or the
-        single component's TRUE block raster when non-interleaved
-        (T.81 A.2.2 — no MCU padding for single-component scans)."""
-        if len(comp_list) == 1:
-            ci = comp_list[0]
-            nbv_t, nbh_t = true_dims[ci]
-            for by in range(nbv_t):
-                for bx in range(nbh_t):
-                    yield ci, zz[ci][by, bx]
-            return
-        for my in range(mby):
-            for mx in range(mbx):
-                for ci in comp_list:
-                    hi, vi = samp[ci]
-                    for dy in range(vi):
-                        for dx in range(hi):
-                            yield ci, zz[ci][my * vi + dy, mx * hi + dx]
-
-    for comp_list, ss, se, ah, al in _default_script(ncomp):
-        ns = len(comp_list)
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ns, ns)
-        for ci in comp_list:
-            td = 0 if ci == 0 else 1
-            ta = 0 if ci == 0 else 1
-            out += struct.pack("BB", ci + 1, (td << 4) | ta)
-        out += struct.pack("BBB", ss, se, (ah << 4) | al)
+    for comp_list, ss, se, ah, al in _default_script(len(frame.comps)):
+        comps = [frame.comps[i] for i in comp_list]
+        out += _sos(comps, ss, se, ah, al)
         sw = _ScanWriter(ac_prog)
-        if ss == 0:
-            if ah == 0:
-                _encode_dc_first(sw, mcu_blocks(comp_list), al, dc_codes_of)
-            else:
-                _encode_dc_refine(sw, mcu_blocks(comp_list), al)
+        blocks = (blk for mcu in _mcus(frame, comps) for blk in mcu)
+        if ss == 0 and ah == 0:
+            _encode_dc_first(
+                sw, blocks, al, [dc_c if c.tq else dc_l for c in comps]
+            )
+        elif ss == 0:
+            _encode_dc_refine(sw, blocks, al)
         else:
-            ci = comp_list[0]
-            nbv_t, nbh_t = true_dims[ci]
-            for by in range(nbv_t):
-                for bx in range(nbh_t):
-                    blk = zz[ci][by, bx]
-                    if ah == 0:
-                        _encode_ac_first(sw, blk, ss, se, al)
-                    else:
-                        _encode_ac_refine(sw, blk, ss, se, al)
+            encode_ac = _encode_ac_first if ah == 0 else _encode_ac_refine
+            for _si, blk in blocks:
+                encode_ac(sw, blk, ss, se, al)
         out += sw.finish()
     out += b"\xff\xd9"
     return bytes(out)

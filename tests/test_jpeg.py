@@ -390,3 +390,60 @@ def test_oversized_bit_read_raises_clean_valueerror():
     with pytest.raises(ValueError, match="corrupt scan"):
         reader.bits(33)
     assert reader.bits(16) == 0  # normal reads still fine afterwards
+
+
+# ---------------------------------------------------------------------------
+# Container layer: multi-scan sequential frames, fill bytes
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "shape,sub", [((16, 16, 3), "4:4:4"), ((24, 40, 3), "4:2:0")]
+)
+def test_sequential_frame_split_into_one_scan_per_component(shape, sub):
+    """T.81 lets a sequential frame spread its components over several
+    scans. Three hand-built non-interleaved scans, each walking its
+    component's own block raster (A.2.2), carry the baseline encoder's
+    coefficients, so the stream must decode exactly like the encoder's
+    one interleaved scan."""
+    img = np.random.default_rng(sum(shape)).integers(0, 256, shape, np.uint8)
+    interleaved = J.jpeg_encode(img, quality=50, subsampling=sub)
+    frame = J._encode_front(img, 50, sub)
+    h, w = shape[:2]
+    luma = (J._canonical_codes(*J._DC_LUMA), J._canonical_codes(*J._AC_LUMA))
+    chroma = (
+        J._canonical_codes(*J._DC_CHROMA), J._canonical_codes(*J._AC_CHROMA)
+    )
+    out = bytearray(interleaved[: interleaved.find(b"\xff\xda")])
+    for comp in frame.comps:
+        ch, cw = (h, w)
+        if comp.cid > 1 and sub == "4:2:0":
+            ch, cw = (h + 1) // 2, (w + 1) // 2
+        codes = chroma if comp.cid > 1 else luma
+        tables = 0x11 if comp.cid > 1 else 0x00
+        out += _sos([(comp.cid, tables)], 0, 63, 0x00)
+        writer, pred = J._BitWriter(), 0
+        for by in range((ch + 7) // 8):
+            for bx in range((cw + 7) // 8):
+                pred = J._encode_block(writer, comp.coef[by, bx], pred, *codes)
+        out += writer.flush()
+    out += b"\xff\xd9"
+    split = J.jpeg_decode(bytes(out))
+    assert split.shape == shape
+    assert np.array_equal(split, J.jpeg_decode(interleaved))
+
+
+def test_fill_bytes_before_markers_are_skipped():
+    """T.81 B.1.1.2: any marker may be preceded by 0xFF fill bytes — in
+    the headers, between scans and before EOI, in every frame type."""
+    from streams_spark.functions.jpeg_arith import jpeg_encode_arith
+
+    img = np.random.default_rng(8).integers(0, 256, (19, 27, 3), np.uint8)
+    for encode in (J.jpeg_encode, jpeg_encode_progressive, jpeg_encode_arith):
+        data = encode(img, quality=75)
+        dqt = data.find(b"\xff\xdb")
+        filled = (data[:dqt] + b"\xff\xff" + data[dqt:-2]).replace(
+            b"\xff\xda", b"\xff\xff\xda"
+        ) + b"\xff\xff\xff" + data[-2:]
+        assert len(filled) > len(data) + 5
+        assert np.array_equal(J.jpeg_decode(filled), J.jpeg_decode(data))

@@ -20,6 +20,7 @@ from hypothesis import strategies as st
 
 from streams_spark.functions import jpeg as J
 from streams_spark.functions import jpeg_arith as JA
+from streams_spark.functions.jpeg_progressive import jpeg_encode_progressive
 
 _SETTINGS = settings(
     max_examples=12,
@@ -283,24 +284,36 @@ def test_early_eoi_completes_by_zero_fill():
     assert out.shape == (24, 24) and out.dtype == np.uint8
 
 
-def test_byte_flip_sweep_never_hangs_or_crashes():
-    # arithmetic codes carry no redundancy: a flipped byte may decode
-    # to legal-but-wrong coefficients (returns an array) or trip a
-    # magnitude/run guard (ValueError) — anything else is a defect
+@pytest.mark.parametrize(
+    "encode",
+    [J.jpeg_encode, jpeg_encode_progressive, JA.jpeg_encode_arith],
+    ids=["baseline", "progressive", "arith"],
+)
+def test_byte_flip_sweep_never_hangs_or_crashes(encode):
+    # every byte after SOI, headers included, XOR 0x55, then every
+    # truncation. A flipped byte may decode to legal-but-wrong pixels
+    # (returns an array) or be rejected (ValueError); a truncated stream
+    # lacks EOI and is rejected. Anything else is a defect.
     img = _block_constant(24, 24, 8, seed=1)
-    data = bytearray(JA.jpeg_encode_arith(img, quality=50))
-    sos = bytes(data).find(b"\xff\xda")
+    data = encode(img, quality=50)
+    first_scan = data.find(b"\xff\xda")
     outcomes = {"ok": 0, "error": 0}
-    for i in range(sos + 14, len(data) - 2):
+    for i in range(2, len(data)):
         corrupt = bytearray(data)
         corrupt[i] ^= 0x55
         try:
-            out = JA.jpeg_decode_arith(bytes(corrupt))
-            assert out.shape == (24, 24)
-            outcomes["ok"] += 1
+            out = J.jpeg_decode(bytes(corrupt))
         except ValueError:
             outcomes["error"] += 1
-    assert sum(outcomes.values()) > 0
+            continue
+        assert out.dtype == np.uint8
+        if i > first_scan:  # the frame header is intact
+            assert out.shape == (24, 24)
+        outcomes["ok"] += 1
+    assert outcomes["ok"] > 0 and outcomes["error"] > 0
+    for cut in range(len(data)):
+        with pytest.raises(ValueError):
+            J.jpeg_decode(data[:cut])
 
 
 def test_guards():
