@@ -1085,54 +1085,6 @@ def scale_luma_dc(f: np.ndarray, qp: int) -> np.ndarray:
     return (f * v + add) >> -shift
 
 
-def scale_chroma_dc(f: np.ndarray, qp: int) -> np.ndarray:
-    """Rescale 2x2 chroma DC (8.5.11): dcC = (f * v(qP%6,0)
-    * 2^(qP/6)) >> 5."""
-    return (f * _V[qp % 6][0] << (qp // 6)) >> 5
-
-
-def residual_4x4(
-    levels: list[int] | None, qp: int, dc: int | None = None
-) -> np.ndarray:
-    """Fused zigzag -> AC rescale -> inverse transform -> (x+32)>>6 for
-    one 4x4 block, entirely in plain ints until the final np.array (one
-    array construction instead of three; this path runs for every
-    coded block of every frame). `levels` are the 16 zigzag-scan
-    levels (None = all-zero block, only meaningful with dc). `dc`
-    substitutes the DC-path value AFTER rescale, exactly like the old
-    dequant(skip_dc=True) + d[0,0]=dc sequence. Bit-exactness vs the
-    unfused primitives is pytest-pinned (test_h264.py)."""
-    v = _V44[qp % 6]
-    s = qp // 6
-    m = [[0] * 4 for _ in range(4)]
-    if levels is not None:
-        for scan_pos, raster in enumerate(ZIGZAG_4x4):
-            lv = levels[scan_pos]
-            if lv:
-                m[raster >> 2][raster & 3] = (
-                    lv * v[raster >> 2][raster & 3]
-                ) << s
-    if dc is not None:
-        m[0][0] = int(dc)
-    tmp = []
-    for i in range(4):
-        a, b, c, e = m[i]
-        e0, e1 = a + c, a - c
-        e2, e3 = (b >> 1) - e, b + (e >> 1)
-        tmp.append((e0 + e3, e1 + e2, e1 - e2, e0 - e3))
-    t0, t1, t2, t3 = tmp
-    out = [[0] * 4 for _ in range(4)]
-    for j in range(4):
-        a, b, c, e = t0[j], t1[j], t2[j], t3[j]
-        e0, e1 = a + c, a - c
-        e2, e3 = (b >> 1) - e, b + (e >> 1)
-        out[0][j] = (e0 + e3 + 32) >> 6
-        out[1][j] = (e1 + e2 + 32) >> 6
-        out[2][j] = (e1 - e2 + 32) >> 6
-        out[3][j] = (e0 - e3 + 32) >> 6
-    return np.array(out, dtype=np.int64)
-
-
 _V44_NP = [np.array(v, dtype=np.int64) for v in _V44]
 # fused rescale table per qp 0..51: v(qP%6) << (qP/6) — one multiply
 # instead of multiply + shift in the batch hot path
@@ -1144,14 +1096,14 @@ _ZZ_COLS = np.array([r & 3 for r in ZIGZAG_4x4], dtype=np.intp)
 def residual_4x4_batch(
     levels: np.ndarray, qp: int, dcs: np.ndarray | None = None
 ) -> np.ndarray:
-    """Vectorized residual_4x4 over a whole macroblock's coded blocks:
-    `levels` is (n, 16) int64 zigzag-scan levels, `dcs` (when given) is
-    (n,) already-rescaled DC values substituted after the AC rescale —
-    exactly residual_4x4's dc= contract. Returns (n, 4, 4) int64
-    residuals (the (x+32)>>6-rounded inverse transform). One zigzag
-    scatter + ~20 whole-batch numpy ops replace n Python-loop
-    transforms (residual_4x4 was the top cost of whole-GOP decode in
-    the r11 opt profile); bit-exactness vs residual_4x4 is pinned in
+    """The residual transform for every coded 4x4 block: zigzag ->
+    AC rescale -> inverse transform -> (x+32)>>6 (8.5.12), over a
+    batch of blocks at one QP. `levels` is (n, 16) int64 zigzag-scan
+    levels; `dcs` (when given) is (n,) already-rescaled DC values
+    substituted after the AC rescale — the Intra_16x16 and chroma DC
+    paths. Returns (n, 4, 4) int64 residuals. One zigzag scatter +
+    ~20 whole-batch numpy ops per macroblock; bit-exactness vs the
+    dequant_4x4 + inverse_transform_4x4 primitives is pinned in
     tests/test_h264.py (numpy int64 >> is the same arithmetic shift).
 
     Aliasing: when every AC level is zero the result is a READ-ONLY
@@ -1390,6 +1342,11 @@ def _zigzag_to_4x4(coeffs: list[int]) -> np.ndarray:
     return out.reshape(4, 4)
 
 
+# A decoded reference picture's planes as the DPB holds them:
+# (pad_ref(y), pad_ref(stack((cb, cr)))), uncropped.
+_RefPlanes = tuple[np.ndarray, np.ndarray]
+
+
 class H264Decoder:
     """Stateful Annex-B decoder: feeds access units in decode order,
     keeping SPS/PPS and a sliding-window DPB (8.2.5.3) of up to
@@ -1405,14 +1362,12 @@ class H264Decoder:
         self.sps: SPS | None = None
         self.pps: PPS | None = None
         # short-term reference pictures, most recent first: each entry
-        # is ((y, cb, cr), frame_num) — frame_num is the picture's
+        # is (_RefPlanes, frame_num) — frame_num is the picture's
         # identity for PicNum derivation (8.2.4.1: PicNum =
         # FrameNumWrap for short-term frames), which RefPicList0
         # initialization, ref_pic_list_modification, and MMCO
         # forgetting all key on
-        self._dpb: list[
-            tuple[tuple[np.ndarray, np.ndarray, np.ndarray], int]
-        ] = []
+        self._dpb: list[tuple[_RefPlanes, int]] = []
 
     def decode(self, buf: bytes) -> H264Frame:
         """Decode the coded picture of one access unit — possibly
@@ -1673,12 +1628,12 @@ def _cycle_bits(size: int, rate: int) -> int:
 
 
 def _ref_pic_list0(
-    refs: list[tuple[tuple[np.ndarray, np.ndarray, np.ndarray], int]],
+    refs: list[tuple[_RefPlanes, int]],
     cur_frame_num: int,
     log2_max_frame_num: int,
     num_ref: int,
     rplm: list[tuple[int, int]],
-) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+) -> list[_RefPlanes]:
     """Build one P slice's RefPicList0 from the DPB.
 
     Initialization (8.2.4.2.1): short-term pictures by DESCENDING
@@ -1739,10 +1694,10 @@ def _decode_picture(
     slices: list[tuple[bytes, bool, int]],
     sps: SPS,
     pps: PPS,
-    refs: list[tuple[tuple[np.ndarray, np.ndarray, np.ndarray], int]],
+    refs: list[tuple[_RefPlanes, int]],
 ) -> tuple[
     H264Frame,
-    tuple[np.ndarray, np.ndarray, np.ndarray],
+    _RefPlanes,
     int,
     list[tuple[int, int]],
 ]:
@@ -1756,7 +1711,7 @@ def _decode_picture(
     slice-group interleave edge), while the deblocking filter crosses
     it unless that slice's idc is 2.
 
-    `refs` is the DPB — ((y, cb, cr), frame_num) most recent first;
+    `refs` is the DPB — (_RefPlanes, frame_num) most recent first;
     each P slice builds its OWN RefPicList0 from it: initialization by
     descending PicNum (8.2.4.2.1, with FrameNumWrap relative to this
     picture's frame_num, 8.2.4.1) then that slice's
@@ -1835,11 +1790,12 @@ def _decode_picture(
         st.cur_slice = si
         st.qp = qp
         if is_p:
+            pad_shape = (16 * mh + 2 * _MC_PAD, 16 * mw + 2 * _MC_PAD)
             ref_list = _ref_pic_list0(
                 refs, frame_num, sps.log2_max_frame_num, num_ref, rplm
             )
-            for entry in ref_list:
-                if entry[0].shape != st.y.shape:
+            for ypad, _ in ref_list:
+                if ypad.shape != pad_shape:
                     raise H264Error("reference picture geometry mismatch")
 
         def _enter_mb(mbx: int, mby: int) -> None:
@@ -1923,23 +1879,11 @@ def _decode_picture(
         cr[ct // 2 : (ct + h) // 2, cl // 2 : (cl + w) // 2].astype(np.uint8),
         sps,
     )
-    # DPB planes carry a pre-stacked (2, H, W) chroma array so inter MC
-    # can compensate both chroma components in ONE call per partition
-    # (mc_chroma_pair), plus edge-replicated PADDED copies (margin
-    # _MC_PAD) so the unrestricted-MV clamp of 8-227/8-228 becomes a
-    # plain slice for every in-margin window (43% of luma MC windows on
-    # the partitions corpus took the clipped-gather fallback) — all
-    # built once per decoded picture, after the in-loop filter has
-    # finished mutating the planes. P[k] = plane[clip(k, 0, n-1)] for
-    # every index within the margin, so the padded slice is exactly the
-    # per-index clamped gather it replaces.
-    cbcr = np.stack((cb, cr))
-    ypad = np.pad(y, _MC_PAD, mode="edge")
-    cpad = np.pad(cbcr, ((0, 0), (_MC_PAD, _MC_PAD), (_MC_PAD, _MC_PAD)),
-                  mode="edge")
-    return (
-        frame, (y, cb, cr, cbcr, ypad, cpad), pic_frame_num, pic_mmco
-    )
+    # the DPB entry: edge-padded luma and stacked (cb, cr) chroma, so
+    # every MC window is a plain slice (pad_ref / _MC_PAD) and one
+    # mc_chroma call covers both chroma components
+    planes = (pad_ref(y), pad_ref(np.stack((cb, cr))))
+    return frame, planes, pic_frame_num, pic_mmco
 
 
 class _PicState:
@@ -2278,17 +2222,8 @@ def _filter_edge_chroma(
         q0[weak] = np.minimum(np.maximum(sq0 - delta, 0), 255)[weak]
 
 
-_QPC_T52 = None  # built lazily below _QPC's definition site via init
-
-
-def _qpc_t52() -> np.ndarray:
-    """52-entry chroma-QP map: _chroma_qp(qp, off) == T[clip(qp+off)]."""
-    global _QPC_T52
-    if _QPC_T52 is None:
-        _QPC_T52 = np.array(
-            [_chroma_qp(i, 0) for i in range(52)], dtype=np.int64
-        )
-    return _QPC_T52
+# 52-entry chroma-QP map: _chroma_qp(qp, off) == _QPC_T52[clip(qp+off)]
+_QPC_T52 = np.array([_chroma_qp(i, 0) for i in range(52)], dtype=np.int64)
 
 
 def _deblock_picture_1col(st: "_PicState") -> None:
@@ -2323,7 +2258,6 @@ def _deblock_picture_1col(st: "_PicState") -> None:
     y_pl, cb_pl, cr_pl = st.y, st.cb, st.cr
     coff = st.pps.chroma_qp_offset
     bs_v, bs_h = _deblock_bs_grids(st)
-    qpc_t = _qpc_t52()
 
     qp_mb = st.mb_qp[:, 0]
     aoff_mb = st.mb_aoff[:, 0]
@@ -2331,7 +2265,7 @@ def _deblock_picture_1col(st: "_PicState") -> None:
     on_mb = st.mb_dbf[:, 0] != 0
     ia_mb = np.minimum(np.maximum(qp_mb + aoff_mb, 0), 51)
     ib_mb = np.minimum(np.maximum(qp_mb + boff_mb, 0), 51)
-    cq_mb = qpc_t[np.minimum(np.maximum(qp_mb + coff, 0), 51)]
+    cq_mb = _QPC_T52[np.minimum(np.maximum(qp_mb + coff, 0), 51)]
 
     # ---- luma vertical edges (internal e = 1..3), batched over rows
     bsv_l = np.repeat(bs_v, 4, axis=0)  # (16mh, 4)
@@ -2837,17 +2771,21 @@ def _decode_i4x4_mb(
         decoded = st.blk_decoded & (st.blk_slice == st.cur_slice)
     # residuals first (7.3.5.3 bitstream order: all luma blocks, then
     # chroma), reconstruction second — but reconstruction must run in
-    # the same Z-order with intra prediction interleaved
-    luma_blocks: list = [None] * 16
+    # the same Z-order with intra prediction interleaved. A residual
+    # depends only on its levels, so all 16 go through one batched
+    # transform before the predict loop (uncoded blocks add zero).
+    levels = np.zeros((16, 16), dtype=np.int64)
     for k, (brow, bcol) in enumerate(_BLK_ORDER):
         if not (cbp_luma >> (k // 4)) & 1:
             continue
         aby, abx = 4 * mby + brow, 4 * mbx + bcol
         nc = _nc_luma(st.nnz, aby, abx, slc)
         blk, tc = _read_residual_tc(br, 16, nc)
-        luma_blocks[k] = blk
+        if blk is not None:
+            levels[k] = blk
         st.nnz[aby, abx] = tc
     cdc, cac = _read_chroma_residuals(br, st, mbx, mby, cbp_chroma)
+    rs = residual_4x4_batch(levels, qp) if cbp_luma else None
 
     for k, (brow, bcol) in enumerate(_BLK_ORDER):
         aby, abx = 4 * mby + brow, 4 * mbx + bcol
@@ -2858,9 +2796,8 @@ def _decode_i4x4_mb(
         else:
             mode = rem if rem < pm else rem + 1
         pred = predict_4x4(st.y, decoded, abx, aby, mode)
-        blk = luma_blocks[k]
-        if blk is not None:
-            pred = pred + residual_4x4(blk, qp)
+        if rs is not None:
+            pred = pred + rs[k]
         st.y[4 * aby : 4 * aby + 4, 4 * abx : 4 * abx + 4] = np.clip(
             pred, 0, 255
         )
@@ -3005,71 +2942,55 @@ def _six_tap(a: np.ndarray, axis: int) -> np.ndarray:
     )
 
 
+# Edge-pad margin of every DPB reference plane. A motion-compensation
+# window of n samples whose origin is clamped into [-_MC_PAD, N +
+# _MC_PAD - n] reads exactly the samples of the per-index clamp of eq.
+# 8-227/8-228 once _MC_PAD >= n - 1: a window that starts further out
+# lies wholly on one side of the picture, where every padded sample is
+# the edge sample. The largest windows are luma's 16 + 5 = 21 and
+# chroma's 8 + 1 = 9 samples.
+_MC_PAD = 20
+
+
+def pad_ref(plane: np.ndarray) -> np.ndarray:
+    """A reference plane (or stack of planes) edge-padded by _MC_PAD
+    on its last two axes: P[k] = plane[clip(k - _MC_PAD, 0, n - 1)].
+    Built once per decoded reference picture, after the in-loop filter
+    has finished with it; the DPB holds (pad_ref(y),
+    pad_ref(stack(cb, cr)))."""
+    pad = [(0, 0)] * (plane.ndim - 2) + [(_MC_PAD, _MC_PAD)] * 2
+    return np.pad(plane, pad, mode="edge")
+
+
+def _ref_window(
+    ref: np.ndarray, x: int, y: int, w: int, h_: int
+) -> np.ndarray:
+    """The (h_, w) window at picture coords (x, y) of a pad_ref plane,
+    its origin clamped into the pad margin (exact; see _MC_PAD)."""
+    H, W = ref.shape[-2] - 2 * _MC_PAD, ref.shape[-1] - 2 * _MC_PAD
+    y = min(max(y, -_MC_PAD), H + _MC_PAD - h_) + _MC_PAD
+    x = min(max(x, -_MC_PAD), W + _MC_PAD - w) + _MC_PAD
+    return ref[..., y : y + h_, x : x + w]
+
+
 def mc_luma(
     ref: np.ndarray, x0: int, y0: int, w: int, h_: int,
     mvx: int, mvy: int,
 ) -> np.ndarray:
     """Quarter-sample luma motion compensation for one w x h_ partition
-    (8.4.2.2.1, Figure 8-4 / Table 8-12). `ref` is the UNCROPPED
-    decoded reference luma plane; (x0, y0) the partition origin;
-    (mvx, mvy) the MV in quarter-luma-sample units. Out-of-picture
-    reads use edge replication (the unrestricted-MV clamp of eq.
-    8-227/8-228). Half-pel positions are the 6-tap Clip1((v+16)>>5)
-    (center j: Clip1((v+512)>>10) on un-rounded intermediates);
-    quarter positions average the two nearest integer/half samples
-    with +1 rounding. tests/test_h264_inter.py pins this vectorized
-    form against a literal per-pixel transcription of the spec."""
-    H, W = ref.shape
-    xI, xF = mvx >> 2, mvx & 3
-    yI, yF = mvy >> 2, mvy & 3
-    ya, xa = y0 + yI - 2, x0 + xI - 2
-    if ya >= 0 and xa >= 0 and ya + h_ + 5 <= H and xa + w + 5 <= W:
-        # in-bounds fast path: a plain slice view (no index arrays, no
-        # copy — every consumer below only reads)
-        win = ref[ya : ya + h_ + 5, xa : xa + w + 5]
-    else:
-        ys = np.clip(np.arange(ya, ya + h_ + 5), 0, H - 1)
-        xs = np.clip(np.arange(xa, xa + w + 5), 0, W - 1)
-        win = ref[np.ix_(ys, xs)]  # (h_+5, w+5)
-    return _mc_luma_win(win, xF, yF, w, h_)
-
-
-# MC reference padding margin: windows whose clamped reads stay within
-# this many samples of the picture edge use the pre-padded DPB plane
-# (plain slice) instead of a per-index clipped gather; wilder MVs fall
-# back to mc_luma/mc_chroma's gather path
-_MC_PAD = 16
-
-
-def mc_luma_ref(
-    entry: tuple, x0: int, y0: int, w: int, h_: int,
-    mvx: int, mvy: int,
-) -> np.ndarray:
-    """mc_luma against a DPB entry, reading the entry's edge-padded
-    plane when the window fits inside the padding margin — identical
-    values by the padding construction (P[k] = ref[clip(k)])."""
-    ref = entry[0]
-    H, W = ref.shape
-    xI, xF = mvx >> 2, mvx & 3
-    yI, yF = mvy >> 2, mvy & 3
-    ya, xa = y0 + yI - 2, x0 + xI - 2
-    if (
-        ya >= -_MC_PAD and xa >= -_MC_PAD
-        and ya + h_ + 5 <= H + _MC_PAD and xa + w + 5 <= W + _MC_PAD
-    ):
-        win = entry[4][
-            ya + _MC_PAD : ya + _MC_PAD + h_ + 5,
-            xa + _MC_PAD : xa + _MC_PAD + w + 5,
-        ]
-        return _mc_luma_win(win, xF, yF, w, h_)
-    return mc_luma(ref, x0, y0, w, h_, mvx, mvy)
-
-
-def _mc_luma_win(
-    win: np.ndarray, xF: int, yF: int, w: int, h_: int
-) -> np.ndarray:
-    """Quarter-pel interpolation over an extracted (h_+5, w+5) window
-    (the shared body of mc_luma / mc_luma_ref)."""
+    (8.4.2.2.1, Figure 8-4 / Table 8-12). `ref` is a pad_ref of the
+    UNCROPPED decoded reference luma plane; (x0, y0) the partition
+    origin; (mvx, mvy) the MV in quarter-luma-sample units.
+    Out-of-picture reads use edge replication (eq. 8-227/8-228) for
+    any MV. Half-pel positions are the 6-tap Clip1((v+16)>>5) (center
+    j: Clip1((v+512)>>10) on un-rounded intermediates); quarter
+    positions average the two nearest integer/half samples with +1
+    rounding. tests/test_h264_inter.py pins this vectorized form
+    against a literal per-pixel transcription of the spec."""
+    xF, yF = mvx & 3, mvy & 3
+    win = _ref_window(
+        ref, x0 + (mvx >> 2) - 2, y0 + (mvy >> 2) - 2, w + 5, h_ + 5
+    )
     G = win[2 : h_ + 3, 2 : w + 3]  # (h_+1, w+1) full-pel grid
     if xF == 0 and yF == 0:
         return G[:h_, :w].copy()
@@ -3115,12 +3036,6 @@ def _mc_luma_win(
     return (u + v + 1) >> 1
 
 
-def mc_luma_16x16(
-    ref: np.ndarray, x0: int, y0: int, mvx: int, mvy: int
-) -> np.ndarray:
-    return mc_luma(ref, x0, y0, 16, 16, mvx, mvy)
-
-
 def mc_chroma(
     ref: np.ndarray, x0: int, y0: int, w: int, h_: int,
     mvx: int, mvy: int,
@@ -3128,99 +3043,25 @@ def mc_chroma(
     """Eighth-sample chroma MC for one w x h_ partition (8.4.2.2.2):
     bilinear with weights xFrac/yFrac in eighths; the luma MV applies
     directly (chroma is half resolution, so the same integer value is
-    an eighth-pel offset). Edge replication as for luma."""
-    H, W = ref.shape
-    xI, xF = mvx >> 3, mvx & 7
-    yI, yF = mvy >> 3, mvy & 7
-    ya, xa = y0 + yI, x0 + xI
-    if ya >= 0 and xa >= 0 and ya + h_ + 1 <= H and xa + w + 1 <= W:
-        # in-bounds fast path: plain slice view (read-only below)
-        win = ref[ya : ya + h_ + 1, xa : xa + w + 1]
-    else:
-        ys = np.clip(np.arange(ya, ya + h_ + 1), 0, H - 1)
-        xs = np.clip(np.arange(xa, xa + w + 1), 0, W - 1)
-        win = ref[np.ix_(ys, xs)]
-    if xF == 0 and yF == 0:
-        return win[:h_, :w].copy()
-    A, B = win[:h_, :w], win[:h_, 1:]
-    C, D = win[1:, :w], win[1:, 1:]
-    return (
-        (8 - xF) * (8 - yF) * A + xF * (8 - yF) * B
-        + (8 - xF) * yF * C + xF * yF * D + 32
-    ) >> 6
-
-
-def mc_chroma_8x8(
-    ref: np.ndarray, x0: int, y0: int, mvx: int, mvy: int
-) -> np.ndarray:
-    return mc_chroma(ref, x0, y0, 8, 8, mvx, mvy)
-
-
-def mc_chroma_pair(
-    ref2: np.ndarray, x0: int, y0: int, w: int, h_: int,
-    mvx: int, mvy: int,
-) -> np.ndarray:
-    """mc_chroma over BOTH chroma components at once: `ref2` is the
-    DPB's pre-stacked (2, H, W) cb/cr array, the return is (2, h_, w).
-    Same arithmetic as mc_chroma (pinned by tests against it); one
-    call per partition instead of two."""
-    _, H, W = ref2.shape
-    xI, xF = mvx >> 3, mvx & 7
-    yI, yF = mvy >> 3, mvy & 7
-    ya, xa = y0 + yI, x0 + xI
-    if ya >= 0 and xa >= 0 and ya + h_ + 1 <= H and xa + w + 1 <= W:
-        win = ref2[:, ya : ya + h_ + 1, xa : xa + w + 1]
-    else:
-        ys = np.clip(np.arange(ya, ya + h_ + 1), 0, H - 1)
-        xs = np.clip(np.arange(xa, xa + w + 1), 0, W - 1)
-        win = ref2[:, ys[:, None], xs[None, :]]
-    return _mc_chroma_win(win, xF, yF, w, h_)
-
-
-def mc_chroma_pair_ref(
-    entry: tuple, x0: int, y0: int, w: int, h_: int,
-    mvx: int, mvy: int,
-) -> np.ndarray:
-    """mc_chroma_pair against a DPB entry, reading the entry's
-    edge-padded stacked chroma when the window fits inside the padding
-    margin (identical values by the padding construction)."""
-    ref2 = entry[3]
-    _, H, W = ref2.shape
-    xI, xF = mvx >> 3, mvx & 7
-    yI, yF = mvy >> 3, mvy & 7
-    ya, xa = y0 + yI, x0 + xI
-    if (
-        ya >= -_MC_PAD and xa >= -_MC_PAD
-        and ya + h_ + 1 <= H + _MC_PAD and xa + w + 1 <= W + _MC_PAD
-    ):
-        win = entry[5][
-            :,
-            ya + _MC_PAD : ya + _MC_PAD + h_ + 1,
-            xa + _MC_PAD : xa + _MC_PAD + w + 1,
-        ]
-        return _mc_chroma_win(win, xF, yF, w, h_)
-    return mc_chroma_pair(ref2, x0, y0, w, h_, mvx, mvy)
-
-
-def _mc_chroma_win(
-    win: np.ndarray, xF: int, yF: int, w: int, h_: int
-) -> np.ndarray:
-    """Eighth-pel bilinear over an extracted (2, h_+1, w+1) window
-    (the shared body of mc_chroma_pair / mc_chroma_pair_ref). The
-    separable xF == 0 / yF == 0 cases halve the multiply count — exact:
-    with yF == 0 the C/D weights are zero and the 8-8.4.2.2.2 formula
-    reduces to ((8-xF)*8*A + xF*8*B + 32) >> 6 == ((8-xF)*A + xF*B + 4)
-    >> 3 (all weights are multiples of 8, so the shift folds)."""
+    an eighth-pel offset). `ref` is a pad_ref of one chroma plane,
+    (h_, w) out, or of the DPB's stacked (cb, cr), (2, h_, w) out —
+    both components in one call per partition. Edge replication as
+    for luma. The separable xF == 0 / yF == 0 cases halve the
+    multiply count — exact: with yF == 0 the C/D weights are zero and
+    the formula reduces to ((8-xF)*8*A + xF*8*B + 32) >> 6 ==
+    ((8-xF)*A + xF*B + 4) >> 3 (all weights are multiples of 8, so
+    the shift folds)."""
+    xF, yF = mvx & 7, mvy & 7
+    win = _ref_window(ref, x0 + (mvx >> 3), y0 + (mvy >> 3), w + 1, h_ + 1)
+    A = win[..., :h_, :w]
     if yF == 0:
         if xF == 0:
-            return win[:, :h_, :w].copy()
-        A, B = win[:, :h_, :w], win[:, :h_, 1:]
-        return ((8 - xF) * A + xF * B + 4) >> 3
+            return A.copy()
+        return ((8 - xF) * A + xF * win[..., :h_, 1:] + 4) >> 3
+    C = win[..., 1:, :w]
     if xF == 0:
-        A, C = win[:, :h_, :w], win[:, 1:, :w]
         return ((8 - yF) * A + yF * C + 4) >> 3
-    A, B = win[:, :h_, :w], win[:, :h_, 1:]
-    C, D = win[:, 1:, :w], win[:, 1:, 1:]
+    B, D = win[..., :h_, 1:], win[..., 1:, 1:]
     return (
         (8 - xF) * (8 - yF) * A + xF * (8 - yF) * B
         + (8 - xF) * yF * C + xF * yF * D + 32
@@ -3282,7 +3123,7 @@ def _chroma_resid_add_pair(
 
 def _reconstruct_inter_mb(
     st: "_PicState",
-    ref_list: list[tuple[np.ndarray, np.ndarray, np.ndarray]],
+    ref_list: list[_RefPlanes],
     mbx: int, mby: int,
     parts: list[tuple[int, int, int, int, int, int, int]],
     cbp: int, luma_blocks: list, cdc: list, cac: list,
@@ -3293,8 +3134,8 @@ def _reconstruct_inter_mb(
     (RefPicList0)."""
     pred = np.empty((16, 16), dtype=np.int64)
     for ox, oy, w, h_, mvx, mvy, ri in parts:
-        pred[oy : oy + h_, ox : ox + w] = mc_luma_ref(
-            ref_list[ri], 16 * mbx + ox, 16 * mby + oy, w, h_, mvx, mvy
+        pred[oy : oy + h_, ox : ox + w] = mc_luma(
+            ref_list[ri][0], 16 * mbx + ox, 16 * mby + oy, w, h_, mvx, mvy
         )
     # inter 4x4 residuals: all 16 coefficients in one zigzag block (no
     # separate DC transform — that is Intra_16x16 only), batched across
@@ -3312,8 +3153,8 @@ def _reconstruct_inter_mb(
     predc2 = np.empty((2, 8, 8), dtype=np.int64)
     for ox, oy, w, h_, mvx, mvy, ri in parts:
         predc2[:, oy // 2 : (oy + h_) // 2, ox // 2 : (ox + w) // 2] = (
-            mc_chroma_pair_ref(
-                ref_list[ri], 8 * mbx + ox // 2,
+            mc_chroma(
+                ref_list[ri][1], 8 * mbx + ox // 2,
                 8 * mby + oy // 2, w // 2, h_ // 2, mvx, mvy,
             )
         )
@@ -3348,7 +3189,7 @@ def _read_te_ref(br: BitReader, num_ref: int, ref_list_len: int) -> int:
 
 def _decode_p_mb(
     br: BitReader, st: "_PicState",
-    ref_list: list[tuple[np.ndarray, np.ndarray, np.ndarray]],
+    ref_list: list[_RefPlanes],
     mbx: int, mby: int, num_ref: int,
 ) -> None:
     """One coded P-slice macroblock (7.3.5 / Table 7-13): any L0
@@ -3496,8 +3337,7 @@ def _reconstruct_luma_16x16(
     dc = scale_luma_dc(hadamard_4x4(_zigzag_to_4x4(dc_levels)), qp)
     # all 16 blocks in one batched transform: row k's levels are
     # [0] + AC (scan position 0 is the DC path's), its rescaled DC
-    # substituted via dcs= — identical to the old per-block
-    # residual_4x4(..., dc=) sequence
+    # substituted via dcs=
     lv = np.zeros((16, 16), dtype=np.int64)
     for k in range(16):
         ac = ac_blocks[k]
@@ -3639,6 +3479,65 @@ def encode_pps(
     return _nal(8, bw.to_bytes())
 
 
+def _write_slice_header(
+    bw: BitWriter,
+    p: bool = False,
+    first_mb: int = 0,
+    frame_num: int = 0,
+    qp_delta: int = 0,
+    deblock_idc: int = 1,
+    ref_idc: int = 3,
+    num_ref_active: int = 1,
+    rplm: list[tuple[int, int]] | None = None,
+    mmco_forget: list[int] | None = None,
+) -> None:
+    """Fixture slice header (7.3.3), first_mb_in_slice through the
+    deblocking control, under encode_sps/encode_pps (pps_id 0,
+    log2_max_frame_num 4, poc type 2). An I slice is an IDR slice
+    (idr_pic_id 0, no long-term marking); a P slice is non-IDR, with
+    `num_ref_active` > 1 written as the num_ref_idx override, `rplm`
+    as (idc, abs_diff_pic_num_minus1) ref_pic_list_modification ops
+    and `mmco_forget` (when not None) as adaptive marking with one
+    MMCO-1 op per difference_of_pic_nums_minus1. `deblock_idc` is
+    disable_deblocking_filter_idc; idc 0/2 carry zero offsets. A
+    slice_group_change_cycle, when the PPS needs one, is the caller's
+    to append."""
+    bw.ue(first_mb)
+    bw.ue(5 if p else 7)  # slice_type: P / I (all slices of picture)
+    bw.ue(0)  # pps_id
+    bw.u(frame_num % 16, 4)  # frame_num (log2_max_frame_num = 4)
+    if not p:
+        bw.ue(0)  # idr_pic_id
+        bw.u(0, 1)  # no_output_of_prior_pics
+        bw.u(0, 1)  # long_term_reference
+    else:
+        if num_ref_active > 1:
+            bw.u(1, 1)  # num_ref_idx_active_override_flag
+            bw.ue(num_ref_active - 1)  # num_ref_idx_l0_active_minus1
+        else:
+            bw.u(0, 1)  # num_ref_idx_active_override (PPS default: 1 ref)
+        bw.u(1 if rplm else 0, 1)  # ref_pic_list_modification_flag_l0
+        if rplm:
+            for idc, abs_diff_m1 in rplm:
+                bw.ue(idc)
+                bw.ue(abs_diff_m1)
+            bw.ue(3)  # end of modification ops
+        if ref_idc:  # dec_ref_pic_marking only for reference pictures
+            bw.u(0 if mmco_forget is None else 1, 1)  # adaptive marking
+            if mmco_forget is not None:  # [] = adaptive mode, zero ops
+                for diff_m1 in mmco_forget:
+                    bw.ue(1)  # MMCO 1: mark short-term unused
+                    bw.ue(diff_m1)
+                bw.ue(0)  # end of marking ops
+        elif mmco_forget is not None:
+            raise ValueError("mmco_forget requires a reference picture")
+    bw.se(qp_delta)  # slice_qp_delta
+    bw.ue(deblock_idc)  # disable_deblocking_filter_idc
+    if deblock_idc != 1:
+        bw.se(0)  # slice_alpha_c0_offset_div2
+        bw.se(0)  # slice_beta_offset_div2
+
+
 def h264_encode_rows(
     mb_w: int,
     mb_h: int,
@@ -3672,20 +3571,8 @@ def h264_encode_rows(
     if len(dc_levels) != mb_h - 1:
         raise ValueError("need one DC level per non-first MB row")
     bw = BitWriter()
-    bw.ue(0)  # first_mb_in_slice
-    bw.ue(7)  # slice_type: I (all slices of picture)
-    bw.ue(0)  # pps_id
-    bw.u(0, 4)  # frame_num (log2_max_frame_num = 4)
-    bw.ue(0)  # idr_pic_id
-    bw.u(0, 1)  # no_output_of_prior_pics
-    bw.u(0, 1)  # long_term_reference
-    bw.se(0)  # slice_qp_delta: encode_pps(qp) already pins pic_init_qp
-    if deblock:
-        bw.ue(0)  # disable_deblocking_filter_idc: filter ON
-        bw.se(0)  # slice_alpha_c0_offset_div2
-        bw.se(0)  # slice_beta_offset_div2
-    else:
-        bw.ue(1)  # disable_deblocking_filter_idc
+    # slice_qp_delta 0: encode_pps(qp) already pins pic_init_qp
+    _write_slice_header(bw, deblock_idc=0 if deblock else 1)
 
     nnz = np.zeros((4 * mb_h, 4 * mb_w), dtype=np.int64)
     for mby in range(mb_h):
@@ -3778,20 +3665,7 @@ def h264_encode_i4x4_rows(
     if mb_w < 2:
         raise ValueError("need at least one Intra_4x4 interior column")
     bw = BitWriter()
-    bw.ue(0)  # first_mb_in_slice
-    bw.ue(7)  # slice_type: I
-    bw.ue(0)  # pps_id
-    bw.u(0, 4)  # frame_num
-    bw.ue(0)  # idr_pic_id
-    bw.u(0, 1)
-    bw.u(0, 1)
-    bw.se(0)  # slice_qp_delta
-    if deblock:
-        bw.ue(0)
-        bw.se(0)
-        bw.se(0)
-    else:
-        bw.ue(1)  # disable_deblocking_filter_idc
+    _write_slice_header(bw, deblock_idc=0 if deblock else 1)
 
     nnz = np.zeros((4 * mb_h, 4 * mb_w), dtype=np.int64)
     modes = np.full((4 * mb_h, 4 * mb_w), -1, dtype=np.int64)
@@ -3889,15 +3763,9 @@ def h264_encode_p_partitions(
     the A/B/C(D) MVP at sub-8x8 grain, including the same-MB
     above-right-undecoded -> D fallback."""
     bw = BitWriter()
-    bw.ue(0)
-    bw.ue(5)  # P
-    bw.ue(0)
-    bw.u(frame_num % 16, 4)
-    bw.u(0, 1)
-    bw.u(0, 1)
-    bw.u(0, 1)  # adaptive_ref_pic_marking (ref_idc 2)
-    bw.se(qp_delta)
-    bw.ue(1)  # deblocking off
+    _write_slice_header(
+        bw, p=True, frame_num=frame_num, qp_delta=qp_delta, ref_idc=2
+    )
 
     st = _PicState(
         nnz=np.zeros((4 * mb_h, 4 * mb_w), dtype=np.int64),
@@ -4004,18 +3872,7 @@ def h264_encode_sliced_rows(
     out = encode_sps(1, mb_h, crop_right, crop_bottom) + encode_pps(qp)
     for r, level in enumerate(anchor_levels):
         bw = BitWriter()
-        bw.ue(r)  # first_mb_in_slice
-        bw.ue(7)  # I slice
-        bw.ue(0)  # pps_id
-        bw.u(0, 4)  # frame_num
-        bw.ue(0)  # idr_pic_id
-        bw.u(0, 1)
-        bw.u(0, 1)
-        bw.se(0)  # slice_qp_delta
-        bw.ue(deblock_idc)
-        if deblock_idc != 1:
-            bw.se(0)
-            bw.se(0)
+        _write_slice_header(bw, first_mb=r, deblock_idc=deblock_idc)
         bw.ue(1 + 2)  # mb_type: I16x16, DC prediction, cbp 0
         bw.ue(0)  # chroma DC
         bw.se(0)  # mb_qp_delta
@@ -4066,15 +3923,7 @@ def h264_encode_fmo(
         if len(deltas[g]) != len(addrs):
             raise ValueError("need one mb_qp_delta per in-group MB")
         bw = BitWriter()
-        bw.ue(addrs[0])  # first_mb_in_slice
-        bw.ue(7)  # I slice
-        bw.ue(0)  # pps_id
-        bw.u(0, 4)  # frame_num
-        bw.ue(0)  # idr_pic_id
-        bw.u(0, 1)  # no_output_of_prior_pics
-        bw.u(0, 1)  # long_term_reference
-        bw.se(0)  # slice_qp_delta
-        bw.ue(1)  # disable_deblocking_filter_idc: off
+        _write_slice_header(bw, first_mb=addrs[0])
         if dyn:
             bw.u(change_cycle, cycle_bits)
         cur_qp = qp
@@ -4199,41 +4048,11 @@ def h264_encode_p_rows(
         raise ValueError("row_refs must give a valid ref index per row")
     mvx, mvy = mv_qpel
     bw = BitWriter()
-    bw.ue(0)  # first_mb_in_slice
-    bw.ue(5)  # slice_type: P (all slices of picture)
-    bw.ue(0)  # pps_id
-    bw.u(frame_num % 16, 4)  # frame_num (log2_max_frame_num = 4)
-    if num_ref_active > 1:
-        bw.u(1, 1)  # num_ref_idx_active_override_flag
-        bw.ue(num_ref_active - 1)  # num_ref_idx_l0_active_minus1
-    else:
-        bw.u(0, 1)  # num_ref_idx_active_override (PPS default: 1 ref)
-    if rplm:
-        bw.u(1, 1)  # ref_pic_list_modification_flag_l0
-        for idc, abs_diff_m1 in rplm:
-            bw.ue(idc)
-            bw.ue(abs_diff_m1)
-        bw.ue(3)  # end of modification ops
-    else:
-        bw.u(0, 1)  # ref_pic_list_modification_flag_l0
-    if ref_idc:  # dec_ref_pic_marking only for reference pictures
-        if mmco_forget is not None:  # [] = adaptive mode, zero ops
-            bw.u(1, 1)  # adaptive_ref_pic_marking_mode_flag
-            for diff_m1 in mmco_forget:
-                bw.ue(1)  # MMCO 1: mark short-term unused
-                bw.ue(diff_m1)
-            bw.ue(0)  # end of marking ops
-        else:
-            bw.u(0, 1)  # adaptive marking off (sliding window)
-    elif mmco_forget is not None:
-        raise ValueError("mmco_forget requires a reference picture")
-    bw.se(qp_delta)  # slice_qp_delta
-    if deblock:
-        bw.ue(0)
-        bw.se(0)
-        bw.se(0)
-    else:
-        bw.ue(1)  # disable_deblocking_filter_idc
+    _write_slice_header(
+        bw, p=True, frame_num=frame_num, qp_delta=qp_delta,
+        deblock_idc=0 if deblock else 1, ref_idc=ref_idc,
+        num_ref_active=num_ref_active, rplm=rplm, mmco_forget=mmco_forget,
+    )
 
     st = _PicState(
         nnz=np.zeros((4 * mb_h, 4 * mb_w), dtype=np.int64),

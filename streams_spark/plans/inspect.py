@@ -67,10 +67,6 @@ def partition_filters(df: DataFrame) -> list[str]:
     return [l.strip() for l in plan.splitlines() if "PartitionFilters" in l]
 
 
-def shuffle_count(df: DataFrame) -> int:
-    return operator_counts(df).get("Exchange", 0)
-
-
 def python_stage_count(df: DataFrame) -> int:
     c = operator_counts(df)
     return sum(c.get(k, 0) for k in PYTHON_STAGES)

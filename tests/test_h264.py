@@ -507,56 +507,68 @@ def test_run_before_overrun_raises_h264error():
 
 
 def test_residual_4x4_matches_unfused_primitives():
-    # the fused hot path (zigzag -> rescale -> inverse transform ->
-    # rounding, plain ints) must be bit-exact vs the reference-shaped
-    # primitives it replaced, across qps, random levels, and the
-    # DC-substitution mode
+    # the batched transform (zigzag -> rescale -> inverse transform ->
+    # rounding over n blocks) must be bit-exact vs the reference-shaped
+    # primitives, across qps and random levels, in all three modes:
+    # levels, DC substitution (dcs=) and DC-only
     import numpy as np
 
     from streams_spark.functions.h264 import (
         _zigzag_to_4x4,
         dequant_4x4,
         inverse_transform_4x4,
-        residual_4x4,
+        residual_4x4_batch,
     )
+
+    def ref(levels, qp, dc=None):
+        d = dequant_4x4(_zigzag_to_4x4(levels), qp, skip_dc=dc is not None)
+        if dc is not None:
+            d[0, 0] = dc
+        return (inverse_transform_4x4(d) + 32) >> 6
 
     rng = np.random.default_rng(77)
     for qp in (0, 5, 11, 12, 28, 36, 51):
-        for _ in range(20):
-            levels = [int(rng.integers(-40, 41)) for _ in range(16)]
-            want = (
-                inverse_transform_4x4(
-                    dequant_4x4(_zigzag_to_4x4(levels), qp, skip_dc=False)
-                )
-                + 32
-            ) >> 6
-            assert (residual_4x4(levels, qp) == want).all(), qp
-            # DC-substitution mode (chroma + Intra_16x16 paths)
-            dc = int(rng.integers(-5000, 5001))
-            d = dequant_4x4(_zigzag_to_4x4([0] + levels[:15]), qp, True)
-            d[0, 0] = dc
-            want = (inverse_transform_4x4(d) + 32) >> 6
-            got = residual_4x4([0] + levels[:15], qp, dc=dc)
-            assert (got == want).all(), qp
-            # all-zero AC with DC only
-            d = dequant_4x4(np.zeros((4, 4), dtype=np.int64), qp, True)
-            d[0, 0] = dc
-            want = (inverse_transform_4x4(d) + 32) >> 6
-            assert (residual_4x4(None, qp, dc=dc) == want).all(), qp
+        lv = rng.integers(-40, 41, size=(20, 16)).astype(np.int64)
+        got = residual_4x4_batch(lv, qp)
+        for k in range(20):
+            assert (got[k] == ref(lv[k].tolist(), qp)).all(), qp
+        # DC-substitution mode (chroma + Intra_16x16 paths)
+        dcs = rng.integers(-5000, 5001, size=20).astype(np.int64)
+        lv[:, 0] = 0
+        got = residual_4x4_batch(lv, qp, dcs=dcs)
+        for k in range(20):
+            want = ref(lv[k].tolist(), qp, int(dcs[k]))
+            assert (got[k] == want).all(), qp
+        # DC-only: every AC level zero, with and without dcs=
+        lv[:, 1:] = 0
+        lv[:, 0] = rng.integers(-40, 41, size=20)
+        got = residual_4x4_batch(lv, qp)
+        for k in range(20):
+            assert (got[k] == ref(lv[k].tolist(), qp)).all(), qp
+        got = residual_4x4_batch(np.zeros((20, 16), np.int64), qp, dcs=dcs)
+        for k in range(20):
+            want = ref([0] * 16, qp, int(dcs[k]))
+            assert (got[k] == want).all(), qp
 
 
 def test_residual_4x4_batch_dc_only_result_is_read_only_view():
     # the DC-only closed form returns a broadcast view (no (n, 4, 4)
     # buffer); writing into it must fail loudly rather than scribble
     # over every block at once
-    from streams_spark.functions.h264 import residual_4x4, residual_4x4_batch
+    from streams_spark.functions.h264 import (
+        _zigzag_to_4x4,
+        dequant_4x4,
+        inverse_transform_4x4,
+        residual_4x4_batch,
+    )
 
     levels = np.zeros((3, 16), dtype=np.int64)
     levels[:, 0] = [4, -7, 0]
     out = residual_4x4_batch(levels, 28)
     assert not out.flags.writeable
     for k in range(3):
-        assert (out[k] == residual_4x4(levels[k].tolist(), 28)).all()
+        d = dequant_4x4(_zigzag_to_4x4(levels[k].tolist()), 28, False)
+        assert (out[k] == (inverse_transform_4x4(d) + 32) >> 6).all()
     with pytest.raises(ValueError):
         out[0, 0, 0] = 1
     # an AC level takes the general path, whose result is writable

@@ -33,8 +33,9 @@ from streams_spark.functions.h264 import (
     h264_encode_p_rows,
     h264_encode_rows,
     inter_dc_offset,
-    mc_chroma_8x8,
-    mc_luma_16x16,
+    mc_chroma,
+    mc_luma,
+    pad_ref,
     rbsp_to_ebsp,
     write_residual_block,
 )
@@ -65,9 +66,9 @@ def test_cbp_inter_anchor_rows():
 # ---------------------------------------------------------------------------
 
 
-def _mc_luma_spec(ref, x0, y0, mvx, mvy):
-    """Direct 8.4.2.2.1 / Figure 8-4 / Table 8-12 transcription, one
-    pixel at a time; the center j is derived from VERTICAL-first
+def _mc_luma_spec(ref, x0, y0, mvx, mvy, w=16, h=16):
+    """Direct 8.4.2.2.1 / Figure 8-4 / Table 8-12 transcription of the
+    w x h partition at (x0, y0), one pixel at a time; the center j is derived from VERTICAL-first
     intermediates (the vectorized kernel uses horizontal-first), so
     agreement also checks the separability identity."""
     H, W = ref.shape
@@ -91,9 +92,9 @@ def _mc_luma_spec(ref, x0, y0, mvx, mvy):
     def clip1(v):
         return min(max(v, 0), 255)
 
-    out = np.empty((16, 16), dtype=np.int64)
-    for i in range(16):
-        for j in range(16):
+    out = np.empty((h, w), dtype=np.int64)
+    for i in range(h):
+        for j in range(w):
             y, x = y0 + yI + i, x0 + xI + j
             G, Gx, Gy = P(y, x), P(y, x + 1), P(y + 1, x)
             b = clip1((b1(y, x) + 16) >> 5)
@@ -126,30 +127,41 @@ def _mc_luma_spec(ref, x0, y0, mvx, mvy):
 def test_mc_luma_all_16_subpel_positions_match_spec():
     rng = np.random.default_rng(11)
     ref = rng.integers(0, 256, size=(48, 64)).astype(np.int64)
+    pad = pad_ref(ref)
     for xF in range(4):
         for yF in range(4):
-            for x0, y0, bx, by in [
-                (0, 0, -9, -13),   # clamps past the top-left corner
-                (16, 16, 5, 3),
-                (48, 32, 22, 7),   # clamps past the bottom-right
-                (32, 0, -2, 9),
+            for x0, y0, bx, by, w, h in [
+                (0, 0, -9, -13, 16, 16),   # clamps past the top-left corner
+                (16, 16, 5, 3, 16, 16),
+                (48, 32, 22, 7, 16, 16),   # clamps past the bottom-right
+                (32, 0, -2, 9, 16, 16),
+                # ~300 samples outside the picture, every side
+                (16, 16, -300, 7, 16, 16),
+                (0, 32, 290, -310, 16, 16),
+                (48, 0, 3, 305, 16, 16),
+                # sub-8x8 windows, in and far out of the picture
+                (8, 4, 1, -2, 8, 4),
+                (56, 44, 302, 296, 8, 4),
+                (12, 20, -3, 4, 4, 4),
+                (0, 44, -297, 301, 4, 4),
             ]:
                 mvx, mvy = 4 * bx + xF, 4 * by + yF
-                got = mc_luma_16x16(ref, x0, y0, mvx, mvy)
-                want = _mc_luma_spec(ref, x0, y0, mvx, mvy)
-                assert (got == want).all(), (xF, yF, x0, y0)
+                got = mc_luma(pad, x0, y0, w, h, mvx, mvy)
+                want = _mc_luma_spec(ref, x0, y0, mvx, mvy, w, h)
+                assert (got == want).all(), (xF, yF, x0, y0, w, h)
 
 
 def test_mc_luma_zero_mv_is_identity():
     rng = np.random.default_rng(3)
     ref = rng.integers(0, 256, size=(32, 32)).astype(np.int64)
-    assert (mc_luma_16x16(ref, 16, 16, 0, 0) == ref[16:32, 16:32]).all()
+    got = mc_luma(pad_ref(ref), 16, 16, 16, 16, 0, 0)
+    assert (got == ref[16:32, 16:32]).all()
 
 
 def test_mc_luma_integer_mv_is_clamped_shift():
     rng = np.random.default_rng(4)
     ref = rng.integers(0, 256, size=(32, 48)).astype(np.int64)
-    got = mc_luma_16x16(ref, 16, 0, 4 * -20, 4 * 7)
+    got = mc_luma(pad_ref(ref), 16, 0, 16, 16, 4 * -20, 4 * 7)
     ys = np.clip(np.arange(7, 23), 0, 31)
     xs = np.clip(np.arange(-4, 12), 0, 47)
     assert (got == ref[np.ix_(ys, xs)]).all()
@@ -158,30 +170,47 @@ def test_mc_luma_integer_mv_is_clamped_shift():
 def test_mc_chroma_bilinear_matches_hand_formula():
     rng = np.random.default_rng(5)
     ref = rng.integers(0, 256, size=(16, 16)).astype(np.int64)
-    for mvx, mvy in [(0, 0), (3, 5), (-7, 9), (13, -11), (8, 8)]:
-        got = mc_chroma_8x8(ref, 8, 0, mvx, mvy)
-        xI, xF, yI, yF = mvx >> 3, mvx & 7, mvy >> 3, mvy & 7
-        want = np.empty((8, 8), dtype=np.int64)
-        for i in range(8):
-            for j in range(8):
-                def P(y, x):
-                    return int(ref[min(max(y, 0), 15), min(max(x, 0), 15)])
-                y, x = yI + i, 8 + xI + j
-                want[i, j] = (
-                    (8 - xF) * (8 - yF) * P(y, x)
-                    + xF * (8 - yF) * P(y, x + 1)
-                    + (8 - xF) * yF * P(y + 1, x)
-                    + xF * yF * P(y + 1, x + 1) + 32
-                ) >> 6
-        assert (got == want).all(), (mvx, mvy)
+    ref2 = rng.integers(0, 256, size=(16, 16)).astype(np.int64)
+    pad, pad2 = pad_ref(ref), pad_ref(np.stack((ref, ref2)))
+
+    def P(y, x):
+        return int(ref[min(max(y, 0), 15), min(max(x, 0), 15)])
+
+    for x0, y0, w, h in [(8, 0, 8, 8), (4, 6, 4, 2), (14, 2, 2, 2)]:
+        for mvx, mvy in [
+            (0, 0), (3, 5), (-7, 9), (13, -11), (8, 8),
+            # ~300 samples outside the picture (8 chroma eighths each)
+            (-8 * 300 + 3, 5), (8 * 290 + 6, -8 * 310 + 1),
+            (4, 8 * 305 + 7), (-8 * 297, -8 * 302 + 2),
+        ]:
+            got = mc_chroma(pad, x0, y0, w, h, mvx, mvy)
+            xI, xF, yI, yF = mvx >> 3, mvx & 7, mvy >> 3, mvy & 7
+            want = np.empty((h, w), dtype=np.int64)
+            for i in range(h):
+                for j in range(w):
+                    y, x = y0 + yI + i, x0 + xI + j
+                    want[i, j] = (
+                        (8 - xF) * (8 - yF) * P(y, x)
+                        + xF * (8 - yF) * P(y, x + 1)
+                        + (8 - xF) * yF * P(y + 1, x)
+                        + xF * yF * P(y + 1, x + 1) + 32
+                    ) >> 6
+            assert (got == want).all(), (x0, y0, w, h, mvx, mvy)
+            # the stacked (cb, cr) form computes each component alike
+            both = mc_chroma(pad2, x0, y0, w, h, mvx, mvy)
+            assert (both[0] == got).all(), (x0, y0, w, h, mvx, mvy)
+            assert (
+                both[1] == mc_chroma(pad_ref(ref2), x0, y0, w, h, mvx, mvy)
+            ).all()
 
 
 def test_mc_on_constant_plane_is_exact_for_any_mv():
     ref = np.full((32, 32), 177, dtype=np.int64)
     for mvx in range(-6, 7, 3):
         for mvy in range(-9, 10, 3):
-            assert (mc_luma_16x16(ref, 8, 8, mvx, mvy) == 177).all()
-            assert (mc_chroma_8x8(ref, 8, 8, mvx, mvy) == 177).all()
+            pad = pad_ref(ref)
+            assert (mc_luma(pad, 8, 8, 16, 16, mvx, mvy) == 177).all()
+            assert (mc_chroma(pad, 8, 8, 8, 8, mvx, mvy) == 177).all()
 
 
 # ---------------------------------------------------------------------------
@@ -759,7 +788,6 @@ if _HAVE_HYP:
 from streams_spark.functions.h264 import (  # noqa: E402
     _mvp_partition,
     h264_encode_p_partitions,
-    mc_luma,
 )
 
 
@@ -846,7 +874,7 @@ def test_partition_fractional_mv_against_spec_mc():
         for half in range(2):
             x0 = 16 * mbx + 8 * half
             got = f1.y[:16, x0 : x0 + 8]
-            want = mc_luma(ref, x0, 0, 8, 16, mv[0], mv[1])
+            want = mc_luma(pad_ref(ref), x0, 0, 8, 16, mv[0], mv[1])
             assert (got == np.clip(want, 0, 255)).all(), (mbx, half)
 
 
@@ -866,7 +894,7 @@ def test_p8x8_quadrants_with_distinct_mvs():
             for q in range(4):
                 ox, oy = 16 * mbx + 8 * (q % 2), 16 * mby + 8 * (q // 2)
                 mv = top if q < 2 else bot
-                want = mc_luma(ref, ox, oy, 8, 8, mv[0], mv[1])
+                want = mc_luma(pad_ref(ref), ox, oy, 8, 8, mv[0], mv[1])
                 got = f1.y[oy : oy + 8, ox : ox + 8]
                 assert (got == np.clip(want, 0, 255)).all(), (mby, mbx, q)
 
@@ -1130,7 +1158,7 @@ def test_sub8x8_partitions_decode_to_spec_mc_with_spec_mvp():
         for ox, oy, w, h, mv in regions:
             x0, y0 = 16 * mbx + ox, 16 * mby + oy
             want = np.clip(
-                _mc_luma_spec(ref, x0, y0, mv[0], mv[1])[:h, :w], 0, 255
+                _mc_luma_spec(ref, x0, y0, mv[0], mv[1], w, h), 0, 255
             )
             got = f1.y[y0 : y0 + h, x0 : x0 + w]
             assert (got == want).all(), (mbx, mby, ox, oy, w, h, mv)

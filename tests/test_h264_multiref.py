@@ -27,8 +27,9 @@ from streams_spark.functions.h264 import (
     h264_encode_p_rows,
     h264_encode_rows,
     inter_dc_offset,
-    mc_chroma_8x8,
-    mc_luma_16x16,
+    mc_chroma,
+    mc_luma,
+    pad_ref,
     rbsp_to_ebsp,
     write_residual_block,
 )
@@ -262,8 +263,9 @@ def test_per_mb_mixed_refs_decode_against_numpy_mc():
     refs = [frames[-1], frames[-2]]  # RefPicList0: newest first
     exp = np.zeros((16 * mh, 16 * mw), dtype=np.int64)
     for (mbx, mby), (ref, (mvx, mvy), level) in plan.items():
-        pred = mc_luma_16x16(
-            refs[ref].y.astype(np.int64), 16 * mbx, 16 * mby, mvx, mvy
+        pred = mc_luma(
+            pad_ref(refs[ref].y.astype(np.int64)), 16 * mbx, 16 * mby,
+            16, 16, mvx, mvy,
         )
         exp[16 * mby:16 * mby + 16, 16 * mbx:16 * mbx + 16] = np.clip(
             pred + inter_dc_offset(level), 0, 255
@@ -272,8 +274,9 @@ def test_per_mb_mixed_refs_decode_against_numpy_mc():
     # chroma rides the same per-MB ref selection (zero residual)
     expc = np.zeros((8 * mh, 8 * mw), dtype=np.int64)
     for (mbx, mby), (ref, (mvx, mvy), _lv) in plan.items():
-        expc[8 * mby:8 * mby + 8, 8 * mbx:8 * mbx + 8] = mc_chroma_8x8(
-            refs[ref].cb.astype(np.int64), 8 * mbx, 8 * mby, mvx, mvy
+        expc[8 * mby:8 * mby + 8, 8 * mbx:8 * mbx + 8] = mc_chroma(
+            pad_ref(refs[ref].cb.astype(np.int64)), 8 * mbx, 8 * mby,
+            8, 8, mvx, mvy,
         )
     assert (got.cb == expc).all()
 

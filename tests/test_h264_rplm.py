@@ -259,15 +259,19 @@ def test_gop_with_rplm_and_mmco_matches_plane_replay():
     # frame's expected luma with numpy motion compensation over the
     # tracked reference planes.
     from streams_spark.functions.h264 import (
-        inter_dc_offset, mc_luma_16x16,
+        _MC_PAD, inter_dc_offset, mc_luma, pad_ref,
     )
 
     dec = H264Decoder()
     mw = mh = 2
     dec.decode(h264_encode_rows(mw, mh, 72, [2], max_ref=2))
     # track uncropped planes via the decoder's DPB (crop-free fixture
-    # geometry anyway, but the DPB is the authoritative state)
-    planes = [dec._dpb[0][0][0]]
+    # geometry anyway, but the DPB is the authoritative state); the
+    # DPB holds the padded luma, the picture is its interior
+    def newest_luma():
+        return dec._dpb[0][0][0][_MC_PAD:-_MC_PAD, _MC_PAD:-_MC_PAD]
+
+    planes = [newest_luma()]
 
     def p(frame_num, mv, levels, refs_rows, num_ref, rplm=None, mmco=None):
         return h264_encode_p_rows(
@@ -280,8 +284,9 @@ def test_gop_with_rplm_and_mmco_matches_plane_replay():
         out = np.zeros_like(ref_plane)
         for mby in range(mh):
             for mbx in range(mw):
-                pred = mc_luma_16x16(
-                    ref_plane, 16 * mbx, 16 * mby, mv[0], mv[1]
+                pred = mc_luma(
+                    pad_ref(ref_plane), 16 * mbx, 16 * mby, 16, 16,
+                    mv[0], mv[1],
                 )
                 out[16 * mby:16 * mby + 16, 16 * mbx:16 * mbx + 16] = (
                     np.clip(pred + inter_dc_offset(levels[mby], 28), 0, 255)
@@ -290,11 +295,11 @@ def test_gop_with_rplm_and_mmco_matches_plane_replay():
 
     # F1: single ref
     dec.decode(p(1, (2, -3), [1, -1], [0, 0], 1))
-    planes.append(dec._dpb[0][0][0])
+    planes.append(newest_luma())
     assert np.array_equal(planes[1], expect(planes[0], (2, -3), [1, -1]))
     # F2: two refs, initial order, rows pick 0 then 1
     dec.decode(p(2, (-5, 1), [2, 0], [0, 1], 2))
-    planes.append(dec._dpb[0][0][0])
+    planes.append(newest_luma())
     row_h = 16
     exp2_r0 = expect(planes[1], (-5, 1), [2, 2])[:row_h]
     exp2_r1 = expect(planes[0], (-5, 1), [0, 0])[row_h:]
@@ -302,7 +307,7 @@ def test_gop_with_rplm_and_mmco_matches_plane_replay():
     assert np.array_equal(planes[2][row_h:], exp2_r1)
     # F3: RPLM swap (ref 0 -> F1), MMCO forgets F2
     dec.decode(p(3, (1, 6), [-2, 1], [0, 1], 2, rplm=[(0, 1)], mmco=[0]))
-    planes.append(dec._dpb[0][0][0])
+    planes.append(newest_luma())
     exp3_r0 = expect(planes[1], (1, 6), [-2, -2])[:row_h]  # swapped: F1
     exp3_r1 = expect(planes[2], (1, 6), [1, 1])[row_h:]    # ref 1: F2
     assert np.array_equal(planes[3][:row_h], exp3_r0)
@@ -311,7 +316,7 @@ def test_gop_with_rplm_and_mmco_matches_plane_replay():
     assert [fn for _, fn in dec._dpb] == [3, 1]
     # F4: ref 1 resolves to F1 (not F2)
     dec.decode(p(4, (0, -7), [1, 2], [1, 0], 2))
-    planes.append(dec._dpb[0][0][0])
+    planes.append(newest_luma())
     exp4_r0 = expect(planes[1], (0, -7), [1, 1])[:row_h]   # F1
     exp4_r1 = expect(planes[3], (0, -7), [2, 2])[row_h:]   # F3
     assert np.array_equal(planes[4][:row_h], exp4_r0)
