@@ -26,6 +26,7 @@ from streams_spark import cache
 from streams_spark.functions.text_funcs import gram_rows, tokens
 from streams_spark.operators import vector_hygiene
 from streams_spark.registry import register
+from streams_spark.session import scoped_conf
 from streams_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -933,24 +934,26 @@ def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the real edge count (~50k edges/partition), and the session
     conf is restored on exit.
     """
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(shuffle_conf)
-    try:
-        # pair generation (the corpus-scale shingle join) runs at the
-        # SESSION width — capping it too would squeeze the module's
-        # largest shuffle into 32 tasks on a cluster legitimately
-        # configured wider. Only the graph-sized loop below runs capped:
-        # edges.count() materializes the shared cache at session width.
-        edges = dup_edges(spark, sf_dir)
-        width = max(1, min(32, edges.count() // 50_000 + 1))
-        if width < int(orig):
-            spark.conf.set(shuffle_conf, str(width))
+    # pair generation (the corpus-scale shingle join) runs at the
+    # SESSION width — capping it too would squeeze the module's largest
+    # shuffle into 32 tasks on a cluster legitimately configured wider.
+    # Only the graph-sized loop below runs capped: edges.count()
+    # materializes the shared cache at session width.
+    edges = dup_edges(spark, sf_dir)
+    with _graph_width(spark, edges.count()):
         labels = cc_min_label(edges, max_rounds=20)
-    finally:
-        spark.conf.set(shuffle_conf, orig)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
+
+
+def _graph_width(spark: SparkSession, n_rows: int):
+    """Scope the shuffle width for a graph-sized loop over `n_rows`
+    edges: ~50k edges per partition, at most 32, and never wider than
+    the session (the cap only lowers)."""
+    key = "spark.sql.shuffle.partitions"
+    width = max(1, min(32, n_rows // 50_000 + 1))
+    return scoped_conf(spark, key, min(width, int(spark.conf.get(key))))
 
 
 def cc_min_label(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
@@ -1591,53 +1594,44 @@ def d_transitive_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     restored before execution, hence the eager checkpoint rather than a
     save/restore decorator around a lazy frame.
     """
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(shuffle_conf)
-    try:
-        # pair generation at session width; only the closure runs at the
-        # edge-sized width (see d_dup_clusters for the rationale)
-        cont = d_containment(spark, sf_dir)
-        sizes = shingle_table(spark, sf_dir).select(
-            "doc_id", F.size("hs").alias("n")
+    # pair generation at session width; only the closure runs at the
+    # edge-sized width (see d_dup_clusters for the rationale)
+    cont = d_containment(spark, sf_dir)
+    sizes = shingle_table(spark, sf_dir).select(
+        "doc_id", F.size("hs").alias("n")
+    )
+    a = sizes.select(
+        F.col("doc_id").alias("doc_a"), F.col("n").alias("na")
+    )
+    b = sizes.select(
+        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")
+    )
+    small_first = (F.col("na") < F.col("nb")) | (
+        (F.col("na") == F.col("nb")) & (F.col("doc_a") < F.col("doc_b"))
+    )
+    edges = (
+        cont.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select(
+            F.when(small_first, F.col("doc_a"))
+            .otherwise(F.col("doc_b"))
+            .alias("src"),
+            F.when(small_first, F.col("doc_b"))
+            .otherwise(F.col("doc_a"))
+            .alias("dst"),
         )
-        a = sizes.select(
-            F.col("doc_id").alias("doc_a"), F.col("n").alias("na")
-        )
-        b = sizes.select(
-            F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")
-        )
-        small_first = (F.col("na") < F.col("nb")) | (
-            (F.col("na") == F.col("nb")) & (F.col("doc_a") < F.col("doc_b"))
-        )
-        edges = (
-            cont.join(a, "doc_a")
-            .join(b, "doc_b")
-            .select(
-                F.when(small_first, F.col("doc_a"))
-                .otherwise(F.col("doc_b"))
-                .alias("src"),
-                F.when(small_first, F.col("doc_b"))
-                .otherwise(F.col("doc_a"))
-                .alias("dst"),
-            )
-            .localCheckpoint()
-        )
-        n_edges = edges.count()
-        # closure width sized from the real edge count (~50k edges per
-        # partition), never wider than the session
-        width = max(1, min(32, n_edges // 50_000 + 1))
-        if width < int(orig):
-            spark.conf.set(shuffle_conf, str(width))
+        .localCheckpoint()
+    )
+    n_edges = edges.count()
+    with _graph_width(spark, n_edges):
         if n_edges <= _TC_SEMI_NAIVE_MAX_EDGES:
             return _closure_semi_naive(edges)
         edges.createOrReplaceTempView("cont_edges")
         # Recursive CTE execution bypasses AQE, so every level's join
         # pays the STATIC conf width in task launches regardless of
-        # data size — the computed width above is what makes the dense
-        # path affordable in a bare session.
+        # data size — the scoped width is what makes the dense path
+        # affordable in a bare session.
         return spark.sql(_TRANSITIVE_SQL).localCheckpoint()
-    finally:
-        spark.conf.set(shuffle_conf, orig)
 
 
 # ---------------------------------------------------------------------------
@@ -1710,14 +1704,10 @@ def d_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # after the conf scope below is gone — same reasoning as
     # d_transitive_containment)
     shuffle_conf = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(shuffle_conf)
-    if int(orig) > 32:
-        spark.conf.set(shuffle_conf, "32")
-        try:
-            return out.localCheckpoint()
-        finally:
-            spark.conf.set(shuffle_conf, orig)
-    return out
+    if int(spark.conf.get(shuffle_conf)) <= 32:
+        return out
+    with scoped_conf(spark, shuffle_conf, 32):
+        return out.localCheckpoint()
 
 
 # ---------------------------------------------------------------------------
@@ -1876,16 +1866,10 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffle width is sized from the measured edge count, conf restored
     on exit (the d_dup_clusters bare-session pattern).
     """
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(shuffle_conf)
-    try:
-        # pair generation at session width; only the power iterations
-        # are capped (see d_dup_clusters for the rationale)
-        edges = dup_edges(spark, sf_dir)
-        n_edges = edges.count()
-        width = max(1, min(32, n_edges // 50_000 + 1))
-        if width < int(orig):
-            spark.conf.set(shuffle_conf, str(width))
+    # pair generation at session width; only the power iterations are
+    # capped (see d_dup_clusters for the rationale)
+    edges = dup_edges(spark, sf_dir)
+    with _graph_width(spark, edges.count()):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")).cache()
         n = float(deg.count())
         if n == 0.0:
@@ -1919,7 +1903,7 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ranks = ranks.localCheckpoint()
         # materialize the final join INSIDE the conf scope: the returned
         # frame is lazy, and its rank/deg join would otherwise execute
-        # after the finally restores the session's full shuffle width
+        # after the scope restores the session's full shuffle width
         # (~200 near-empty tasks in a bare session for a graph-sized
         # join — the exact overhead the scoped cap exists to avoid)
         out = ranks.join(deg, ranks.doc_id == deg.src).select(
@@ -1933,8 +1917,6 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # warm for sibling graph ops, but deg is per-call — release it
         deg.unpersist()
         return out
-    finally:
-        spark.conf.set(shuffle_conf, orig)
 
 
 # ---------------------------------------------------------------------------
@@ -2114,28 +2096,20 @@ def d_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged (count + xor/mod-sum order-free checksums); the driver sees only
     those scalars. Same scoped shuffle-width + localCheckpoint
     discipline as the sibling; loud failure at the round cap."""
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(shuffle_conf)
-    try:
-        # pair generation at session width; only the star loop is capped
-        # (see d_dup_clusters for the rationale)
-        pairs = d_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-        # canonical directed form: (u, v) with v < u ("child points down")
-        cur = (
-            pairs.select(
-                F.greatest("doc_a", "doc_b").alias("u"),
-                F.least("doc_a", "doc_b").alias("v"),
-            )
-            .distinct()
-            .localCheckpoint()
+    # pair generation at session width; only the star loop is capped
+    # (see d_dup_clusters for the rationale)
+    pairs = d_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    # canonical directed form: (u, v) with v < u ("child points down")
+    cur = (
+        pairs.select(
+            F.greatest("doc_a", "doc_b").alias("u"),
+            F.least("doc_a", "doc_b").alias("v"),
         )
-        width = max(1, min(32, cur.count() // 50_000 + 1))
-        if width < int(orig):
-            spark.conf.set(shuffle_conf, str(width))
-        out = cc_star(cur, max_rounds=20)
-    finally:
-        spark.conf.set(shuffle_conf, orig)
-    return out
+        .distinct()
+        .localCheckpoint()
+    )
+    with _graph_width(spark, cur.count()):
+        return cc_star(cur, max_rounds=20)
 
 
 def cc_star(cur: DataFrame, max_rounds: int = 20) -> DataFrame:

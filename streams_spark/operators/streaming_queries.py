@@ -1,11 +1,19 @@
 """Streaming operators surfaced as driver-checkable queries.
 
-st_tumbling_stream genuinely executes a Structured Streaming query
-(readStream → AvailableNow → memory sink) and returns the materialized
-result — the streaming twin of w_tumbling_hourly, proving the reference's
-ConsumerContext semantics (SURVEY.md §2.5) on Spark's incremental engine.
-The oracle is plain SQL: batch and streaming must agree on AvailableNow
-(bounded input ⇒ identical results).
+Every streaming row is a Structured Streaming query over bounded input,
+run to completion under Trigger.AvailableNow: the reference's
+ConsumerContext loop "enumerate from offset, drain, stop" (SURVEY.md
+§2.5). Two runners own that primitive, and no row writes it out itself:
+
+- `_drain(df, output_mode)` runs the query into a memory sink and
+  returns the sink's rows;
+- `_fold(stream, step, empty_schema)` folds the micro-batches through
+  foreachBatch, `state = step(state, batch).localCheckpoint()`.
+
+Both hold the state-store shuffle cap (`_STATE_SHUFFLE_CAP`) from
+start() to awaitTermination() only. The oracle is plain SQL: batch and
+streaming must agree on AvailableNow (bounded input ⇒ identical
+results).
 
 st_session_window / st_sliding_window use the event-time window operators
 Structured Streaming shares with batch (F.session_window / F.window with
@@ -14,56 +22,98 @@ slide), verified against explicit SQL formulations.
 
 from __future__ import annotations
 
-import functools
-import uuid
+import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streams_spark.operators import finite_or_null
 from streams_spark.registry import register
+from streams_spark.session import scoped_conf
 from streams_spark.sources.feed_cache import cached_feed as _cached_feed
 from streams_spark.sources.tables import load_table
 
 _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
+_STATE_SHUFFLE_CAP = 8
+_sink_ids = itertools.count()
 
 
-def _capped_state_shuffle(fn=None, *, cap: int = 8):
-    """Run a streaming query under at most `cap` shuffle partitions, then
-    RESTORE the session conf. Stateful streaming ops disable AQE and
-    materialize one state store per shuffle partition, fixed at query
-    start — under a bare session's default 200 partitions that is 200
-    state stores per stateful op for MB-scale micro-batches. The cap
-    must be in force when .start() runs and must NOT leak: the conf also
-    seeds AQE's initialPartitionNum, so a permanent cap would silently
-    halve batch shuffle parallelism for the rest of the session. A real
-    deployment sizes this conf to event-rate x watermark instead.
+def _run_available_now(spark: SparkSession, writer) -> None:
+    """Start `writer` under Trigger.AvailableNow and wait for it to
+    finish, with the shuffle width lowered to at most _STATE_SHUFFLE_CAP
+    for exactly that span. Stateful streaming ops disable AQE and keep
+    one state store per shuffle partition, fixed at query start: under
+    a bare session's default 200 partitions that is 200 stores per
+    stateful op for MB-scale micro-batches. st_tumbling_stream at sf0.1
+    measured 1.40 s at 32 partitions vs 0.81 s at 8 (0.73 s at 4; 8
+    keeps headroom for state growth); a stream-stream join keeps four
+    stores per partition and measured 13.4 s at 32 vs 2.8 s at 8 for
+    the same 9-row sf0.01 result. foreachBatch steps run inside the
+    await, so they see the cap too. The cap must not outlive the query:
+    the conf also seeds AQE's initial partition count for every later
+    batch query. A real deployment sizes it to event rate x watermark
+    horizon instead."""
+    width = min(_STATE_SHUFFLE_CAP, int(spark.conf.get(_SHUFFLE_CONF)))
+    with scoped_conf(spark, _SHUFFLE_CONF, width):
+        writer.trigger(availableNow=True).start().awaitTermination()
 
-    Default cap 8: the per-partition state-store fixed cost dominates at
-    harness scale even for plain aggregations — st_tumbling_stream at
-    sf0.1 measured 1.40 s under 32 partitions vs 0.81 s under 8 (0.73 s
-    at 4; 8 keeps headroom for state growth). Stream-STREAM joins are
-    the extreme case: the symmetric hash join materializes FOUR state
-    stores per partition (keyToNumValues + keyWithIndex per side) versus
-    one for an aggregation — measured 13.4 s at 32 partitions vs 2.8 s
-    at 8 for the same 9-row sf0.01 result."""
 
-    def deco(f):
-        @functools.wraps(f)
-        def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            orig = spark.conf.get(_SHUFFLE_CONF, None)
-            capped = orig is not None and int(orig) > cap
-            if capped:
-                spark.conf.set(_SHUFFLE_CONF, str(cap))
-            try:
-                return f(spark, sf_dir)
-            finally:
-                if capped:
-                    spark.conf.set(_SHUFFLE_CONF, orig)
+def _drain(df: DataFrame, output_mode: str) -> DataFrame:
+    """Run streaming `df` to completion into a memory sink and return
+    the sink's rows. The sink's temp view is dropped on the way out: the
+    returned frame reads the sink directly, so its rows live as long as
+    the frame does, not for the rest of the session."""
+    spark = df.sparkSession
+    sink = f"drain_{next(_sink_ids)}"
+    writer = (
+        df.writeStream.outputMode(output_mode).format("memory").queryName(sink)
+    )
+    try:
+        _run_available_now(spark, writer)
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
 
-        return wrapper
 
-    return deco(fn) if fn is not None else deco
+def _fold(
+    stream: DataFrame, step, empty_schema, output_mode: str = "append"
+) -> DataFrame:
+    """Fold the micro-batches of streaming `stream` through foreachBatch:
+    `state = step(state, batch).localCheckpoint()` per batch, with state
+    None before the first. The checkpoint runs each step NOW, while its
+    batch exists (a lazy plan would re-read the feed after later batches
+    land), and cuts lineage between batches. Returns the final state, or
+    an empty frame of `empty_schema` when the source produced no batch."""
+    spark = stream.sparkSession
+    state = None
+
+    def apply(batch: DataFrame, batch_id: int) -> None:
+        nonlocal state
+        state = step(state, batch).localCheckpoint()
+
+    writer = stream.writeStream.outputMode(output_mode).foreachBatch(apply)
+    _run_available_now(spark, writer)
+    if state is None:
+        return spark.createDataFrame([], empty_schema)
+    return state
+
+
+def _ranged_stream(df: DataFrame, col: str, sf_dir: str, op: str, key: str):
+    """Stage `df` once as three files range-partitioned on `col` (cached
+    per (sf_dir, op, key) and source vintage) and stream it one file per
+    trigger: three micro-batches in `col` order, so fold state genuinely
+    evolves batch over batch."""
+    feed = _cached_feed(
+        sf_dir,
+        op,
+        key,
+        lambda d: df.repartitionByRange(3, col).write.mode("overwrite").parquet(d),
+    )
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(feed)
+    )
 
 
 def _events_schema(spark: SparkSession, sf_dir: str):
@@ -121,7 +171,6 @@ GROUP BY window_start, event_type
 
 
 @register("st_tumbling_stream", oracle=_TUMBLING_ORACLE)
-@_capped_state_shuffle
 def st_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling counts computed by an actual streaming query
     (Trigger.AvailableNow, complete mode, memory sink)."""
@@ -132,17 +181,7 @@ def st_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    sink = f"tumbling_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(sink)
-    return out.select(
+    return _drain(agg, "complete").select(
         F.col("win.start").alias("window_start"),
         "event_type",
         "n_events",
@@ -181,9 +220,7 @@ def st_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     session end = last event + gap, matching the SQL formulation.
 
     Batch twin (no .start(), no state store): the genuinely streaming
-    stateful session op is st_session_stream. No shuffle cap here — the
-    decorator restores the conf before a LAZY frame executes, so on a
-    batch op it would be a misleading no-op."""
+    stateful session op is st_session_stream."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -247,7 +284,6 @@ HAVING window_start + INTERVAL 1 HOUR
 
 
 @register("st_watermark_late", oracle=_WATERMARK_ORACLE)
-@_capped_state_shuffle
 def st_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked event-time aggregation (withWatermark + append mode) —
     the late-data semantics the reference lacks entirely (SURVEY.md §2.5:
@@ -281,16 +317,7 @@ def st_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_value"),
         )
     )
-    sink = f"wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    return _drain(agg, "append").select(
         F.col("win.start").alias("window_start"), "n_events", "avg_value"
     )
 
@@ -307,7 +334,6 @@ JOIN events p
 
 
 @register("st_stream_join", oracle=_STREAM_JOIN_ORACLE)
-@_capped_state_shuffle
 def st_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join (clicks within 10 min before a purchase by
     the same user), both sides watermarked — Structured Streaming buffers
@@ -339,16 +365,7 @@ def st_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
         & (F.col("c_ts") < F.col("p_ts")),
     )
-    sink = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    return _drain(joined, "append").select(
         F.col("c_id").alias("click_id"),
         F.col("p_id").alias("purchase_id"),
         F.col("p_user").alias("user_id"),
@@ -373,7 +390,6 @@ GROUP BY space, segment
 
 
 @register("st_sequence_state", oracle=_SEQ_STATE_ORACLE)
-@_capped_state_shuffle
 def st_sequence_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful streaming: per-segment gapless-sequence
     validation with applyInPandasWithState (the reference's produce-time
@@ -400,17 +416,7 @@ def st_sequence_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda d: log.write.mode("overwrite").parquet(d),
     )
     stream = spark.readStream.schema(log.schema).parquet(stage_dir)
-    validated = streaming_sequence_validation(stream)
-    sink = f"seqstate_{uuid.uuid4().hex[:8]}"
-    q = (
-        validated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain(streaming_sequence_validation(stream), "append")
 
 
 _STREAM_ENRICH_ORACLE = """
@@ -423,7 +429,6 @@ WHERE e.event_type = 'purchase'
 
 
 @register("st_stream_enrich", oracle=_STREAM_ENRICH_ORACLE)
-@_capped_state_shuffle
 def st_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join: the streaming side joins a static
     dimension snapshot per micro-batch — no state store involved (only
@@ -449,16 +454,7 @@ def st_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.round("value", 4).alias("value"),
     )
-    sink = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain(joined, "append")
 
 
 _STREAM_DEDUP_ORACLE = """
@@ -472,7 +468,6 @@ FROM events
 
 
 @register("st_stream_dedup", oracle=_STREAM_DEDUP_ORACLE)
-@_capped_state_shuffle
 def st_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup: dropDuplicates on a content hash — the
     exactly-once ingestion gate of a training-data pipeline. Output is
@@ -502,16 +497,7 @@ def st_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["content_hash"])
         .select("content_hash")
     )
-    sink = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain(stream, "append")
 
 
 _STREAM_TOPK_ORACLE = """
@@ -531,7 +517,6 @@ FROM (
 
 
 @register("st_stream_topk", oracle=_STREAM_TOPK_ORACLE)
-@_capped_state_shuffle
 def st_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 event types per hour by revenue, computed by a streaming
     query. Ranking windows are UNSUPPORTED on streaming DataFrames
@@ -545,9 +530,10 @@ def st_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — NOT the event stream — each trigger.
 
     Scale: state is bounded by (n_windows x n_event_types); the ranked
-    frame the sink sorts is aggregate-sized, so the collect is k-bounded
-    metadata, not data. total_value is rounded BEFORE ranking so the
-    (value DESC, event_type) order is engine-stable.
+    frame the sink sorts is aggregate-sized, and the checkpointed top-k
+    it keeps is k rows per window, not data. total_value is rounded
+    BEFORE ranking so the (value DESC, event_type) order is
+    engine-stable.
     """
     from pyspark.sql.window import Window
 
@@ -558,18 +544,18 @@ def st_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    # pre-seeded so a zero-micro-batch source yields an empty frame
-    holder: dict[str, list] = {"rows": []}
+    # NULL event_type pin (r8 fuzz): the ASC tie-break diverges on the
+    # NULL-type group (Spark nulls-first vs DuckDB nulls-last); pin to
+    # nulls-last, matching the oracle's default.
+    w = Window.partitionBy("window_start").orderBy(
+        F.desc("total_value"), F.col("event_type").asc_nulls_last()
+    )
 
-    def rank_sink(batch_df: DataFrame, batch_id: int) -> None:
-        # NULL event_type pin (r8 fuzz): the ASC tie-break diverges on
-        # the NULL-type group (Spark nulls-first vs DuckDB nulls-last);
-        # pin to nulls-last, matching the oracle's default.
-        w = Window.partitionBy("window_start").orderBy(
-            F.desc("total_value"), F.col("event_type").asc_nulls_last()
-        )
-        ranked = (
-            batch_df.select(
+    def rank(_prev, batch: DataFrame) -> DataFrame:
+        # complete mode: each trigger carries the full aggregate, so the
+        # last batch's ranking IS the answer; rows are k-bounded.
+        return (
+            batch.select(
                 F.col("win.start").alias("window_start"),
                 "event_type",
                 "n_events",
@@ -578,21 +564,13 @@ def st_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("rnk", F.row_number().over(w))
             .where(F.col("rnk") <= 3)
         )
-        # complete mode: each trigger carries the full aggregate, so the
-        # last batch's ranking IS the answer; rows are k-bounded.
-        holder["rows"] = ranked.collect()
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(rank_sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.createDataFrame(
-        holder["rows"],
+    return _fold(
+        agg,
+        rank,
         "window_start timestamp, event_type string, n_events long, "
         "total_value double, rnk int",
+        output_mode="complete",
     )
 
 
@@ -627,7 +605,6 @@ FROM a
 
 
 @register("st_running_stats", oracle=_RUNNING_STATS_ORACLE)
-@_capped_state_shuffle
 def st_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running mean/variance maintained ACROSS micro-batches in
     the state store via applyInPandasWithState — the custom-stateful-op
@@ -693,23 +670,11 @@ def st_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"rstats_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     from pyspark.sql.window import Window
 
-    snap = spark.table(sink)
+    snap = _drain(out, "append")
     # one snapshot row per (user, micro-batch): keep the LAST (= final
-    # running value; with one bounded batch this is the only row).
-    # localCheckpoint so the tiny dedup window executes NOW, while the
-    # decorator's shuffle cap is still in force (the returned frame is
-    # otherwise lazy and would run at the session's batch width).
+    # running value; with one bounded batch this is the only row)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         snap.withColumn("rn", F.row_number().over(w))
@@ -724,7 +689,6 @@ def st_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "var_value"
             ),
         )
-        .localCheckpoint()
     )
 
 
@@ -742,7 +706,6 @@ GROUP BY 1, 2, 3
 
 
 @register("st_flagship_stream", oracle=_FLAGSHIP_STREAM_ORACLE)
-@_capped_state_shuffle
 def st_flagship_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the flagship (`v_flagship_consume_enrich`):
     the same space filter + time clamp + dimension enrich + hourly
@@ -777,16 +740,7 @@ def st_flagship_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    sink = f"flagship_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    return _drain(agg, "complete").select(
         F.col("win.start").alias("window_start"),
         "space",
         "c_mktsegment",
@@ -990,7 +944,6 @@ def _type_profile_legacy(stream: DataFrame, spark: SparkSession) -> DataFrame:
 
 
 @register("st_transform_with_state", oracle=_TWS_ORACLE)
-@_capped_state_shuffle
 def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user event-type profile (distinct types, total events, modal
     type) maintained in keyed map state — on Spark 4's transformWithState
@@ -1012,49 +965,29 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is O(users x |event types|) with |types| small and
     fixed; the one shuffle is the groupBy(user) the stateful operator
-    requires (capped, see decorator). transformWithState mandates the
-    RocksDB state-store provider, which spills cold keys to disk instead
-    of pinning the whole store on-heap — at 100 TB that (plus changelog
-    checkpointing) is what keeps billions of keys feasible; the conf is
-    scoped-and-restored so batch queries in the same session keep the
-    default HDFS-backed provider.
+    requires (capped, see _run_available_now). transformWithState
+    mandates the RocksDB state-store provider, which spills cold keys to
+    disk instead of pinning the whole store on-heap — at 100 TB that
+    (plus changelog checkpointing) is what keeps billions of keys
+    feasible; the conf is scoped to the run so batch queries in the same
+    session keep the default HDFS-backed provider.
     """
-    real = has_transform_with_state()
-    orig_provider = spark.conf.get(_PROVIDER_CONF, None)
-    if real:
-        spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    try:
-        stream = _events_stream(spark, sf_dir)
-        build = _type_profile_tws if real else _type_profile_legacy
-        out = build(stream, spark)
-        sink = f"tws_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from pyspark.sql.window import Window
+    from pyspark.sql.window import Window
 
-        snap = spark.table(sink)
-        # one snapshot per (user, micro-batch); keep the final running
-        # value (sole row under one bounded AvailableNow batch). Execute
-        # NOW so the state-store provider + shuffle cap are in force.
-        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-        return (
-            snap.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-            .localCheckpoint()
-        )
-    finally:
-        if real:
-            if orig_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, orig_provider)
+    stream = _events_stream(spark, sf_dir)
+    if has_transform_with_state():
+        with scoped_conf(spark, _PROVIDER_CONF, _ROCKSDB):
+            snap = _drain(_type_profile_tws(stream, spark), "append")
+    else:
+        snap = _drain(_type_profile_legacy(stream, spark), "append")
+    # one snapshot per (user, micro-batch); keep the final running value
+    # (sole row under one bounded AvailableNow batch)
+    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+    return (
+        snap.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1074,7 +1007,6 @@ FROM ranked WHERE rn = 1 AND event_type <> 'error'
 
 
 @register("st_cdc_apply", oracle=_CDC_APPLY_ORACLE)
-@_capped_state_shuffle
 def st_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production streaming-sink pattern the memory-sink family
     cannot show: a change feed applied to a keyed state table with
@@ -1106,29 +1038,17 @@ def st_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
-    # 3 time-ranged files -> 3 micro-batches under maxFilesPerTrigger=1
-    feed_dir = _cached_feed(
-        sf_dir,
-        "cdc",
-        # version + projected schema in the key: a code change to either
-        # must invalidate the persisted feed (the q_incremental_agg rule)
-        "ts3|v2|event_id,ts,user_id,event_type,value",
-        lambda d: batch_ev.repartitionByRange(3, "ts")
-        .write.mode("overwrite")
-        .parquet(d),
+    # 3 time-ranged files -> 3 micro-batches; version + projected schema
+    # in the key: a code change to either must invalidate the persisted
+    # feed (the q_incremental_agg rule)
+    stream = _ranged_stream(
+        batch_ev, "ts", sf_dir, "cdc", "ts3|v2|event_id,ts,user_id,event_type,value"
     )
-    stream = (
-        spark.readStream.schema(batch_ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-
-    state = {"df": None}
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
 
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
+    def apply_batch(cur, bdf: DataFrame) -> DataFrame:
         # ONE last-writer window over (state ∪ raw batch) — the r11
         # shape pre-reduced the batch with its own window first, but
         # (ts, event_id)-argmax per key is associative, so the fused
@@ -1136,30 +1056,16 @@ def st_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shuffle+stage per micro-batch (and shuffles the same batch
         # bytes once instead of twice). Still commutative over batches
         # and idempotent under foreachBatch redelivery.
-        cur = state["df"]
         base = bdf if cur is None else cur.unionByName(bdf)
-        merged = (
+        return (
             base.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .drop("rn")
         )
-        # materialize NOW: a lazy plan would re-read the feed after
-        # later batches land (and chain lineage across batches)
-        state["df"] = merged.localCheckpoint()
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = state["df"]
-    if final is None:
-        # zero micro-batches (empty events source): contract schema,
-        # not an AttributeError (the st_ingest_dedup guard, generalized)
-        return spark.createDataFrame(
-            [], "user_id bigint, last_value double, updated_at timestamp"
-        )
+    # zero micro-batches (empty events source) fold to an empty state
+    # table, which projects to the contract schema below
+    final = _fold(stream, apply_batch, batch_ev.schema)
     return final.where(F.col("event_type") != "error").select(
         "user_id",
         F.round("value", 2).alias("last_value"),
@@ -1211,7 +1117,6 @@ GROUP BY p.term
 
 
 @register("st_cms_merge", oracle=_cms_stream_oracle())
-@_capped_state_shuffle
 def st_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch maintained OVER A STREAM: each micro-batch (the
     documents corpus staged as 3 files, maxFilesPerTrigger=1) builds its
@@ -1235,19 +1140,7 @@ def st_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    feed_dir = _cached_feed(
-        sf_dir,
-        "doccms",
-        "id3|v2|doc_id,text",
-        lambda d: docs.repartitionByRange(3, "doc_id")
-        .write.mode("overwrite")
-        .parquet(d),
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
+    stream = _ranged_stream(docs, "doc_id", sf_dir, "doccms", "id3|v2|doc_id,text")
 
     def slot(r: int, x):
         return ((F.lit(CMS_A[r]) * x + F.lit(CMS_B[r])) % CMS_P) % CMS_W
@@ -1278,30 +1171,18 @@ def st_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    state = {"df": None}
-
-    def merge_batch(bdf: DataFrame, batch_id: int) -> None:
+    def merge_batch(cur, bdf: DataFrame) -> DataFrame:
         part = to_counters(bdf)
-        cur = state["df"]
-        merged = part if cur is None else (
+        return part if cur is None else (
             cur.unionByName(part)
             .groupBy("r", "slot")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        state["df"] = merged.localCheckpoint()
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sketch = state["df"]
-    if sketch is None:
-        # zero micro-batches: an empty counter table makes every probe
-        # estimate 0 through the coalesce below, matching a CMS built
-        # over an empty corpus
-        sketch = spark.createDataFrame([], "r int, slot int, cnt bigint")
+    # zero micro-batches: an empty counter table makes every probe
+    # estimate 0 through the coalesce below, matching a CMS built over
+    # an empty corpus
+    sketch = _fold(stream, merge_batch, "r int, slot int, cnt bigint")
 
     probes = spark.createDataFrame(
         [(t,) for t in _CMS_PROBES], "term string"
@@ -1328,7 +1209,6 @@ def st_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         pslots.join(F.broadcast(sketch), ["r", "slot"], "left")
         .groupBy("term")
         .agg(F.min(F.coalesce("cnt", F.lit(0))).alias("est_count"))
-        .localCheckpoint()
     )
 
 
@@ -1405,7 +1285,6 @@ WHERE c.event_type = 'click' AND c.ts IS NOT NULL
 
 
 @register("st_stream_outer_join", oracle=_STREAM_OUTER_ORACLE)
-@_capped_state_shuffle
 def st_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every click, paired with
     the purchases it preceded by <10 min, or emitted once with NULLs
@@ -1435,7 +1314,7 @@ def st_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (same as st_stream_join); the outer emission adds no state —
     eviction already scans expiring rows, emission just routes them to
     the output instead of dropping them. Shuffle cap 8: four state
-    stores per partition (see _capped_state_shuffle).
+    stores per partition (see _run_available_now).
     """
     feed = _sentinel_feed(
         spark,
@@ -1469,20 +1348,11 @@ def st_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") < F.col("p_ts")),
         "left_outer",
     )
-    sink = f"ssoj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # sentinels are NEGATIVE user_ids; a NULL-user click is a real row
     # the oracle's LEFT JOIN keeps (never matching, emitted with NULL
     # purchase columns at eviction) and NULL >= 0 is NULL, not false —
     # the st_session_stream rule (null-key fuzz class r7, seed 6)
-    return spark.table(sink).where(
+    return _drain(joined, "append").where(
         F.col("c_user").isNull() | (F.col("c_user") >= 0)
     ).select(
         F.col("c_id").alias("click_id"),
@@ -1498,7 +1368,6 @@ def st_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 @register("st_session_stream", oracle=_SESSION_ORACLE)
-@_capped_state_shuffle
 def st_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 30-min-gap sessions computed by Structured Streaming's
     STATEFUL session operator (st_session_window proves the operator's
@@ -1535,20 +1404,11 @@ def st_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    sink = f"ssw_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # the sentinel filter must not also drop NULL-user sessions: a NULL
     # user_id is a real (single) session group in both engines, and
     # NULL >= 0 is NULL, not false (null-key fuzz class r7)
     return (
-        spark.table(sink)
+        _drain(agg, "append")
         .where(F.col("user_id").isNull() | (F.col("user_id") >= 0))
         .select(
             "user_id",
@@ -1574,7 +1434,6 @@ GROUP BY 1
 
 
 @register("st_ingest_dedup", oracle=_INGEST_DEDUP_ORACLE)
-@_capped_state_shuffle
 def st_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-at-ingest: documents arrive as a stream, and each
     micro-batch is admitted against the signature store of EVERYTHING
@@ -1617,59 +1476,37 @@ def st_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.concat_ws(" ", F.slice(tokens("text"), 1, PREFIX_TOKENS))),
         ).alias("content_md5"),
     )
-    # 3 doc_id-ranged files -> 3 ordered micro-batches
-    feed = _cached_feed(
+    # 3 doc_id-ranged files -> 3 ordered micro-batches; v3: NULL text
+    # keys NULL (null-guarded md5), not md5('')
+    stream = _ranged_stream(
+        docs,
+        "doc_id",
         sf_dir,
         "docingest",
-        # v3: NULL text keys NULL (null-guarded md5), not md5('')
         f"id3|v3|doc_id,prefix_md5_{PREFIX_TOKENS}_nullsafe",
-        lambda d: docs.repartitionByRange(3, "doc_id")
-        .write.mode("overwrite")
-        .parquet(d),
     )
 
-    stream = (
-        spark.readStream.schema("doc_id long, content_md5 string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-    )
-
-    state = {"df": None}
-
-    def admit(bdf: DataFrame, batch_id: int) -> None:
+    def admit(cur, bdf: DataFrame) -> DataFrame:
         batch = bdf.groupBy("content_md5").agg(
             F.min("doc_id").alias("survivor_id"),
             F.count(F.lit(1)).alias("n_seen"),
         )
-        cur = state["df"]
         if cur is None:
-            merged = batch
-        else:
-            # survivor = min(doc_id), counts add — COMMUTATIVE over
-            # batches, so the fixpoint is identical under any batch
-            # arrival order (FileStreamSource mtime ties cannot flip
-            # it). Because ingest is staged in doc_id order, min ==
-            # first-seen, i.e. the at-ingest semantic.
-            merged = (
-                cur.unionByName(batch)
-                .groupBy("content_md5")
-                .agg(
-                    F.min("survivor_id").alias("survivor_id"),
-                    F.sum("n_seen").alias("n_seen"),
-                )
+            return batch
+        # survivor = min(doc_id), counts add — COMMUTATIVE over batches,
+        # so the fixpoint is identical under any batch arrival order
+        # (FileStreamSource mtime ties cannot flip it). Because ingest is
+        # staged in doc_id order, min == first-seen, i.e. the at-ingest
+        # semantic.
+        return (
+            cur.unionByName(batch)
+            .groupBy("content_md5")
+            .agg(
+                F.min("survivor_id").alias("survivor_id"),
+                F.sum("n_seen").alias("n_seen"),
             )
-        state["df"] = merged.localCheckpoint()
-
-    q = (
-        stream.writeStream.foreachBatch(admit)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if state["df"] is None:
-        # zero micro-batches (empty documents source): return an empty
-        # frame with the contract schema rather than None
-        return spark.createDataFrame(
-            [], "content_md5 string, survivor_id bigint, n_seen bigint"
         )
-    return state["df"]
+
+    return _fold(
+        stream, admit, "content_md5 string, survivor_id bigint, n_seen bigint"
+    )

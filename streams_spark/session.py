@@ -9,6 +9,7 @@ with the DuckDB oracle (DuckDB timestamps are UTC-naive).
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -44,3 +45,20 @@ def get_spark(app_name: str = "pystreams", shuffle_partitions: int | None = None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value):
+    """Set session conf `key` to `value` for the body of a `with` block.
+    On exit, also when the body raises, the previous value comes back,
+    or the key is unset again if the session never set it (so a later
+    read still sees Spark's default, not a pinned copy of it)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streams_spark.session import scoped_conf
+
 
 def write_event_log(df: DataFrame, log_dir: str, mode: str = "append") -> None:
     """Canonical layout: partitioned by space, files sorted by
@@ -121,7 +123,8 @@ def compact(
     # into one task and silently merge their output files.
     n_groups = df.select(*cols).distinct().count()
     n_parts = max(1, n_groups * files_per_space)
-    with _dynamic_overwrite(spark):
+    overwrite_mode = "spark.sql.sources.partitionOverwriteMode"
+    with scoped_conf(spark, overwrite_mode, "dynamic"):
         (
             df.withColumn("__bucket", salt)
             .repartitionByRange(n_parts, *cols, "__bucket")
@@ -131,23 +134,6 @@ def compact(
             .partitionBy(*cols)
             .parquet(log_dir)
         )
-
-
-class _dynamic_overwrite:
-    """Scoped spark.sql.sources.partitionOverwriteMode=dynamic."""
-
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-        self.key = "spark.sql.sources.partitionOverwriteMode"
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self.key, "static")
-        self.spark.conf.set(self.key, "dynamic")
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(self.key, self.prev)
-        return False
 
 
 # ---------------------------------------------------------------------------

@@ -98,7 +98,3 @@ class ConsumerContext:
             .trigger(processingTime=processing_time)
             .start()
         )
-
-
-def read_event_log(spark: SparkSession, log_dir: str) -> DataFrame:
-    return spark.read.schema(EVENT_LOG_SCHEMA).parquet(log_dir)

@@ -6,17 +6,10 @@ notifications per space or segment (SubscribeToSpace/SubscribeToSegment —
 with a SegmentStatus after every committed chunk —
 /root/reference/server/pebble/service.go:388-392).
 
-Spark-side, the same surface has two natural carriers:
-
-- **SubscriptionHub** — in-process route-keyed dispatch, fed by the
-  produce sink after each committed batch (the exact analog of the
-  reference's post-commit notify). Deterministic, works in batch and
-  foreachBatch streaming.
-- **SegmentStatusListener** — a StreamingQueryListener adapter that fires
-  the hub from query-progress events, for consumers who only observe the
-  running StreamingQuery (no sink cooperation needed). Progress events
-  carry per-batch row counts, not per-segment detail, so the hub route is
-  the space wildcard.
+Spark-side, the carrier is **SubscriptionHub**: in-process route-keyed
+dispatch, fed by the produce sink after each committed batch (the exact
+analog of the reference's post-commit notify). Deterministic, works in
+batch and foreachBatch streaming.
 """
 
 from __future__ import annotations
@@ -24,11 +17,6 @@ from __future__ import annotations
 from collections import defaultdict
 from collections.abc import Callable
 from dataclasses import dataclass
-
-try:  # StreamingQueryListener import path is stable in pyspark >= 3.4
-    from pyspark.sql.streaming import StreamingQueryListener
-except ImportError:  # pragma: no cover
-    StreamingQueryListener = object  # type: ignore[assignment]
 
 
 @dataclass(frozen=True)
@@ -83,35 +71,3 @@ class SubscriptionHub:
                 )
             )
 
-
-class SegmentStatusListener(StreamingQueryListener):
-    """StreamingQueryListener → hub adapter: notifies on every completed
-    micro-batch with rows (space-wildcard granularity; progress events
-    don't carry per-segment detail)."""
-
-    def __init__(self, hub: SubscriptionHub, space: str) -> None:
-        self.hub = hub
-        self.space = space
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        if p.numInputRows:
-            self.hub.notify(
-                SegmentStatus(
-                    space=self.space,
-                    segment=_WILDCARD,
-                    first_sequence=0,
-                    last_sequence=0,
-                    n_entries=int(p.numInputRows),
-                    batch_id=int(p.batchId),
-                )
-            )
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass

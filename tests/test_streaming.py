@@ -11,8 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from streams_spark.store import write_event_log
-from streams_spark.streaming.consumer import ConsumerContext, read_event_log
+from streams_spark.store import read_event_log, write_event_log
+from streams_spark.streaming.consumer import ConsumerContext
 from streams_spark.streaming.produce import (
     IdempotentLogSink,
     SequenceError,
@@ -587,10 +587,7 @@ def test_events_stream_reads_directory_shaped_table(spark, sf_dir, tmp_path):
     """_events_stream must read events.parquet whether it is a single
     file (testdata layout) or a directory of part files (real table
     layout) — the glob-only form read a directory as silently EMPTY."""
-    import shutil
-    import uuid
-
-    from streams_spark.operators.streaming_queries import _events_stream
+    from streams_spark.operators.streaming_queries import _drain, _events_stream
     from streams_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
@@ -599,16 +596,7 @@ def test_events_stream_reads_directory_shaped_table(spark, sf_dir, tmp_path):
     os.makedirs(root)
     ev.write.parquet(f"{root}/events.parquet")  # directory of parts
 
-    sink = f"dirshape_{uuid.uuid4().hex[:6]}"
-    q = (
-        _events_stream(spark, root)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert spark.table(sink).count() == n
+    assert _drain(_events_stream(spark, root), "append").count() == n
 
 
 def test_compact_preserves_sink_commit_batch_layout(spark, tmp_path):
@@ -768,8 +756,6 @@ def test_compact_files_per_space_controls_file_count(spark, tmp_path):
     # repartition(N, 'space') bug collapsed everything into one)
     assert 1 < stats["s0"] <= 4, stats
     # data intact and per-segment order preserved
-    from streams_spark.store import read_event_log
-
     df = read_event_log(spark, log_dir)
     assert df.count() == 20
     seqs = [
@@ -819,3 +805,103 @@ def test_staged_blob_key_tracks_synthesis_module(
             assert out is sentinel
     st = os.stat(mm.__file__)
     assert f"{st.st_mtime_ns}:{st.st_size}" in captured["key"]
+
+
+def test_drained_row_leaves_no_temp_view(spark, sf_dir):
+    """A memory-sink row drops its sink's temp view before returning, so
+    repeated runs do not pile sinks up in the session catalog; the
+    returned frame still reads the sink's rows."""
+    from streams_spark.operators.streaming_queries import st_tumbling_stream
+
+    before = {t.name for t in spark.catalog.listTables()}
+    out = st_tumbling_stream(spark, sf_dir)
+    assert {t.name for t in spark.catalog.listTables()} == before
+    rows = out.collect()
+    assert rows and len(rows) == out.count()
+
+
+@pytest.mark.parametrize("session_width", ["32", None])
+def test_fold_caps_state_shuffle_only_while_running(spark, tmp_path, session_width):
+    """Inside a run the shuffle width is the state-store cap (8), whether
+    the session set a wider width or left Spark's default of 200; after
+    the run the session reads what it did before, also when a step
+    raises."""
+    from pyspark.errors import StreamingQueryException
+
+    from streams_spark.operators.streaming_queries import _fold
+
+    key = "spark.sql.shuffle.partitions"
+    feed = str(tmp_path / "feed")
+    spark.range(3).write.parquet(feed)
+    seen = []
+
+    def step(state, batch):
+        seen.append(spark.conf.get(key))
+        return batch
+
+    def failing_step(state, batch):
+        raise ValueError("step failed")
+
+    prev = spark.conf.get(key)
+    if session_width is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, session_width)
+    try:
+        stream = spark.readStream.schema("id long").parquet(feed)
+        out = _fold(stream, step, "id long")
+        assert seen == ["8"]
+        assert spark.conf.get(key, None) == session_width
+        assert sorted(r.id for r in out.collect()) == [0, 1, 2]
+        with pytest.raises(StreamingQueryException):
+            _fold(stream, failing_step, "id long")
+        assert spark.conf.get(key, None) == session_width
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_fold_state_outlives_its_feed(spark, tmp_path):
+    """Each fold step is materialized while its micro-batch exists: the
+    folded frame still collects after the feed files are gone."""
+    import shutil
+
+    from streams_spark.operators.streaming_queries import _fold
+
+    feed = str(tmp_path / "feed")
+    spark.range(5).write.parquet(feed)
+    stream = spark.readStream.schema("id long").parquet(feed)
+    out = _fold(stream, lambda state, batch: batch, "id long")
+    shutil.rmtree(feed)
+    assert sorted(r.id for r in out.collect()) == [0, 1, 2, 3, 4]
+
+
+def test_fold_without_batches_returns_empty_schema_frame(spark, tmp_path):
+    """A source that yields no micro-batch folds to an empty frame of
+    the given schema (the empty-corpus contract of the fold rows)."""
+    from streams_spark.operators.streaming_queries import _fold
+
+    feed = str(tmp_path / "empty")
+    os.makedirs(feed)
+    stream = spark.readStream.schema("id long").parquet(feed)
+    out = _fold(stream, lambda state, batch: batch, "id long, n bigint")
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<id:bigint,n:bigint>"
+
+
+def test_scoped_conf_restores_a_set_key_and_unsets_an_unset_one(spark):
+    from streams_spark.session import scoped_conf
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, key, "dynamic"):
+            assert spark.conf.get(key) == "dynamic"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key, None) is None
+    spark.conf.set(key, "static")
+    try:
+        with scoped_conf(spark, key, "dynamic"):
+            assert spark.conf.get(key) == "dynamic"
+        assert spark.conf.get(key, None) == "static"
+    finally:
+        spark.conf.unset(key)
