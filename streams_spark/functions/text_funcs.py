@@ -153,9 +153,7 @@ def identity_docs(docs):
     in every real corpus -> runtime broadcast, map-only; pathological
     all-duplicate fixtures degrade to a shuffle join, never OOM. Net
     shuffle payload at 100 TB: doc_id longs corpus-wide + full text for
-    the duplicated rows only, vs full text corpus-wide before. Callers
-    whose upstream guarantees uniqueness skip even that via their
-    assume_unique flags."""
+    the duplicated rows only, vs full text corpus-wide before."""
     base = docs.select("doc_id", "text").where(F.col("text").isNotNull())
     dup_ids = (
         base.groupBy("doc_id")

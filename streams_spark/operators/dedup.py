@@ -1,20 +1,43 @@
 """Deduplication operators over the documents table (SURVEY.md §7 M4).
 
-Five families, as a 100 TB training-data pipeline needs them:
+Families, as a 100 TB training-data pipeline needs them:
 
-- exact (content-hash groupBy)            → d_exact_*        (oracle)
-- n-gram Jaccard (shingle join, exact)    → d_ngram_jaccard  (oracle)
-- MinHash + LSH (banded, approximate)     → d_minhash_lsh    (no oracle:
-  xxhash64 seeds are engine-specific; verified in tests against the exact
-  Jaccard result instead)
-- SimHash (64-bit, banded hamming)        → d_simhash        (no oracle)
-- embedding-cosine near-dup (exact)       → d_embedding_cosine (oracle);
-  the ANN scale path lives in similarity.py
+- exact (content-hash groupBy)      → d_exact_stats, d_exact_dup_groups
+- exact 3-gram Jaccard >= 0.5       → d_ngram_jaccard (co-occurrence
+  aggregate), d_ngram_jaccard_prefix (df-ordered PPJoin prefix join),
+  d_ngram_jaccard_auto (picks one of the two from the corpus's
+  hot-shingle skew); containment    → d_containment
+- MinHash-LSH (64 perms, 16 bands)  → d_minhash_lsh (xxhash64 seeds) and
+  d_minhash_lsh_md5 (one md5 per shingle + 64 universal-hash perms)
+- SimHash (banded hamming <= 3)     → d_simhash (64-bit xxhash64) and
+  d_simhash_md5 (60-bit md5 prefix)
+- the other rows (embedding cosine, samples, prefix and incremental
+  dedup, dup spans, SemDeDup, dup clusters and their graph statistics,
+  TF-IDF cosine): the sections below
 
-Scale design: everything is shingle-explode → shuffle on shingle/bucket →
-pair-generation → verify. No driver-side loops, no cross join of the full
+The near-duplicate rows are one candidate -> verify pipeline made of
+four shared pieces:
+
+1. `_shingle_pairs`: self-join of shingle-hash postings on the hash,
+   doc_a < doc_b, with an optional size-ratio prune;
+2. `_verify_jaccard`: exact array_intersect Jaccard of candidate pairs,
+   the >= JACCARD_T filter and the 6-dp floor rounding;
+3. `_minhash_lsh`: signatures from a per-shingle hash and a
+   per-permutation SQL template, cut into raw band slices and joined on
+   (band, slice), then verified;
+4. `_simhash`: capped token hashes, SWAR bit votes, 4 bands of `width`
+   bits, first-matching-band join, hamming <= 3.
+
+Each xxhash64 row and its md5 twin differ only in the hash. xxhash64
+seeds are engine-specific, so d_minhash_lsh and d_simhash have no
+oracle (tests check them against d_ngram_jaccard and the identical-
+token-set invariant); the md5 twins use hashes DuckDB reproduces, so
+their oracles value-check the whole approximate pipeline.
+
+Scale design: shingle-explode → shuffle on shingle/bucket → pair
+generation → verify. No driver-side loops, no cross join of the full
 corpus: candidate pairs come from co-bucketing, so cost is
-O(sum bucket²) not O(n²). Hot buckets (stopword shingles) are capped.
+O(sum bucket²), not O(n²).
 """
 
 from __future__ import annotations
@@ -23,7 +46,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from streams_spark import cache
-from streams_spark.functions.text_funcs import gram_rows, tokens
+from streams_spark.functions.text_funcs import (
+    gram_rows,
+    identity_docs,
+    identity_documents,
+    tokens,
+)
 from streams_spark.operators import vector_hygiene
 from streams_spark.registry import register
 from streams_spark.session import scoped_conf
@@ -181,9 +209,7 @@ def shingle_table(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     return cache.memo(spark, ("shingle_table", sf_dir, n), build)
 
 
-def hashed_shingle_sets(
-    docs: DataFrame, n: int = 3, assume_unique: bool = False
-) -> DataFrame:
+def hashed_shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, hs) where hs = sorted xxhash64s of the distinct n-gram
     shingles. Hashing shrinks every downstream shuffle (8-byte longs
     instead of strings); sorting fixes the global order prefix filtering
@@ -203,17 +229,65 @@ def hashed_shingle_sets(
     # dedup family — re-ingested copies, even corrupt ones disagreeing
     # on text, must not change shingle sets (fuzz findings r6; see
     # functions.text_funcs.identity_docs). One extra text-sized
-    # map-side-combined shuffle; a 100 TB deployment whose upstream
-    # already guarantees unique doc_id passes assume_unique=True.
-    if assume_unique:
-        docs = docs.select("doc_id", "text")
-    else:
-        from streams_spark.functions.text_funcs import identity_docs
-
-        docs = identity_docs(docs)
-    hashed = gram_rows(docs, n).select("doc_id", F.xxhash64("gram").alias("h"))
+    # map-side-combined shuffle.
+    hashed = gram_rows(identity_docs(docs), n).select(
+        "doc_id", F.xxhash64("gram").alias("h")
+    )
     return hashed.groupBy("doc_id").agg(
         F.array_sort(F.collect_set("h")).alias("hs")
+    )
+
+
+def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n, h): one row per shingle hash h of a document with n
+    distinct shingles, exploded from the session-cached signature table
+    (shingle_table). The cache matters: a self-join re-plans each side
+    after attribute dedup, and would re-run the shingle build per side."""
+    sh = shingle_table(spark, sf_dir).withColumn("n", F.size("hs"))
+    return sh.select("doc_id", "n", F.explode("hs").alias("h"))
+
+
+def _shingle_pairs(ex: DataFrame, max_ratio: float | None) -> DataFrame:
+    """(doc_a, doc_b, na, nb): one row per shingle hash that two
+    documents of postings `ex` (doc_id, n, h) share, doc_a < doc_b. Every
+    pair with a shingle in common co-occurs under at least one hash. With
+    `max_ratio`, the join also prunes pairs whose shingle counts differ by
+    more than that factor (J >= t forces |A| and |B| within 1/t of each
+    other); None keeps pairs of any sizes."""
+    a, b = ex.alias("a"), ex.alias("b")
+    on = (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+    if max_ratio is not None:
+        on = (
+            on
+            & (F.col("a.n") <= F.col("b.n") * max_ratio)
+            & (F.col("b.n") <= F.col("a.n") * max_ratio)
+        )
+    return a.join(b, on).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a.n").alias("na"),
+        F.col("b.n").alias("nb"),
+    )
+
+
+def _verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the candidate pairs `cand` (doc_a,
+    doc_b) whose exact Jaccard over the shingle-hash sets `sh` (doc_id,
+    hs) is >= JACCARD_T. One array_intersect per candidate, so callers
+    hand it candidate-sized input only."""
+    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
+    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
+    n_common = F.size(F.array_intersect("hs_a", "hs_b"))
+    jac = n_common.cast("double") / (F.size("hs_a") + F.size("hs_b") - n_common)
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .where(jac >= JACCARD_T)
+        .select(
+            "doc_a",
+            "doc_b",
+            (F.floor(jac * 1000000 + F.lit(0.5)) / 1000000).alias("jaccard"),
+        )
     )
 
 
@@ -253,29 +327,9 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant at 50% rate (8.7 s vs 4.0 s) — and real web corpora sit far
     past that point, hence d_ngram_jaccard_prefix is the deployed form.
     """
-    # cached signature table (shared session-wide — see shingle_table):
-    # the self-join re-plans (and would re-execute) each side after
-    # attribute dedup — the cache makes the builder run once. ~8 B x
-    # shingles x docs; at 100 TB this is the materialized signature table.
-    sh = shingle_table(spark, sf_dir).withColumn("n", F.size("hs"))
-    ex = sh.select("doc_id", "n", F.explode("hs").alias("h"))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    max_ratio = 1.0 / JACCARD_T
     pairs = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.n") <= F.col("b.n") * max_ratio)
-            & (F.col("b.n") <= F.col("a.n") * max_ratio),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
+        _shingle_pairs(_postings(spark, sf_dir), 1.0 / JACCARD_T)
+        .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     jac = F.col("n_common").cast("double") / (
@@ -287,6 +341,32 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # where Spark HALF_UP and DuckDB HALF_EVEN diverge
         "doc_a", "doc_b",
         (F.floor(jac * 1000000 + F.lit(0.5)) / 1000000).alias("jaccard")
+    )
+
+
+def _df_prefix(ex: DataFrame) -> DataFrame:
+    """PPJoin prefixes of postings `ex` (doc_id, n, h): the first
+    n - ceil(JACCARD_T * n) + 1 hashes of each document in ascending
+    document-frequency order (ties by hash), same columns."""
+    # df via count-over-window on h instead of a groupBy(h) aggregate
+    # joined back: the join formulation shuffled the posting stream
+    # into the join ANYWAY, plus a second (combined) exchange for the
+    # aggregate — the window computes df on the one unavoidable
+    # h-shuffle (guide §2.4: two operations keyed the same way share
+    # one exchange). Result-identical (count over the h partition ==
+    # df); measured 2.09 s -> 1.53 s at sf0.1 (r11 opt round). At
+    # 100 TB the maintained df table next to the signature feed
+    # replaces this stage for both consumers, as before.
+    wdf = Window.partitionBy("h")
+    w = Window.partitionBy("doc_id").orderBy("df", "h")
+    return (
+        ex.withColumn("df", F.count(F.lit(1)).over(wdf))
+        .withColumn("rk", F.row_number().over(w))
+        .where(
+            F.col("rk")
+            <= F.col("n") - F.ceil(F.col("n") * F.lit(JACCARD_T)) + 1
+        )
+        .select("doc_id", "n", "h")
     )
 
 
@@ -308,10 +388,9 @@ def d_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured between this and the hash-ordered prefix (430k candidate
     pairs -> ~the true pair set on the synthetic corpus).
 
-    Plan: df pass (one posting-stream aggregate) -> per-doc (df, h)
-    rank -> prefix self-join with the size-ratio prune -> exact
-    array_intersect verify on the CANDIDATE PAIRS ONLY. Three shuffles
-    + the verify joins; every frame after the prefix cut is
+    Plan: df window over the postings -> per-doc (df, h) rank -> prefix
+    self-join with the size-ratio prune -> exact array_intersect verify
+    on the CANDIDATE PAIRS ONLY. Every frame after the prefix cut is
     candidate-sized. At 100 TB the df table is |distinct shingles|
     8-byte keys maintained next to the signature feed, and the verify
     never sees a pair the prefixes didn't vouch for.
@@ -324,59 +403,12 @@ def d_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     50%) — the regime every 100 TB web corpus lives in, while the
     co-occurrence aggregate remains the right call for low-redundancy
     benchmark corpora."""
-    sh = shingle_table(spark, sf_dir).withColumn("n", F.size("hs"))
-    ex = sh.select("doc_id", "n", F.explode("hs").alias("h"))
-    # df via count-over-window on h instead of a groupBy(h) aggregate
-    # joined back: the join formulation shuffled the posting stream
-    # into the join ANYWAY, plus a second (combined) exchange for the
-    # aggregate — the window computes df on the one unavoidable
-    # h-shuffle (guide §2.4: two operations keyed the same way share
-    # one exchange). Result-identical (count over the h partition ==
-    # df); measured 2.09 s -> 1.53 s at sf0.1 (r11 opt round). At
-    # 100 TB the maintained df table next to the signature feed
-    # replaces this stage for both consumers, as before.
-    wdf = Window.partitionBy("h")
-    w = Window.partitionBy("doc_id").orderBy("df", "h")
-    pref = (
-        ex.withColumn("df", F.count(F.lit(1)).over(wdf))
-        .withColumn("rk", F.row_number().over(w))
-        .where(
-            F.col("rk")
-            <= F.col("n") - F.ceil(F.col("n") * F.lit(JACCARD_T)) + 1
-        )
-        .select("doc_id", "n", "h")
-    )
-    a, b = pref.alias("a"), pref.alias("b")
-    max_ratio = 1.0 / JACCARD_T
     cand = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.n") <= F.col("b.n") * max_ratio)
-            & (F.col("b.n") <= F.col("a.n") * max_ratio),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+        _shingle_pairs(_df_prefix(_postings(spark, sf_dir)), 1.0 / JACCARD_T)
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    sa = sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"),
-        F.col("n").alias("na"),
-    )
-    sb = sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"),
-        F.col("n").alias("nb"),
-    )
-    ver = cand.join(sa, "doc_a").join(sb, "doc_b")
-    n_common = F.size(F.array_intersect("hs_a", "hs_b"))
-    jac = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
-    return ver.where(jac >= JACCARD_T).select(
-        "doc_a",
-        "doc_b",
-        (F.floor(jac * 1000000 + F.lit(0.5)) / 1000000).alias("jaccard"),
-    )
+    return _verify_jaccard(cand, shingle_table(spark, sf_dir))
 
 
 # Measured regime boundary (tools/ppjoin_crossover.py, SCALING.md
@@ -453,74 +485,57 @@ BANDS = 16
 ROWS_PER_BAND = NUM_PERM // BANDS  # 4 → LSH threshold ≈ (1/16)^(1/4) ≈ 0.5
 
 
-def minhash_signatures(
-    docs: DataFrame, n_perm: int = NUM_PERM, sh: DataFrame | None = None
+def _minhash_lsh(
+    spark: SparkSession, sf_dir: str, ex: DataFrame, perm
 ) -> DataFrame:
-    """64-permutation MinHash signature per doc.
+    """Near-dup pairs by banded MinHash-LSH, verified to exact Jaccard
+    >= JACCARD_T over the cached shingle sets.
 
-    Formulated for scale AND speed: explode shingles to rows, compute the
-    64 seeded xxhash64s as plain codegen'd columns (higher-order-function
-    lambdas are interpreted per element — an order of magnitude slower),
-    then min-aggregate per doc. Partial (map-side) aggregation makes the
-    shuffle carry only 64 longs per doc regardless of document size.
-    """
-    if sh is None:
-        sh = hashed_shingle_sets(docs)
-    ex = sh.select("doc_id", F.explode("hs").alias("shingle"))
+    `ex` holds (doc_id, x): one row per distinct shingle of a document,
+    x a long hash of it. `perm(s)` returns the SQL expression of
+    permutation s over x. A document's signature is the min of each of
+    the NUM_PERM permutations over its shingles, cut into BANDS raw
+    ROWS_PER_BAND-long slices; two documents are candidates when they
+    share a slice in the same band. The verify makes the output exact
+    Jaccard whatever the permutations: they decide only which true pairs
+    get found.
+
+    Scale path: the min-aggregate is partial-aggregated map-side, so the
+    doc_id shuffle carries 64 longs per doc whatever its size; the band
+    self-join emits candidates only for co-banded docs (cost
+    O(sum bucket²)); the verify runs on candidates only."""
     # the projection/aggregate/array trees are built as expression
     # STRINGS, one py4j round trip per stage instead of ~5 per column:
     # constructing the same plan via 128+ Column objects measured
     # ~1.0 s of pure driver-side gateway chatter per fn() build (r12) —
-    # the analyzed plan (and therefore the result) is identical
+    # the analyzed plan (and therefore the result) is identical. The
+    # permutations are plain codegen'd columns over exploded rows: a
+    # higher-order-function lambda would be interpreted per element, an
+    # order of magnitude slower.
     hashed = ex.selectExpr(
-        "doc_id",
-        *[f"xxhash64(shingle, {s}) AS h{s}" for s in range(n_perm)],
+        "doc_id", *[f"{perm(s)} AS h{s}" for s in range(NUM_PERM)]
     )
-    mins = hashed.sparkSession.sql(
+    mins = spark.sql(
         "SELECT doc_id, "
-        + ", ".join(f"min(h{s}) AS m{s}" for s in range(n_perm))
+        + ", ".join(f"min(h{s}) AS m{s}" for s in range(NUM_PERM))
         + " FROM {h} GROUP BY doc_id",
         h=hashed,
     )
-    return mins.selectExpr(
-        "doc_id",
-        "array(" + ", ".join(f"m{s}" for s in range(n_perm)) + ") AS sig",
+    slices = ", ".join(
+        "array("
+        + ", ".join(f"m{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
+        + ")"
+        for b in range(BANDS)
     )
-
-
-@register("d_minhash_lsh", oracle=None)  # xxhash64 seeds are engine-specific
-def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs via banded MinHash-LSH, then exact-Jaccard verified
-    (>= 0.5). Tested against d_ngram_jaccard (recall check) in tests/.
-
-    Scale path: bucket join emits candidates only for co-banded docs —
-    cost O(sum bucket²); the verify join re-computes exact jaccard on the
-    candidate set only.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    # one cached signature-set table (shared session-wide) feeds signature
-    # building, both sides of the band self-join, and the verify stage
-    sh_cached = shingle_table(spark, sf_dir)
-    sigs = minhash_signatures(docs, sh=sh_cached)
-    # band hash: one row per (doc, band) — 16 rows/doc
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(BANDS - 1)),
-                lambda b: F.xxhash64(
-                    F.slice(F.col("sig"), b * ROWS_PER_BAND + 1, ROWS_PER_BAND)
-                ),
-            )
-        ).alias("band", "band_hash"),
+    bands = mins.selectExpr(
+        "doc_id", f"posexplode(array({slices})) AS (band, bkey)"
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
+    a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
@@ -528,106 +543,200 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # verify candidates with exact jaccard over the cached shingle sets
-    sa = sh_cached.select(
-        F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a")
+    return _verify_jaccard(cand, shingle_table(spark, sf_dir))
+
+
+@register("d_minhash_lsh", oracle=None)  # xxhash64 seeds are engine-specific
+def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH over the cached shingle hashes, permutation s =
+    xxhash64(h, s). Tested against d_ngram_jaccard (tests/): every
+    verified pair is a true pair with the same Jaccard, and every pair
+    at Jaccard >= 0.8 is found."""
+    ex = shingle_table(spark, sf_dir).select("doc_id", F.explode("hs").alias("x"))
+    return _minhash_lsh(spark, sf_dir, ex, lambda s: f"xxhash64(x, {s})")
+
+
+# Universal-hash permutation constants for the oracle-paired MinHash
+# twin: perm_s(h) = (A[s]*h + B[s]) mod P over the 32-bit md5-prefix
+# integer h — ONE md5 per shingle instead of 64 (measured 21.7 s ->
+# ~3 s at sf0.1), portable because both engines do exact 64-bit
+# integer arithmetic. P = 2^31-1 (prime); A odd, < 2^30, so A*h < 2^62
+# never overflows a signed 64-bit long.
+MINHASH_P = 2_147_483_647
+MINHASH_A = [((s * 2_654_435_761 + 1_013_904_223) % (1 << 30)) | 1 for s in range(NUM_PERM)]
+MINHASH_B = [(s * 97_531 + 12_345) % MINHASH_P for s in range(NUM_PERM)]
+
+_MINHASH_MD5 = f"""
+WITH d AS (
+  -- one text per doc_id (deterministic min): doc_id is the document
+  -- identity, so duplicate physical rows (re-ingest) — even corrupt
+  -- ones whose copies DISAGREE on text — must not change pair counts
+  -- or cluster shapes (fuzz findings r6)
+  SELECT doc_id, string_split(text, ' ') AS w
+  -- text IS NOT NULL: split(NULL) has NO shingles on the Spark
+  -- side, while DuckDB's greatest(NULL,1)=1 would fabricate a ''
+  -- shingle and pair missing docs with empty docs
+  FROM (SELECT doc_id, min(text) AS text FROM documents
+        WHERE text IS NOT NULL GROUP BY doc_id)
+), sh AS (
+  SELECT doc_id,
+         list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
+             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
+  FROM d
+), ex AS (
+  SELECT doc_id, unnest(shingles) AS g FROM sh
+), hashed AS (
+  SELECT doc_id,
+         CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
+  FROM ex
+), perms AS (
+  SELECT doc_id, s.s,
+         (a.a * h + b.b) % {MINHASH_P} AS pv
+  FROM hashed
+  CROSS JOIN (SELECT unnest(range({NUM_PERM})) AS s) s
+  JOIN (SELECT unnest(range({NUM_PERM})) AS s,
+               unnest({MINHASH_A!r}) AS a) a ON a.s = s.s
+  JOIN (SELECT unnest(range({NUM_PERM})) AS s,
+               unnest({MINHASH_B!r}) AS b) b ON b.s = s.s
+), mins AS (
+  SELECT doc_id, s, min(pv) AS mv FROM perms GROUP BY doc_id, s
+), bands AS (
+  SELECT doc_id, s // {ROWS_PER_BAND} AS band,
+         list(mv ORDER BY s) AS bkey
+  FROM mins GROUP BY doc_id, s // {ROWS_PER_BAND}
+), cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
+)
+SELECT c.doc_a, c.doc_b,
+       floor(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
+             / (len(sa.shingles) + len(sb.shingles)
+                - len(list_intersect(sa.shingles, sb.shingles)))
+             * 1000000 + 0.5) / 1000000
+         AS jaccard
+FROM cand c
+JOIN sh sa ON sa.doc_id = c.doc_a
+JOIN sh sb ON sb.doc_id = c.doc_b
+WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
+      / (len(sa.shingles) + len(sb.shingles)
+         - len(list_intersect(sa.shingles, sb.shingles))) >= {JACCARD_T}
+"""
+
+
+@register("d_minhash_lsh_md5", oracle=_MINHASH_MD5)
+def d_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH with ENGINE-PORTABLE permutations: each shingle g
+    hashes ONCE to the 32-bit integer prefix of md5(g), and the s-th
+    permutation is the universal-hash map (MINHASH_A[s] * h +
+    MINHASH_B[s]) mod 2^31-1 — exact 64-bit integer arithmetic
+    identical in Spark and DuckDB — so unlike d_minhash_lsh (xxhash64
+    seeds, rows-only by necessity) this twin carries a full value-level
+    oracle through the ENTIRE approximate pipeline: signatures,
+    banding, candidate join, exact verify. Same pipeline and b=16, r=4
+    geometry as d_minhash_lsh; candidates differ from it only by hash
+    luck, and the verified output is exact Jaccard >= JACCARD_T either
+    way.
+
+    The one md5 + conv per shingle is the price of having the oracle
+    hash-check an LSH pipeline end to end; deploy the xxhash twin when
+    that check isn't needed. (Measured at sf0.1: 64 md5s per shingle
+    cost 21.7 s; one md5 + 64 integer perms ~3 s.)"""
+    # identity normalization before gram_rows (same contract as
+    # hashed_shingle_sets): duplicate rows break the gram window's
+    # uniqueness precondition and pollute signatures (fuzz findings
+    # r6); session-cached so the split subtree plans and runs once
+    grams = gram_rows(identity_documents(spark, sf_dir), 3).distinct()
+    ex = grams.selectExpr(
+        "doc_id", "CAST(conv(substring(md5(gram), 1, 8), 16, 10) AS BIGINT) AS x"
     )
-    sb = sh_cached.select(
-        F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b")
-    )
-    verified = (
-        cand.repartition("doc_a")
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.size("hs_a") + F.size("hs_b") - F.col("n_common")),
-        )
-    )
-    return verified.where(F.col("jaccard") >= 0.5).select(
-        "doc_a", "doc_b",
-        (F.floor(F.col("jaccard") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "jaccard"
-        )
+    return _minhash_lsh(
+        spark,
+        sf_dir,
+        ex,
+        lambda s: f"({MINHASH_A[s]} * x + {MINHASH_B[s]}) % {MINHASH_P}",
     )
 
 
 # ---------------------------------------------------------------------------
-# SimHash (64-bit weighted token hash, banded hamming candidates)
+# SimHash (weighted token-hash bit votes, banded hamming candidates)
 # ---------------------------------------------------------------------------
 
 
-@register("d_simhash", oracle=None)  # xxhash64 is engine-specific
-def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate near-dup pairs by SimHash hamming distance <= 3.
+def _simhash(
+    spark: SparkSession, sf_dir: str, tok_hash: str, width: int
+) -> DataFrame:
+    """Near-dup pairs (doc_a, doc_b, hamming) by SimHash hamming
+    distance <= 3 over a 4 * `width`-bit signature.
 
-    64-bit simhash from token xxhash64s (majority vote per bit, computed as
-    a JVM-side fold over 64 bit positions); candidates generated by exact
-    match on one of 4 16-bit bands (any pair with hamming <= 3 matches at
-    least one band by pigeonhole), then filtered by true hamming distance.
-    """
+    `tok_hash` is the SQL expression of a token t's long hash, with at
+    least 4 * width significant low bits. Signature bit i is the majority
+    vote of bit i over a document's distinct token hashes; band b holds
+    bits width*b .. width*b + width - 1, LSB-first. A pair with hamming
+    <= 3 matches exactly in at least one of the 4 bands (pigeonhole), so
+    the band join finds it; the true hamming distance then filters."""
     docs = load_table(spark, sf_dir, "documents")
-    # SWAR packed-counter formulation. Naive shape is 64 per-bit ±1 vote
-    # sums (64 agg buffers, ~4 codegen ops per token per bit — measured
-    # 3.4 s at sf0.1, the worst headline query in round 1). Instead sum 16
-    # packed longs: (h >> j) & MASK accumulates the counts of bits
-    # {j, j+16, j+32, j+48} in four 16-bit-spaced slots of one long —
-    # 2 ops per row per column, 17 agg buffers, and the doc_id shuffle
-    # carries 16 longs instead of 64. Slot overflow is impossible while
-    # n_tokens <= 8192 (slice cap below; max packed sum 8192 * (1+2^16+
-    # 2^32+2^48) ~= 2.3e18 < Long.MAX, so ANSI arithmetic never throws).
-    # Capping simhash features at 8k distinct tokens is standard practice
-    # and a no-op on this corpus (max distinct tokens << 8k).
-    # Expressions are SQL strings, not composed Column objects: the
-    # 64-bit unpack below is hundreds of expression nodes, and building it
-    # with pyspark.sql.functions costs one py4j round-trip per node —
-    # measured 0.9 s of pure driver time per call at ANY data scale. One
-    # selectExpr parse is 0.17 s. Identical analyzed plan either way.
-    mask = 1 | (1 << 16) | (1 << 32) | (1 << 48)
+    # The 8k feature cap selects the 8192 SMALLEST token hashes — an
+    # order-independent criterion both engines compute identically.
+    # Capping the first 8192 of the distinct-token LIST is not portable:
+    # Spark's array_distinct keeps first-occurrence order while DuckDB's
+    # list_distinct returns hash order, so the two caps would pick
+    # different token subsets whenever the cap binds. Capping simhash
+    # features at 8k distinct tokens is standard practice and a no-op on
+    # this corpus (max distinct tokens << 8k).
     ex = docs.selectExpr(
         "doc_id",
-        "explode(slice(array_distinct(split(text, ' ')), 1, 8192)) AS tok",
-    ).selectExpr("doc_id", "xxhash64(tok) AS h")
+        "explode(slice(sort_array(transform("
+        f"  array_distinct(split(text, ' ')), t -> {tok_hash}"
+        ")), 1, 8192)) AS h",
+    )
+    # SWAR packed-counter formulation. Naive shape is one ±1 vote sum
+    # per bit (4*width agg buffers, ~4 codegen ops per token per bit —
+    # measured 3.4 s at sf0.1, the worst headline query in round 1).
+    # Instead sum `width` packed longs: slot k of packed column j counts
+    # bit j + width*k — 2 ops per row per column, width+1 agg buffers,
+    # and the doc_id shuffle carries width longs instead of 4*width.
+    # Slot overflow is impossible while n_tokens <= 8192 (the cap above;
+    # a slot holds 2^width - 1 >= 32767, and the top slot's sum 8192 *
+    # 2^(3*width) < 2^62, so ANSI arithmetic never throws).
+    mask = sum(1 << (width * k) for k in range(4))
     votes = ex.groupBy("doc_id").agg(
         F.expr("count(1) AS n"),
         *[
             F.expr(f"sum(shiftrightunsigned(h, {j}) & {mask}L) AS p{j}")
-            for j in range(16)
+            for j in range(width)
         ],
     )
 
-    # unpack: count of bit i (= j + 16*k) is slot k of packed column j;
-    # majority vote sets the bit iff 2*count > n. Signature as 4 x 16-bit
-    # longs (band values double as the signature; hamming distance is then
-    # bit_count(xor) — all codegen, no arrays). The unpack runs on ONE row
-    # per doc post-agg, so its op count is irrelevant next to the
-    # per-token loop above.
+    # unpack: bit k of band b is signature bit width*b + k, counted in
+    # slot b of packed column k. Expressions are SQL strings, not
+    # composed Column objects: the unpack is hundreds of expression
+    # nodes, and building it with pyspark.sql.functions costs one py4j
+    # round-trip per node — measured 0.9 s of pure driver time per call
+    # at ANY data scale; one selectExpr parse is 0.17 s. The unpack runs
+    # on ONE row per doc post-agg, so its op count is irrelevant next to
+    # the per-token loop above.
     def band_val(b: int) -> str:
         # branch-free majority vote: sign bit of (n - 2*cnt) is 1 exactly
         # when 2*cnt > n, extracted with an unsigned shift — a third fewer
         # expression nodes than the CASE WHEN form, which measurably cuts
         # the cold-plan analysis+codegen time (5.7 s -> 4.5 s first call,
-        # identical results; runtime is post-agg and irrelevant).
-        terms = []
-        for k in range(16):
-            i = 16 * b + k
-            cnt = f"(shiftrightunsigned(p{i % 16}, {16 * (i // 16)}) & 65535)"
-            terms.append(
-                f"(shiftrightunsigned(n - 2 * {cnt}, 63) << {15 - k})"
-            )
-        return " + ".join(terms)
+        # identical results).
+        slot = (1 << width) - 1
+        return " + ".join(
+            f"(shiftrightunsigned(n - 2 * (shiftrightunsigned(p{k}, "
+            f"{width * b}) & {slot}), 63) << {k})"
+            for k in range(width)
+        )
 
-    sig = votes.selectExpr(
-        "doc_id", *[f"({band_val(b)}) AS b{b}" for b in range(4)]
-    )
     # materialize the (tiny: 5 longs/doc) signature table before the
     # self-join — otherwise both join sides recompute the whole
     # explode+vote lineage (measured: the join stage cost ~2x the vote
     # stage purely from that duplication). The 100 TB analog is writing
     # signatures next to the corpus and joining the materialized table.
-    sig = sig.localCheckpoint()
+    sig = votes.selectExpr(
+        "doc_id", *[f"({band_val(b)}) AS b{b}" for b in range(4)]
+    ).localCheckpoint()
     bands = sig.select(
         "doc_id",
         "b0",
@@ -636,13 +745,10 @@ def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b3",
         F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("band", "band_hash"),
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
+    a, b = bands.alias("a"), bands.alias("b")
     hamming = sum(
         (
-            F.bit_count(
-                F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}"))
-            )
+            F.bit_count(F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}")))
             for i in range(4)
         ),
         F.lit(0),
@@ -660,7 +766,7 @@ def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("a.band") > i, F.col(f"a.b{i}") != F.col(f"b.b{i}")
             ).otherwise(F.lit(True))
         )
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -676,7 +782,82 @@ def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hamming",
         )
     )
-    return pairs
+
+
+@register("d_simhash", oracle=None)  # xxhash64 is engine-specific
+def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash over 64-bit xxhash64 token hashes: 4 bands of 16 bits."""
+    return _simhash(spark, sf_dir, "xxhash64(t)", 16)
+
+
+SIMHASH60_BITS = 60
+SIMHASH60_BAND = 15  # 4 bands x 15 bits; hamming <= 3 pigeonholes a match
+
+_SIMHASH_MD5 = f"""
+WITH d AS (
+  -- cap = 8192 smallest token hashes (order-independent; see the Spark
+  -- side's note on list_distinct vs array_distinct ordering)
+  SELECT doc_id,
+         list_sort(list_transform(list_distinct(str_split(text, ' ')),
+             t -> CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)
+         ))[1:8192] AS hvs
+  FROM documents
+), h AS (
+  SELECT doc_id, unnest(hvs) AS hv FROM d
+), bits AS (
+  SELECT doc_id, unnest(range({SIMHASH60_BITS})) AS i, hv FROM h
+), votes AS (
+  SELECT doc_id, i,
+         sum((hv >> CAST(i AS INTEGER)) & 1) AS cnt,
+         count(*) AS n
+  FROM bits GROUP BY doc_id, i
+), maj AS (
+  SELECT doc_id, i,
+         CASE WHEN 2 * cnt > n THEN 1::BIGINT ELSE 0::BIGINT END AS bit
+  FROM votes
+), bands AS (
+  SELECT doc_id, i // {SIMHASH60_BAND} AS band,
+         sum(bit << CAST(i % {SIMHASH60_BAND} AS INTEGER)) AS bval
+  FROM maj GROUP BY doc_id, i // {SIMHASH60_BAND}
+), sigs AS (
+  SELECT doc_id, list(bval ORDER BY band) AS bs FROM bands GROUP BY doc_id
+), cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.bval = b.bval AND a.doc_id < b.doc_id
+)
+SELECT c.doc_a, c.doc_b,
+       CAST(bit_count(xor(sa.bs[1], sb.bs[1]))
+          + bit_count(xor(sa.bs[2], sb.bs[2]))
+          + bit_count(xor(sa.bs[3], sb.bs[3]))
+          + bit_count(xor(sa.bs[4], sb.bs[4])) AS INTEGER) AS hamming
+FROM cand c
+JOIN sigs sa ON sa.doc_id = c.doc_a
+JOIN sigs sb ON sb.doc_id = c.doc_b
+WHERE bit_count(xor(sa.bs[1], sb.bs[1]))
+    + bit_count(xor(sa.bs[2], sb.bs[2]))
+    + bit_count(xor(sa.bs[3], sb.bs[3]))
+    + bit_count(xor(sa.bs[4], sb.bs[4])) <= 3
+"""
+
+
+@register("d_simhash_md5", oracle=_SIMHASH_MD5)
+def d_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash with ENGINE-PORTABLE token hashes: 60-bit integers from
+    the md5 hex prefix (15 nibbles — the widest slice that fits a
+    signed BIGINT on both engines), so the whole pipeline — bit votes,
+    4x15-bit banding, candidate join, hamming filter <= 3 — is
+    value-checked by the oracle; the xxhash64 sibling (d_simhash)
+    stays rows-only and keeps the 64-bit geometry. Pigeonhole still
+    holds: hamming <= 3 over 4 bands forces one exact band match. The
+    md5+conv per token costs ~3x xxhash64 map-side — the
+    oracle-visibility premium, same trade as d_minhash_lsh_md5."""
+    return _simhash(
+        spark,
+        sf_dir,
+        "cast(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)",
+        SIMHASH60_BAND,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1260,22 +1441,9 @@ def d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the same two options as the Jaccard op bound the join's
     skew: a df cap (documented divergence) or an exact prefix filter.
     """
-    sh = shingle_table(spark, sf_dir).withColumn("n", F.size("hs"))
-    ex = sh.select("doc_id", "n", F.explode("hs").alias("h"))
-    a = ex.alias("a")
-    b = ex.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
+        _shingle_pairs(_postings(spark, sf_dir), None)
+        .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     cont = F.col("n_common").cast("double") / F.least("na", "nb")
@@ -2173,325 +2341,4 @@ def cc_star(cur: DataFrame, max_rounds: int = 20) -> DataFrame:
         .distinct()
         .select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
         .localCheckpoint()
-    )
-
-
-# ---------------------------------------------------------------------------
-# MinHash-LSH, oracle-paired twin (md5-derived permutations)
-# ---------------------------------------------------------------------------
-
-
-# Universal-hash permutation constants for the oracle-paired MinHash
-# twin: perm_s(h) = (A[s]*h + B[s]) mod P over the 32-bit md5-prefix
-# integer h — ONE md5 per shingle instead of 64 (measured 21.7 s ->
-# ~3 s at sf0.1), portable because both engines do exact 64-bit
-# integer arithmetic. P = 2^31-1 (prime); A odd, < 2^30, so A*h < 2^62
-# never overflows a signed 64-bit long.
-MINHASH_P = 2_147_483_647
-MINHASH_A = [((s * 2_654_435_761 + 1_013_904_223) % (1 << 30)) | 1 for s in range(NUM_PERM)]
-MINHASH_B = [(s * 97_531 + 12_345) % MINHASH_P for s in range(NUM_PERM)]
-
-_MINHASH_MD5 = f"""
-WITH d AS (
-  -- one text per doc_id (deterministic min): doc_id is the document
-  -- identity, so duplicate physical rows (re-ingest) — even corrupt
-  -- ones whose copies DISAGREE on text — must not change pair counts
-  -- or cluster shapes (fuzz findings r6)
-  SELECT doc_id, string_split(text, ' ') AS w
-  -- text IS NOT NULL: split(NULL) has NO shingles on the Spark
-  -- side, while DuckDB's greatest(NULL,1)=1 would fabricate a ''
-  -- shingle and pair missing docs with empty docs
-  FROM (SELECT doc_id, min(text) AS text FROM documents
-        WHERE text IS NOT NULL GROUP BY doc_id)
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
-  FROM d
-), ex AS (
-  SELECT doc_id, unnest(shingles) AS g FROM sh
-), hashed AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-  FROM ex
-), perms AS (
-  SELECT doc_id, s.s,
-         (a.a * h + b.b) % {MINHASH_P} AS pv
-  FROM hashed
-  CROSS JOIN (SELECT unnest(range({NUM_PERM})) AS s) s
-  JOIN (SELECT unnest(range({NUM_PERM})) AS s,
-               unnest({MINHASH_A!r}) AS a) a ON a.s = s.s
-  JOIN (SELECT unnest(range({NUM_PERM})) AS s,
-               unnest({MINHASH_B!r}) AS b) b ON b.s = s.s
-), mins AS (
-  SELECT doc_id, s, min(pv) AS mv FROM perms GROUP BY doc_id, s
-), bands AS (
-  SELECT doc_id, s // {ROWS_PER_BAND} AS band,
-         list(mv ORDER BY s) AS bkey
-  FROM mins GROUP BY doc_id, s // {ROWS_PER_BAND}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-)
-SELECT c.doc_a, c.doc_b,
-       floor(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-             / (len(sa.shingles) + len(sb.shingles)
-                - len(list_intersect(sa.shingles, sb.shingles)))
-             * 1000000 + 0.5) / 1000000
-         AS jaccard
-FROM cand c
-JOIN sh sa ON sa.doc_id = c.doc_a
-JOIN sh sb ON sb.doc_id = c.doc_b
-WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-      / (len(sa.shingles) + len(sb.shingles)
-         - len(list_intersect(sa.shingles, sb.shingles))) >= {JACCARD_T}
-"""
-
-
-@register("d_minhash_lsh_md5", oracle=_MINHASH_MD5)
-def d_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH with ENGINE-PORTABLE permutations: each shingle g
-    hashes ONCE to the 32-bit integer prefix of md5(g), and the s-th
-    permutation is the universal-hash map (MINHASH_A[s] * h +
-    MINHASH_B[s]) mod 2^31-1 — exact 64-bit integer arithmetic
-    identical in Spark and DuckDB (and 5.5x cheaper than the earlier
-    64-md5s-per-shingle scheme) — so unlike d_minhash_lsh (xxhash64
-    seeds, rows-only by necessity) this twin carries a full value-level
-    oracle through the ENTIRE approximate pipeline: signatures,
-    banding, candidate join, exact verify. Band keys join as raw
-    4-long arrays (no band-hash function to match).
-    Same b=16, r=4 geometry; candidates differ from the xxhash twin
-    only by hash luck, verified output is exact-Jaccard >= {JACCARD_T}
-    either way.
-
-    Scale shape is the sibling's: min-aggregate collapses to 64 longs
-    per doc before any shuffle; the band self-join touches co-banded
-    docs only; verify runs on candidates. The md5 permutations cost
-    ~4x xxhash64 in the signature map stage — the price of having the
-    driver hash-check an LSH pipeline end to end; deploy the xxhash
-    twin when that check isn't needed. (Measured at sf0.1: 64 md5s per
-    shingle cost 21.7 s; one md5 + 64 integer perms ~3 s.)"""
-    # identity normalization before gram_rows (same contract as
-    # hashed_shingle_sets): duplicate rows break the gram window's
-    # uniqueness precondition and pollute signatures (fuzz findings
-    # r6); session-cached so the split subtree plans and runs once
-    from streams_spark.functions.text_funcs import identity_documents
-
-    grams = gram_rows(identity_documents(spark, sf_dir), 3).distinct()
-    base = grams.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
-    hashed = base.select(
-        "doc_id",
-        *[
-            ((F.lit(MINHASH_A[s]) * F.col("h") + F.lit(MINHASH_B[s]))
-             % MINHASH_P).alias(f"h{s}")
-            for s in range(NUM_PERM)
-        ],
-    )
-    mins = hashed.groupBy("doc_id").agg(
-        *[F.min(f"h{s}").alias(f"m{s}") for s in range(NUM_PERM)]
-    )
-    sig = mins.select(
-        "doc_id",
-        F.array(*[F.col(f"m{s}") for s in range(NUM_PERM)]).alias("sig"),
-    )
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(BANDS - 1)),
-                lambda b: F.slice(
-                    F.col("sig"), b * ROWS_PER_BAND + 1, ROWS_PER_BAND
-                ),
-            )
-        ).alias("band", "bkey"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sh_cached = shingle_table(spark, sf_dir)
-    sa = sh_cached.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
-    sb = sh_cached.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
-    n_common = F.size(F.array_intersect("hs_a", "hs_b"))
-    jac = n_common.cast("double") / (
-        F.size("hs_a") + F.size("hs_b") - n_common
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(jac >= JACCARD_T)
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.floor(jac * 1000000 + F.lit(0.5)) / 1000000).alias("jaccard"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# SimHash, oracle-paired twin (60-bit md5 hashes, portable bit votes)
-# ---------------------------------------------------------------------------
-
-SIMHASH60_BITS = 60
-SIMHASH60_BAND = 15  # 4 bands x 15 bits; hamming <= 3 pigeonholes a match
-
-_SIMHASH_MD5 = f"""
-WITH d AS (
-  -- cap = 8192 smallest token hashes (order-independent; see the Spark
-  -- side's note on list_distinct vs array_distinct ordering)
-  SELECT doc_id,
-         list_sort(list_transform(list_distinct(str_split(text, ' ')),
-             t -> CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)
-         ))[1:8192] AS hvs
-  FROM documents
-), h AS (
-  SELECT doc_id, unnest(hvs) AS hv FROM d
-), bits AS (
-  SELECT doc_id, unnest(range({SIMHASH60_BITS})) AS i, hv FROM h
-), votes AS (
-  SELECT doc_id, i,
-         sum((hv >> CAST(i AS INTEGER)) & 1) AS cnt,
-         count(*) AS n
-  FROM bits GROUP BY doc_id, i
-), maj AS (
-  SELECT doc_id, i,
-         CASE WHEN 2 * cnt > n THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-  FROM votes
-), bands AS (
-  SELECT doc_id, i // {SIMHASH60_BAND} AS band,
-         sum(bit << CAST(i % {SIMHASH60_BAND} AS INTEGER)) AS bval
-  FROM maj GROUP BY doc_id, i // {SIMHASH60_BAND}
-), sigs AS (
-  SELECT doc_id, list(bval ORDER BY band) AS bs FROM bands GROUP BY doc_id
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bval = b.bval AND a.doc_id < b.doc_id
-)
-SELECT c.doc_a, c.doc_b,
-       CAST(bit_count(xor(sa.bs[1], sb.bs[1]))
-          + bit_count(xor(sa.bs[2], sb.bs[2]))
-          + bit_count(xor(sa.bs[3], sb.bs[3]))
-          + bit_count(xor(sa.bs[4], sb.bs[4])) AS INTEGER) AS hamming
-FROM cand c
-JOIN sigs sa ON sa.doc_id = c.doc_a
-JOIN sigs sb ON sb.doc_id = c.doc_b
-WHERE bit_count(xor(sa.bs[1], sb.bs[1]))
-    + bit_count(xor(sa.bs[2], sb.bs[2]))
-    + bit_count(xor(sa.bs[3], sb.bs[3]))
-    + bit_count(xor(sa.bs[4], sb.bs[4])) <= 3
-"""
-
-
-@register("d_simhash_md5", oracle=_SIMHASH_MD5)
-def d_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash with ENGINE-PORTABLE token hashes: 60-bit integers from
-    the md5 hex prefix (15 nibbles — the widest slice that fits a
-    signed BIGINT on both engines), so the whole pipeline — bit votes,
-    4x15-bit banding, candidate join, hamming filter <= 3 — is
-    value-checked by the oracle; the xxhash64 sibling (d_simhash)
-    stays rows-only and keeps the 64-bit geometry. Pigeonhole still
-    holds: hamming <= 3 over 4 bands forces one exact band match.
-
-    Same SWAR scale shape as the sibling, re-spaced for 60 bits: 15
-    packed longs accumulate 4 bit-counters each in 15-bit slots
-    (overflow-free to 32k tokens; features capped at 8k), so the
-    doc_id shuffle carries 15 longs + a count per doc. The md5+conv
-    per token costs ~3x xxhash64 map-side — the oracle-visibility
-    premium, same trade as d_minhash_lsh_md5."""
-    docs = load_table(spark, sf_dir, "documents")
-    # The 8k feature cap selects the 8192 SMALLEST token hashes — an
-    # order-independent criterion both engines compute identically.
-    # Capping the first 8192 of the distinct-token LIST is not portable:
-    # Spark's array_distinct keeps first-occurrence order while DuckDB's
-    # list_distinct returns hash order, so the two caps would pick
-    # different token subsets whenever the cap binds.
-    ex = docs.selectExpr(
-        "doc_id",
-        "explode(slice(sort_array(transform("
-        "  array_distinct(split(text, ' ')),"
-        "  t -> cast(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)"
-        ")), 1, 8192)) AS h",
-    )
-    # SWAR: slot k of packed column j counts bit j + 15*k (k = 0..3)
-    mask = 1 | (1 << 15) | (1 << 30) | (1 << 45)
-    votes = ex.groupBy("doc_id").agg(
-        F.expr("count(1) AS n"),
-        *[
-            F.expr(f"sum(shiftrightunsigned(h, {j}) & {mask}L) AS p{j}")
-            for j in range(SIMHASH60_BAND)
-        ],
-    )
-
-    def band_val(b: int) -> str:
-        terms = []
-        for k in range(SIMHASH60_BAND):
-            i = SIMHASH60_BAND * b + k
-            cnt = (
-                f"(shiftrightunsigned(p{i % SIMHASH60_BAND}, "
-                f"{15 * (i // SIMHASH60_BAND)}) & 32767)"
-            )
-            # majority bit via the sign of (n - 2*cnt); oracle bit order:
-            # bit (i % 15) of band (i // 15), LSB-first
-            terms.append(f"(shiftrightunsigned(n - 2 * {cnt}, 63) << {k})")
-        return " + ".join(terms)
-
-    sig = votes.selectExpr(
-        "doc_id", *[f"({band_val(b)}) AS b{b}" for b in range(4)]
-    ).localCheckpoint()
-    bands = sig.select(
-        "doc_id",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
-        F.posexplode(F.array("b0", "b1", "b2", "b3")).alias(
-            "band", "band_hash"
-        ),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = sum(
-        (
-            F.bit_count(F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}")))
-            for i in range(4)
-        ),
-        F.lit(0),
-    )
-    first_band = F.lit(True)
-    for i in range(3):
-        first_band = first_band & (
-            F.when(
-                F.col("a.band") > i, F.col(f"a.b{i}") != F.col(f"b.b{i}")
-            ).otherwise(F.lit(True))
-        )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(first_band)
-        .withColumn("hamming", hamming.cast("int"))
-        .where(F.col("hamming") <= 3)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            "hamming",
-        )
     )

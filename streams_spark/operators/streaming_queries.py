@@ -1234,12 +1234,8 @@ def _sentinel_feed(
     st_stream_outer_join for the emission-discipline rationale).
 
     Cached via _cached_feed (deterministic in sf_dir/op/columns +
-    source vintage). Also pins noDataMicroBatches=true (true IS the
-    Spark default; the pin only guards against a harness having turned
-    it off, and it is scoped to the conf read at query start)."""
+    source vintage)."""
     from streams_spark.sources.tables import _normalize_event_ts
-
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
 
     def build(feed: str) -> None:
         schema = _events_schema(spark, sf_dir)

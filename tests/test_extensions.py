@@ -4,6 +4,8 @@ approximate methods measured against their exact baselines.
 
 from __future__ import annotations
 
+import pytest
+
 from streams_spark.registry import load_all
 
 REGISTRY = load_all()
@@ -13,22 +15,22 @@ def _rows(spark, sf_dir, name):
     return REGISTRY[name].fn(spark, sf_dir).collect()
 
 
-def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
-    """MinHash-LSH (b=16, r=4) must find every pair the exact 3-gram
-    Jaccard >= 0.5 query finds at jaccard >= 0.8 (high-sim recall ≈ 1),
-    and report identical jaccard values on common pairs."""
+@pytest.mark.parametrize("row", ["d_minhash_lsh", "d_minhash_lsh_md5"])
+def test_minhash_lsh_verified_pairs_match_exact(spark, sf_dir, row):
+    """Both MinHash-LSH rows (b=16, r=4) verify candidates to exact
+    Jaccard: every pair they report is a d_ngram_jaccard pair with the
+    same value, and every exact pair at jaccard >= 0.8 is found
+    (high-sim recall ≈ 1)."""
     exact = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in _rows(spark, sf_dir, "d_ngram_jaccard")
     }
-    approx = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in _rows(spark, sf_dir, "d_minhash_lsh")
-    }
+    approx = {(r.doc_a, r.doc_b): r.jaccard for r in _rows(spark, sf_dir, row)}
+    assert set(approx) <= set(exact)  # verified pairs are true pairs
+    for k, v in approx.items():
+        assert abs(v - exact[k]) < 1e-9
     high_sim = {k for k, j in exact.items() if j >= 0.8}
     assert high_sim <= set(approx), "LSH missed a high-similarity pair"
-    for k in set(approx) & set(exact):
-        assert abs(approx[k] - exact[k]) < 1e-9
 
 
 def test_ann_lsh_is_subset_of_bruteforce_candidates(spark, sf_dir):
@@ -61,12 +63,6 @@ def test_centroid_search_matches_bruteforce_within_probed_partitions(
         assert len(rows) == 5
         sims = [r.cos_sim for r in rows]
         assert sims == sorted(sims, reverse=True)
-
-
-def test_simhash_pairs_have_close_hamming(spark, sf_dir):
-    rows = _rows(spark, sf_dir, "d_simhash")
-    assert all(0 <= r.hamming <= 3 for r in rows)
-    assert all(r.doc_a < r.doc_b for r in rows)
 
 
 def test_exact_dedup_consistency(spark, sf_dir):
@@ -1731,32 +1727,14 @@ def test_quality_ablation_monotone_and_consistent(spark, sf_dir):
     assert base == keep
 
 
-def test_minhash_md5_twin_matches_xxhash_verified_output(spark, sf_dir):
-    """Both LSH twins verify candidates to exact Jaccard >= 0.5, so on
-    any pair BOTH surface, values must be identical; the md5 twin's
-    high-similarity recall obeys the same bound as the xxhash twin."""
-    md5v = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in _rows(spark, sf_dir, "d_minhash_lsh_md5")
-    }
-    exact = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in _rows(spark, sf_dir, "d_ngram_jaccard")
-    }
-    assert set(md5v) <= set(exact)  # verified pairs are true pairs
-    for k, v in md5v.items():
-        assert abs(v - exact[k]) < 1e-9
-    high = {k for k, j in exact.items() if j >= 0.8}
-    assert high <= set(md5v), "md5-LSH missed a high-similarity pair"
-
-
-def test_simhash_md5_twin_invariants_and_identical_sets(spark, sf_dir):
-    """Structural invariants (the sibling test's contract) plus the one
-    hard recall guarantee SimHash makes: documents with IDENTICAL
+@pytest.mark.parametrize("row", ["d_simhash", "d_simhash_md5"])
+def test_simhash_invariants_and_identical_sets(spark, sf_dir, row):
+    """Structural invariants (doc_a < doc_b, 0 <= hamming <= 3) plus the
+    one hard recall guarantee SimHash makes: documents with IDENTICAL
     distinct-token sets get identical signatures, so every such pair
     MUST appear with hamming 0. (High shingle-Jaccard pairs need not
     pass the tight <= 3 gate — that is the point of the gate.)"""
-    rows = _rows(spark, sf_dir, "d_simhash_md5")
+    rows = _rows(spark, sf_dir, row)
     got = {(r.doc_a, r.doc_b): r.hamming for r in rows}
     for r in rows:
         assert r.doc_a < r.doc_b

@@ -3,7 +3,8 @@
 tools/stress_streaming_state.py proved per-batch latency and state size
 stay flat from 10 to 100 micro-batches for the four stateful shapes;
 these tests run the 20-batch variant in CI so a future lineage leak
-(e.g. dropping the localCheckpoint in a foreachBatch fold) or a
+(e.g. dropping the localCheckpoint in the engine's foreachBatch fold,
+streaming_queries._fold, which the two fold shapes run through) or a
 watermark-eviction regression fails the suite instead of waiting for
 the next SCALING.md sweep.
 
@@ -70,8 +71,10 @@ def test_apply_in_pandas_state_is_o_keys(spark, feed):
 def test_ingest_fold_store_bounded_and_flat(spark, feed):
     r = stress.run_fold(spark, feed, "ingest")
     assert r["batches"] == NB
-    # the localCheckpoint per batch kills lineage growth; without it the
-    # 20th batch re-plans 20 unions and the ratio blows past 2
+    # _fold's localCheckpoint per batch cuts lineage: every step gets a
+    # one-node plan back. Without it the 20th step builds on 19 nested
+    # unions and the final count re-reads every batch.
+    assert r["lineage_max"] == 1, r
     assert r["ratio"] is not None and r["ratio"] < RATIO_MAX, r
     assert r["state_rows_final"] == KEYS, r
 
@@ -79,5 +82,6 @@ def test_ingest_fold_store_bounded_and_flat(spark, feed):
 def test_cdc_fold_store_bounded_and_flat(spark, feed):
     r = stress.run_fold(spark, feed, "cdc")
     assert r["batches"] == NB
+    assert r["lineage_max"] == 1, r
     assert r["ratio"] is not None and r["ratio"] < RATIO_MAX, r
     assert r["state_rows_final"] == KEYS, r

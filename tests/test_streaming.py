@@ -820,6 +820,23 @@ def test_drained_row_leaves_no_temp_view(spark, sf_dir):
     assert rows and len(rows) == out.count()
 
 
+def test_sentinel_row_leaves_no_data_batch_conf_as_found(spark, sf_dir):
+    """A sentinel-feed row writes no session conf: with the no-data
+    micro-batch key unset (Spark's default, true), it is still unset
+    after st_session_stream ran."""
+    from streams_spark.operators.streaming_queries import st_session_stream
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        assert st_session_stream(spark, sf_dir).count() > 0
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+
+
 @pytest.mark.parametrize("session_width", ["32", None])
 def test_fold_caps_state_shuffle_only_while_running(spark, tmp_path, session_width):
     """Inside a run the shuffle width is the state-store cap (8), whether

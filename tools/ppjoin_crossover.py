@@ -62,8 +62,6 @@ def main() -> None:
     ap.add_argument("--rates", default="0.002,0.008,0.032,0.128")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
     from streams_spark import cache
     from streams_spark.operators import dedup
     from streams_spark.session import get_spark
@@ -80,55 +78,13 @@ def main() -> None:
         fn(spark, d).write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
-    def candidates_cooc(d: str) -> int:
-        """Pairs entering the co-occurrence aggregate's jaccard filter."""
-        sh = dedup.shingle_table(spark, d).withColumn("n", F.size("hs"))
-        ex = sh.select("doc_id", "n", F.explode("hs").alias("h"))
-        a, b = ex.alias("a"), ex.alias("b")
-        mr = 1.0 / dedup.JACCARD_T
+    def candidates(ex) -> int:
+        """Distinct pairs the size-pruned shingle join of postings `ex`
+        emits: the co-occurrence aggregate's input on all postings, the
+        verify input on the df-ordered prefixes."""
         return (
-            a.join(
-                b,
-                (F.col("a.h") == F.col("b.h"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & (F.col("a.n") <= F.col("b.n") * mr)
-                & (F.col("b.n") <= F.col("a.n") * mr),
-            )
-            .select("a.doc_id", "b.doc_id")
-            .distinct()
-            .count()
-        )
-
-    def candidates_prefix(d: str) -> int:
-        """Pairs the df-ordered prefixes vouch for (verify-join input)."""
-        from pyspark.sql import Window
-
-        sh = dedup.shingle_table(spark, d).withColumn("n", F.size("hs"))
-        ex = sh.select("doc_id", "n", F.explode("hs").alias("h"))
-        dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-        w = Window.partitionBy("doc_id").orderBy("df", "h")
-        pref = (
-            ex.join(dfreq, "h")
-            .withColumn("rk", F.row_number().over(w))
-            .where(
-                F.col("rk")
-                <= F.col("n")
-                - F.ceil(F.col("n") * F.lit(dedup.JACCARD_T))
-                + 1
-            )
-            .select("doc_id", "n", "h")
-        )
-        a, b = pref.alias("a"), pref.alias("b")
-        mr = 1.0 / dedup.JACCARD_T
-        return (
-            a.join(
-                b,
-                (F.col("a.h") == F.col("b.h"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & (F.col("a.n") <= F.col("b.n") * mr)
-                & (F.col("b.n") <= F.col("a.n") * mr),
-            )
-            .select("a.doc_id", "b.doc_id")
+            dedup._shingle_pairs(ex, 1.0 / dedup.JACCARD_T)
+            .select("doc_a", "doc_b")
             .distinct()
             .count()
         )
@@ -141,8 +97,9 @@ def main() -> None:
     for rate in [float(r) for r in args.rates.split(",")]:
         d = build_fixture(args.sf, rate)
         clear()
-        c_co = candidates_cooc(d)
-        c_pf = candidates_prefix(d)
+        ex = dedup._postings(spark, d)
+        c_co = candidates(ex)
+        c_pf = candidates(dedup._df_prefix(ex))
         t_co = []
         t_pf = []
         for _ in range(2):

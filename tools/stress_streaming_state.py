@@ -12,12 +12,14 @@ batches already folded — for the repo's four stateful shapes:
   run_stats : applyInPandasWithState integer moments
               (st_running_stats shape); state is O(keys) by
               construction — verify rows == keys, batch time flat.
-  ingest    : foreachBatch first-seen-wins store (st_ingest_dedup
-              shape); store rows bounded by |distinct keys|; the
-              localCheckpoint per batch must keep lineage (and thus
-              per-batch time) flat instead of growing linearly.
-  cdc       : foreachBatch last-writer-wins merge (st_cdc_apply
-              shape); same flatness contract.
+  ingest    : first-seen-wins store (st_ingest_dedup shape), folded
+              by the engine's foreachBatch runner
+              (streaming_queries._fold); store rows bounded by
+              |distinct keys|; the runner's localCheckpoint per batch
+              must keep lineage (and thus per-batch time) flat instead
+              of growing linearly.
+  cdc       : last-writer-wins merge (st_cdc_apply shape), same runner;
+              same flatness contract.
 
 Method: generate NB single-file micro-batches (ROWS_PER_BATCH rows,
 KEYS distinct keys, event time advancing one step per batch), drive
@@ -183,10 +185,17 @@ def run_run_stats(spark, feed: str, keys: int) -> dict:
 
 
 def run_fold(spark, feed: str, mode: str) -> dict:
-    """foreachBatch store folds: 'ingest' (first-seen) or 'cdc'
-    (last-writer-wins)."""
+    """Store folds through the engine's foreachBatch runner
+    (operators.streaming_queries._fold): 'ingest' (first-seen) or 'cdc'
+    (last-writer-wins). Each batch's time runs from one step call to the
+    next (the last to the fold's return), so it covers the runner's
+    per-batch materialization of the step's result; `lineage_max` is the
+    largest logical plan, in nodes, of a state the runner hands back to
+    a step, which stays at one node while the runner cuts lineage."""
     from pyspark.sql import DataFrame, functions as F
     from pyspark.sql.window import Window
+
+    from streams_spark.operators.streaming_queries import _fold
 
     stream = (
         spark.readStream.schema(
@@ -195,58 +204,61 @@ def run_fold(spark, feed: str, mode: str) -> dict:
         .option("maxFilesPerTrigger", "1")
         .parquet(feed)
     )
-    state = {"df": None}
-    times: list[float] = []
+    calls: list[float] = []
+    lineage: list[int] = []
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
 
-    def fold(bdf: DataFrame, batch_id: int) -> None:
-        t0 = time.time()
+    def step(cur: DataFrame | None, bdf: DataFrame) -> DataFrame:
+        calls.append(time.time())
+        if cur is not None:
+            plan = cur._jdf.queryExecution().logical().treeString()
+            lineage.append(len(plan.splitlines()))
         if mode == "ingest":
             batch = bdf.groupBy("user_id").agg(
                 F.min("event_id").alias("survivor"),
                 F.count(F.lit(1)).alias("n_seen"),
             )
-            cur = state["df"]
             if cur is None:
-                merged = batch
-            else:
-                merged = (
-                    cur.unionByName(batch)
-                    .groupBy("user_id")
-                    .agg(
-                        F.min("survivor").alias("survivor"),
-                        F.sum("n_seen").alias("n_seen"),
-                    )
+                return batch
+            return (
+                cur.unionByName(batch)
+                .groupBy("user_id")
+                .agg(
+                    F.min("survivor").alias("survivor"),
+                    F.sum("n_seen").alias("n_seen"),
                 )
-        else:  # cdc last-writer-wins
-            last = (
-                bdf.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .drop("rn")
             )
-            cur = state["df"]
-            merged = last if cur is None else (
-                cur.unionByName(last)
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .drop("rn")
-            )
-        state["df"] = merged.localCheckpoint()
-        times.append(time.time() - t0)
+        # cdc last-writer-wins
+        last = (
+            bdf.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .drop("rn")
+        )
+        if cur is None:
+            return last
+        return (
+            cur.unionByName(last)
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .drop("rn")
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
+    empty = (
+        "user_id long, survivor long, n_seen long"
+        if mode == "ingest"
+        else stream.schema
     )
-    q.awaitTermination()
+    state = _fold(stream, step, empty)
+    calls.append(time.time())
+    times = [b - a for a, b in zip(calls, calls[1:])]
     first, last = _halves(times)
     return {
         "batches": len(times),
         "first_half_sec": round(first, 3),
         "last_half_sec": round(last, 3),
         "ratio": round(last / first, 2) if first else None,
-        "state_rows_final": state["df"].count() if state["df"] is not None else 0,
+        "lineage_max": max(lineage, default=0),
+        "state_rows_final": state.count(),
     }
 
 
