@@ -515,12 +515,15 @@ def _minhash_lsh(
     hashed = ex.selectExpr(
         "doc_id", *[f"{perm(s)} AS h{s}" for s in range(NUM_PERM)]
     )
+    # materialized once, as `_simhash` does its signatures: otherwise
+    # both sides of the band self-join re-run the explode + NUM_PERM
+    # hashes + min aggregate
     mins = spark.sql(
         "SELECT doc_id, "
         + ", ".join(f"min(h{s}) AS m{s}" for s in range(NUM_PERM))
         + " FROM {h} GROUP BY doc_id",
         h=hashed,
-    )
+    ).localCheckpoint()
     slices = ", ".join(
         "array("
         + ", ".join(f"m{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))

@@ -1,19 +1,36 @@
-"""Embedding similarity search over the embeddings table (SURVEY.md §7 M4).
+"""Vector search and embedding analytics over the embeddings table
+(SURVEY.md §7 M4).
 
-- s_cosine_topk      brute-force cosine top-k (oracle) — the correctness
-                     baseline every ANN variant is measured against
-- s_nearest_neighbor 1-NN per probe vector (oracle)
-- s_ann_lsh_topk     random-hyperplane LSH bucketed top-k (oracle: the
-                     md5-derived plane coefficients are Python-computed
-                     literals shared by both engines; recall vs exact is
-                     additionally measured in tests)
-- s_centroid_search  IVF-style: per-label centroids → probe nearest
-                     centroids → search those partitions only (oracle,
-                     since label partitions are exact here)
+Row families:
+
+- exact search        → s_cosine_topk (top-k), s_nearest_neighbor (1-NN),
+  s_range_search (cosine radius)
+- candidate stage + exact re-rank → s_ann_lsh_topk (hyperplane bucket),
+  s_multiprobe_lsh (bucket + 1-bit flips), s_centroid_search (2 nearest
+  label centroids), s_binary_search (Hamming shortlist of sign bits),
+  s_mrl_search (shortlist on the leading MRL_DIMS dims)
+- quantized indexes   → s_kmeans_train, s_vector_quantize, s_pq_train,
+  s_pq_search and s_ivf_pq_search (PQ asymmetric distance)
+- neighbour consumers → s_knn_classify (majority vote), s_maxsim (late
+  interaction), s_recall_eval (LSH recall vs exact), s_hybrid_search
+  (BM25 and cosine lists fused by reciprocal rank)
+- diagnostics         → s_embedding_stats, s_centroid_shift, s_diversity
+
+The search rows are one probe → score → top-k pipeline made of four
+shared pieces; they differ only in their candidate stage:
+
+1. `_corpus`: (vec_id, label, v, nrm) over the vectors that pass
+   `vector_hygiene`;
+2. `_probes` and `_pairs`: the (query_id, qv, qnrm, ...) probe side,
+   broadcast onto the candidates with the probe itself excluded;
+3. `_cos`: the 6-dp cosine over precomputed norms;
+4. `_top_k`: the per-query row_number and the <= k cut; `_rerank` is
+   `_cos` + `_top_k` + the (query_id, neighbor_id, ..., cos_sim, rnk)
+   output, the exact re-rank every candidate stage ends in.
 
 All vector math is JVM-side (zip_with/aggregate fold — see
-functions/vector.py); no Python UDF in the hot path. The probe set is
-broadcast; the corpus is never collected.
+functions/vector.py); no Python UDF in the hot path except k-means
+assignment. The probe set is broadcast; the corpus is never collected.
 
 Scale design: brute-force is O(probes × corpus) with a broadcast probe
 side — embarrassingly parallel over corpus partitions; LSH cuts the
@@ -30,13 +47,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from streams_spark import cache
-from streams_spark.functions.vector import as_double_array, cosine, dot, norm
+from streams_spark.functions.vector import as_double_array, dot, norm
 from streams_spark.operators import vector_hygiene
 from streams_spark.registry import register
 from streams_spark.sources.tables import load_table
 
 N_PROBES = 10  # probe set: vec_id < 10
 TOP_K = 5
+_PROBE_SET = f"vec_id < {N_PROBES}"
 
 # DuckDB twin of functions/vector.py: explicit zip/fold so the float
 # summation order matches Spark's sequential aggregate exactly.
@@ -62,21 +80,70 @@ WITH e AS (
 """
 
 
-def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared vector corpus. Finite-coordinate contract (r9 non-finite
-    fuzz class): vectors with NaN/Inf coordinates never enter — NaN
-    similarities make argmax/top-k engine-dependent and one Inf poisons
-    centroids and norms; the oracle's _DUCK_VEC e CTE mirrors the
-    filter. NULL embeddings pass through here (downstream ops pin
-    their own NULL contracts, nullmeas fixture class)."""
-    emb = load_table(spark, sf_dir, "embeddings")
+def _corpus(spark: SparkSession, sf_dir: str, *extra) -> DataFrame:
+    """Shared vector corpus (vec_id, label, v, nrm, *extra). Vectors
+    with NaN, Inf or NULL coordinates never enter (`vector_hygiene`; the
+    oracle's _DUCK_VEC e CTE mirrors the filter). NULL embeddings pass
+    through here (downstream ops pin their own NULL contracts, nullmeas
+    fixture class). Build `extra` over as_double_array("embedding"),
+    not over `v`: Spark does not fold a projection over `v` into this
+    one, so the plan would carry one more Project."""
+    emb = load_table(spark, sf_dir, "embeddings").where(vector_hygiene())
     v = as_double_array("embedding")
-    inf = float("inf")
-    finite = F.col("embedding").isNull() | F.forall(
-        v, lambda x: x.isNotNull() & ~F.isnan(x) & (F.abs(x) != inf)
+    return emb.select(
+        "vec_id", "label", v.alias("v"), norm(v).alias("nrm"), *extra
     )
-    return emb.where(finite).select(
-        "vec_id", "label", v.alias("v"), norm(v).alias("nrm")
+
+
+def _probes(corpus: DataFrame, where, *extra) -> DataFrame:
+    """The probe side: (query_id, qv, qnrm, *extra) of the corpus rows
+    matching `where`. Scale-invariant (the probe set is fixed), so every
+    caller broadcasts it."""
+    return corpus.where(where).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+        *extra,
+    )
+
+
+def _pairs(cands: DataFrame, probes: DataFrame, on=True) -> DataFrame:
+    """Candidate (corpus vector, probe) pairs: the broadcast probe side
+    joined on `on`, the probe itself excluded."""
+    return cands.join(
+        F.broadcast(probes), on & (F.col("vec_id") != F.col("query_id"))
+    )
+
+
+def _cos(qv="qv", v="v", qnrm="qnrm", nrm="nrm", dp: int | None = 6):
+    """Cosine over precomputed norms, rounded to `dp` places BEFORE any
+    ranking so the order is engine-stable (ties beyond 6dp break on the
+    id); dp=None keeps the exact value, which the MRL shortlist ranks on
+    as its oracle does. try_divide: a zero norm gives NULL, as DuckDB's
+    double division does, where ANSI Spark would raise."""
+    c = F.try_divide(dot(F.col(qv), F.col(v)), F.col(qnrm) * F.col(nrm))
+    return c if dp is None else F.round(c, dp)
+
+
+def _top_k(df: DataFrame, k: int, *order, rank: str = "rnk") -> DataFrame:
+    """Per-query top-k: row_number over each query_id's rows by
+    `order` in column `rank`, cut at <= k."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _rerank(pairs: DataFrame, k: int, *cols) -> DataFrame:
+    """Exact re-rank of candidate pairs: 6-dp cosine, top-k per query
+    with ties to the lowest vec_id; (query_id, neighbor_id, *cols,
+    cos_sim, rnk)."""
+    ranked = _top_k(
+        pairs.withColumn("cos_sim", _cos()),
+        k,
+        F.desc("cos_sim"),
+        F.asc_nulls_last("vec_id"),
+    )
+    return ranked.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), *cols, "cos_sim", "rnk"
     )
 
 
@@ -101,34 +168,13 @@ def _label_centroids(corpus):
 
 def _route_probes(corpus, cent, nprobe: int = 2):
     """(query_id, qv, qnrm, label): each probe routed to its nprobe
-    nearest centroids. Cosine is rounded to 6dp BEFORE ranking so the
-    centroid order is engine-stable (same convention as the final top-k
-    stages and t_tfidf_keywords); ties beyond 6dp break on c_label."""
-    probes = corpus.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
+    nearest centroids by 6-dp cosine, ties broken on c_label."""
+    scored = _probes(corpus, _PROBE_SET).join(F.broadcast(cent)).withColumn(
+        "c_sim", _cos(v="cv", nrm="c_nrm")
     )
-    return (
-        probes.join(F.broadcast(cent))
-        .withColumn(
-            "c_sim",
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qnrm") * F.col("c_nrm")),
-                6,
-            ),
-        )
-        .withColumn(
-            "c_rnk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("c_sim"), F.col("c_label")
-                )
-            ),
-        )
-        .where(F.col("c_rnk") <= nprobe)
-        .select("query_id", "qv", "qnrm", F.col("c_label").alias("label"))
-    )
+    return _top_k(
+        scored, nprobe, F.desc("c_sim"), F.col("c_label"), rank="c_rnk"
+    ).select("query_id", "qv", "qnrm", F.col("c_label").alias("label"))
 
 
 _COSINE_TOPK = (
@@ -160,33 +206,7 @@ WHERE rnk <= {TOP_K}
 def s_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for probe vectors vec_id < 10."""
     corpus = _corpus(spark, sf_dir)
-    probes = corpus.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc_nulls_last("vec_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cos_sim",
-            "rnk",
-        )
-    )
+    return _rerank(_pairs(corpus, _probes(corpus, _PROBE_SET)), TOP_K)
 
 
 _NN = (
@@ -213,30 +233,8 @@ def s_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 1-NN for the first 100 vectors (near-duplicate detection shape:
     embedding-cosine dedup keeps a row iff its 1-NN similarity < threshold)."""
     corpus = _corpus(spark, sf_dir)
-    probes = corpus.where(F.col("vec_id") < 100).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc_nulls_last("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") == 1)
-        .select(
-            F.col("query_id").alias("vec_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            "cos_sim",
-        )
-    )
+    nn = _rerank(_pairs(corpus, _probes(corpus, F.col("vec_id") < 100)), 1)
+    return nn.select(F.col("query_id").alias("vec_id"), "neighbor_id", "cos_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -340,35 +338,9 @@ def s_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the corpus.
     """
     corpus = _corpus(spark, sf_dir).withColumn("bucket", _bucket("v"))
-    probes = corpus.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn(
-            "cos_sim",
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc_nulls_last("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cos_sim",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
+    probes = _probes(corpus, _PROBE_SET, F.col("bucket").alias("qbucket"))
+    return _rerank(
+        _pairs(corpus, probes, F.col("bucket") == F.col("qbucket")), TOP_K
     )
 
 
@@ -465,21 +437,12 @@ def s_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filters them; np.vstack would crash on a None row, and the init
     # collect would seed a None centroid — nullmeas-fixture fuzz class).
     # NULL vec_id likewise (r8): the oracle tracks assignment per
-    # vec_id, so id-less vectors train on neither side.
-    # Non-finite coordinates likewise (r9): one NaN distance makes the
-    # argmin engine-dependent, one Inf poisons a centroid forever.
+    # vec_id, so id-less vectors train on neither side. Non-finite
+    # coordinates never reach here (`_corpus`; r9): one NaN distance
+    # makes the argmin engine-dependent, one Inf poisons a centroid.
     corpus = (
         _corpus(spark, sf_dir)
-        .where(
-            F.col("v").isNotNull()
-            & F.col("vec_id").isNotNull()
-            & F.forall(
-                "v",
-                lambda x: x.isNotNull()
-                & ~F.isnan(x)
-                & (F.abs(x) != float("inf")),
-            )
-        )
+        .where(F.col("v").isNotNull() & F.col("vec_id").isNotNull())
         .select("vec_id", "v")
         .cache()
     )
@@ -585,31 +548,12 @@ def s_centroid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning), the classic IVF trade: nprobe/nlist controls recall.
     """
     corpus = _corpus(spark, sf_dir)
-    cent = _label_centroids(corpus)
-    routed = _route_probes(corpus, cent, nprobe=2)
-    scored = (
-        corpus.join(
-            routed,
-            (corpus.label == routed.label) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn(
-            "cos_sim",
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-            ),
-        )
+    routed = _route_probes(corpus, _label_centroids(corpus))
+    pairs = corpus.join(
+        routed,
+        (corpus.label == routed.label) & (F.col("vec_id") != F.col("query_id")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc_nulls_last("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cos_sim",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return _rerank(pairs, TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -1035,12 +979,7 @@ def s_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.round(F.sum("d"), 6).alias("adc6"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc6", "neighbor_id")
-    return (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc6", "rnk")
-    )
+    return _top_k(adc, TOP_K, "adc6", "neighbor_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1079,19 +1018,9 @@ def s_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe set itself grows.
     """
     corpus = _corpus(spark, sf_dir)
-    probes = corpus.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
     return (
-        corpus.join(F.broadcast(probes), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-            ),
-        )
+        _pairs(corpus, _probes(corpus, _PROBE_SET))
+        .withColumn("cos_sim", _cos())
         .where(F.col("cos_sim") >= RANGE_T)
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_sim")
     )
@@ -1139,23 +1068,15 @@ def s_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval deploys.
     """
     corpus = _corpus(spark, sf_dir)
-    q = corpus.where(F.col("label") < N_QUERY_LABELS).select(
+    q = _probes(
+        corpus,
+        F.col("label") < N_QUERY_LABELS,
         F.col("label").alias("query_label"),
-        F.col("vec_id").alias("qvec"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
     )
     pairs = (
         corpus.join(F.broadcast(q), F.col("label") != F.col("query_label"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-            ),
-        )
-        .groupBy(
-            "query_label", F.col("label").alias("cand_label"), "qvec"
-        )
+        .withColumn("cos_sim", _cos())
+        .groupBy("query_label", F.col("label").alias("cand_label"), "query_id")
         .agg(F.max("cos_sim").alias("best"))
     )
     return pairs.groupBy("query_label", "cand_label").agg(
@@ -1232,37 +1153,9 @@ def s_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             for p in range(N_PLANES)
         ],
     )
-    probes = (
-        corpus.where(F.col("vec_id") < N_PROBES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            F.explode(flips).alias("probe_bucket"),
-        )
-    )
-    scored = corpus.join(
-        F.broadcast(probes),
-        (F.col("bucket") == F.col("probe_bucket"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn(
-        "cos_sim",
-        F.round(
-            F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc_nulls_last("vec_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cos_sim",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
+    probes = _probes(corpus, _PROBE_SET, F.explode(flips).alias("probe_bucket"))
+    return _rerank(
+        _pairs(corpus, probes, F.col("bucket") == F.col("probe_bucket")), TOP_K
     )
 
 
@@ -1381,12 +1274,7 @@ def s_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.round(F.sum("d"), 6).alias("adc6"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc6", "neighbor_id")
-    return (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc6", "rnk")
-    )
+    return _top_k(adc, TOP_K, "adc6", "neighbor_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1445,55 +1333,24 @@ def s_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants (LSH / IVF / PQ) with the voting unchanged.
     """
     corpus = _corpus(spark, sf_dir)
-    probes = corpus.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("true_label"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    probes = _probes(corpus, _PROBE_SET, F.col("label").alias("true_label"))
     # label IS NOT NULL (r8 NULL-key fuzz): a kNN classifier votes over
     # the LABELED seed set — an unlabeled vector can't vote, and its
     # NULL "vote group" broke ties opposite ways (Spark nulls-first vs
     # DuckDB nulls-last) and leaked NULL predictions. Probes keep their
     # (possibly NULL) true_label; only the voting corpus is filtered.
-    scored = (
-        corpus.where(F.col("label").isNotNull())
-        .join(
-            F.broadcast(probes), F.col("vec_id") != F.col("query_id")
-        )
-        .withColumn(
-            "cos_sim",
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")),
-                6,
-            ),
-        )
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cos_sim"), F.asc_nulls_last("vec_id")
-                )
-            ),
-        )
-        .where(F.col("rnk") <= KNN_K)
-    )
-    votes = scored.groupBy("query_id", "true_label", "label").agg(
+    voters = corpus.where(F.col("label").isNotNull())
+    nbrs = _rerank(_pairs(voters, probes), KNN_K, "label", "true_label")
+    votes = nbrs.groupBy("query_id", "true_label", "label").agg(
         F.count(F.lit(1)).alias("votes")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("votes"), F.asc_nulls_last("label")
-    )
-    return (
-        votes.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "query_id",
-            F.col("true_label").cast("int").alias("true_label"),
-            F.col("label").cast("int").alias("predicted_label"),
-            "votes",
-            (F.col("true_label") == F.col("label")).alias("correct"),
-        )
+    pred = _top_k(votes, 1, F.desc("votes"), F.asc_nulls_last("label"), rank="rn")
+    return pred.select(
+        "query_id",
+        F.col("true_label").cast("int").alias("true_label"),
+        F.col("label").cast("int").alias("predicted_label"),
+        "votes",
+        (F.col("true_label") == F.col("label")).alias("correct"),
     )
 
 
@@ -1819,8 +1676,6 @@ def s_binary_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     float vectors; only shortlist x queries rows rejoin the full
     vectors for the rerank. Same broadcast-probe discipline as
     s_cosine_topk with 32x less scan traffic in the shortlist stage."""
-    emb = load_table(spark, sf_dir, "embeddings").where(vector_hygiene())
-    v = F.col("embedding").cast("array<double>")
 
     def pack(offset: int):
         return F.aggregate(
@@ -1830,54 +1685,30 @@ def s_binary_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact in double up to 2^31, and i <= 31 here
             lambda acc, i: acc
             + F.when(
-                F.element_at(v, i + offset + 1) > 0,
+                F.element_at(as_double_array("embedding"), i + offset + 1) > 0,
                 F.pow(F.lit(2.0), i).cast("long"),
             ).otherwise(F.lit(0).cast("long")),
         )
 
-    nrm = norm(v)
-    sig = emb.select(
-        "vec_id",
-        v.alias("v"),
-        nrm.alias("nrm"),
-        pack(0).alias("lo"),
-        pack(32).alias("hi"),
-    ).cache()
-    probes = sig.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("lo").alias("qlo"),
-        F.col("hi").alias("qhi"),
+    sig = (
+        _corpus(spark, sf_dir, pack(0).alias("lo"), pack(32).alias("hi"))
+        .drop("label")
+        .cache()
+    )
+    probes = _probes(
+        sig, _PROBE_SET, F.col("lo").alias("qlo"), F.col("hi").alias("qhi")
     )
     hamming = F.bit_count(
         F.col("qlo").bitwiseXOR(F.col("lo"))
     ) + F.bit_count(F.col("qhi").bitwiseXOR(F.col("hi")))
-    ws = Window.partitionBy("query_id").orderBy("hamming", F.asc_nulls_last("vec_id"))
-    short = (
-        sig.join(F.broadcast(probes), F.col("vec_id") != F.col("query_id"))
-        .withColumn("hamming", hamming)
-        .withColumn("srnk", F.row_number().over(ws))
-        .where(F.col("srnk") <= BINARY_SHORTLIST)
+    short = _top_k(
+        _pairs(sig, probes).withColumn("hamming", hamming),
+        BINARY_SHORTLIST,
+        "hamming",
+        F.asc_nulls_last("vec_id"),
+        rank="srnk",
     )
-    cos = F.round(
-        F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc_nulls_last("vec_id")
-    )
-    return (
-        short.withColumn("cos_sim", cos)
-        .withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .where(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("hamming").cast("int").alias("hamming"),
-            "cos_sim",
-            "rnk",
-        )
-    )
+    return _rerank(short, TOP_K, "hamming")
 
 
 # ---------------------------------------------------------------------------
@@ -1936,53 +1767,24 @@ def s_mrl_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes (column-pruned at the scan when the truncated view is
     materialized alongside); only shortlist x queries rows rejoin full
     vectors. Broadcast-probe discipline as the siblings."""
-    emb = load_table(spark, sf_dir, "embeddings").where(vector_hygiene())
-    v = F.col("embedding").cast("array<double>")
-    tv = F.slice(v, 1, MRL_DIMS)
-
-    base = emb.select(
-        "vec_id",
-        v.alias("v"),
-        norm(v).alias("nrm"),
-        tv.alias("tv"),
-        norm(tv).alias("tnrm"),
-    ).cache()
-    probes = base.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("tv").alias("qtv"),
-        F.col("tnrm").alias("qtnrm"),
+    tv = F.slice(as_double_array("embedding"), 1, MRL_DIMS)
+    base = (
+        _corpus(spark, sf_dir, tv.alias("tv"), norm(tv).alias("tnrm"))
+        .drop("label")
+        .cache()
     )
-    tcos = F.try_divide(
-        dot(F.col("qtv"), F.col("tv")), F.col("qtnrm") * F.col("tnrm")
+    probes = _probes(
+        base, _PROBE_SET, F.col("tv").alias("qtv"), F.col("tnrm").alias("qtnrm")
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("tcos"), F.asc_nulls_last("vec_id")
+    tcos = _cos("qtv", "tv", "qtnrm", "tnrm", dp=None)
+    short = _top_k(
+        _pairs(base, probes).withColumn("tcos", tcos),
+        BINARY_SHORTLIST,
+        F.desc("tcos"),
+        F.asc_nulls_last("vec_id"),
+        rank="srnk",
     )
-    short = (
-        base.join(F.broadcast(probes), F.col("vec_id") != F.col("query_id"))
-        .withColumn("tcos", tcos)
-        .withColumn("srnk", F.row_number().over(ws))
-        .where(F.col("srnk") <= BINARY_SHORTLIST)
-    )
-    cos = F.round(
-        F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")), 6
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc_nulls_last("vec_id")
-    )
-    return (
-        short.withColumn("cos_sim", cos)
-        .withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .where(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cos_sim",
-            "rnk",
-        )
-    )
+    return _rerank(short, TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -2078,79 +1880,22 @@ def s_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists meet — the fusion join is {HYBRID_L}x{HYBRID_L} at most, the
     definition of cheap. Swap the brute-force side for any ANN variant
     (s_ann_lsh_topk, s_ivf_pq_search) without touching the fusion."""
-    from streams_spark.functions.text_funcs import tokens
-    from streams_spark.operators.text import BM25_B, BM25_K1, BM25_QUERY
+    from streams_spark.operators.text import bm25_top, ranked_head
 
-    # --- vector list: cosine vs probe vec 0 ---
+    # vector list: cosine vs probe vec 0
     corpus = _corpus(spark, sf_dir)
-    probe = corpus.where(F.col("vec_id") == 0).select(
-        F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
-    )
     vec = (
         corpus.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(probe))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                F.try_divide(dot(F.col("qv"), F.col("v")), F.col("qnrm") * F.col("nrm")),
-                6,
-            ).alias("cos_sim"),
-        )
+        .crossJoin(F.broadcast(_probes(corpus, F.col("vec_id") == 0)))
+        .select(F.col("vec_id").alias("doc_id"), _cos().alias("cos_sim"))
     )
-    # TakeOrdered-limit FIRST (per-partition heap + driver merge of L
-    # rows), THEN rank the L survivors — a global row_number before the
-    # cut would drag the whole candidate set through one partition
-    wv = Window.orderBy(F.desc("cos_sim"), F.asc_nulls_last("doc_id"))
-    vtop = (
-        vec.orderBy(F.desc("cos_sim"), F.asc_nulls_last("doc_id"))
-        .limit(HYBRID_L)
-        .withColumn("vec_rank", F.row_number().over(wv))
-        .select("doc_id", "vec_rank")
-    )
-
-    # --- lexical list: BM25 (t_bm25 formula; corpus-wide stats) ---
-    docs = load_table(spark, sf_dir, "documents")
-    dl = docs.select(
-        "doc_id", F.size(tokens("text")).cast("double").alias("dl")
-    )
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    tf = (
-        docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-        .where(F.col("term").isin(*BM25_QUERY) & (F.col("doc_id") != 0))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
-    dft = tf.groupBy("term").agg(
-        F.countDistinct("doc_id").cast("double").alias("df")
-    )
-    idf = F.log(
-        1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    sat = (F.col("tf") * (BM25_K1 + 1)) / (
-        F.col("tf")
-        + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-    )
-    scored = (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(dft), "term")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            (F.floor(F.sum(idf * sat) * 10000 + F.lit(0.5)) / 10000).alias(
-                "bm25"
-            )
-        )
-    )
-    wl = Window.orderBy(F.desc("bm25"), F.asc_nulls_last("doc_id"))
-    ltop = (
-        scored.orderBy(F.desc("bm25"), F.asc_nulls_last("doc_id"))
-        .limit(HYBRID_L)
-        .withColumn("lex_rank", F.row_number().over(wl))
-        .select("doc_id", "lex_rank")
-    )
+    vtop = ranked_head(
+        vec, HYBRID_L, "vec_rank", F.desc("cos_sim"), F.asc_nulls_last("doc_id")
+    ).select("doc_id", "vec_rank")
+    # lexical list: t_bm25's scorer over the postings of every doc but 0
+    ltop = bm25_top(
+        spark, sf_dir, HYBRID_L, "lex_rank", F.col("doc_id") != 0
+    ).select("doc_id", "lex_rank")
 
     # --- RRF fusion over the two k-bounded lists ---
     fused = vtop.join(ltop, "doc_id", "full_outer").select(

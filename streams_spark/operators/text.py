@@ -1347,6 +1347,27 @@ def t_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     The sum rounds via the floor(x*1e4+0.5)/1e4 cross-engine rule before
     ranking; ties beyond 4dp break on doc_id in both engines.
     """
+    return bm25_top(spark, sf_dir, BM25_TOPK, "rnk")
+
+
+def ranked_head(df: DataFrame, k: int, rank: str, *order) -> DataFrame:
+    """The global top-k of `df` by `order`, numbered 1..k in column
+    `rank`. orderBy+limit is TakeOrdered (a per-partition heap and a
+    driver merge of k rows); the row_number then ranks the k survivors
+    only — ranking before the cut would drag every row through one
+    partition."""
+    top = df.orderBy(*order).limit(k)
+    w = Window.orderBy(*order)
+    return top.select(F.row_number().over(w).alias(rank), *df.columns)
+
+
+def bm25_top(
+    spark: SparkSession, sf_dir: str, k: int, rank: str, postings=True
+) -> DataFrame:
+    """(rank, doc_id, bm25): the top-k documents by BM25 for BM25_QUERY,
+    ties to the lowest doc_id. `postings` filters the query-term
+    postings (doc_id, term) before the tf aggregate; n_docs and avgdl
+    stay corpus-wide."""
     docs = load_table(spark, sf_dir, "documents")
     dl = docs.select(
         "doc_id", F.size(tokens("text")).cast("double").alias("dl")
@@ -1357,7 +1378,7 @@ def t_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = (
         docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-        .where(F.col("term").isin(*BM25_QUERY))
+        .where(F.col("term").isin(*BM25_QUERY) & postings)
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
@@ -1382,10 +1403,8 @@ def t_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    top = scored.orderBy(F.desc("bm25"), F.asc_nulls_last("doc_id")).limit(BM25_TOPK)
-    w = Window.orderBy(F.desc("bm25"), F.asc_nulls_last("doc_id"))
-    return top.select(
-        F.row_number().over(w).cast("int").alias("rnk"), "doc_id", "bm25"
+    return ranked_head(
+        scored, k, rank, F.desc("bm25"), F.asc_nulls_last("doc_id")
     )
 
 

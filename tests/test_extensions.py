@@ -33,6 +33,43 @@ def test_minhash_lsh_verified_pairs_match_exact(spark, sf_dir, row):
     assert high_sim <= set(approx), "LSH missed a high-similarity pair"
 
 
+def test_minhash_signatures_are_computed_once(spark, sf_dir):
+    """d_minhash_lsh materializes its 64-min signature table before the
+    band self-join: across the final plans of every SQL execution one
+    call starts (as the SQL status store records them: the operator
+    tree, then one detail block per numbered node), the map-side min
+    aggregate over the permutation columns runs exactly once, not once
+    per join side."""
+    import re
+
+    from streams_spark.operators.dedup import NUM_PERM
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    _rows(spark, sf_dir, "d_minhash_lsh")
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = 0
+    for e in executions():
+        if e.executionId() <= before:
+            continue
+        desc = e.physicalPlanDescription()
+        final_tree = desc.split("\n\n")[0].split("== Initial Plan ==")[0]
+        blocks = {
+            b.split(")")[0].lstrip("("): b
+            for b in re.split(r"\n(?=\(\d+\) )", desc)
+        }
+        runs += sum(
+            f"partial_min(h{NUM_PERM - 1}" in blocks[node]
+            for node in re.findall(r"HashAggregate \((\d+)\)", final_tree)
+        )
+    assert runs == 1
+
+
 def test_ann_lsh_is_subset_of_bruteforce_candidates(spark, sf_dir):
     """Bucketed ANN returns only true corpus vectors with correct cosines:
     every (query, neighbor, cos) it returns must appear in the brute-force
@@ -1697,6 +1734,40 @@ def test_mrl_search_recall_against_exact(spark, sf_dir):
     got = {(r.query_id, r.neighbor_id) for r in rows}
     hits = sum(1 for k in exact if k in got)
     assert hits / len(exact) >= 0.3, f"recall {hits/len(exact):.2f}"
+
+
+@pytest.mark.parametrize(
+    "row, exchanges, broadcasts",
+    [
+        ("s_cosine_topk", 1, 1),
+        ("s_nearest_neighbor", 1, 1),
+        ("s_range_search", 0, 1),
+        ("s_ann_lsh_topk", 1, 1),
+        ("s_multiprobe_lsh", 1, 1),
+        ("s_centroid_search", 3, 2),
+        ("s_binary_search", 1, 1),
+        ("s_mrl_search", 1, 1),
+        ("s_knn_classify", 1, 1),
+        ("s_maxsim", 2, 1),
+        ("s_kmeans_train", 1, 0),
+        ("s_pq_search", 17, 11),
+        ("s_ivf_pq_search", 20, 14),
+        ("s_recall_eval", 6, 3),
+        ("s_hybrid_search", 5, 4),
+        ("t_bm25", 5, 3),
+    ],
+)
+def test_vector_search_plan_shape(spark, sf_dir, row, exchanges, broadcasts):
+    """The probe side stays a broadcast and each row keeps its shuffle
+    count: pre-AQE Exchange and BroadcastExchange counts of the vector
+    search rows (and t_bm25, whose scorer s_hybrid_search shares)."""
+    from streams_spark.plans.inspect import operator_counts
+
+    counts = operator_counts(REGISTRY[row].fn(spark, sf_dir))
+    assert (counts.get("Exchange", 0), counts.get("BroadcastExchange", 0)) == (
+        exchanges,
+        broadcasts,
+    )
 
 
 def test_benford_probabilities_and_coverage(spark, sf_dir):

@@ -179,16 +179,38 @@ def test_streaming_sequence_validation_state(spark, tmp_path):
     assert (ok, bad, last) == (10, 0, 30)
 
 
-def test_produce_layout_partition_prunes(spark, tmp_path):
-    """The canonical log layout (partitionBy space) must turn a space
-    predicate into partition pruning, the Spark analog of the reference's
-    LSM key-range bounds (SURVEY.md §1.2): a consume of one space reads
-    only that space's files."""
-    log_dir = str(tmp_path / "log")
-    ledger = str(tmp_path / "ledger")
-    sink = IdempotentLogSink(log_dir, ledger)
+def _write_by_sink(spark, log_dir, tmp_path):
+    sink = IdempotentLogSink(log_dir, str(tmp_path / "ledger"))
     for i, sp in enumerate(["alpha", "beta", "gamma"]):
         sink(_entries(spark, sp, "g0", range(1, 6)), batch_id=i)
+
+
+def _write_by_produce(spark, log_dir, tmp_path):
+    from streams_spark import client
+
+    for sp in ["alpha", "beta", "gamma"]:
+        recs = spark.createDataFrame(
+            [(sp, "g0", i, b"x") for i in range(1, 6)],
+            "space string, segment string, sequence long, payload binary",
+        )
+        client.produce(recs, log_dir)
+
+
+@pytest.mark.parametrize(
+    "write, layout",
+    [(_write_by_produce, "space"), (_write_by_sink, "commit_batch")],
+    ids=["produce", "sink"],
+)
+def test_produce_layout_partition_prunes(spark, tmp_path, write, layout):
+    """A space predicate must turn into partition pruning, the Spark
+    analog of the reference's LSM key-range bounds (SURVEY.md §1.2): a
+    consume of one space reads only that space's files. Covers both
+    writers: `client.produce` writes the canonical log layout
+    (partitionBy space, `space=`), the idempotent sink nests it under
+    `commit_batch=`."""
+    log_dir = str(tmp_path / "log")
+    write(spark, log_dir, tmp_path)
+    assert {d.split("=")[0] for d in os.listdir(log_dir) if "=" in d} == {layout}
     from streams_spark.plans.inspect import partition_filters
 
     log = read_event_log(spark, log_dir)

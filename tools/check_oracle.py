@@ -10,6 +10,7 @@ Usage: python tools/check_oracle.py [name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
@@ -17,9 +18,7 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [

@@ -35,14 +35,15 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-FUZZ_ROOT = "/root/repo/.fuzzdata"
+FUZZ_ROOT = os.path.join(ROOT, ".fuzzdata")
 
 # Unicode stress pool: empties, whitespace, CJK, emoji, combining marks,
 # ligatures, control-ish whitespace, quotes, and a long repeat.
@@ -485,11 +486,11 @@ def build_degenerate_dir(sf_src: str, kind: str) -> str:
 def run_seed(dest: str, only: list[str]) -> dict:
     env = dict(os.environ, CHECK_SF_DIR=dest)
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/check_oracle.py", *only],
+        [sys.executable, os.path.join(ROOT, "tools", "check_oracle.py"), *only],
         env=env,
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     passed, failed, skipped = [], [], []
     detail = []
@@ -591,7 +592,7 @@ def main() -> None:
             else PERTURBATIONS
         ),
     }
-    with open(os.path.join("/root/repo", args.out), "w") as f:
+    with open(os.path.join(ROOT, args.out), "w") as f:
         json.dump(payload, f, indent=2)
     print(f"wrote {args.out}")
     if any_fail:

@@ -26,9 +26,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-ROOT = "/root/repo/.ppjoin_fixtures"
+FIXTURES = os.path.join(ROOT, ".ppjoin_fixtures")
 
 # ~40 tokens of shared boilerplate -> ~38 hot 3-gram shingles per
 # injected doc, each with df ~= rate * n_docs
@@ -41,7 +42,7 @@ BOILERPLATE = (
 
 
 def build_fixture(sf: str, rate: float, seed: int = 42) -> str:
-    dest = os.path.join(ROOT, f"rate{rate:g}")
+    dest = os.path.join(FIXTURES, f"rate{rate:g}")
     os.makedirs(dest, exist_ok=True)
     table = pq.read_table(os.path.join(sf, "documents.parquet"))
     df = table.to_pandas()
@@ -117,7 +118,7 @@ def main() -> None:
             f"| {rate:g} | {c_co} | {c_pf} | {min(t_co):.2f} "
             f"| {min(t_pf):.2f} | {win} ({n_co} true pairs) |"
         )
-    shutil.rmtree(ROOT, ignore_errors=True)
+    shutil.rmtree(FIXTURES, ignore_errors=True)
     spark.stop()
 
 

@@ -32,11 +32,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 STRESS_DIR = os.environ.get(
-    "STRESS_DIR", "/root/repo/.stress10x"
+    "STRESS_DIR", os.path.join(ROOT, ".stress10x")
 )  # gitignored scratch
 # STRESS_COPIES=100 gives a second decade (x100) for the linear ops
 N_COPIES = int(os.environ.get("STRESS_COPIES", "10"))

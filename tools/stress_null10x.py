@@ -38,7 +38,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np
 import pyarrow as pa
@@ -76,7 +77,7 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-STRESS_DIR = os.environ.get("STRESS_DIR", "/root/repo/.stress10x")
+STRESS_DIR = os.environ.get("STRESS_DIR", os.path.join(ROOT, ".stress10x"))
 NULL_FRAC = 0.03  # the 10x-rate probe (0.3% r8 class x 10)
 SEED = 19  # continues the fuzz seed ledger (18 was the 1x 3% probe)
 
@@ -240,7 +241,7 @@ def main() -> None:
             )
         payload["perf_sf0.1"] = rows
 
-    with open(os.path.join("/root/repo", args.out), "w") as f:
+    with open(os.path.join(ROOT, args.out), "w") as f:
         json.dump(payload, f, indent=1)
     print(json.dumps({k: v for k, v in payload.items() if k != "targets"}))
     spark.stop()
