@@ -16,10 +16,10 @@ H.264 tracks use the real-world packaging (ISO/IEC 14496-15): an
 SPS/PPS out-of-band and declares the per-sample NAL length-prefix
 size — samples are length-prefixed NAL units, NOT Annex-B.
 `mp4_mux_avc` packages Annex-B access units that way (parameter sets
-lifted into avcC, samples length-prefixed) and
-`avc_sample_to_annexb`/`avc_track_param_sets` convert back for the
-Annex-B elementary-stream decoder; both directions fail loudly on
-desynced length walks or malformed records.
+lifted into avcC, samples length-prefixed) and `access_units` walks
+either packaging back to the Annex-B access units the elementary-stream
+decoder reads; both directions fail loudly on desynced length walks or
+malformed records.
 
 The MJPEG muxer writes Motion-JPEG-in-MP4 per the MPEG-4 systems
 registry (`mp4v` visual sample entry whose `esds`
@@ -258,14 +258,6 @@ def avc_sample_to_annexb(sample: bytes, nal_length_size: int) -> bytes:
     if not out:
         raise Mp4Error("empty avc1 sample")
     return bytes(out)
-
-
-def avc_track_param_sets(avcc: AvcConfig) -> bytes:
-    """The track's out-of-band SPS/PPS as one Annex-B chunk — prepend
-    to the first converted sample before feeding an Annex-B decoder."""
-    return b"".join(
-        b"\x00\x00\x00\x01" + nal for nal in avcc.sps + avcc.pps
-    )
 
 
 def _avc_sample_entry(width: int, height: int, avcc_payload: bytes) -> bytes:
@@ -570,7 +562,9 @@ def extract_samples(buf: bytes) -> Mp4Track:
     algorithm: expand stsc chunk runs (a run applies from its
     first_chunk until the next run's), cap the final chunk by the
     remaining sample count, accumulate intra-chunk offsets by sample
-    size, and expand stts duration runs into cumulative DTS.
+    size, and expand stts duration runs into cumulative DTS. A sample
+    that runs past the end of `buf` raises, so every byte range it
+    returns can be sliced whole.
 
     Any truncated table (struct.error mid-parse) surfaces as Mp4Error
     so callers see one exception type for every corrupt-file shape
@@ -705,6 +699,8 @@ def _extract_samples(buf: bytes) -> Mp4Track:
                 break
             pos = chunk_offsets[chunk - 1]
             for _ in range(min(spc, count - si)):
+                if pos + sizes[si] > len(buf):
+                    raise Mp4Error(f"sample {si} extends past EOF")
                 samples.append(
                     Sample(
                         si, pos, sizes[si], dts, durations[si],
@@ -736,8 +732,27 @@ def mp4_demux(
         track = track._replace(
             samples=[s for s in track.samples if s.sync]
         )
-    frames = [buf[s.offset : s.offset + s.size] for s in track.samples]
-    for s, f in zip(track.samples, frames):
-        if len(f) != s.size:
-            raise Mp4Error(f"sample {s.index} extends past EOF")
-    return track, frames
+    return track, [buf[s.offset : s.offset + s.size] for s in track.samples]
+
+
+def access_units(
+    buf: bytes, track: Mp4Track, sync_only: bool = False
+) -> Iterator[tuple[Sample, bytes]]:
+    """Yield (sample, Annex-B access unit) for `track`'s samples of
+    `buf` in decode order — the input an Annex-B H.264 decoder takes,
+    whatever the packaging. An `mp4v` sample is its raw bytes; an
+    `avc1`/`avc3` sample is converted from length-prefixed NALs, and
+    the avcC parameter sets go in front of the first unit yielded.
+    `sync_only=True` skips samples that stss does not mark sync."""
+    avcc = track.avcc
+    head = b"" if avcc is None else b"".join(
+        b"\x00\x00\x00\x01" + nal for nal in avcc.sps + avcc.pps
+    )
+    for s in track.samples:
+        if sync_only and not s.sync:
+            continue
+        au = buf[s.offset : s.offset + s.size]
+        if avcc is not None:
+            au = head + avc_sample_to_annexb(au, avcc.nal_length_size)
+            head = b""
+        yield s, au

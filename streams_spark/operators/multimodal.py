@@ -24,6 +24,19 @@ the stdlib-only PNG/WAV codecs from functions/codecs.py, m_jpeg_real
 the baseline JPEG decoder from functions/jpeg.py, and `pil_decode` is
 the Pillow swap-in for formats beyond those where that library exists.
 
+The twelve H.264 rows share two decode rules and one fixture builder:
+
+- the container rule `_decode_gops` runs one H264Decoder per MP4 blob
+  over `mp4.access_units` (mp4v or avc1 packaging, all samples or sync
+  only) for m_h264_keyframes (and m_video_pixel_dedup on top of it),
+  m_h264_gop, m_h264_avc1, m_h264_multiref, m_h264_rplm,
+  m_h264_partitions and m_cross_container_dedup;
+- the raw Annex-B picture rule `_decode_pictures` decodes one picture
+  per blob for m_h264_intra4x4, m_h264_deblock and m_h264_slices;
+  m_h264_fmo wraps its `_picture_record`;
+- the fixtures draw on one geometry (`_h264_geometry`), one IDR ladder
+  (`_h264_idr`) and one GOP encoder (`_h264_gop_aus`).
+
 Scale notes: mapInPandas streams Arrow batches — constant memory per
 task regardless of partition size; the binary column is only read where
 the UDF runs (column pruning feeds the scan), and fan-out operators
@@ -88,8 +101,9 @@ def _staged_blob_feed(
     fixture synthesis, not the operator under test, so benchmarks must
     measure the demux/decode stage over a materialized blob table (in
     production the blobs come from storage via read_media_dir). Keyed
-    on `op` plus each codec module's and this module's mtime+size, so
-    an edit to a codec or to a synthesis rule rebuilds the fixtures; a
+    on `op` plus a hash of each codec module's and this module's
+    source bytes, so an edit to a codec or to a synthesis rule rebuilds
+    the fixtures while a checkout or a `touch` does not; a
     missing documents table (in-memory test fixtures) skips staging
     silently, any other OSError warns loudly (ADVICE r8). The one
     caller is `_synth_feed`."""
@@ -103,13 +117,14 @@ def _staged_blob_feed(
     # formulas), so it joins every cache key: editing them without
     # touching the codec modules must rebuild the fixtures rather than
     # serve stale blobs that no longer match the oracle (ADVICE r9)
+    import hashlib
     import sys as _sys
 
-    modules = [*modules, _sys.modules[__name__]]
-    key = "|".join(
-        f"{_os.stat(m.__file__).st_mtime_ns}:{_os.stat(m.__file__).st_size}"
-        for m in modules
-    )
+    digest = hashlib.sha256()
+    for m in [*modules, _sys.modules[__name__]]:
+        with open(m.__file__, "rb") as f:
+            digest.update(f.read())
+    key = digest.hexdigest()
     try:
         feed = cached_feed(
             sf_dir,
@@ -1304,6 +1319,172 @@ def m_mp3_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Real H.264: the shared fixture pieces and the two decode rules
+# ---------------------------------------------------------------------------
+
+
+def _h264_geometry(d: int) -> tuple[int, int, int, int]:
+    """(mb_w, mb_h, crop_right, crop_bottom) of doc d's H.264 fixture
+    picture: 2..4 macroblocks each way, cropped by an even 0..6 / 0..4
+    samples. The oracles' geo CTEs spell the same formulas."""
+    return 2 + (d // 3) % 3, 2 + (d // 9) % 3, 2 * (d % 4), 2 * ((d // 5) % 3)
+
+
+def _h264_idr(d: int, f: int = 0, max_ref: int = 1) -> bytes:
+    """Doc d's IDR ladder picture number `f`: row 0 at luma
+    40 + (7d + 11f) % 160, each later MB row stepped by the DC level
+    (d + f + r) % 3 (see h264_encode_rows). Picture 0 opens every GOP
+    fixture; the keyframes fixture is IDRs 0..n-1."""
+    from streams_spark.functions.h264 import h264_encode_rows
+
+    mw, mh, crop_r, crop_b = _h264_geometry(d)
+    return h264_encode_rows(
+        mw, mh, 40 + (7 * d + 11 * f) % 160,
+        [(d + f + r) % 3 for r in range(1, mh)],
+        crop_right=crop_r, crop_bottom=crop_b, max_ref=max_ref,
+    )
+
+
+def _h264_gop_aus(
+    d: int, n_frames: int | None = None, max_ref: int = 1,
+    rplm_frame: int | None = None,
+) -> tuple[list[bytes], int, int]:
+    """(access units, cropped width, cropped height) of doc d's GOP:
+    the IDR, then P pictures 1..n_frames-1 (default 3..5 pictures in
+    all), each motion-compensated by a per-frame quarter-pel MV plus a
+    per-MB-row DC residual (see h264_encode_p_rows). The m_h264_gop and
+    m_h264_avc1 fixtures share it, so their decoded pixels are
+    identical by construction.
+
+    `max_ref=2` makes a multi-reference GOP: the SPS allows two
+    reference frames and every picture from frame 2 on gives each MB
+    row the ref_idx (d + f + r) % 2 among two active references.
+    `rplm_frame` is the one picture that swaps its reference list and
+    forgets its newest reference once decoded (RPLM + MMCO 1)."""
+    from streams_spark.functions.h264 import h264_encode_p_rows
+
+    mw, mh, crop_r, crop_b = _h264_geometry(d)
+    aus = [_h264_idr(d, max_ref=max_ref)]
+    for f in range(1, n_frames or 3 + (d // 27) % 3):
+        multi = {} if max_ref == 1 or f == 1 else {
+            "row_refs": [(d + f + r) % 2 for r in range(mh)],
+            "num_ref_active": 2,
+        }
+        if f == rplm_frame:
+            multi.update(rplm=[(0, 1)], mmco_forget=[0])
+        aus.append(h264_encode_p_rows(
+            mw, mh, (((5 * d + 3 * f) % 13) - 6, ((3 * d + 7 * f) % 23) - 11),
+            [[0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)],
+            frame_num=f, **multi,
+        ))
+    return aus, 16 * mw - crop_r, 16 * mh - crop_b
+
+
+def _h264_gop_mp4(d: int, *gop_args, **gop_kw) -> tuple[bytes]:
+    """Doc d's `_h264_gop_aus` GOP muxed as mp4v/Annex-B, only the IDR
+    stss-marked sync — the make_blob of the GOP feeds."""
+    from streams_spark.functions.mp4 import mp4_mux
+
+    aus, w, h = _h264_gop_aus(d, *gop_args, **gop_kw)
+    return (mp4_mux(aus, w, h, sync_every=len(aus)),)
+
+
+_STEP_MAGS = (0, 1, 2, 5, 9, 20, 26)
+
+
+def _step_level(d: int, r: int, stride: int = 2) -> int:
+    """Doc d's signed DC level for MB row r of the one-MB-column
+    fixtures: magnitudes from _STEP_MAGS, which put the row-to-row
+    steps in every deblocking regime, and alternating signs."""
+    return _STEP_MAGS[(d + stride * r) % 7] * (1 if (d + r) % 2 == 0 else -1)
+
+
+def _luma_checksum(fr) -> int:
+    """The checksum every H.264 row reports: the decoded luma plane's
+    sum modulo 1e9+7."""
+    return int(fr.y.sum(dtype="int64")) % 1_000_000_007
+
+
+_GOP_SCHEMA = (
+    "doc_id long, frame_no int, n_frames int, width int, "
+    "height int, dts_ticks long, is_idr boolean, checksum bigint"
+)
+
+
+def _decode_gops(
+    table: DataFrame, schema: str = _GOP_SCHEMA, sync_only: bool = False
+) -> DataFrame:
+    """The container rule: decode each H.264-in-MP4 blob in `table`
+    through one H264Decoder per video (its DPB carries the references),
+    fed `mp4.access_units` in decode order — mp4v or avc1/avc3
+    packaging alike, sync samples only with `sync_only`. One row per
+    picture, of the picture columns `schema` names. It serves
+    m_h264_keyframes (sync only, the dts as pts_ticks), m_h264_gop,
+    m_h264_avc1 (plus codec), m_h264_multiref, m_h264_rplm,
+    m_h264_partitions and m_cross_container_dedup (sync only, the codec
+    as container)."""
+    from streams_spark.functions.h264 import H264Decoder
+    from streams_spark.functions.mp4 import access_units, extract_samples
+
+    cols = _schema_columns(schema)
+
+    def decode(doc_id, payload):
+        buf = bytes(payload)
+        track = extract_samples(buf)
+        dec = H264Decoder()
+        n_total = len(track.samples)
+        for s, au in access_units(buf, track, sync_only):
+            fr = dec.decode(au)
+            h, w = fr.y.shape
+            rec = {
+                "doc_id": int(doc_id), "frame_no": s.index,
+                "n_frames": n_total, "width": int(w), "height": int(h),
+                "dts_ticks": int(s.dts), "pts_ticks": int(s.dts),
+                "dur_ticks": int(s.duration), "is_idr": bool(s.sync),
+                "codec": track.codec, "container": track.codec,
+                "checksum": _luma_checksum(fr),
+            }
+            yield tuple(rec[c] for c in cols)
+
+    return decode_blobs(table, decode, schema)
+
+
+def _picture_record(doc_id, payload) -> dict:
+    """The columns of one raw Annex-B picture blob: doc_id, width,
+    height, n_slices (its slice NAL units) and checksum."""
+    from streams_spark.functions.h264 import annexb_split, h264_decode
+
+    buf = bytes(payload)
+    fr = h264_decode(buf)
+    h, w = fr.y.shape
+    return {
+        "doc_id": int(doc_id), "width": int(w), "height": int(h),
+        "n_slices": sum(
+            1 for nal in annexb_split(buf) if nal and (nal[0] & 0x1F) in (1, 5)
+        ),
+        "checksum": _luma_checksum(fr),
+    }
+
+
+def _decode_pictures(
+    table: DataFrame,
+    schema: str = "doc_id long, width int, height int, checksum bigint",
+) -> DataFrame:
+    """The raw Annex-B picture rule: decode each picture blob in
+    `table` to one row of the `_picture_record` columns `schema` names.
+    It serves m_h264_intra4x4, m_h264_deblock and m_h264_slices (plus
+    n_slices); m_h264_fmo wraps `_picture_record` to add its map_type
+    and group0_size."""
+    cols = _schema_columns(schema)
+
+    def decode(doc_id, payload):
+        rec = _picture_record(doc_id, payload)
+        yield tuple(rec[c] for c in cols)
+
+    return decode_blobs(table, decode, schema)
+
+
+# ---------------------------------------------------------------------------
 # Real H.264 (Annex-B in ISO BMFF) keyframe decode
 # ---------------------------------------------------------------------------
 
@@ -1354,17 +1535,8 @@ def h264_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions import mp4 as _m
 
     def make_blob(d):
-        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-        crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-        frames = [
-            _h.h264_encode_rows(
-                mw, mh,
-                40 + (7 * d + 11 * f) % 160,
-                [(d + f + r) % 3 for r in range(1, mh)],
-                crop_right=crop_r, crop_bottom=crop_b,
-            )
-            for f in range(2 + (d // 27) % 3)
-        ]
+        mw, mh, crop_r, crop_b = _h264_geometry(d)
+        frames = [_h264_idr(d, f) for f in range(2 + (d // 27) % 3)]
         return (_m.mp4_mux(
             frames, 16 * mw - crop_r, 16 * mh - crop_b, sync_every=2,
         ),)
@@ -1378,9 +1550,10 @@ def h264_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("m_h264_keyframes", oracle=_H264_ORACLE)
 def m_h264_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL H.264 I-frame decode of container keyframes (VERDICT r9
-    #6): the MP4 demux prunes to stss-marked sync samples FIRST
-    (keyframes_only=True — at 100 TB the non-key bytes are never
-    decoded), then every kept sample runs the full Annex-B baseline
+    #6): the container rule walks stss-marked sync samples only
+    (sync_only=True: one table parse, and only sync samples are sliced
+    — at 100 TB the non-key bytes are never copied or decoded), then
+    every kept sample runs the full Annex-B baseline
     decode in functions/h264.py — NAL unescape, Exp-Golomb SPS/PPS and
     slice headers, I_PCM and Intra_16x16 V/H/DC prediction, CAVLC
     coefficient decode, the luma-DC Hadamard rescale, the inverse core
@@ -1407,34 +1580,11 @@ def m_h264_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import h264_decode
-    from streams_spark.functions.mp4 import extract_samples
-
-    def decode(doc_id, payload):
-        # ONE table parse, byte slices for sync samples only — the
-        # 'non-key bytes are never decoded' claim holds at the copy
-        # level too (a keyframes_only mp4_demux would still slice every
-        # sample before filtering)
-        buf = bytes(payload)
-        track = extract_samples(buf)
-        n_total = len(track.samples)
-        for s in track.samples:
-            if not s.sync:
-                continue
-            fr = h264_decode(buf[s.offset : s.offset + s.size])
-            h, w = fr.y.shape
-            yield (
-                int(doc_id), s.index, n_total,
-                int(w), int(h), int(s.dts), int(s.duration),
-                int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-            )
-
-    return decode_blobs(
-        h264_table_real(spark, sf_dir), decode,
+    return _decode_gops(
+        h264_table_real(spark, sf_dir),
         "doc_id long, frame_no int, n_frames int, width int, "
         "height int, pts_ticks long, dur_ticks int, checksum bigint",
+        sync_only=True,
     )
 
 
@@ -1606,42 +1756,10 @@ def h264_gop_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions import h264 as _h
     from streams_spark.functions import mp4 as _m
 
-    def make_blob(d):
-        aus, w, h = _h264_gop_aus(d)
-        # only the IDR is sync
-        return (_m.mp4_mux(aus, w, h, sync_every=len(aus)),)
-
     return _synth_feed(
         spark, sf_dir, "doch264gop", (_h, _m), F.col("doc_id") % 3 == 2,
-        make_blob,
+        _h264_gop_mp4,
     )
-
-
-def _h264_gop_aus(d: int) -> tuple[list[bytes], int, int]:
-    """(access units, cropped width, cropped height) of doc d's GOP —
-    the IDR plus 2..4 P pictures shared by the mp4v and avc1 fixtures,
-    so their decoded pixels are identical by construction."""
-    from streams_spark.functions.h264 import (
-        h264_encode_p_rows, h264_encode_rows,
-    )
-
-    mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-    crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-    aus = [
-        h264_encode_rows(
-            mw, mh, 40 + (7 * d) % 160,
-            [(d + r) % 3 for r in range(1, mh)],
-            crop_right=crop_r, crop_bottom=crop_b,
-        )
-    ]
-    for f in range(1, 3 + (d // 27) % 3):
-        mvx = ((5 * d + 3 * f) % 13) - 6
-        mvy = ((3 * d + 7 * f) % 23) - 11
-        levels = [[0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)]
-        aus.append(
-            h264_encode_p_rows(mw, mh, (mvx, mvy), levels, frame_num=f)
-        )
-    return aus, 16 * mw - crop_r, 16 * mh - crop_b
 
 
 @register("m_h264_gop", oracle=_H264_GOP_ORACLE)
@@ -1674,39 +1792,6 @@ def m_h264_gop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference contract: consumer-side decode of opaque payloads
     (reference server/messages.go:65)."""
     return _decode_gops(h264_gop_table_real(spark, sf_dir))
-
-
-_GOP_SCHEMA = (
-    "doc_id long, frame_no int, n_frames int, width int, "
-    "height int, dts_ticks long, is_idr boolean, checksum bigint"
-)
-
-
-def _decode_gops(table: DataFrame) -> DataFrame:
-    """Decode every sample of each GOP-in-MP4 blob in `table` through
-    one H264Decoder per video (its DPB carries the references), one
-    row per picture — the decode rule of m_h264_gop, m_h264_multiref,
-    m_h264_rplm and m_h264_partitions."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import H264Decoder
-    from streams_spark.functions.mp4 import extract_samples
-
-    def decode(doc_id, payload):
-        buf = bytes(payload)
-        track = extract_samples(buf)
-        dec = H264Decoder()
-        n_total = len(track.samples)
-        for s in track.samples:
-            fr = dec.decode(buf[s.offset : s.offset + s.size])
-            h, w = fr.y.shape
-            yield (
-                int(doc_id), s.index, n_total,
-                int(w), int(h), int(s.dts), bool(s.sync),
-                int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-            )
-
-    return decode_blobs(table, decode, _GOP_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1745,9 +1830,10 @@ def h264_avc1_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m_h264_avc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode avc1/avcC-packaged H.264 MP4s — the real-world packaging
     (VERDICT r10 #2): demux resolves the avc1 sample entry, parses the
-    avcC record (out-of-band SPS/PPS, NAL length-prefix size), converts
-    each length-prefixed sample to Annex-B, feeds the parameter sets
-    once, and decodes every frame of the GOP. Checksums must equal the
+    avcC record (out-of-band SPS/PPS, NAL length-prefix size), and the
+    container rule's access-unit walk converts each length-prefixed
+    sample to Annex-B, feeds the parameter sets once, and decodes
+    every frame of the GOP. Checksums must equal the
     same closed-form oracle the mp4v/Annex-B m_h264_gop row uses — the
     packaging is transparent or the row goes red.
 
@@ -1756,38 +1842,8 @@ def m_h264_avc1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import H264Decoder
-    from streams_spark.functions.mp4 import (
-        Mp4Error, avc_sample_to_annexb, avc_track_param_sets,
-        extract_samples,
-    )
-
-    def decode(doc_id, payload):
-        buf = bytes(payload)
-        track = extract_samples(buf)
-        if track.avcc is None:
-            raise Mp4Error(f"doc {doc_id}: expected an avc1/avc3 track")
-        dec = H264Decoder()
-        n_total = len(track.samples)
-        for s in track.samples:
-            au = avc_sample_to_annexb(
-                buf[s.offset : s.offset + s.size],
-                track.avcc.nal_length_size,
-            )
-            if s.index == 0:
-                au = avc_track_param_sets(track.avcc) + au
-            fr = dec.decode(au)
-            h, w = fr.y.shape
-            yield (
-                int(doc_id), s.index, n_total,
-                int(w), int(h), int(s.dts), bool(s.sync), track.codec,
-                int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-            )
-
-    return decode_blobs(
-        h264_avc1_table_real(spark, sf_dir), decode,
+    return _decode_gops(
+        h264_avc1_table_real(spark, sf_dir),
         "doc_id long, frame_no int, n_frames int, width int, "
         "height int, dts_ticks long, is_idr boolean, codec string, "
         "checksum bigint",
@@ -1894,36 +1950,9 @@ def h264_multiref_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions import h264 as _h
     from streams_spark.functions import mp4 as _m
 
-    def make_blob(d):
-        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-        crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-        aus = [
-            _h.h264_encode_rows(
-                mw, mh, 40 + (7 * d) % 160,
-                [(d + r) % 3 for r in range(1, mh)],
-                crop_right=crop_r, crop_bottom=crop_b,
-                max_ref=2,
-            )
-        ]
-        for f in range(1, 4 + (d // 27) % 2):
-            mvx = ((5 * d + 3 * f) % 13) - 6
-            mvy = ((3 * d + 7 * f) % 23) - 11
-            levels = [[0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)]
-            multi = {} if f == 1 else {
-                "row_refs": [(d + f + r) % 2 for r in range(mh)],
-                "num_ref_active": 2,
-            }
-            aus.append(_h.h264_encode_p_rows(
-                mw, mh, (mvx, mvy), levels, frame_num=f, **multi,
-            ))
-        return (_m.mp4_mux(
-            aus, 16 * mw - crop_r, 16 * mh - crop_b,
-            sync_every=len(aus),  # only the IDR is sync
-        ),)
-
     return _synth_feed(
         spark, sf_dir, "doch264mref", (_h, _m), F.col("doc_id") % 6 == 1,
-        make_blob,
+        lambda d: _h264_gop_mp4(d, 4 + (d // 27) % 2, max_ref=2),
     )
 
 
@@ -2001,7 +2030,7 @@ def m_cross_container_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-band parameter sets, length-prefixed vs start-coded NALs) that
     are pixel-identical. Byte-digest dedup (m_media_dedup) can never
     pair them; this operator demuxes only each file's stss-marked IDR
-    (keyframes_only pruning BEFORE any byte decodes), decodes it, and
+    (sync-only pruning BEFORE any byte decodes), decodes it, and
     groups on the exact decoded-pixel key (width, height, checksum) —
     every avc1 file collides with its mp4v twin (n_containers = 2),
     and the representative election is deterministic. This is the
@@ -2015,38 +2044,18 @@ def m_cross_container_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import h264_decode
-    from streams_spark.functions.mp4 import (
-        avc_sample_to_annexb, avc_track_param_sets, mp4_demux,
-    )
     from pyspark.sql import Window as W
 
-    def decode_idr(doc_id, payload):
-        track, frames = mp4_demux(bytes(payload), keyframes_only=True)
-        au = frames[0]
-        if track.avcc is not None:
-            au = avc_track_param_sets(track.avcc) + (
-                avc_sample_to_annexb(au, track.avcc.nal_length_size)
-            )
-        fr = h264_decode(au)
-        h, w = fr.y.shape
-        yield (
-            int(doc_id), track.codec, int(w), int(h),
-            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-        )
-
-    # union the two staged corpora BEFORE the decode stage: decode_idr
-    # already distinguishes packaging per blob (track.avcc), so one
-    # Arrow stage over the unioned feed replaces two — same rows, one
-    # python stage in the plan instead of two (r11 opt round)
-    frames = decode_blobs(
+    # union the two staged corpora BEFORE the decode stage: the
+    # container rule handles either packaging per blob, so one Arrow
+    # stage over the unioned feed replaces two — same rows, one python
+    # stage in the plan instead of two (r11 opt round)
+    frames = _decode_gops(
         h264_gop_table_real(spark, sf_dir)
         .unionByName(h264_avc1_table_real(spark, sf_dir)),
-        decode_idr,
         "doc_id long, container string, width int, height int, "
         "checksum bigint",
+        sync_only=True,
     )
     k = W.partitionBy("width", "height", "checksum")
     ko = k.orderBy(
@@ -2114,7 +2123,7 @@ def h264_i4x4_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions import h264 as _h
 
     def make_blob(d):
-        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
+        mw, mh, crop_r, crop_b = _h264_geometry(d)
         return (_h.h264_encode_i4x4_rows(
             mw, mh, 40 + (7 * d) % 160,
             [(d + r) % 3 for r in range(1, mh)],
@@ -2122,8 +2131,7 @@ def h264_i4x4_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [[0, 1, -1][(d + 2 * r + 3 * q) % 3] for q in range(4)]
                 for r in range(1, mh)
             ],
-            crop_right=2 * (d % 4),
-            crop_bottom=2 * ((d // 5) % 3),
+            crop_right=crop_r, crop_bottom=crop_b,
         ),)
 
     return _synth_feed(
@@ -2154,27 +2162,6 @@ def m_h264_intra4x4(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
     return _decode_pictures(h264_i4x4_table_real(spark, sf_dir))
-
-
-def _decode_pictures(table: DataFrame) -> DataFrame:
-    """Decode each raw Annex-B picture blob in `table` to one
-    (doc_id, width, height, luma checksum) row — the decode rule of
-    m_h264_intra4x4 and m_h264_deblock."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import h264_decode
-
-    def decode(doc_id, payload):
-        fr = h264_decode(bytes(payload))
-        h, w = fr.y.shape
-        yield (
-            int(doc_id), int(w), int(h),
-            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-        )
-
-    return decode_blobs(
-        table, decode, "doc_id long, width int, height int, checksum bigint"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2276,19 +2263,14 @@ def h264_deblock_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     macroblock deblocks at the slice QP."""
     from streams_spark.functions import h264 as _h
 
-    mags = [0, 1, 2, 5, 9, 20, 26]
-
     def make_blob(d):
         mh = 2 + (d // 9) % 4
         la = (d % 7) - 3
-        levels = [
-            mags[(d + 2 * r) % 7] * (1 if (d + r) % 2 == 0 else -1)
-            for r in range(1, mh)
-        ]
+        _, _, crop_r, crop_b = _h264_geometry(d)
         return (_h.h264_encode_rows(
-            1, mh, 128 + _h.dc_offset(la), levels,
-            crop_right=2 * (d % 4),
-            crop_bottom=2 * ((d // 5) % 3),
+            1, mh, 128 + _h.dc_offset(la),
+            [_step_level(d, r) for r in range(1, mh)],
+            crop_right=crop_r, crop_bottom=crop_b,
             deblock=True, anchor_level=la,
         ),)
 
@@ -2413,15 +2395,8 @@ def h264_part_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions import mp4 as _m
 
     def make_blob(d):
-        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-        crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-        aus = [
-            _h.h264_encode_rows(
-                mw, mh, 40 + (7 * d) % 160,
-                [(d + r) % 3 for r in range(1, mh)],
-                crop_right=crop_r, crop_bottom=crop_b,
-            )
-        ]
+        mw, mh, crop_r, crop_b = _h264_geometry(d)
+        aus = [_h264_idr(d)]
         for f in range(1, 3 + (d // 27) % 2):
             row_modes = []
             for R in range(mh):
@@ -2562,19 +2537,13 @@ def h264_slices_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     disable_deblocking_filter_idc values."""
     from streams_spark.functions import h264 as _h
 
-    mags = [0, 1, 2, 5, 9, 20, 26]
-
     def make_blob(d):
         mh = 2 + (d // 9) % 4
-        levels = [
-            mags[(d + 2 * r) % 7] * (1 if (d + r) % 2 == 0 else -1)
-            for r in range(mh)
-        ]
+        _, _, crop_r, crop_b = _h264_geometry(d)
         return (_h.h264_encode_sliced_rows(
-            mh, levels,
+            mh, [_step_level(d, r) for r in range(mh)],
             deblock_idc=(d // 7) % 3,
-            crop_right=2 * (d % 4),
-            crop_bottom=2 * ((d // 5) % 3),
+            crop_right=crop_r, crop_bottom=crop_b,
         ),)
 
     return _synth_feed(
@@ -2600,26 +2569,8 @@ def m_h264_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import h264_decode
-    from streams_spark.functions.h264 import annexb_split
-
-    def decode(doc_id, payload):
-        buf = bytes(payload)
-        n_slices = sum(
-            1 for nal in annexb_split(buf)
-            if nal and (nal[0] & 0x1F) in (1, 5)
-        )
-        fr = h264_decode(buf)
-        h, w = fr.y.shape
-        yield (
-            int(doc_id), int(w), int(h), n_slices,
-            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
-        )
-
-    return decode_blobs(
-        h264_slices_table_real(spark, sf_dir), decode,
+    return _decode_pictures(
+        h264_slices_table_real(spark, sf_dir),
         "doc_id long, width int, height int, n_slices int, "
         "checksum bigint",
     )
@@ -2768,15 +2719,10 @@ def h264_fmo_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ASO)."""
     from streams_spark.functions import h264 as _h
 
-    mags = [0, 1, 2, 5, 9, 20, 26]
-
     def make_blob(d):
         mh, _, fmo, cycle = _fmo_doc_config(d)
         m = _h._fmo_fixture_map(mh, fmo, cycle)
-        levels = [
-            mags[(d + 3 * r) % 7] * (1 if (d + r) % 2 == 0 else -1)
-            for r in range(mh)
-        ]
+        levels = [_step_level(d, r, 3) for r in range(mh)]
         deltas = [
             [
                 ((d // (p + 1) + g) % 3) - 1
@@ -2812,26 +2758,14 @@ def m_h264_fmo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference contract: consumer-side decode of opaque payloads
     (/root/reference/server/messages.go:65)."""
-    import numpy as np
-
-    from streams_spark.functions.h264 import annexb_split
-    from streams_spark.functions.h264 import h264_decode
     from streams_spark.functions.h264 import h264_slice_group_sizes
 
     def decode(doc_id, payload):
-        buf = bytes(payload)
-        n_slices = sum(
-            1 for nal in annexb_split(buf)
-            if nal and (nal[0] & 0x1F) in (1, 5)
-        )
-        fr = h264_decode(buf)
-        d = int(doc_id)
-        _, map_type, _, _ = _fmo_doc_config(d)
-        sizes = h264_slice_group_sizes(buf)
-        h, w = fr.y.shape
+        r = _picture_record(doc_id, payload)
         yield (
-            d, int(w), int(h), int(map_type), n_slices, int(sizes[0]),
-            int(fr.y.astype(np.int64).sum()) % 1_000_000_007,
+            r["doc_id"], r["width"], r["height"],
+            _fmo_doc_config(r["doc_id"])[1], r["n_slices"],
+            int(h264_slice_group_sizes(bytes(payload))[0]), r["checksum"],
         )
 
     return decode_blobs(
@@ -3709,37 +3643,11 @@ def h264_rplm_table_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_spark.functions import h264 as _h
     from streams_spark.functions import mp4 as _m
 
-    def make_blob(d):
-        mw, mh = 2 + (d // 3) % 3, 2 + (d // 9) % 3
-        crop_r, crop_b = 2 * (d % 4), 2 * ((d // 5) % 3)
-        aus = [
-            _h.h264_encode_rows(
-                mw, mh, 40 + (7 * d) % 160,
-                [(d + r) % 3 for r in range(1, mh)],
-                crop_right=crop_r, crop_bottom=crop_b,
-                max_ref=2,
-            )
-        ]
-        for f in range(1, 5 + (d // 27) % 2):
-            mvx = ((5 * d + 3 * f) % 13) - 6
-            mvy = ((3 * d + 7 * f) % 23) - 11
-            levels = [[0, 1, -1][(d + 2 * f + r) % 3] for r in range(mh)]
-            multi = {} if f == 1 else {
-                "row_refs": [(d + f + r) % 2 for r in range(mh)],
-                "num_ref_active": 2,
-                "rplm": [(0, 1)] if f == 3 else None,
-                "mmco_forget": [0] if f == 3 else None,
-            }
-            aus.append(_h.h264_encode_p_rows(
-                mw, mh, (mvx, mvy), levels, frame_num=f, **multi,
-            ))
-        return (_m.mp4_mux(
-            aus, 16 * mw - crop_r, 16 * mh - crop_b, sync_every=len(aus),
-        ),)
-
     return _synth_feed(
         spark, sf_dir, "doch264rplm", (_h, _m), F.col("doc_id") % 6 == 5,
-        make_blob,
+        lambda d: _h264_gop_mp4(
+            d, 5 + (d // 27) % 2, max_ref=2, rplm_frame=3,
+        ),
     )
 
 

@@ -43,9 +43,27 @@ def physical_section(df: DataFrame) -> str:
 
 
 def operator_counts(df: DataFrame) -> Counter:
-    """Counts of physical operators in the (pre-AQE) formatted plan."""
+    """Counts of physical operators in the (pre-AQE) formatted plan.
+    Once `df` has run an action, its plan also lists AQE's final plan;
+    the nodes only that plan holds (query stages, AQE shuffle reads,
+    re-planned exchanges) are left out, so the counts are the same
+    before and after the query runs."""
     plan = formatted_plan(df)
-    return Counter(k for _, k in re.findall(r"\((\d+)\) (\w+)", plan))
+    final, initial, block = set(), set(), None
+    for line in plan.splitlines():
+        if "== Final Plan ==" in line:
+            block = final
+        elif "== Initial Plan ==" in line:
+            block = initial
+        elif not line.strip():
+            block = None
+        elif block is not None:
+            block.update(re.findall(r"\((\d+)\)", line))
+    final_only = final - initial
+    return Counter(
+        k for i, k in re.findall(r"\((\d+)\) (\w+)", plan)
+        if i not in final_only
+    )
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

@@ -1770,6 +1770,20 @@ def test_vector_search_plan_shape(spark, sf_dir, row, exchanges, broadcasts):
     )
 
 
+@pytest.mark.parametrize("row", ["s_recall_eval", "q9_profit_by_nation_year"])
+def test_operator_counts_ignore_the_aqe_final_plan(spark, sf_dir, row):
+    """operator_counts reads the pre-AQE plan whether or not the query
+    has run: after collect() the formatted plan also lists AQE's final
+    plan (query stages, AQE shuffle reads, re-planned exchanges), which
+    must not join the counts."""
+    from streams_spark.plans.inspect import operator_counts
+
+    df = REGISTRY[row].fn(spark, sf_dir)
+    before = operator_counts(df)
+    df.collect()
+    assert operator_counts(df) == before
+
+
 def test_benford_probabilities_and_coverage(spark, sf_dir):
     """Nine digits, observed frequencies sum to ~1, theoretical curve
     is the Benford distribution, and the audit flags TPC-H's uniform

@@ -188,6 +188,22 @@ def test_sample_past_eof_raises():
         mp4_demux(cut[: len(cut)] + moov)
 
 
+def test_sample_past_eof_raises_in_extract_samples():
+    # an stsz entry that runs past EOF fails in the one demux entry
+    # point, not later as a short slice inside a codec
+    from streams_spark.operators.multimodal import _h264_gop_aus
+
+    aus, w, h = _h264_gop_aus(2)
+    blob = bytearray(mp4_mux(aus, w, h, sync_every=len(aus)))
+    i = blob.index(b"stsz") + 4 + 4  # past type + version/flags
+    _, count = struct.unpack_from(">II", blob, i)
+    last = i + 8 + 4 * (count - 1)
+    (size,) = struct.unpack_from(">I", blob, last)
+    struct.pack_into(">I", blob, last, size + 5000)
+    with pytest.raises(Mp4Error, match=f"sample {count - 1} extends past EOF"):
+        extract_samples(bytes(blob))
+
+
 def test_stss_keyframes_only():
     frames, _ = _mux(nf=6, d=11, w=16, h=12)
     blob = mp4_mux(frames, 16, 12, sync_every=3)  # syncs: samples 1, 4
@@ -342,21 +358,11 @@ def _gop_aus(mw=3, mh=2, nf=4):
 
 def _decode_track(buf):
     from streams_spark.functions.h264 import H264Decoder
-    from streams_spark.functions.mp4 import (
-        avc_sample_to_annexb, avc_track_param_sets,
-    )
+    from streams_spark.functions.mp4 import access_units
 
     track = extract_samples(buf)
     dec = H264Decoder()
-    out = []
-    for i, s in enumerate(track.samples):
-        raw = buf[s.offset : s.offset + s.size]
-        if track.avcc is not None:
-            raw = avc_sample_to_annexb(raw, track.avcc.nal_length_size)
-            if i == 0:
-                raw = avc_track_param_sets(track.avcc) + raw
-        out.append(dec.decode(raw))
-    return track, out
+    return track, [dec.decode(au) for _, au in access_units(buf, track)]
 
 
 @pytest.mark.parametrize("nls", [2, 4])
@@ -377,6 +383,27 @@ def test_avc1_decodes_pixel_identical_to_annexb(nls):
     for a, b in zip(ref, got):
         assert (a.y == b.y).all()
         assert (a.cb == b.cb).all() and (a.cr == b.cr).all()
+
+
+def test_access_units_sync_only_gets_the_parameter_sets():
+    # a sync-only walk of an avc1 track keeps the IDR alone, with the
+    # avcC SPS/PPS in front of it: the unit decodes on its own to the
+    # same picture as the full walk's first one
+    from streams_spark.functions.h264 import h264_decode
+    from streams_spark.functions.mp4 import access_units, mp4_mux_avc
+
+    aus = _gop_aus()
+    buf = mp4_mux_avc(aus, 46, 30, nal_length_size=2, sync_every=len(aus))
+    track = extract_samples(buf)
+    kept = list(access_units(buf, track, sync_only=True))
+    assert [s.index for s, _ in kept] == [0]
+    assert kept[0][1] == aus[0]  # SPS + PPS + IDR slice, start-coded
+    _, ref = _decode_track(buf)
+    assert (h264_decode(kept[0][1]).y == ref[0].y).all()
+    # mp4v samples are already Annex-B: the walk hands them out as is
+    plain = mp4_mux(aus, 46, 30, sync_every=2)
+    units = access_units(plain, extract_samples(plain), sync_only=True)
+    assert [(s.index, au) for s, au in units] == [(0, aus[0]), (2, aus[2])]
 
 
 def test_avc1_samples_are_length_prefixed_not_annexb():

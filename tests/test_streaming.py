@@ -791,15 +791,17 @@ def test_compact_files_per_space_controls_file_count(spark, tmp_path):
 
 @pytest.mark.parametrize("builder", ["staged_blob_feed", "jpeg_table_real"])
 def test_staged_blob_key_tracks_synthesis_module(
-    monkeypatch, spark, sf_dir, builder
+    monkeypatch, tmp_path, spark, sf_dir, builder
 ):
-    """The staged-blob cache key must include multimodal.py itself (the
-    synthesis rules live there): editing geometry/spec formulas without
-    touching the codec modules must rebuild fixtures, not serve stale
-    blobs that no longer match the oracle (ADVICE r9). jpeg_table_real
-    once staged through a private copy that left the module out, so it
-    is checked through its own entry point too."""
+    """The staged-blob cache key must follow multimodal.py's source
+    (the synthesis rules live there): editing geometry/spec formulas
+    without touching the codec modules must rebuild fixtures, not serve
+    stale blobs that no longer match the oracle (ADVICE r9), while a
+    checkout or a `touch` that leaves the bytes alone must not rebuild
+    them. jpeg_table_real once staged through a private copy that left
+    the module out, so it is checked through its own entry point too."""
     import os
+    import shutil
 
     import streams_spark.operators.multimodal as mm
     import streams_spark.sources.feed_cache as fc
@@ -812,21 +814,35 @@ def test_staged_blob_key_tracks_synthesis_module(
         raise OSError("capture only")
 
     monkeypatch.setattr(fc, "cached_feed", fake_cached_feed)
-    with pytest.warns(RuntimeWarning):
-        if builder == "jpeg_table_real":
-            mm.jpeg_table_real(spark, sf_dir)
-            # the encoder variant is part of the feed name
-            assert captured["op"] == (
-                "docjpeg-streams_spark.functions.jpeg.jpeg_encode"
-            )
-        else:
-            sentinel = object()
-            out = mm._staged_blob_feed(
-                None, sf_dir, "blobtest", [mp3_mod], sentinel
-            )
-            assert out is sentinel
-    st = os.stat(mm.__file__)
-    assert f"{st.st_mtime_ns}:{st.st_size}" in captured["key"]
+    # key a private copy of the module's source, so the test can touch
+    # and edit it
+    copy = tmp_path / "multimodal.py"
+    shutil.copyfile(mm.__file__, copy)
+    monkeypatch.setattr(mm, "__file__", str(copy))
+
+    def key():
+        with pytest.warns(RuntimeWarning):
+            if builder == "jpeg_table_real":
+                mm.jpeg_table_real(spark, sf_dir)
+                # the encoder variant is part of the feed name
+                assert captured["op"] == (
+                    "docjpeg-streams_spark.functions.jpeg.jpeg_encode"
+                )
+            else:
+                sentinel = object()
+                out = mm._staged_blob_feed(
+                    None, sf_dir, "blobtest", [mp3_mod], sentinel
+                )
+                assert out is sentinel
+        return captured["key"]
+
+    before = key()
+    st = os.stat(copy)
+    os.utime(copy, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert key() == before
+    with open(copy, "a") as f:
+        f.write("\n# a synthesis-rule edit\n")
+    assert key() != before
 
 
 def test_drained_row_leaves_no_temp_view(spark, sf_dir):
