@@ -165,17 +165,28 @@ def peek(
 def peek_all(log: DataFrame) -> DataFrame:
     """Last entry of every (space, segment) — the Azure backend's
     denormalized LAST_ENTRY rows (/root/reference/server/azure/service.go:399-413)
-    as one aggregation: max_by over sequence, no window shuffle needed."""
+    as one aggregation: max_by over the _peek_key total order, no window
+    shuffle needed.
+
+    `sequence` is its own `F.max` beside the max_by struct of the other
+    columns. It is the same value (the key's leading field is sequence),
+    but as a separate aggregate it lets Catalyst's column pruning drop
+    the max_by when a caller reads only (space, segment, sequence), as
+    produce's tail lookup does: that scan reads segment and sequence
+    alone and computes no md5 digest, instead of every column of the
+    whole log."""
     cols = [c for c in log.columns if c not in ("space", "segment")]
     # single struct max_by: one coherent last entry per segment even
     # when the max sequence is duplicated, deterministic via the
     # _peek_key total order (see peek)
+    rest = [c for c in cols if c != "sequence"]
     return (
         log.groupBy("space", "segment")
-        .agg(F.max_by(F.struct(*cols), _peek_key(log, cols)).alias("e"))
-        .select(
-            "space", "segment", *[F.col(f"e.{c}").alias(c) for c in cols]
+        .agg(
+            F.max("sequence").alias("sequence"),
+            F.max_by(F.struct(*rest), _peek_key(log, cols)).alias("e"),
         )
+        .select("space", "segment", *[f"e.{c}" if c in rest else c for c in cols])
     )
 
 
@@ -428,10 +439,14 @@ def produce(
 
     Reference: Produce — /root/reference/client.go:126-147 with the server
     pipeline of server/pebble/service.go:296-335 (peek tails → validate
-    `seq == last+1` → commit batch → notify). Here: stamp + validate
-    (streaming/produce.py), one atomic `partitionBy('space')` parquet
-    append (the durable commit), then post-commit hub notification.
-    Rejects the WHOLE batch on any contiguity violation, like
+    `seq == last+1` → commit batch → notify). Here: ONE checkpoint of the
+    records, so validation and the write read the same rows; ONE
+    validation aggregate (`validate_batch`), whose collect is also the
+    SegmentStatus; ONE atomic `partitionBy('space')` parquet append of
+    the stamped checkpoint (`stamp_records`: current_timestamp(),
+    trx_id, trx_node, and trx_number from the sorted status rows) — the
+    durable commit; then post-commit hub notification. Rejects the WHOLE
+    batch on any contiguity violation, NULL sequences included, like
     ERR_SEQUENCE_MISMATCH aborts the reference's transaction.
 
     records: (space, segment, sequence, payload). last_sequences:
@@ -439,25 +454,13 @@ def produce(
     current log, or None for an empty log.
     """
     from streams_spark.store import write_event_log
-    from streams_spark.streaming.produce import (
-        segment_status,
-        stamp_records,
-        validate_batch,
-    )
+    from streams_spark.streaming.produce import stamp_records, validate_batch
 
-    # materialize the stamped batch ONCE: validation, the write, and the
-    # status agg would otherwise each re-run the join+window plan, and
-    # current_timestamp() would differ between the validated and written
-    # copies
-    stamped = stamp_records(
-        records, last_sequences=last_sequences
-    ).localCheckpoint()
-    validate_batch(stamped)
-    out = stamped.drop("last_sequence", "expected", "valid")
+    batch = records.localCheckpoint()
+    status = validate_batch(batch, last_sequences)
     # canonical layout by contract (partitioned by space, files sorted
     # by segment/sequence), not incidentally via upstream sort order
-    write_event_log(out, log_dir)
-    status = segment_status(out)
+    write_event_log(stamp_records(batch, status), log_dir)
     if hub is not None:
         hub.notify_batch(-1, [r.asDict() for r in status])
     return status
@@ -475,18 +478,21 @@ def publish(
     """Single-event append with auto-assigned next sequence.
 
     Reference: Publish — /root/reference/client.go:149-178 (peek last →
-    Sequence+1 → one-record Produce).
+    Sequence+1 → one-record Produce). Both one-row frames plan as
+    LocalRelations (`local_frame`), so a publish starts no Python workers.
     """
+    from streams_spark.streaming.produce import local_frame
+
+    last = 0
     if log is not None:
-        tail = get_segment_offset(log, space, segment).collect()[0]
-        last = tail.offset_sequence or 0
-    else:
-        last = 0
-    rec = spark.createDataFrame(
+        last = get_segment_offset(log, space, segment).collect()[0].offset_sequence
+    rec = local_frame(
+        spark,
         [(space, segment, last + 1, payload)],
         "space string, segment string, sequence long, payload binary",
     )
-    tails = spark.createDataFrame(
+    tails = local_frame(
+        spark,
         [(space, segment, last)],
         "space string, segment string, last_sequence long",
     )

@@ -47,7 +47,9 @@ def operator_counts(df: DataFrame) -> Counter:
     Once `df` has run an action, its plan also lists AQE's final plan;
     the nodes only that plan holds (query stages, AQE shuffle reads,
     re-planned exchanges) are left out, so the counts are the same
-    before and after the query runs."""
+    before and after the query runs. Only node headers, which start
+    their line, count: `count(1) windowspecdefinition(...)` inside a
+    Window's `Arguments:` line is no operator."""
     plan = formatted_plan(df)
     final, initial, block = set(), set(), None
     for line in plan.splitlines():
@@ -61,7 +63,7 @@ def operator_counts(df: DataFrame) -> Counter:
             block.update(re.findall(r"\((\d+)\)", line))
     final_only = final - initial
     return Counter(
-        k for i, k in re.findall(r"\((\d+)\) (\w+)", plan)
+        k for i, k in re.findall(r"^\((\d+)\) (\w+)", plan, re.M)
         if i not in final_only
     )
 

@@ -1784,6 +1784,17 @@ def test_operator_counts_ignore_the_aqe_final_plan(spark, sf_dir, row):
     assert operator_counts(df) == before
 
 
+def test_operator_counts_read_node_headers_only(spark, sf_dir):
+    """A Window's `Arguments:` line holds `count(1)
+    windowspecdefinition(...)`; only the node headers count, so the
+    two-window row reads two Windows and no phantom operator."""
+    from streams_spark.plans.inspect import operator_counts
+
+    counts = operator_counts(REGISTRY["m_video_pixel_dedup"].fn(spark, sf_dir))
+    assert counts["Window"] == 2
+    assert "windowspecdefinition" not in counts
+
+
 def test_benford_probabilities_and_coverage(spark, sf_dir):
     """Nine digits, observed frequencies sum to ~1, theoretical curve
     is the Benford distribution, and the audit flags TPC-H's uniform

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from streams_spark.registry import load_all
@@ -23,7 +25,7 @@ def test_entry_contract(spark):
     import importlib
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     mod = importlib.import_module("__spark_entry__")
     df = mod.entry(spark)
     assert df.count() > 0

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +22,8 @@ from streams_spark.streaming.produce import (
 )
 
 BASE_TS = dt.datetime(2024, 1, 1)
+RECS = "space string, segment string, sequence long, payload binary"
+TAILS = "space string, segment string, last_sequence long"
 
 
 def _entries(spark, space, segment, seqs):
@@ -79,39 +82,218 @@ def test_consumer_context_space_filter(spark, tmp_path):
 
 def test_stamp_records_valid_and_contiguous(spark):
     recs = spark.createDataFrame(
-        [("s", "g", i, b"x") for i in range(1, 6)],
-        "space string, segment string, sequence long, payload binary",
+        [("s", "g", i, b"x") for i in range(1, 6)], RECS
     )
-    stamped = stamp_records(recs)
-    assert stamped.where(~F.col("valid")).count() == 0
-    validate_batch(stamped)  # no raise
+    status = validate_batch(recs)  # no raise
+    assert status[0].asDict() == {
+        "space": "s", "segment": "g",
+        "first_sequence": 1, "last_sequence": 5, "n": 5,
+    }
+    stamped = stamp_records(recs, status)
+    assert stamped.columns == [
+        "space", "segment", "sequence", "payload",
+        "timestamp", "trx_id", "trx_node", "trx_number",
+    ]
+    rows = stamped.collect()
+    assert len(rows) == 5 and {r.trx_number for r in rows} == {1}
+    assert len({(r.timestamp, r.trx_id, r.trx_node) for r in rows}) == 1
 
 
 def test_stamp_records_rejects_gap(spark):
     recs = spark.createDataFrame(
-        [("s", "g", i, b"x") for i in [1, 2, 4]],
-        "space string, segment string, sequence long, payload binary",
+        [("s", "g", i, b"x") for i in [1, 2, 4]], RECS
     )
-    stamped = stamp_records(recs)
     with pytest.raises(SequenceError):
-        validate_batch(stamped)
+        validate_batch(recs)
 
 
 def test_stamp_records_resumes_from_tail(spark):
     recs = spark.createDataFrame(
-        [("s", "g", i, b"x") for i in [101, 102]],
-        "space string, segment string, sequence long, payload binary",
+        [("s", "g", i, b"x") for i in [101, 102]], RECS
     )
-    tails = spark.createDataFrame(
-        [("s", "g", 100)], "space string, segment string, last_sequence long"
-    )
-    validate_batch(stamp_records(recs, last_sequences=tails))
+    tails = spark.createDataFrame([("s", "g", 100)], TAILS)
+    validate_batch(recs, last_sequences=tails)
     # wrong tail → reject
-    bad_tails = spark.createDataFrame(
-        [("s", "g", 50)], "space string, segment string, last_sequence long"
-    )
+    bad_tails = spark.createDataFrame([("s", "g", 50)], TAILS)
     with pytest.raises(SequenceError):
-        validate_batch(stamp_records(recs, last_sequences=bad_tails))
+        validate_batch(recs, last_sequences=bad_tails)
+
+
+def test_validate_batch_rejects_duplicate_sequence(spark):
+    recs = spark.createDataFrame(
+        [("s", "g", i, b"x") for i in [1, 2, 2, 3]], RECS
+    )
+    with pytest.raises(SequenceError, match="got 2, expected 3"):
+        validate_batch(recs)
+
+
+def test_sequence_error_names_first_bad_segment_and_pair(spark):
+    """Message form `sequence mismatch in (space, segment): got X,
+    expected Y`, naming the first bad segment in (space, segment)
+    order and its smallest bad (sequence, expected) pair."""
+    recs = spark.createDataFrame(
+        [("s1", "g0", i, b"x") for i in [1, 2, 3]]
+        + [("s1", "g1", i, b"x") for i in [5, 6, 9]]
+        + [("s2", "g0", i, b"x") for i in [2]],
+        RECS,
+    )
+    tails = spark.createDataFrame([("s1", "g1", 4)], TAILS)
+    with pytest.raises(SequenceError) as err:
+        validate_batch(recs, last_sequences=tails)
+    assert str(err.value) == (
+        "sequence mismatch in (s1, g1): got 9, expected 7"
+    )
+
+
+@pytest.mark.parametrize("path", ["client_produce", "streaming_produce"])
+def test_produce_rejects_null_sequence(spark, tmp_path, path):
+    """A NULL sequence never equals the expected one: the batch is
+    rejected and nothing is written, on both commit paths."""
+    from streams_spark import client
+    from streams_spark.streaming.produce import streaming_produce
+
+    recs = spark.createDataFrame(
+        [("s0", "g0", 1, b"a"), ("s0", "g0", None, b"b"),
+         ("s0", "g0", 2, b"c")],
+        RECS,
+    )
+    log_dir = str(tmp_path / "log")
+    if path == "client_produce":
+        with pytest.raises(SequenceError, match="got None, expected 1"):
+            client.produce(recs, log_dir)
+    else:
+        records_dir = str(tmp_path / "records")
+        recs.coalesce(1).write.parquet(records_dir)
+        q = streaming_produce(
+            spark, records_dir, log_dir,
+            str(tmp_path / "ledger"), str(tmp_path / "ckpt"),
+        )
+        with pytest.raises(Exception, match="sequence mismatch"):
+            q.awaitTermination()
+    assert not os.path.exists(log_dir) or not [
+        n for n in os.listdir(log_dir) if not n.startswith((".", "_"))
+    ]
+
+
+def _two_by_two(spark, first):
+    return spark.createDataFrame(
+        [
+            (sp, seg, q, f"{sp}{seg}{q}".encode())
+            for sp in ("b", "a")
+            for seg in ("y", "x")
+            for q in range(first, first + 3)
+        ],
+        RECS,
+    )
+
+
+def test_produce_trx_number_is_rank_of_space_segment(spark, tmp_path):
+    """trx_number is the segment's 1-based rank by (space, segment)
+    within the batch, and one batch carries one trx_id."""
+    from streams_spark import client
+
+    log_dir = str(tmp_path / "log")
+    status = client.produce(_two_by_two(spark, 1), log_dir)
+    assert [(r.space, r.segment) for r in status] == [
+        ("a", "x"), ("a", "y"), ("b", "x"), ("b", "y"),
+    ]
+    rows = read_event_log(spark, log_dir).collect()
+    assert len(rows) == 12 and len({r.trx_id for r in rows}) == 1
+    assert {(r.space, r.segment): r.trx_number for r in rows} == {
+        ("a", "x"): 1, ("a", "y"): 2, ("b", "x"): 3, ("b", "y"): 4,
+    }
+
+
+# jobs one client.produce of the 2-space x 2-segment batch with tails
+# runs: checkpoint 1, validation 3 (tails aggregate, records shuffle,
+# result), write 3 (segment ranks broadcast, space shuffle, write). The
+# append path this replaced ran 12: a seg-rank distinct, window and
+# broadcast, a separate validation job and a separate status job.
+PRODUCE_JOBS = 7
+
+
+def test_produce_job_count(spark, tmp_path):
+    from streams_spark import client
+
+    log_dir = str(tmp_path / "log")
+    client.produce(_two_by_two(spark, 1), log_dir)
+    log = read_event_log(spark, log_dir)
+    tails = client.peek_all(log).select(
+        "space", "segment", F.col("sequence").alias("last_sequence")
+    )
+    batch = _two_by_two(spark, 4)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    status = client.produce(batch, log_dir, last_sequences=tails)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert {(r.first_sequence, r.last_sequence, r.n) for r in status} == {
+        (4, 6, 3)
+    }
+    assert len(jobs) <= PRODUCE_JOBS, len(jobs)
+
+
+def test_peek_all_tail_lookup_reads_only_sequence(spark, tmp_path):
+    """produce's tail lookup reads (space, segment, sequence) of
+    peek_all: column pruning drops the max_by, so the scan reads no
+    payload and computes no md5."""
+    from streams_spark import client
+    from streams_spark.plans.inspect import formatted_plan
+
+    log_dir = str(tmp_path / "log")
+    write_event_log(_entries(spark, "s0", "g0", range(1, 6)), log_dir)
+    log = read_event_log(spark, log_dir)
+    plan = formatted_plan(
+        client.peek_all(log).select("space", "segment", "sequence")
+    )
+    schemas = re.findall(r"ReadSchema: (\S+)", plan)
+    assert schemas == ["struct<segment:string,sequence:bigint>"], schemas
+    assert "md5" not in plan and "max_by" not in plan
+
+
+def test_peek_all_unchanged_on_duplicated_max_sequence(spark):
+    """The full peek_all rows equal the single struct max_by over the
+    _peek_key order, on copies of the max sequence that disagree on
+    payload (and a NULL payload copy)."""
+    from streams_spark import client
+    from streams_spark.schema import EVENT_LOG_SCHEMA
+
+    rows = [
+        ("s0", "g0", q, BASE_TS, trx, "node", 1, p, {})
+        for q, trx, p in (
+            (6, "trx0", b"p0"), (7, "trxA", b"pA"), (7, "trxB", b"pB"),
+            (7, "trxC", None),
+        )
+    ] + [("s1", "g0", 3, BASE_TS, "trxD", "node", 2, b"pD", {})]
+    log = spark.createDataFrame(rows, EVENT_LOG_SCHEMA)
+    cols = [c for c in log.columns if c not in ("space", "segment")]
+    want = (
+        log.groupBy("space", "segment")
+        .agg(F.max_by(F.struct(*cols), client._peek_key(log, cols)).alias("e"))
+        .select("space", "segment", *[F.col(f"e.{c}").alias(c) for c in cols])
+    )
+    got = client.peek_all(log)
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_publish_frames_plan_as_local_relations(spark, tmp_path, monkeypatch):
+    """publish builds its one-row record and tail frames as
+    LocalRelations, so it starts no Python workers."""
+    from streams_spark import client
+
+    seen = {}
+    real = client.produce
+
+    def spy(rec, log_dir, last_sequences=None, hub=None):
+        seen["rec"], seen["tails"] = rec, last_sequences
+        return real(rec, log_dir, last_sequences=last_sequences, hub=hub)
+
+    monkeypatch.setattr(client, "produce", spy)
+    st = client.publish(spark, str(tmp_path / "log"), "s0", "g0", b"x")
+    assert (st[0].first_sequence, st[0].last_sequence) == (1, 1)
+    for name in ("rec", "tails"):
+        plan = seen[name]._jdf.queryExecution().analyzed().toString()
+        assert plan.startswith("LocalRelation"), (name, plan)
 
 
 def test_idempotent_sink_skips_duplicate_batch(spark, tmp_path):
