@@ -35,12 +35,20 @@ token-set invariant); the md5 twins use hashes DuckDB reproduces, so
 their oracles value-check the whole approximate pipeline.
 
 Scale design: shingle-explode → shuffle on shingle/bucket → pair
-generation → verify. No driver-side loops, no cross join of the full
-corpus: candidate pairs come from co-bucketing, so cost is
-O(sum bucket²), not O(n²).
+generation → verify. No cross join of the full corpus: candidate pairs
+come from co-bucketing, so cost is O(sum bucket²), not O(n²).
+
+The graph rows (the two connected-components rows, survivors, graph
+stats, PageRank, transitive containment) are the only driver-side
+loops, and they share one: `_iterate` runs their rounds, checkpoints
+the carried state once per round and reads only scalars to decide
+convergence. All of them but the containment closure read one cached
+near-dup edge list, `dup_edges`.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -110,8 +118,11 @@ def d_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the approximate methods are tested against)
 # ---------------------------------------------------------------------------
 
-_NGRAM_JACCARD = """
-WITH d AS (
+def _shingles(d: str = "d") -> str:
+    """The two CTEs every shingle oracle starts from: `d` holds one text
+    per doc_id and `sh` its distinct 3-gram shingles, none for NULL
+    text. `d` names the first CTE."""
+    return f"""{d} AS (
   -- one text per doc_id (deterministic min): doc_id is the document
   -- identity, so duplicate physical rows (re-ingest) — even corrupt
   -- ones whose copies DISAGREE on text — must not change pair counts
@@ -126,8 +137,12 @@ WITH d AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
              i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
-  FROM d
-), ex AS (
+  FROM {d}
+)"""
+
+
+_NGRAM_JACCARD = f"""
+WITH {_shingles()}, ex AS (
   SELECT doc_id, unnest(shingles) AS shingle FROM sh
 ), pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -151,9 +166,10 @@ JACCARD_T = 0.5
 
 def dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached bidirected (src, dst) edge list of the near-dup pair graph
-    (both directions of every d_ngram_jaccard pair), shared by the graph
-    operators (min-label CC, PageRank, dup-graph stats). Materialized at
-    the SESSION shuffle width on first use."""
+    (both directions of every d_ngram_jaccard pair), the one input of
+    every graph row but the containment closure: both CC rows, cluster
+    survivors, dup-graph stats and PageRank. Materialized at the SESSION
+    shuffle width on first use."""
 
     def build() -> DataFrame:
         pairs = d_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
@@ -570,23 +586,7 @@ MINHASH_A = [((s * 2_654_435_761 + 1_013_904_223) % (1 << 30)) | 1 for s in rang
 MINHASH_B = [(s * 97_531 + 12_345) % MINHASH_P for s in range(NUM_PERM)]
 
 _MINHASH_MD5 = f"""
-WITH d AS (
-  -- one text per doc_id (deterministic min): doc_id is the document
-  -- identity, so duplicate physical rows (re-ingest) — even corrupt
-  -- ones whose copies DISAGREE on text — must not change pair counts
-  -- or cluster shapes (fuzz findings r6)
-  SELECT doc_id, string_split(text, ' ') AS w
-  -- text IS NOT NULL: split(NULL) has NO shingles on the Spark
-  -- side, while DuckDB's greatest(NULL,1)=1 would fabricate a ''
-  -- shingle and pair missing docs with empty docs
-  FROM (SELECT doc_id, min(text) AS text FROM documents
-        WHERE text IS NOT NULL GROUP BY doc_id)
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
-  FROM d
-), ex AS (
+WITH {_shingles()}, ex AS (
   SELECT doc_id, unnest(shingles) AS g FROM sh
 ), hashed AS (
   SELECT doc_id,
@@ -1045,30 +1045,18 @@ def d_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Duplicate-cluster formation: connected components over the near-dup graph
 # ---------------------------------------------------------------------------
 
-_DUP_CLUSTERS = """
-WITH RECURSIVE d AS (
-  -- one text per doc_id (deterministic min): doc_id is the document
-  -- identity, so duplicate physical rows (re-ingest) — even corrupt
-  -- ones whose copies DISAGREE on text — must not change pair counts
-  -- or cluster shapes (fuzz findings r6)
-  SELECT doc_id, string_split(text, ' ') AS w
-  -- text IS NOT NULL: split(NULL) has NO shingles on the Spark
-  -- side, while DuckDB's greatest(NULL,1)=1 would fabricate a ''
-  -- shingle and pair missing docs with empty docs
-  FROM (SELECT doc_id, min(text) AS text FROM documents
-        WHERE text IS NOT NULL GROUP BY doc_id)
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
-  FROM d
-), ex AS (
+def _near_edges(near: str) -> str:
+    """The near-dup pair graph as oracle CTEs, to follow `_shingles`:
+    `near` holds the pairs (doc_a < doc_b) with 3-gram Jaccard >= 0.5
+    and `edges` both directions of each, the oracle twin of
+    `dup_edges`."""
+    return f""", ex AS (
   SELECT doc_id, unnest(shingles) AS shingle FROM sh
 ), pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
   FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY doc_a, doc_b
-), near AS (
+), {near} AS (
   SELECT p.doc_a, p.doc_b
   FROM pairs p
   JOIN sh sa ON sa.doc_id = p.doc_a
@@ -1076,10 +1064,14 @@ WITH RECURSIVE d AS (
   WHERE CAST(p.n_common AS DOUBLE)
         / (len(sa.shingles) + len(sb.shingles) - p.n_common) >= 0.5
 ), edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM near
+  SELECT doc_a AS src, doc_b AS dst FROM {near}
   UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM near
-), nodes AS (
+  SELECT doc_b AS src, doc_a AS dst FROM {near}
+)"""
+
+
+_DUP_CLUSTERS = f"""
+WITH RECURSIVE {_shingles()}{_near_edges("near")}, nodes AS (
   SELECT DISTINCT src AS node FROM edges
 ), reach(node, label) AS (
   SELECT node, node FROM nodes
@@ -1109,6 +1101,12 @@ def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     see also large-star/small-star for skewed degree distributions) —
     every round is an edges ⋈ labels hash join partitioned on node id.
     localCheckpoint() truncates the growing lineage each round.
+
+    Where it wins: on near-clique clusters, the shape this corpus has.
+    At sf0.1 (477 rows) it took 1.14 s median over 6 warm reps, against
+    1.45 s for d_dup_clusters_star over the same cached edge list. On
+    long chains the star row wins: a 128-hop chain at 10x took 304.3 s
+    here and 20.9 s there (SCALING.md, round 5).
 
     Bare-session cost control (same pattern as d_transitive_containment):
     the loop's per-round joins/aggregates execute EAGERLY here, so a
@@ -1140,51 +1138,59 @@ def _graph_width(spark: SparkSession, n_rows: int):
     return scoped_conf(spark, key, min(width, int(spark.conf.get(key))))
 
 
+def _iterate(state: DataFrame, step, done, max_rounds: int) -> DataFrame:
+    """The round loop of every graph row: `state = step(state)` until
+    `done(state, rounds)` holds, and return that state. Each round
+    localCheckpoints the new state, so lineage never deepens past one
+    step, and `done` reads only scalars (a count, a checksum, emptiness)
+    on the driver. Raises RuntimeError after `max_rounds` rounds without
+    `done`: a silent non-converged return would hand back wrong clusters
+    or a truncated closure, and diverge from the recursive-CTE oracles."""
+    for rounds in range(1, max_rounds + 1):
+        state = step(state).localCheckpoint()
+        if done(state, rounds):
+            return state
+    raise RuntimeError(
+        f"{step.__qualname__} did not converge in {max_rounds} rounds"
+    )
+
+
 def cc_min_label(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """Min-label propagation CC loop over a BIDIRECTED (src, dst) edge
-    list: rounds = graph diameter, one shuffle-join + one aggregate per
-    round, labels localCheckpoint-ed. Returns (node, label). The caller
+    """Min-label propagation CC over a BIDIRECTED (src, dst) edge list:
+    rounds = graph diameter, one shuffle-join + one aggregate per round,
+    converged when no label changes. Returns (node, label). The caller
     owns shuffle-width scoping and edge materialization; the skew-stress
     harness (tools/stress_cc_skew.py) drives this directly on synthetic
     hub graphs."""
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    n_changed = 0
-    for _ in range(max_rounds):  # >= any real dup-cluster diameter
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.src == labels.node)
             .groupBy(F.col("dst").alias("node2"))
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-                (F.col("label") != F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                )).alias("changed"),
-            )
-        ).localCheckpoint()
-        n_changed = new_labels.where(F.col("changed")).count()
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            break
-    if n_changed != 0:
-        # A silent non-converged return would assign wrong clusters to any
-        # chain with diameter > max_rounds (and diverge from the
-        # recursive-CTE oracle); fail loudly instead.
-        raise RuntimeError(
-            f"dup-cluster label propagation did not converge in "
-            f"{max_rounds} rounds ({n_changed} labels still changing); "
-            f"raise the round cap or use cc_star"
+        new = F.least(
+            F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
         )
-    return labels
+        return labels.join(
+            neighbor_min, labels.node == F.col("node2"), "left"
+        ).select(
+            "node",
+            new.alias("label"),
+            (F.col("label") != new).alias("changed"),
+        )
+
+    labels = (
+        edges.select(F.col("src").alias("node")).distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint()
+    )
+    return _iterate(
+        labels,
+        step,
+        lambda labels, _: labels.where(F.col("changed")).count() == 0,
+        max_rounds,
+    ).drop("changed")
 
 
 # ---------------------------------------------------------------------------
@@ -1395,23 +1401,7 @@ def d_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAINMENT_T = 0.8
 
 _CONTAINMENT = f"""
-WITH d AS (
-  -- one text per doc_id (deterministic min): doc_id is the document
-  -- identity, so duplicate physical rows (re-ingest) — even corrupt
-  -- ones whose copies DISAGREE on text — must not change pair counts
-  -- or cluster shapes (fuzz findings r6)
-  SELECT doc_id, string_split(text, ' ') AS w
-  -- text IS NOT NULL: split(NULL) has NO shingles on the Spark
-  -- side, while DuckDB's greatest(NULL,1)=1 would fabricate a ''
-  -- shingle and pair missing docs with empty docs
-  FROM (SELECT doc_id, min(text) AS text FROM documents
-        WHERE text IS NOT NULL GROUP BY doc_id)
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
-  FROM d
-), ex AS (
+WITH {_shingles()}, ex AS (
   SELECT doc_id, len(shingles) AS n, unnest(shingles) AS shingle FROM sh
 ), pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1622,8 +1612,10 @@ def d_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Transitive containment closure (recursive CTE over the excerpt DAG)
 # ---------------------------------------------------------------------------
 
-_TRANSITIVE_SQL = """
-WITH RECURSIVE closure(src, dst, depth) AS (
+# min-hop closure over a `cont_edges` (src, dst) relation: the tail of
+# the d_transitive_containment oracle, and on its own (_TRANSITIVE_SQL)
+# the reference the tests hold _closure_semi_naive to
+_CLOSURE = """closure(src, dst, depth) AS (
   SELECT src, dst, 1 AS depth FROM cont_edges
   UNION ALL
   SELECT c.src, e.dst, c.depth + 1
@@ -1634,24 +1626,10 @@ SELECT src AS excerpt_id, dst AS container_id,
 FROM closure GROUP BY src, dst
 """
 
+_TRANSITIVE_SQL = "\nWITH RECURSIVE " + _CLOSURE
+
 _TRANSITIVE_CONTAINMENT = f"""
-WITH RECURSIVE d AS (
-  -- one text per doc_id (deterministic min): doc_id is the document
-  -- identity, so duplicate physical rows (re-ingest) — even corrupt
-  -- ones whose copies DISAGREE on text — must not change pair counts
-  -- or cluster shapes (fuzz findings r6)
-  SELECT doc_id, string_split(text, ' ') AS w
-  -- text IS NOT NULL: split(NULL) has NO shingles on the Spark
-  -- side, while DuckDB's greatest(NULL,1)=1 would fabricate a ''
-  -- shingle and pair missing docs with empty docs
-  FROM (SELECT doc_id, min(text) AS text FROM documents
-        WHERE text IS NOT NULL GROUP BY doc_id)
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
-  FROM d
-), ex AS (
+WITH RECURSIVE {_shingles()}, ex AS (
   SELECT doc_id, len(shingles) AS n, unnest(shingles) AS shingle FROM sh
 ), pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1668,66 +1646,56 @@ WITH RECURSIVE d AS (
          CASE WHEN (na < nb) OR (na = nb AND doc_a < doc_b)
               THEN doc_b ELSE doc_a END AS dst
   FROM cont
-), closure(src, dst, depth) AS (
-  SELECT src, dst, 1 AS depth FROM cont_edges
-  UNION ALL
-  SELECT c.src, e.dst, c.depth + 1
-  FROM closure c JOIN cont_edges e ON e.src = c.dst
-)
-SELECT src AS excerpt_id, dst AS container_id,
-       CAST(min(depth) AS INTEGER) AS min_hops
-FROM closure GROUP BY src, dst
-"""
+), {_CLOSURE}"""
 
 
-# Below this edge count the semi-naive loop wins: the recursive CTE
-# bypasses AQE, so every level pays its static task-launch width even
-# when a level carries a handful of rows (~7 s bare-session at sf0.01,
-# all scheduling). The DataFrame loop goes through AQE, which collapses
-# near-empty shuffles, and BFS levels on a sparse DAG are few.
-_TC_SEMI_NAIVE_MAX_EDGES = 1_000_000
-
-
-def _closure_semi_naive(edges: DataFrame) -> DataFrame:
+def _closure_semi_naive(edges: DataFrame, n_edges: int) -> DataFrame:
     """Semi-naive BFS transitive closure over a DAG edge list
-    (src, dst): delta-frontier join per level, per-level distinct +
-    anti-join against the known closure, so each (src, dst) pair is
-    emitted exactly once at its minimum hop count. Same loop skeleton
-    as d_dup_clusters (localCheckpoint per round truncates lineage).
+    (src, dst) of `n_edges` rows: delta-frontier join per level,
+    per-level distinct + anti-join against the known closure, so each
+    (src, dst) pair is emitted exactly once at its minimum hop count.
+    One level per `_iterate` round, until the frontier is empty; a DAG's
+    longest path is at most its edge count, so `n_edges + 1` rounds
+    always suffice.
 
     Scale: work per level is |frontier| x avg-out-degree — the
     semi-naive delta property (only NEW pairs join forward) keeps dense
     diamonds from re-deriving known pairs level after level.
 
     The hop-1 seed is distinct()-ed: duplicate input edges would
-    otherwise emit duplicate closure rows here while the dense-path
-    recursive CTE dedups via GROUP BY src,dst — both physical
-    strategies must share the set-semantics contract."""
+    otherwise emit duplicate closure rows here, while the recursive-CTE
+    reference (_TRANSITIVE_SQL) dedups via GROUP BY src, dst."""
     edges = edges.select("src", "dst").distinct()
-    closure = edges.withColumn("min_hops", F.lit(1))
-    frontier = closure.select("src", "dst").localCheckpoint()
-    # `known` is the anti-join target: a plain union of the per-level
-    # CHECKPOINTED frontiers, so its lineage stays shallow without
+    # the checkpointed frontiers, hop 1 first. `known`, the anti-join
+    # target, is their plain union, so its lineage stays shallow without
     # re-materializing the whole growing closure every level (the old
     # closure.localCheckpoint() per level was one extra full write of
     # O(closure) rows per level — measured 1.09 s -> 0.74 s for the
     # sf0.1 containment closure, r11 opt round)
-    known = frontier
-    depth = 1
-    while not frontier.isEmpty():
-        depth += 1
-        frontier = (
+    levels = []
+
+    def step(frontier: DataFrame) -> DataFrame:
+        levels.append(frontier)
+        known = reduce(DataFrame.unionByName, levels)
+        return (
             frontier.alias("f")
             .join(edges.alias("e"), F.col("e.src") == F.col("f.dst"))
             .select(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
             .distinct()
             .join(known, ["src", "dst"], "left_anti")
-            .localCheckpoint()
         )
-        known = known.unionByName(frontier)
-        closure = closure.unionByName(
-            frontier.withColumn("min_hops", F.lit(depth))
-        )
+
+    last = _iterate(
+        edges.localCheckpoint(), step, lambda f, _: f.isEmpty(), n_edges + 1
+    )
+    closure = reduce(
+        DataFrame.unionByName,
+        (
+            f.withColumn("min_hops", F.lit(hops))
+            for hops, f in enumerate(levels[1:] + [last], start=2)
+        ),
+        edges.withColumn("min_hops", F.lit(1)),
+    )
     return closure.select(
         F.col("src").alias("excerpt_id"),
         F.col("dst").alias("container_id"),
@@ -1744,26 +1712,17 @@ def d_transitive_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-set (ties by id), which makes the graph a DAG so the
     closure terminates.
 
-    Two physical strategies, picked by measured edge count:
-    - sparse (<= _TC_SEMI_NAIVE_MAX_EDGES): semi-naive BFS DataFrame
-      loop (_closure_semi_naive). Each level runs under AQE, so
-      near-empty frontier shuffles coalesce to a handful of tasks —
-      this is what the recursive CTE cannot do (CTE levels execute at
-      the static shuffle width, turning a sparse sf0.01 closure into
-      ~7 s of task-launch overhead).
-    - dense: the RECURSIVE CTE (Spark 4, _TRANSITIVE_SQL). When levels
-      genuinely carry millions of rows the per-level fixed cost is
-      amortized and the CTE avoids the loop's per-level driver round
-      trip and isEmpty() action; path multiplicity on dense DAGs is
-      bounded by the GROUP BY min(depth) at the end.
+    The closure is the semi-naive BFS loop (_closure_semi_naive). Each
+    level runs under AQE, so near-empty frontier shuffles coalesce to a
+    handful of tasks — what a recursive CTE cannot do: its levels run
+    at the static shuffle width, which turned a sparse sf0.01 closure
+    into ~7 s of task-launch overhead. The oracle states the closure as
+    that recursive CTE.
 
-    Bare-session cost control (dense path): the edge list is
-    localCheckpoint-ed so recursion levels rescan a materialized table
-    instead of re-executing the shingle-join subplan per level, and the
-    closure is materialized eagerly while a scoped shuffle-width cap
-    (sized from the real edge count) is in force — the conf must not be
-    restored before execution, hence the eager checkpoint rather than a
-    save/restore decorator around a lazy frame.
+    Bare-session cost control: the edge list is localCheckpoint-ed, so
+    every level rescans a materialized table instead of re-executing
+    the shingle-join subplan, and the levels run under a shuffle-width
+    cap sized from the real edge count.
     """
     # pair generation at session width; only the closure runs at the
     # edge-sized width (see d_dup_clusters for the rationale)
@@ -1795,14 +1754,7 @@ def d_transitive_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_edges = edges.count()
     with _graph_width(spark, n_edges):
-        if n_edges <= _TC_SEMI_NAIVE_MAX_EDGES:
-            return _closure_semi_naive(edges)
-        edges.createOrReplaceTempView("cont_edges")
-        # Recursive CTE execution bypasses AQE, so every level's join
-        # pays the STATIC conf width in task launches regardless of
-        # data size — the scoped width is what makes the dense path
-        # affordable in a bare session.
-        return spark.sql(_TRANSITIVE_SQL).localCheckpoint()
+        return _closure_semi_naive(edges, n_edges)
 
 
 # ---------------------------------------------------------------------------
@@ -1849,17 +1801,18 @@ def d_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregate. Nothing corpus-sized beyond the label join.
     """
     clusters = d_dup_clusters(spark, sf_dir)
-    # identity-deduped quality join: duplicate doc_id rows must not
-    # inflate n_members via join fan-out (fuzz finding r6)
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("doc_id")
-        .agg(F.max("n_chars").alias("n_chars"))
-    )
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("n_chars"), F.asc_nulls_last("doc_id")
     )
-    m = clusters.join(docs, "doc_id").withColumn("rk", F.row_number().over(w))
+    # identity-deduped quality join: duplicate doc_id rows must not
+    # inflate n_members via join fan-out (fuzz finding r6). Deduped
+    # after the join, so the aggregate is cluster-sized, not corpus-sized
+    m = (
+        clusters.join(load_table(spark, sf_dir, "documents"), "doc_id")
+        .groupBy("cluster_id", "doc_id")
+        .agg(F.max("n_chars").alias("n_chars"))
+        .withColumn("rk", F.row_number().over(w))
+    )
     out = m.groupBy("cluster_id").agg(
         F.max(F.when(F.col("rk") == 1, F.col("doc_id"))).alias(
             "survivor_doc_id"
@@ -1870,14 +1823,10 @@ def d_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # the labeled frame is dup-graph-sized (tiny next to the corpus):
-    # materialize the window+agg at a width sized to it rather than the
-    # session's corpus-scale width (lazy return would otherwise execute
-    # after the conf scope below is gone — same reasoning as
-    # d_transitive_containment)
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    if int(spark.conf.get(shuffle_conf)) <= 32:
-        return out
-    with scoped_conf(spark, shuffle_conf, 32):
+    # materialize the window+agg at the width of the graph rows, not the
+    # session's corpus-scale width (a lazy return would execute after
+    # the conf scope below is gone)
+    with _graph_width(spark, dup_edges(spark, sf_dir).count()):
         return out.localCheckpoint()
 
 
@@ -1914,18 +1863,14 @@ def d_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-propagation join). All counts are integers, so the oracle
     comparison is exact by construction.
 
-    Scale shape: reuses the cached shingle/pair machinery (one inverted-
-    index join) and the CC labels; everything downstream aggregates
-    dup-graph-sized frames to single rows that cross-join broadcast.
+    Scale shape: reads the cached edge list (dup_edges) and the CC
+    labels; everything downstream aggregates dup-graph-sized frames to
+    single rows that cross-join broadcast. Each pair is one src < dst
+    edge, and a node's degree is its edge count as src.
     """
-    pairs = d_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    edges = dup_edges(spark, sf_dir)
     clusters = d_dup_clusters(spark, sf_dir)
-    deg = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     csize = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1934,7 +1879,9 @@ def d_dup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_clusters"),
         F.max("cnt").alias("max_cluster_size"),
     )
-    b = pairs.agg(F.count(F.lit(1)).alias("n_edges"))
+    b = edges.where(F.col("src") < F.col("dst")).agg(
+        F.count(F.lit(1)).alias("n_edges")
+    )
     c = deg.agg(F.max("d").alias("max_degree"))
     return a.crossJoin(F.broadcast(b)).crossJoin(F.broadcast(c)).select(
         "n_nodes", "n_edges", "n_clusters", "max_cluster_size", "max_degree"
@@ -1951,41 +1898,8 @@ PR_DAMP = 0.85
 # pair CTEs shared with _NGRAM_JACCARD; the chain r0..r{PR_ITERS} unrolls
 # the power iteration so DuckDB can replay it exactly (recursive CTEs
 # cannot re-aggregate per step).
-_PR_BASE = """
-WITH dd AS (
-  -- one text per doc_id (deterministic min): doc_id is the document
-  -- identity, so duplicate physical rows (re-ingest) — even corrupt
-  -- ones whose copies DISAGREE on text — must not change pair counts
-  -- or cluster shapes (fuzz findings r6)
-  SELECT doc_id, string_split(text, ' ') AS w
-  -- text IS NOT NULL: split(NULL) has NO shingles on the Spark
-  -- side, while DuckDB's greatest(NULL,1)=1 would fabricate a ''
-  -- shingle and pair missing docs with empty docs
-  FROM (SELECT doc_id, min(text) AS text FROM documents
-        WHERE text IS NOT NULL GROUP BY doc_id)
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
-  FROM dd
-), ex AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY doc_a, doc_b
-), jac AS (
-  SELECT p.doc_a, p.doc_b
-  FROM pairs p
-  JOIN sh sa ON sa.doc_id = p.doc_a
-  JOIN sh sb ON sb.doc_id = p.doc_b
-  WHERE CAST(p.n_common AS DOUBLE)
-        / (len(sa.shingles) + len(sb.shingles) - p.n_common) >= 0.5
-), edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM jac
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM jac
-), deg AS (
+_PR_BASE = f"""
+WITH {_shingles("dd")}{_near_edges("jac")}, deg AS (
   SELECT src, count(*) AS out_deg FROM edges GROUP BY src
 ), nn AS (
   SELECT CAST(count(*) AS DOUBLE) AS n FROM deg
@@ -2031,9 +1945,9 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: each iteration is ONE hash join of the edge list with the
     rank vector (both partitioned on src) + ONE partial-agg'd shuffle
     onto dst — the standard Pregel-as-joins formulation. The edge list
-    is cached once; ranks are localCheckpoint'd every other round so
-    the plan never deepens past two iterations; the driver sees only
-    the node-count scalar (same class as the CC convergence counter).
+    is cached once; one `_iterate` round is two iterations, so ranks
+    are localCheckpoint'd every other iteration and the plan never
+    deepens past two; the driver sees only the node-count scalar.
     Shuffle width is sized from the measured edge count, conf restored
     on exit (the d_dup_clusters bare-session pattern).
     """
@@ -2058,8 +1972,9 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("src").alias("doc_id"), F.lit(1.0 / n).alias("rank")
         ).localCheckpoint()
         ed = edges.join(deg, "src")  # (src, dst, out_deg), reused every round
-        for i in range(1, PR_ITERS + 1):
-            ranks = (
+
+        def power(ranks: DataFrame) -> DataFrame:
+            return (
                 ed.join(ranks, ed.src == ranks.doc_id)
                 .groupBy(F.col("dst").alias("doc_id2"))
                 .agg(
@@ -2070,8 +1985,16 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .withColumnRenamed("doc_id2", "doc_id")
             )
-            if i % 2 == 0:
-                ranks = ranks.localCheckpoint()
+
+        # one round = two power iterations: a checkpoint after every
+        # iteration measured slower (sf0.1: 2.50-2.66 s against
+        # 2.21-2.29 s, same output)
+        ranks = _iterate(
+            ranks,
+            lambda ranks: power(power(ranks)),
+            lambda _, rounds: rounds == PR_ITERS // 2,
+            PR_ITERS // 2,
+        )
         # materialize the final join INSIDE the conf scope: the returned
         # frame is lazy, and its rank/deg join would otherwise execute
         # after the scope restores the session's full shuffle width
@@ -2097,23 +2020,7 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 TFIDF_COS_T = 0.8
 
 _TFIDF_COSINE = f"""
-WITH d AS (
-  -- one text per doc_id (deterministic min): doc_id is the document
-  -- identity, so duplicate physical rows (re-ingest) — even corrupt
-  -- ones whose copies DISAGREE on text — must not change pair counts
-  -- or cluster shapes (fuzz findings r6)
-  SELECT doc_id, string_split(text, ' ') AS w
-  -- text IS NOT NULL: split(NULL) has NO shingles on the Spark
-  -- side, while DuckDB's greatest(NULL,1)=1 would fabricate a ''
-  -- shingle and pair missing docs with empty docs
-  FROM (SELECT doc_id, min(text) AS text FROM documents
-        WHERE text IS NOT NULL GROUP BY doc_id)
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(w) - 2, 1) + 1),
-             i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingles
-  FROM d
-), ex AS (
+WITH {_shingles()}, ex AS (
   SELECT doc_id, unnest(shingles) AS f FROM sh
 ), df AS (
   SELECT f, count(*) AS df FROM ex GROUP BY f
@@ -2262,21 +2169,23 @@ def d_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     in logarithmic rounds and hot-node fan-in shrinks as the graph
     contracts toward stars.
 
+    Where it wins: on long chains, whose diameter sets min-label's round
+    count. A 128-hop chain at 10x took 20.9 s here and 304.3 s with
+    min-label (SCALING.md, round 5). On this corpus's near-clique
+    clusters min-label wins: at sf0.1 this row took 1.45 s median over
+    6 warm reps, against 1.14 s for d_dup_clusters.
+
     Each round is two groupBy-min + join emissions — partial-agg'd,
     no collect_list, no driver data. Fixpoint = canonical edge set
     unchanged (count + xor/mod-sum order-free checksums); the driver sees only
-    those scalars. Same scoped shuffle-width + localCheckpoint
-    discipline as the sibling; loud failure at the round cap."""
-    # pair generation at session width; only the star loop is capped
-    # (see d_dup_clusters for the rationale)
-    pairs = d_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    those scalars. Same scoped shuffle-width + `_iterate` runner as the
+    sibling, and the same cached edge list (dup_edges): its src > dst
+    half is the canonical form."""
     # canonical directed form: (u, v) with v < u ("child points down")
     cur = (
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("u"),
-            F.least("doc_a", "doc_b").alias("v"),
-        )
-        .distinct()
+        dup_edges(spark, sf_dir)
+        .where(F.col("src") > F.col("dst"))
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .localCheckpoint()
     )
     with _graph_width(spark, cur.count()):
@@ -2284,14 +2193,15 @@ def d_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cc_star(cur: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """Alternating large-star/small-star CC loop over a canonical
-    (u, v) edge list with v < u. Returns (doc_id, cluster_id) with
-    roots = component minima — identical output contract to
-    cc_min_label after relabeling. The caller owns shuffle-width
-    scoping; the loop localCheckpoints each round and the final output
-    (so the last graph-sized shuffle runs inside the caller's conf
-    scope, not lazily at restored session width). The skew-stress
-    harness (tools/stress_cc_skew.py) drives this directly."""
+    """Alternating large-star/small-star CC over a canonical (u, v)
+    edge list with v < u, converged when a round leaves the edge set's
+    checksum unchanged. Returns (doc_id, cluster_id) with roots =
+    component minima — identical output contract to cc_min_label after
+    relabeling. The caller owns shuffle-width scoping; the final output
+    is localCheckpoint-ed too, so the last graph-sized shuffle runs
+    inside the caller's conf scope, not lazily at restored session
+    width. The skew-stress harness (tools/stress_cc_skew.py) drives
+    this directly."""
 
     def checksum(e: DataFrame):
         row = e.agg(
@@ -2301,9 +2211,7 @@ def cc_star(cur: DataFrame, max_rounds: int = 20) -> DataFrame:
         ).first()
         return (row.n, row.h1, row.h2)
 
-    sig = checksum(cur)
-    converged = False
-    for _ in range(max_rounds):  # O(log n) expected
+    def step(cur: DataFrame) -> DataFrame:
         # LARGE-STAR over the bidirected view: for each u,
         # m = min(N(u) ∪ {u}); emit (v, m) for neighbors v > u
         bidir = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -2319,25 +2227,22 @@ def cc_star(cur: DataFrame, max_rounds: int = 20) -> DataFrame:
         # SMALL-STAR over the (u > v) orientation: for each u,
         # m = min(N⁻(u)); re-hang every smaller neighbor and u on m
         mins2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
-        ss = (
+        return (
             ls.join(mins2, "u")
             .where(F.col("v") != F.col("mn"))
             .select(F.col("v").alias("u"), F.col("mn").alias("v"))
             .union(mins2.select("u", F.col("mn").alias("v")))
             .distinct()
-            .localCheckpoint()
         )
-        new_sig = checksum(ss)
-        cur = ss
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        raise RuntimeError(
-            f"large-star/small-star did not converge in {max_rounds} "
-            f"rounds; the dup graph is adversarial — raise the cap"
-        )
+
+    sig = checksum(cur)
+
+    def done(cur: DataFrame, _) -> bool:
+        nonlocal sig
+        prev, sig = sig, checksum(cur)
+        return sig == prev
+
+    cur = _iterate(cur, step, done, max_rounds)  # O(log n) rounds expected
     roots = cur.select(F.col("v").alias("u"), F.col("v").alias("v")).distinct()
     return (
         cur.union(roots)

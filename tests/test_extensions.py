@@ -914,10 +914,13 @@ def test_transitive_containment_multi_hop(spark, sf_dir):
         [(10, 20), (20, 30), (30, 40)], "src long, dst long"
     )
     edges.createOrReplaceTempView("cont_edges")
-    got = {
-        (r.excerpt_id, r.container_id): r.min_hops
-        for r in spark.sql(_TRANSITIVE_SQL).collect()
-    }
+    try:
+        got = {
+            (r.excerpt_id, r.container_id): r.min_hops
+            for r in spark.sql(_TRANSITIVE_SQL).collect()
+        }
+    finally:
+        spark.catalog.dropTempView("cont_edges")
     assert got == {
         (10, 20): 1, (20, 30): 1, (30, 40): 1,
         (10, 30): 2, (20, 40): 2, (10, 40): 3,
@@ -1979,8 +1982,8 @@ def test_dsir_selects_target_like_documents(spark, sf_dir):
 
 
 def test_closure_semi_naive_matches_recursive_cte(spark):
-    """The sparse-path semi-naive loop and the dense-path recursive CTE
-    are the same operator: on a DAG with a chain, a diamond (two paths
+    """The semi-naive loop and the recursive-CTE reference are the same
+    operator: on a DAG with a chain, a diamond (two paths
     of different length to the same node) and a disconnected edge, both
     emit identical (pair -> min_hops) maps; min_hops is the SHORTEST
     path even when a longer derivation exists."""
@@ -2001,13 +2004,16 @@ def test_closure_semi_naive_matches_recursive_cte(spark):
 
     got_iter = {
         (r.excerpt_id, r.container_id): r.min_hops
-        for r in _closure_semi_naive(edges).collect()
+        for r in _closure_semi_naive(edges, len(edge_rows)).collect()
     }
     edges.createOrReplaceTempView("cont_edges")
-    got_cte = {
-        (r.excerpt_id, r.container_id): r.min_hops
-        for r in spark.sql(_TRANSITIVE_SQL).collect()
-    }
+    try:
+        got_cte = {
+            (r.excerpt_id, r.container_id): r.min_hops
+            for r in spark.sql(_TRANSITIVE_SQL).collect()
+        }
+    finally:
+        spark.catalog.dropTempView("cont_edges")
     assert got_iter == got_cte
     assert got_iter[(5, 6)] == 1  # shortest path wins over 5->7->6
     assert got_iter[(5, 8)] == 2  # via the direct 5->6 edge, not 3 hops
@@ -2018,10 +2024,60 @@ def test_closure_semi_naive_empty_edges(spark):
     from streams_spark.operators.dedup import _closure_semi_naive
 
     out = _closure_semi_naive(
-        spark.createDataFrame([], "src long, dst long")
+        spark.createDataFrame([], "src long, dst long"), 0
     )
     assert out.count() == 0
     assert out.columns == ["excerpt_id", "container_id", "min_hops"]
+
+
+def test_closure_semi_naive_chain_longer_than_cc_cap(spark):
+    """A 30-edge chain takes 30 rounds, more than the CC loops' cap of
+    20: the closure's cap follows its edge count."""
+    from streams_spark.operators.dedup import _closure_semi_naive
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "src long, dst long"
+    )
+    got = {
+        (r.excerpt_id, r.container_id): r.min_hops
+        for r in _closure_semi_naive(edges, 30).collect()
+    }
+    assert got[(0, 30)] == 30
+    assert len(got) == 30 * 31 // 2
+
+
+def _chain6(spark):
+    """The 6-node path 0-1-2-3-4-5 as canonical (u, v < u) edges and as
+    a bidirected (src, dst) list."""
+    from pyspark.sql import functions as F
+
+    canon = spark.createDataFrame(
+        [(i + 1, i) for i in range(5)], "u long, v long"
+    )
+    bidir = canon.select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
+    ).union(canon.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+    return canon, bidir
+
+
+def test_cc_min_label_raises_at_round_cap(spark):
+    """Min-label needs a round per hop of the chain; two rounds cannot
+    converge, so the loop raises instead of returning wrong labels."""
+    from streams_spark.operators.dedup import cc_min_label
+
+    _, bidir = _chain6(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cc_min_label(bidir, max_rounds=2)
+
+
+def test_cc_star_raises_at_round_cap(spark):
+    """One star round reshapes the chain, so its checksum changes and
+    a cap of one round raises."""
+    from streams_spark.operators.dedup import cc_star
+
+    canon, _ = _chain6(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cc_star(canon, max_rounds=1)
 
 
 def test_grid_percentile_matches_exact_rank_on_grid(spark, sf_dir):
