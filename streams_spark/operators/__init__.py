@@ -1,5 +1,21 @@
 
 
+def half_up(col, dp=4):
+    """Round `col` to `dp` decimals, halves up: floor(x * 10^dp + 0.5)
+    / 10^dp. The driver hashes values exactly, so every double
+    aggregate is rounded in BOTH engines (2 dp for money sums, 4 dp for
+    averages and ratios). round() will not do where a value can land on
+    an exact midpoint (an avg over a small denominator, a ratio of
+    small counts): Spark's round is HALF_UP and DuckDB's is HALF_EVEN,
+    so the two diverge there (hit at sf0.1 on q2's 1257.85775).
+
+    Oracle-side twin: floor(x * 10000 + 0.5) / 10000 (dp = 4).
+    """
+    from pyspark.sql import functions as F
+
+    return F.floor(col * 10**dp + F.lit(0.5)) / 10**dp
+
+
 def finite_or_null(col):
     """Non-finite measurement contract (r9 NaN/Inf fuzz class): NaN and
     +/-Inf are treated as MISSING — normalized to NULL so every

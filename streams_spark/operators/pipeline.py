@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from streams_spark.functions.text_funcs import tokens
+from streams_spark.operators import half_up
 from streams_spark.registry import register
 from streams_spark.sources.tables import load_table
 
@@ -1040,9 +1041,6 @@ def p_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("fp"),
     )
 
-    def r4(c):
-        return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
     base = sized.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
@@ -1050,7 +1048,7 @@ def p_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("lang").alias("n_langs"),
         F.min("n_tokens").cast("long").alias("min_tokens"),
         F.max("n_tokens").cast("long").alias("max_tokens"),
-        r4(F.avg("n_tokens")).alias("mean_tokens"),
+        half_up(F.avg("n_tokens")).alias("mean_tokens"),
     )
     # fp IS NOT NULL: two missing texts are not duplicates of each
     # other (fuzz finding r6)

@@ -1,4 +1,5 @@
-"""Relational analytics surface (SURVEY.md §2.3 ABSENT rows + §7 M2).
+"""Relational analytics surface: SQL features beyond the TPC-H shapes
+(SURVEY.md §2.3 ABSENT rows + §7 M2; the TPC-H rows are in tpch.py).
 
 The reference has no joins/aggregations/windows (its only aggregation is
 the SeekLT top-1 peek — /root/reference/server/pebble/service.go:820-840);
@@ -6,16 +7,10 @@ this module provides the standard OLAP operator set on the driver's
 TPC-H-ish tables, each paired with a DuckDB oracle.
 
 Determinism rules used throughout (driver hashes values order-insensitively
-but exactly): every double aggregate is rounded (2dp for money sums, 4dp
-for averages/ratios) in BOTH engines; every top-k has a unique-key
-tiebreak; DuckDB integer sums are cast to BIGINT to match Spark's LongType.
-
-Scale notes: explicit broadcasts only on scale-invariant frames
-(nation/region, 1-row aggregates); supplier/customer/part joins are left
-to Parquet-stats + AQE, which broadcast them at harness scale and fall
-back to shuffle joins when they outgrow the threshold; fact-fact joins
-(orders⋈lineitem) shuffle on the join key, which AQE re-plans at runtime;
-aggregations are partial (map-side combine) by construction in Spark.
+but exactly): every double aggregate is rounded in BOTH engines
+(`operators.half_up` where a value can land on a midpoint); every top-k
+has a unique-key tiebreak; DuckDB integer sums are cast to BIGINT to match
+Spark's LongType.
 """
 
 from __future__ import annotations
@@ -25,477 +20,50 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from streams_spark.functions.text_funcs import tokens as tokens_fn
-from streams_spark.operators import finite_or_null
+from streams_spark.operators import finite_or_null, half_up
+from streams_spark.operators.tpch import during, revenue, with_nation
 from streams_spark.registry import register
 from streams_spark.sources.tables import load_table
 
 
 # ---------------------------------------------------------------------------
-# q1: full-scan grouped aggregation (TPC-H Q1 shape)
-# ---------------------------------------------------------------------------
-
-_Q1 = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2)                                  AS sum_qty,
-       round(sum(l_extendedprice), 2)                             AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)          AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)
-                                                                  AS sum_charge,
-       floor(avg(l_quantity) * 10000 + 0.5) / 10000               AS avg_qty,
-       floor(avg(l_extendedprice) * 10000 + 0.5) / 10000          AS avg_price,
-       floor(avg(l_discount) * 10000 + 0.5) / 10000               AS avg_disc,
-       count(*)                                                   AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-@register("q1_pricing_summary", oracle=_Q1)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            # floor rule, not round(): avg of small-denominator values
-            # lands on exact 4dp midpoints where HALF_UP (Spark) and
-            # HALF_EVEN (DuckDB) diverge — same fix as q2/w_gap_fill
-            (F.floor(F.avg("l_quantity") * 10000 + F.lit(0.5)) / 10000).alias("avg_qty"),
-            (F.floor(F.avg("l_extendedprice") * 10000 + F.lit(0.5)) / 10000).alias("avg_price"),
-            (F.floor(F.avg("l_discount") * 10000 + F.lit(0.5)) / 10000).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q3: 3-way join + top-k (TPC-H Q3 shape)
-# ---------------------------------------------------------------------------
-
-_Q3 = """
-SELECT l_orderkey,
-       -- exact integer 1e-4 accumulation, same rationale as q9: a
-       -- double sum straddled a .005 midpoint differently per engine
-       -- under seed-11 money jitter
-       floor((sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-                       AS BIGINT)) + 50) / 100) / 100 AS revenue,
-       o_orderdate, o_orderpriority
-FROM customer, orders, lineitem
-WHERE c_mktsegment = 'BUILDING'
-  AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-  AND l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-"""
-
-
-@register("q3_shipping_priority", oracle=_Q3)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cutoff = F.lit("1998-03-15 00:00:00").cast("timestamp")
-    cust = load_table(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff)
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff)
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        # exact integer 1e-4 accumulation (q9's pattern): int64 addition
-        # is order-free, so the 2-dp rounding cannot flip with the
-        # partition/merge order of a double sum
-        .agg(
-            (
-                F.floor(
-                    (
-                        F.sum(
-                            F.round(
-                                F.col("l_extendedprice")
-                                * (1 - F.col("l_discount"))
-                                * 10000
-                            ).cast("long")
-                        )
-                        + 50
-                    )
-                    / 100
-                )
-                / 100
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q5: 6-way join (TPC-H Q5 shape)
-# ---------------------------------------------------------------------------
-
-_Q5 = """
-SELECT n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM customer, orders, lineitem, supplier, nation, region
-WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND l_suppkey = s_suppkey
-  AND c_nationkey = s_nationkey AND s_nationkey = n_nationkey
-  AND n_regionkey = r_regionkey AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY n_name
-"""
-
-
-@register("q5_local_supplier_volume", oracle=_Q5)
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = load_table(spark, sf_dir, "nation")
-    supplier = load_table(spark, sf_dir, "supplier")
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    # stats/AQE broadcast the dim sides at this SF; the fact-fact join
-    # (lineitem ⋈ orders) shuffles on orderkey
-    dim = (
-        supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .select("s_suppkey", "s_nationkey", "n_name")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(
-            dim,
-            (li.l_suppkey == dim.s_suppkey)
-            & (customer.c_nationkey == dim.s_nationkey),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q6: selective scan-aggregate (TPC-H Q6 shape)
-# ---------------------------------------------------------------------------
-
-_Q6 = """
-SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-  AND l_discount >= 0.05 AND l_discount <= 0.07
-  AND l_quantity < 24
-"""
-
-
-@register("q6_forecast_revenue", oracle=_Q6)
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        ).agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            )
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q7: bi-nation volume (TPC-H Q7 shape)
-# ---------------------------------------------------------------------------
-
-_Q7 = """
-SELECT supp_nation, cust_nation, l_year, round(sum(volume), 2) AS revenue
-FROM (
-  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         CAST(year(l_shipdate) AS INTEGER) AS l_year,
-         l_extendedprice * (1 - l_discount) AS volume
-  FROM supplier, lineitem, orders, customer, nation n1, nation n2
-  WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
-    AND c_custkey = o_custkey
-    AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
-    AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-) shipping
-GROUP BY supp_nation, cust_nation, l_year
-"""
-
-
-@register("q7_nation_volume", oracle=_Q7)
-def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = nation.select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
-    )
-    supplier = load_table(spark, sf_dir, "supplier")
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .where(
-            (
-                (F.col("supp_nation") == "NATION_1")
-                & (F.col("cust_nation") == "NATION_2")
-            )
-            | (
-                (F.col("supp_nation") == "NATION_2")
-                & (F.col("cust_nation") == "NATION_1")
-            )
-        )
-    )
-    return (
-        joined.withColumn("l_year", F.year("l_shipdate"))
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q9: profit by nation/year (TPC-H Q9 shape, adapted: no partsupp table)
-# ---------------------------------------------------------------------------
-
-_Q9 = """
-SELECT n_name AS nation_name, CAST(year(o_orderdate) AS INTEGER) AS o_year,
-       floor((sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-                       AS BIGINT)) + 50) / 100) / 100 AS profit
-FROM part, supplier, lineitem, orders, nation
-WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
-  AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey
-  AND p_name LIKE '%red%'
-GROUP BY nation_name, o_year
-"""
-
-
-@register("q9_profit_by_nation_year", oracle=_Q9)
-def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (adapted: no partsupp). Profit is accumulated in
-    EXACT integer 1e-4 units, not a double sum: l_extendedprice and
-    l_discount are 2-dp, so each row's ext*(1-disc) lies on the 1e-4
-    grid and both engines quantize it to the SAME int64 (the double
-    product is identical bit-for-bit; round() just snaps the ~1e-9 fp
-    residue back to the grid). Int64 addition is order-free, so the
-    group sum cannot drift with partition/merge order — the double-sum
-    formulation flipped a rounded cent on two (nation, year) groups
-    under seed-6 money jitter (fuzz class: cross-engine fp summation
-    trees straddling a .005 boundary). The final 2-dp rounding is pure
-    integer arithmetic ((s+50)/100 then /100), so no tie can re-enter
-    through the division; group sums stay < 2^53, exact under the
-    double-typed floor()."""
-    part = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%red%"))
-    supplier = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    sn = supplier.join(
-        F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey
-    ).select("s_suppkey", F.col("n_name").alias("nation_name"))
-    q4 = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-    ).cast("long")
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(sn, li.l_suppkey == sn.s_suppkey)
-        .withColumn("o_year", F.year("o_orderdate"))
-        .groupBy("nation_name", "o_year")
-        .agg(
-            (F.floor((F.sum(q4) + 50) / 100) / 100).alias("profit")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q10: returned-item revenue, top 20 customers (TPC-H Q10 shape)
-# ---------------------------------------------------------------------------
-
-_Q10 = """
-SELECT c_custkey, c_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       round(c_acctbal, 2) AS c_acctbal, n_name, c_mktsegment
-FROM customer, orders, lineitem, nation
-WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
-GROUP BY c_custkey, c_name, c_acctbal, n_name, c_mktsegment
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-"""
-
-
-@register("q10_returned_items", oracle=_Q10)
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name", "c_mktsegment")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-        .select(
-            "c_custkey",
-            "c_name",
-            "revenue",
-            F.round("c_acctbal", 2).alias("c_acctbal"),
-            "n_name",
-            "c_mktsegment",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q13: outer join + count distribution (TPC-H Q13 shape)
-# ---------------------------------------------------------------------------
-
-_Q13 = """
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer LEFT OUTER JOIN orders
-    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-  GROUP BY c_custkey
-) c_orders
-GROUP BY c_count
-"""
-
-
-@register("q13_order_distribution", oracle=_Q13)
-def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        customer.join(orders, customer.c_custkey == orders.o_custkey, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-# ---------------------------------------------------------------------------
-# q14: conditional aggregation ratio (TPC-H Q14 shape)
-# ---------------------------------------------------------------------------
-
-_Q14 = """
-SELECT round(
-         100.0 * sum(CASE WHEN p_type = 'PROMO'
-                          THEN l_extendedprice * (1 - l_discount)
-                          ELSE 0 END)
-         / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_revenue
-FROM lineitem, part
-WHERE l_partkey = p_partkey
-  AND l_shipdate >= TIMESTAMP '1997-06-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1997-07-01 00:00:00'
-"""
-
-
-@register("q14_promo_revenue", oracle=_Q14)
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = load_table(spark, sf_dir, "part")
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1997-06-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
-    )
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .agg(
-            F.round(
-                100.0
-                * F.sum(F.when(F.col("p_type") == "PROMO", disc_price).otherwise(0.0))
-                / F.sum(disc_price),
-                4,
-            ).alias("promo_revenue")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q18: large-volume customers (TPC-H Q18 shape — having over grouped join)
-# ---------------------------------------------------------------------------
-
-_Q18 = """
-SELECT c_custkey, c_name, o_orderkey, o_orderdate,
-       round(o_totalprice, 2) AS o_totalprice,
-       round(sum(l_quantity), 2) AS total_qty
-FROM customer, orders, lineitem
-WHERE c_custkey = o_custkey AND o_orderkey = l_orderkey
-GROUP BY c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice
-HAVING sum(l_quantity) > 300
-"""
-
-
-@register("q18_large_volume_customer", oracle=_Q18)
-def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .groupBy("c_custkey", "c_name", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.sum("l_quantity").alias("raw_qty"))
-        .where(F.col("raw_qty") > 300)
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            "o_orderdate",
-            F.round("o_totalprice", 2).alias("o_totalprice"),
-            F.round("raw_qty", 2).alias("total_qty"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # Grouping sets / rollup / cube
 # ---------------------------------------------------------------------------
+
+
+def _with_grand_total(group, keys: tuple[str, ...], measure, name: str) -> DataFrame:
+    """`group(*keys)` (a frame's rollup or cube) aggregated to
+    round(sum(measure), 2) AS `name` and count(*) AS n, with SQL-standard
+    empty-input semantics: the () grouping set is a global aggregate, so
+    it emits its row (count 0, NULL sums) even over an empty table.
+    Spark's Expand-based rollup/cube emits nothing on empty input (no
+    rows to expand — degenerate-fixture fuzz class), so a zero-valued ()
+    row is synthesized — but ONLY when the input is empty: for non-empty
+    input Spark's own () row is kept, because re-deriving it from the
+    subtotal tier changes the floating-point summation tree vs the
+    oracle's whole-input sum and can flip a cent at a 2-dp rounding
+    boundary (seeded-fuzz class). The grouped aggregate is
+    localCheckpoint'd — it is k rows — so the () existence probe is a
+    trivial job, not a second scan of the input."""
+    base = (
+        group(*keys)
+        .agg(
+            F.round(F.sum(measure), 2).alias(name),
+            F.count(F.lit(1)).alias("n"),
+            F.grouping_id().alias("gid"),
+        )
+        .localCheckpoint()
+    )
+    out = base.select(*keys, name, "n")
+    if base.where(F.col("gid") == (1 << len(keys)) - 1).limit(1).count() == 0:
+        zero = base.sparkSession.range(1).select(
+            *(F.lit(None).cast("string").alias(k) for k in keys),
+            F.lit(None).cast("double").alias(name),
+            F.lit(0).cast("long").alias("n"),
+        )
+        out = out.unionByName(zero)
+    return out
+
 
 _ROLLUP = """
 SELECT l_returnflag, l_linestatus,
@@ -508,38 +76,10 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 
 @register("q_rollup_revenue", oracle=_ROLLUP)
 def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ROLLUP with SQL-standard empty-input semantics: the ()
-    grouping set is a global aggregate, so it emits its row (count 0,
-    NULL sums) even over an empty table. Spark's Expand-based rollup
-    emits nothing on empty input (no rows to expand — degenerate-fixture
-    fuzz class), so a zero-valued () row is synthesized — but ONLY when
-    the input is empty: for non-empty input Spark's own () row is kept,
-    because re-deriving it from the subtotal tier changes the
-    floating-point summation tree vs the oracle's whole-input sum and
-    can flip a cent at a 2-dp rounding boundary (seeded-fuzz class).
-    The rollup aggregate is localCheckpoint'd — it is k rows — so the
-    () existence probe is a trivial job, not a second lineitem scan."""
     li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    base = (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(rev), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n"),
-            F.grouping_id().alias("gid"),
-        )
-        .localCheckpoint()
+    return _with_grand_total(
+        li.rollup, ("l_returnflag", "l_linestatus"), revenue(), "revenue"
     )
-    out = base.select("l_returnflag", "l_linestatus", "revenue", "n")
-    if base.where(F.col("gid") == 3).limit(1).count() == 0:
-        zero = spark.range(1).select(
-            F.lit(None).cast("string").alias("l_returnflag"),
-            F.lit(None).cast("string").alias("l_linestatus"),
-            F.lit(None).cast("double").alias("revenue"),
-            F.lit(0).cast("long").alias("n"),
-        )
-        out = out.unionByName(zero)
-    return out
 
 
 _CUBE = """
@@ -553,32 +93,10 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 @register("q_cube_orders", oracle=_CUBE)
 def q_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY CUBE with the same empty-input () row as
-    q_rollup_revenue (see there): Spark's Expand emits no () row over an
-    empty table where SQL-standard CUBE emits one, so a zero row is
-    synthesized for empty input only — Spark's native () row is kept
-    otherwise (re-derivation changes the fp summation tree and can flip
-    a rounded cent)."""
     orders = load_table(spark, sf_dir, "orders")
-    base = (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("total"),
-            F.count(F.lit(1)).alias("n"),
-            F.grouping_id().alias("gid"),
-        )
-        .localCheckpoint()
+    return _with_grand_total(
+        orders.cube, ("o_orderstatus", "o_orderpriority"), "o_totalprice", "total"
     )
-    out = base.select("o_orderstatus", "o_orderpriority", "total", "n")
-    if base.where(F.col("gid") == 3).limit(1).count() == 0:
-        zero = spark.range(1).select(
-            F.lit(None).cast("string").alias("o_orderstatus"),
-            F.lit(None).cast("string").alias("o_orderpriority"),
-            F.lit(None).cast("double").alias("total"),
-            F.lit(0).cast("long").alias("n"),
-        )
-        out = out.unionByName(zero)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -827,13 +345,8 @@ WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00'
 def q_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
 
-    def keys(lo: str | None, hi: str | None) -> DataFrame:
-        df = orders
-        if lo:
-            df = df.where(F.col("o_orderdate") >= F.lit(lo).cast("timestamp"))
-        if hi:
-            df = df.where(F.col("o_orderdate") < F.lit(hi).cast("timestamp"))
-        return df.select("o_custkey")
+    def keys(lo: str, hi: str | None) -> DataFrame:
+        return orders.where(during("o_orderdate", lo, hi)).select("o_custkey")
 
     # SQL set-op precedence: INTERSECT binds tighter than EXCEPT, and both
     # are DISTINCT ops — .intersect/.subtract have the same semantics.
@@ -1024,7 +537,7 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parsed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("k").cast("long").alias("sum_k"),
-        (F.floor(F.avg("k") * 10000 + F.lit(0.5)) / 10000).alias("avg_k"),
+        half_up(F.avg("k")).alias("avg_k"),
         F.max("k").alias("max_k"),
         # k % 10 has a <=19-value domain (k%10 in [-9,9], +10 -> a
         # unique bit 1..19 per value), so ONE long bitmap per group
@@ -1708,11 +1221,9 @@ def q_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    base = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .select("n_name", "o_orderpriority", "o_totalprice")
+    joined = orders.join(customer, orders.o_custkey == customer.c_custkey)
+    base = with_nation(spark, sf_dir, joined, "c_nationkey").select(
+        "n_name", "o_orderpriority", "o_totalprice"
     )
     counts = base.groupBy("n_name", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -1867,7 +1378,7 @@ def q_variant_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_high"),
-            (F.floor(F.avg("k") * 10000 + F.lit(0.5)) / 10000).alias("avg_k"),
+            half_up(F.avg("k")).alias("avg_k"),
             F.max("k").alias("max_k"),
         )
     )
@@ -2311,9 +1822,6 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = digits.agg(F.count(F.lit(1)).cast("double").alias("n"))
 
-    def r4(c):
-        return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
     benford = F.log10(1.0 + 1.0 / F.col("d"))
     return (
         digits.crossJoin(F.broadcast(tot))
@@ -2322,9 +1830,9 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("d").alias("digit"),
             "n_values",
-            r4(F.col("n_values") / F.col("n")).alias("observed"),
-            r4(benford).alias("benford"),
-            r4(F.abs(F.col("n_values") / F.col("n") - benford)).alias(
+            half_up(F.col("n_values") / F.col("n")).alias("observed"),
+            half_up(benford).alias("benford"),
+            half_up(F.abs(F.col("n_values") / F.col("n") - benford)).alias(
                 "abs_dev"
             ),
         )
@@ -2336,6 +1844,33 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 KMV_K = 64
+_KMV_U = 1 << 60  # hash universe: 15 hex chars = 60 bits
+
+
+def _kmv_hash(key):
+    """The sketch's 60-bit hash of a key: the first 15 hex digits of
+    md5(key as a string), read as a long. Oracle twin:
+    CAST(('0x' || substr(md5(CAST(key AS VARCHAR)), 1, 15)) AS BIGINT)."""
+    return F.conv(F.substring(F.md5(key.cast("string")), 1, 15), 16, 10).cast(
+        "long"
+    )
+
+
+def _kmv_estimate(n, theta):
+    """The KMV distinct-count estimate (k-1) * U / theta, rounded half
+    up, from the k-th smallest hash `theta`; a group holding fewer than
+    k hashes (`n` < KMV_K) is counted exactly."""
+    return F.when(n < KMV_K, n).otherwise(
+        F.floor(F.lit(KMV_K - 1) * F.lit(float(_KMV_U)) / theta + F.lit(0.5))
+    )
+
+
+def _kmv_smallest(hashed: DataFrame, group: str) -> DataFrame:
+    """The KMV_K smallest hashes `h` of each `group`, ranked in `rn`."""
+    w = Window.partitionBy(group).orderBy("h")
+    return hashed.withColumn("rn", F.row_number().over(w)).where(
+        F.col("rn") <= KMV_K
+    )
 
 _KMV_DISTINCT = f"""
 WITH hashed AS (
@@ -2390,39 +1925,23 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     hashed = (
         orders.where(F.col("o_custkey").isNotNull())
-        .select(
-            "o_orderpriority",
-            F.conv(
-                F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15),
-                16, 10,
-            )
-            .cast("long")
-            .alias("h"),
-        )
+        .select("o_orderpriority", _kmv_hash(F.col("o_custkey")).alias("h"))
         .distinct()
     )
-    w = Window.partitionBy("o_orderpriority").orderBy("h")
     sk = (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= KMV_K)
+        _kmv_smallest(hashed, "o_orderpriority")
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_in_sketch"), F.max("h").alias("hk"))
     )
     exact = orders.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("exact_distinct")
     )
-    est = F.when(F.col("n_in_sketch") < KMV_K, F.col("n_in_sketch")).otherwise(
-        F.floor(
-            (KMV_K - 1)
-            * F.lit(float(1 << 60))
-            / F.col("hk")
-            + F.lit(0.5)
-        ).cast("long")
-    )
     return sk.join(exact, "o_orderpriority").select(
         "o_orderpriority",
         "exact_distinct",
-        est.cast("long").alias("kmv_estimate"),
+        _kmv_estimate(F.col("n_in_sketch"), F.col("hk"))
+        .cast("long")
+        .alias("kmv_estimate"),
     )
 
 
@@ -2430,7 +1949,6 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # intersection/union estimation (the theta-sketch set-op story). Every
 # intermediate is md5-derived integer or IEEE-double arithmetic shared
 # by both engines, so the oracle value-checks the ESTIMATES themselves.
-_KMV_U = 1 << 60  # hash universe: 15 hex chars = 60 bits
 
 _KMV_SETOPS = f"""
 WITH d AS (
@@ -2547,15 +2065,8 @@ def q_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    hashed = d.withColumn(
-        "h",
-        F.conv(F.substring(F.md5(F.col("c").cast("string")), 1, 15), 16, 10)
-        .cast("long"),
-    )
-    w = Window.partitionBy("p").orderBy("h")
     s = (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= KMV_K)
+        _kmv_smallest(d.withColumn("h", _kmv_hash(F.col("c"))), "p")
         .select("p", "h")
         .localCheckpoint()  # |groups| x k rows, reused by 3 consumers
     )
@@ -2644,12 +2155,7 @@ def q_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("exact_union"),
         F.floor(cb * u_f / theta + F.lit(0.5)).cast("long").alias("kmv_inter"),
-        F.when(F.col("nu") < KMV_K, F.col("nu"))
-        .otherwise(
-            F.floor(F.lit(KMV_K - 1) * u_f / F.col("thu") + F.lit(0.5))
-        )
-        .cast("long")
-        .alias("kmv_union"),
+        _kmv_estimate(F.col("nu"), F.col("thu")).cast("long").alias("kmv_union"),
     )
 
 
@@ -2822,9 +2328,7 @@ def q_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return agg.select(
         "flag",
-        (F.floor(F.col("raw_mean") * 100 + F.lit(0.5)) / 100).alias(
-            "trimmed_mean_price"
-        ),
+        half_up(F.col("raw_mean"), 2).alias("trimmed_mean_price"),
         (F.col("n") - 2 * F.floor(F.col("n") / 10)).cast("long").alias(
             "n_kept"
         ),
@@ -3069,15 +2573,8 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "min_cents",
         "max_cents",
-        (
-            F.floor(
-                F.col("sum_cents").cast("double")
-                / F.col("n_events")
-                / 100
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        half_up(
+            F.col("sum_cents").cast("double") / F.col("n_events") / 100
         ).alias("mean_value"),
     )
 
@@ -3152,10 +2649,7 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     is kept here because the oracle can then check every value."""
     orders = load_table(spark, sf_dir, "orders")
     src = orders.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_orderpriority",
+        *_PROFILE_COLS[:4],
         F.col("o_orderdate").cast("string").alias("o_orderdate"),
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from streams_spark import cache
 from streams_spark.functions.vector import as_double_array, dot, norm
-from streams_spark.operators import vector_hygiene
+from streams_spark.operators import half_up, vector_hygiene
 from streams_spark.registry import register
 from streams_spark.sources.tables import load_table
 
@@ -1400,15 +1400,12 @@ def s_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def r4(c):
-        return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
     return ex.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
-        r4(F.avg("v")).alias("mean_v"),
-        r4(F.stddev_samp("v")).alias("std_v"),
-        r4(F.min("v")).alias("min_v"),
-        r4(F.max("v")).alias("max_v"),
+        half_up(F.avg("v")).alias("mean_v"),
+        half_up(F.stddev_samp("v")).alias("std_v"),
+        half_up(F.min("v")).alias("min_v"),
+        half_up(F.max("v")).alias("max_v"),
     )
 
 

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from streams_spark.operators import finite_or_null
+from streams_spark.operators import finite_or_null, half_up
+from streams_spark.operators.tpch import revenue, with_nation
 from streams_spark.registry import register
 from streams_spark.sources.tables import load_table
 
@@ -47,16 +48,11 @@ WHERE rnk <= 3
 def w_topk_suppliers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
+    joined = li.join(supplier, li.l_suppkey == supplier.s_suppkey)
     supp_rev = (
-        li.join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
+        with_nation(spark, sf_dir, joined, "s_nationkey")
         .groupBy("s_suppkey", "s_name", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
+        .agg(F.round(F.sum(revenue()), 2).alias("revenue"))
     )
     w = Window.partitionBy("n_name").orderBy(F.desc("revenue"), F.col("s_suppkey"))
     return (
@@ -1720,9 +1716,6 @@ def w_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(cents_col).cast("double") / F.col(n_col) / 100,
         )
 
-    def r4(c):
-        return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
     return (
         cells.join(F.broadcast(dow_eff), "dow")
         .join(F.broadcast(hod_eff), "hod")
@@ -1731,8 +1724,8 @@ def w_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dow",
             "hod",
             F.col("n_events").cast("long").alias("n_events"),
-            r4(mean("cents", "nv")).alias("cell_avg"),
-            r4(
+            half_up(mean("cents", "nv")).alias("cell_avg"),
+            half_up(
                 mean("cents", "nv")
                 - mean("dc", "dn")
                 - mean("hc", "hn")
@@ -1801,13 +1794,10 @@ def w_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dd = F.col("peak") - F.col("equity")
 
-    def r4(c):
-        return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
     return curve.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_points"),
-        r4(F.max(dd)).alias("max_drawdown"),
-        r4(
+        half_up(F.max(dd)).alias("max_drawdown"),
+        half_up(
             F.max(
                 F.when(F.col("peak") > 0, dd / F.col("peak")).otherwise(0.0)
             )

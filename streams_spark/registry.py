@@ -322,7 +322,7 @@ def load_all() -> dict[str, QuerySpec]:
     order the mapping: ROUND_PRIORITY names first, rest in import order."""
     import streams_spark.operators.verbs  # noqa: F401
     import streams_spark.operators.relational  # noqa: F401
-    import streams_spark.operators.tpch_extra  # noqa: F401
+    import streams_spark.operators.tpch  # noqa: F401
     import streams_spark.operators.windowed  # noqa: F401
     import streams_spark.operators.dedup  # noqa: F401
     import streams_spark.operators.similarity  # noqa: F401

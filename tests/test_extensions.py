@@ -4,6 +4,9 @@ approximate methods measured against their exact baselines.
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 import pytest
 
 from streams_spark.registry import load_all
@@ -1796,6 +1799,245 @@ def test_operator_counts_read_node_headers_only(spark, sf_dir):
     counts = operator_counts(REGISTRY["m_video_pixel_dedup"].fn(spark, sf_dir))
     assert counts["Window"] == 2
     assert "windowspecdefinition" not in counts
+
+
+@pytest.mark.parametrize(
+    "row, counts",
+    [
+        (
+            "q1_pricing_summary",
+            {
+                "Exchange": 1, "Filter": 1, "HashAggregate": 2, "Project": 1,
+                "Scan": 1,
+            },
+        ),
+        (
+            "q2_min_cost_supplier",
+            {
+                "BroadcastExchange": 7, "BroadcastHashJoin": 7, "Exchange": 3,
+                "Filter": 10, "HashAggregate": 2, "Project": 11, "Scan": 9, "Sort": 3,
+                "SortMergeJoin": 1, "Window": 1,
+            },
+        ),
+        (
+            "q3_shipping_priority",
+            {
+                "BroadcastExchange": 2, "BroadcastHashJoin": 2, "Exchange": 1,
+                "Filter": 3, "HashAggregate": 2, "Project": 4, "Scan": 3,
+                "TakeOrderedAndProject": 1,
+            },
+        ),
+        (
+            "q4_order_priority",
+            {
+                "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 1,
+                "Filter": 2, "HashAggregate": 2, "Project": 1, "Scan": 2,
+            },
+        ),
+        (
+            "q5_local_supplier_volume",
+            {
+                "BroadcastExchange": 4, "BroadcastHashJoin": 4, "Exchange": 3,
+                "Filter": 6, "HashAggregate": 2, "Project": 7, "Scan": 6, "Sort": 2,
+                "SortMergeJoin": 1,
+            },
+        ),
+        (
+            "q6_forecast_revenue",
+            {
+                "Exchange": 1, "Filter": 1, "HashAggregate": 2, "Project": 1,
+                "Scan": 1,
+            },
+        ),
+        (
+            "q7_nation_volume",
+            {
+                "BroadcastExchange": 5, "BroadcastHashJoin": 5, "Exchange": 1,
+                "Filter": 6, "HashAggregate": 2, "Project": 7, "Scan": 6,
+            },
+        ),
+        (
+            "q8_market_share",
+            {
+                "BroadcastExchange": 6, "BroadcastHashJoin": 6, "Exchange": 3,
+                "Filter": 8, "HashAggregate": 2, "Project": 10, "Scan": 8, "Sort": 2,
+                "SortMergeJoin": 1,
+            },
+        ),
+        (
+            "q9_profit_by_nation_year",
+            {
+                "BroadcastExchange": 4, "BroadcastHashJoin": 4, "Exchange": 1,
+                "Filter": 5, "HashAggregate": 2, "Project": 5, "Scan": 5,
+            },
+        ),
+        (
+            "q10_returned_items",
+            {
+                "BroadcastExchange": 3, "BroadcastHashJoin": 3, "Exchange": 1,
+                "Filter": 4, "HashAggregate": 2, "Project": 5, "Scan": 4,
+                "TakeOrderedAndProject": 1,
+            },
+        ),
+        (
+            "q11_important_stock",
+            {
+                "BroadcastExchange": 5, "BroadcastHashJoin": 4,
+                "BroadcastNestedLoopJoin": 1, "Exchange": 3, "Filter": 8,
+                "HashAggregate": 6, "Project": 7, "Scan": 6,
+            },
+        ),
+        (
+            "q12_late_shipments",
+            {
+                "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 1,
+                "Filter": 2, "HashAggregate": 2, "Project": 1, "Scan": 2,
+            },
+        ),
+        (
+            "q13_order_distribution",
+            {
+                "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 2,
+                "Filter": 1, "HashAggregate": 4, "Project": 2, "Scan": 2,
+            },
+        ),
+        (
+            "q14_promo_revenue",
+            {
+                "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 1,
+                "Filter": 2, "HashAggregate": 2, "Project": 2, "Scan": 2,
+            },
+        ),
+        (
+            "q15_top_supplier",
+            {
+                "BroadcastExchange": 2, "BroadcastHashJoin": 2, "Exchange": 3,
+                "Filter": 5, "HashAggregate": 6, "Project": 4, "Scan": 3,
+            },
+        ),
+        (
+            "q16_supplier_part_count",
+            {
+                "BroadcastExchange": 2, "BroadcastHashJoin": 2, "Exchange": 3,
+                "Filter": 3, "HashAggregate": 6, "Project": 2, "Scan": 3,
+            },
+        ),
+        (
+            "q17_small_qty_revenue",
+            {
+                "BroadcastExchange": 3, "BroadcastHashJoin": 3, "Exchange": 2,
+                "Filter": 5, "HashAggregate": 4, "Project": 5, "Scan": 4,
+            },
+        ),
+        (
+            "q18_large_volume_customer",
+            {
+                "BroadcastExchange": 2, "BroadcastHashJoin": 2, "Exchange": 1,
+                "Filter": 4, "HashAggregate": 2, "Project": 3, "Scan": 3,
+            },
+        ),
+        (
+            "q19_disjunctive_revenue",
+            {
+                "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 1,
+                "Filter": 2, "HashAggregate": 2, "Project": 1, "Scan": 2,
+            },
+        ),
+        (
+            "q20_promotion_suppliers",
+            {
+                "BroadcastExchange": 2, "BroadcastHashJoin": 2, "Exchange": 1,
+                "Filter": 4, "HashAggregate": 2, "Project": 4, "Scan": 3,
+            },
+        ),
+        (
+            "q21_waiting_suppliers",
+            {
+                "BroadcastExchange": 4, "BroadcastHashJoin": 4, "Exchange": 1,
+                "Filter": 5, "HashAggregate": 2, "Project": 6, "Scan": 5,
+            },
+        ),
+        (
+            "q22_sales_opportunity",
+            {
+                "BroadcastExchange": 2, "BroadcastHashJoin": 1,
+                "BroadcastNestedLoopJoin": 1, "Exchange": 2, "Filter": 4,
+                "HashAggregate": 4, "Project": 4, "Scan": 3,
+            },
+        ),
+        (
+            "w_topk_suppliers_per_nation",
+            {
+                "BroadcastExchange": 2, "BroadcastHashJoin": 2, "Exchange": 2,
+                "Filter": 4, "HashAggregate": 2, "Project": 3, "Scan": 3, "Sort": 2,
+                "Window": 1, "WindowGroupLimit": 2,
+            },
+        ),
+    ],
+)
+def test_tpch_plan_shape(spark, sf_dir, row, counts):
+    """Each TPC-H row (and w_topk_suppliers_per_nation, which shares
+    their revenue and nation pieces) keeps its pre-AQE physical plan:
+    the full operator census below the one AdaptiveSparkPlan root,
+    joins, broadcasts, exchanges and projections alike."""
+    from streams_spark.plans.inspect import operator_counts
+
+    got = operator_counts(REGISTRY[row].fn(spark, sf_dir))
+    assert got.pop("AdaptiveSparkPlan") == 1
+    assert dict(got) == counts
+
+
+def _tool(name):
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools",
+        f"{name}.py",
+    )
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize(
+    "row, keys, table, measure",
+    [
+        (
+            "q_rollup_revenue",
+            ("l_returnflag", "l_linestatus"),
+            "lineitem",
+            "l_extendedprice * (1 - l_discount)",
+        ),
+        (
+            "q_cube_orders",
+            ("o_orderstatus", "o_orderpriority"),
+            "orders",
+            "o_totalprice",
+        ),
+    ],
+)
+def test_grand_total_row(
+    spark, sf_dir, tmp_path, monkeypatch, row, keys, table, measure
+):
+    """The () grouping set of the rollup and cube rows. Over empty
+    tables Spark's Expand emits no row at all, so the row synthesizes
+    exactly one: NULL keys, NULL sum, n = 0. Over data the row keeps
+    Spark's own () row, which equals the whole-table aggregate."""
+    from streams_spark.sources.tables import load_table
+
+    fuzz = _tool("fuzz_oracle")
+    monkeypatch.setattr(fuzz, "FUZZ_ROOT", str(tmp_path))
+    empty = fuzz.build_degenerate_dir(sf_dir, "empty")
+    assert [tuple(r) for r in REGISTRY[row].fn(spark, empty).collect()] == [
+        (None, None, None, 0)
+    ]
+
+    rows = REGISTRY[row].fn(spark, sf_dir).collect()
+    grand = [tuple(r)[2:] for r in rows if all(r[k] is None for k in keys)]
+    whole = load_table(spark, sf_dir, table).selectExpr(
+        f"round(sum({measure}), 2)", "count(1)"
+    )
+    assert grand == [tuple(whole.first())]
 
 
 def test_benford_probabilities_and_coverage(spark, sf_dir):
